@@ -82,7 +82,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // iteration aid: SPARK_GRAFT_ONLY=a,b times just those queries;
+    // resolved before the session starts, so a bad name fails fast
+    val selected = GraftSession.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     // PRE-EXISTING host pressure, sampled before the bench adds its own
     // 32 threads to the 1-min average — the end-of-run loadavg in `env`
     // mostly measures the bench itself. This is what decides whether
@@ -91,21 +93,7 @@ object Bench {
       scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(",")
     } catch { case _: Throwable => "" }
     val loadAvgStart = readLoadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // guide §3.1/§9 (r13): planner may choose shuffled-hash join when
-      // it fits — same preference as GraftSession; results invariant
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // static conf: a ~100-query engine blows the default 100-entry
-      // generated-class cache and re-compiles plans every pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     spark.sparkContext.addSparkListener(ShuffleMeter)
 
     // warm-up: touch every table once (file listing, footer reads, codegen)
@@ -124,33 +112,7 @@ object Bench {
       val (r1, w1, sp1) = ShuffleMeter.snapshot(spark.sparkContext)
       val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L,
         (r1 - r0) / 1e6, (w1 - w0) / 1e6, (sp1 - sp0) / 1e6)
-      // every query starts with an empty CacheManager: a query's persisted
-      // frames are ITS cost (timed above), and without the clear every
-      // later query pays a canonicalization tax proportional to the
-      // accumulated cached-plan set (measured ~2x on document-family
-      // queries by the 95-query steady pass) — contaminated numbers,
-      // not steady-state ones
-      spark.catalog.clearCache()
-      // ... and an empty block manager: clearCache only drops
-      // catalog-cached plans, while localCheckpoint blocks and
-      // RDD-level persists linger until GC + ContextCleaner get to
-      // them. Across ~250 query executions the zombies crowd the
-      // storage pool and persist-dependent queries (the RDD-loop
-      // family) degrade 10x late in a pass (measured: d_embed_clusters
-      // 2.6 s -> 32 s in the steady pass of one run, cold pass fine).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // ... and no leftover memory-sink tables: every streaming query
-      // leaves its named memory sink registered (the full result table,
-      // DRIVER-resident), and at 100× ten accumulated sinks plus the
-      // next query's state put the steady pass into a GC death spiral
-      // the cold pass never sees (measured: st_session_window steady
-      // 690 s of GC in the r11 xf100 suite run after ten cold sinks,
-      // where the same query completes in a fresh JVM). The df was
-      // counted above, so the data is unreachable once the view drops.
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      GraftSession.resetBetweenQueries(spark)
       s
     }
 
@@ -164,23 +126,6 @@ object Bench {
     // same pin for the volume-derived streaming shuffle width (r14)
     sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
       .foreach(v => spark.conf.set(graft.GraftConf.streamShuffleKey, v))
-
-    // iteration aid (the Verify pattern): SPARK_GRAFT_ONLY=a,b times just
-    // those queries; driver leaves it unset → full sweep
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ks) =>
-        // a typo'd (or since-renamed) name must not silently shrink the
-        // sweep — an empty/partial run would read as a legitimately
-        // fast one
-        val unknown = ks -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty)
-          sys.error(s"SPARK_GRAFT_ONLY names unknown queries: " +
-            unknown.toSeq.sorted.mkString(", "))
-        SparkEntry.queries.view.filterKeys(ks).toMap
-      case None => SparkEntry.queries
-    }
 
     def timeAll(): Seq[(String, Sample)] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>

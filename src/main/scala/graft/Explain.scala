@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries so
   * pushdown / broadcast / codegen properties can be reviewed.
   * Usage: runMain graft.Explain <sfDir> [queryName...]
@@ -10,8 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q2_filter_project", "q3_join_agg", "q10_star_join", "mr_wordcount")
-    val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

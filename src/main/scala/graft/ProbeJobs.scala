@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-13 attribution probe: per-query JOB/STAGE/TASK counts.
   *
   * At sf0.1 the whole corpus is 17.5 MB, so bench seconds are dominated by
@@ -28,18 +26,7 @@ object ProbeJobs {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     spark.sparkContext.addSparkListener(Counter)
 
     val names: Seq[String] = args.drop(1).toSeq match {
@@ -58,10 +45,7 @@ object ProbeJobs {
       val fn = SparkEntry.queries(n)
       try { fn(spark, d).count() } catch { case e: Throwable =>
         println(s"$n FAILED(warm): ${e.getMessage.take(120)}") }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      GraftSession.resetBetweenQueries(spark)
       try org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
       catch { case _: Throwable => () }
       val (j0, s0, t0) = (Counter.jobs.sum, Counter.stages.sum, Counter.tasks.sum)
@@ -74,10 +58,7 @@ object ProbeJobs {
       if (ok)
         println(f"$n%-26s $wall%8.2f ${Counter.jobs.sum - j0}%6d " +
           f"${Counter.stages.sum - s0}%7d ${Counter.tasks.sum - t0}%7d")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      GraftSession.resetBetweenQueries(spark)
     }
     spark.stop()
   }

@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Diagnostic main (CCProbe's streaming twin): runs one named
-  * SparkEntry query with a StreamingQueryListener attached and prints
-  * per-micro-batch progress — batch duration breakdown, state rows,
-  * watermark — so a slow streaming operator is attributable to a
-  * specific batch/phase instead of a single opaque wall time.
+/** Diagnostic main: runs one named SparkEntry query with a
+  * StreamingQueryListener attached and prints per-micro-batch progress
+  * — batch duration breakdown, state rows, watermark — so a slow
+  * streaming operator is attributable to a specific batch/phase
+  * instead of a single opaque wall time.
   * Usage: runMain graft.ProbeStream <query> [sfDir]
   */
 object ProbeStream {
   def main(args: Array[String]): Unit = {
     val query = args.headOption.getOrElse("st_stream_stream_outer")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     // wall vs work: sum of task run times per 2-second window tells
     // whether a slow batch is executing tasks or waiting on driver-side
     // latencies (planning, state commits, WAL) — the cheap first split
@@ -54,10 +44,7 @@ object ProbeStream {
       val n = SparkEntry.queries(query)(spark, sfDir).count()
       System.err.println(f"[probe] $query $pass total ${(System.nanoTime() - t0) / 1e9}%.1f s, $n rows, " +
         s"taskTime=${taskMs.get()} ms across ${taskN.get()} tasks")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      GraftSession.resetBetweenQueries(spark)
     }
     spark.stop()
   }

@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
 object RefBench {
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
+    val cpus = spark.sparkContext.defaultParallelism
     // warm file-listing and codegen on a single line so the timed section
     // measures the job, not JVM warm-up
     spark.read.textFile(in).limit(1).count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus builder: writes an N×-replicated copy of a
@@ -52,15 +51,8 @@ object ScaleReplica {
     val facts = args.length > 3 && args(3) == "facts"
     val embOnly = args.length > 3 && args(3) == "embonly"
     val evOnly = args.length > 3 && args(3) == "eventsonly"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
+    val cpus = spark.sparkContext.defaultParallelism
     new java.io.File(out).mkdirs()
 
     if (!embOnly && !evOnly) {
@@ -73,7 +65,7 @@ object ScaleReplica {
         col("lang"), col("source"),
         (if (i == 0) col("n_chars") else length(txt).cast("long")).as("n_chars"))
     }.reduce(_ unionByName _)
-      .repartition(math.max(4, cpus.toInt))
+      .repartition(math.max(4, cpus))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     }
 
@@ -116,7 +108,7 @@ object ScaleReplica {
       case chunks =>
         graft.Scratch.rmTree(s"$out/embeddings.parquet")
         chunks.foreach(g => g.reduce(_ unionByName _)
-          .repartition(math.max(4, cpus.toInt))
+          .repartition(math.max(4, cpus))
           .write.mode("append").parquet(s"$out/embeddings.parquet"))
     }
     }
@@ -131,7 +123,7 @@ object ScaleReplica {
       (0 until n).map { i =>
         cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxCust))
       }.reduce(_ unionByName _)
-        .repartition(math.max(4, cpus.toInt))
+        .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/customer.parquet")
       val ev = spark.read.parquet(s"$src/events.parquet")
       val maxEv = ev.agg(max(col("event_id"))).head().getLong(0) + 1
@@ -171,7 +163,7 @@ object ScaleReplica {
       (0 until n).map { i =>
         cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxCust))
       }.reduce(_ unionByName _)
-        .repartition(math.max(4, cpus.toInt))
+        .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/customer.parquet")
       val orders = spark.read.parquet(s"$src/orders.parquet")
       val maxOrd = orders.agg(max(col("o_orderkey"))).head().getLong(0) + 1
@@ -179,13 +171,13 @@ object ScaleReplica {
         orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * maxOrd))
           .withColumn("o_custkey", col("o_custkey") + lit(i * maxCust))
       }.reduce(_ unionByName _)
-        .repartition(math.max(4, cpus.toInt))
+        .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/orders.parquet")
       val li = spark.read.parquet(s"$src/lineitem.parquet")
       (0 until n).map { i =>
         li.withColumn("l_orderkey", col("l_orderkey") + lit(i * maxOrd))
       }.reduce(_ unionByName _)
-        .repartition(math.max(4, cpus.toInt))
+        .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
       val ev = spark.read.parquet(s"$src/events.parquet")
       val maxEv = ev.agg(max(col("event_id"))).head().getLong(0) + 1

@@ -2,32 +2,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: runMain graft.Verify <sfDir> <outDir> (SPARK_GRAFT_ONLY=a,b
+  * dumps just those queries and their oracles). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: a ~100-query engine blows the default 100-entry
-      // generated-class cache and re-compiles plans every pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // resolved before the session starts, so a bad name fails fast
+    val selected = GraftSession.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
-    // iteration aid: SPARK_GRAFT_ONLY=q1_agg,d_exact dumps just those
-    // queries (driver leaves it unset → full sweep, identical behavior)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ks) => SparkEntry.queries.view.filterKeys(ks).toMap
-      case None     => SparkEntry.queries
-    }
     // RANDOMIZED execution order (r10 verdict item 8): the Shared.memo
     // recursive-update bug hid for five rounds because Verify's fixed
     // map order never exercised the colliding nesting — only Bench's
@@ -54,6 +38,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // the gate runs under the same between-query state as Bench
+      GraftSession.resetBetweenQueries(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -67,7 +53,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

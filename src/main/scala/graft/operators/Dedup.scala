@@ -147,8 +147,8 @@ object Dedup {
 
   /** Shingle extraction over an arbitrary (doc_id, text) frame — the
     * driver queries go through [[withShingles]]; tests (the hot-key
-    * stress corpus) inject their own. */
-  private[graft] def withShinglesOf(docs: DataFrame): DataFrame =
+    * stress corpus) inject their own through [[signaturesOf]]. */
+  private def withShinglesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         graft.functions.MinHashFns.word_shingles(split(trim(col("text")), WS), 3).as("sh"))
@@ -545,7 +545,7 @@ object Dedup {
     }
   }
 
-  private[graft] def allPairsPrep(s: SparkSession, d: String): AllPairsPrep = {
+  private def allPairsPrep(s: SparkSession, d: String): AllPairsPrep = {
     val sh = withShingles(s, d)
       .select(col("doc_id"), graft.functions.MinHashFns.word_hashes(col("sh")).as("hs"))
     // two consumers (freq, dict join) — persist, or the scan+shingle
@@ -639,7 +639,7 @@ object Dedup {
     * n − ⌈t·n⌉ + 1 over (global hash frequency, hash) — one window per
     * doc, no per-doc collect_list + array sort, a shuffle-sort that
     * spills instead of buffering. */
-  private[graft] def setsimPrefix(toks: DataFrame, t: Double): DataFrame = {
+  private def setsimPrefix(toks: DataFrame, t: Double): DataFrame = {
     val wDoc = Window.partitionBy("doc_id")
     toks
       .withColumn("n", count(lit(1)).over(wDoc))
@@ -650,7 +650,7 @@ object Dedup {
 
   /** Exact pre-length-filter candidate count of the Jaccard AllPairs
     * join: Σ_h c_h·(c_h−1)/2 over the prefix census. */
-  private[graft] def setsimCandPriced(pe: DataFrame): Long =
+  private def setsimCandPriced(pe: DataFrame): Long =
     pe.groupBy("h").agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L))).head().getLong(0)
 

@@ -166,23 +166,30 @@ private[graft] object Shared {
     * Callers guarantee the thunks touch disjoint state (separate
     * output dirs, separate frames); a fresh pool per call (shut down
     * in finally) keeps a thunk that itself calls awaitAll from
-    * deadlocking on a shared executor. Failures propagate: the first
-    * thrown thunk exception aborts the wait after all started thunks
-    * finish. */
+    * deadlocking on a shared executor. Failures propagate: once a thunk
+    * throws, the queued thunks never start, the started ones run to
+    * completion, and then the first thrown exception is rethrown —
+    * `pool.shutdown()` alone would still run the whole queue. */
   def awaitAll[T](thunks: Seq[() => T]): Seq[T] = {
     if (thunks.isEmpty) return Seq.empty
     if (thunks.size == 1) return Seq(thunks.head())
+    // set by the failing worker BEFORE it takes its next task, so no
+    // queued thunk can start after the failure
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(awaitAllParallelism, thunks.size))
-    try {
-      val futures = thunks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = t()
+    val futures =
+      try thunks.map(t => pool.submit(new java.util.concurrent.Callable[Option[T]] {
+        override def call(): Option[T] =
+          if (failure.get() != null) None
+          else try Some(t()) catch { case e: Throwable =>
+            failure.compareAndSet(null, e); throw e
+          }
       }))
-      futures.map { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
+      finally pool.shutdown()
+    pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    Option(failure.get()).foreach(e => throw e)
+    futures.map(_.get().get)
   }
 
   // owner thread of the currently-running loop harness, or null. The
@@ -215,7 +222,7 @@ private[graft] object Shared {
     * runtime skew-join splitting, which is the wrong trade exactly when
     * the loop frame is big enough to be data-bound rather than
     * scheduler-latency-bound. The boundary is the clamp ceiling itself:
-    * once rows/rowsPerPartition exceeds 4x parallelism (i.e. every core
+    * once rows/rowsPerPartition reaches 4x parallelism (i.e. every core
     * already has 4 full-sized partitions of work queued), per-stage AQE
     * jobs are amortized by real task time and its skew splitting is
     * worth keeping — so past that threshold the harness LEAVES THE
@@ -230,15 +237,19 @@ private[graft] object Shared {
     * caller is oracle-gated. */
   def withLoopParallelism[T](s: SparkSession, rows: Long,
       rowsPerPartition: Long = 1_000_000L)(body: => T): T = {
-    val owner = loopOwner.get()
     val me = Thread.currentThread()
-    if (owner != null && owner != me)
-      throw new IllegalStateException(
-        s"withLoopParallelism entered concurrently from '${me.getName}' while " +
-          s"'${owner.getName}' holds it — the session-global conf mutation would " +
-          "race; loop queries must run single-flight (never inside awaitAll)")
-    val nested = owner == me
-    if (!nested) loopOwner.set(me)
+    // one atomic claim: a failed CAS is either this thread nesting or
+    // another thread holding the harness
+    val nested = !loopOwner.compareAndSet(null, me) && {
+      val owner = loopOwner.get()
+      if (owner ne me)
+        throw new IllegalStateException(
+          s"withLoopParallelism entered concurrently from '${me.getName}' while " +
+            s"'${Option(owner).fold("another thread")(_.getName)}' holds it — the " +
+            "session-global conf mutation would race; loop queries must run " +
+            "single-flight (never inside awaitAll)")
+      true
+    }
     try {
       val ceiling = 4L * s.sparkContext.defaultParallelism
       val wanted = (rows + rowsPerPartition - 1) / rowsPerPartition

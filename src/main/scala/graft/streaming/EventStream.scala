@@ -217,7 +217,7 @@ object EventStream {
     * query-object-certificate gates (chainedStateful, availableNow —
     * their certificates read `q.recentProgress`, an in-flight
     * observation) still hand-build a memory sink. */
-  private[graft] def runToFileSink(s: SparkSession, d: String, df: DataFrame,
+  private def runToFileSink(s: SparkSession, d: String, df: DataFrame,
       mode: String, out: String): Unit =
     withStreamShuffle(s, d) {
       val q = df.writeStream
@@ -406,9 +406,9 @@ object EventStream {
       runToMemorySink(s, d, sessionFsmStream(s, d), "graft_st_sessionize_stream", "append")
     }
 
-  /** The flatMapGroupsWithState session FSM without a sink — shared by
-    * [[runSessionStream]] (memory sink) and the 1000× file-sink probe. */
-  private[graft] def sessionFsmStream(s: SparkSession, d: String): DataFrame = {
+  /** The flatMapGroupsWithState session FSM without a sink, drained by
+    * [[runSessionStream]]. */
+  private def sessionFsmStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val session = s
     import session.implicits._
@@ -573,9 +573,9 @@ object EventStream {
     drained.orderBy("user_id", "session_start")
   }
 
-  /** The session-window pipeline without a sink — shared by the gate
-    * query above (memory sink) and the 1000× file-sink probe. */
-  private[graft] def sessionWindowStream(s: SparkSession, d: String): DataFrame =
+  /** The session-window pipeline without a sink, drained by the gate
+    * query above. */
+  private def sessionWindowStream(s: SparkSession, d: String): DataFrame =
     eventStream(s, d)
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))

@@ -36,4 +36,25 @@ class InventorySpec extends AnyFunSuite {
       assert(k.matches("[a-z0-9_]+"), s"malformed key $k")
     }
   }
+
+  test("GraftSession is the only place under src/main that builds a SparkSession") {
+    val call = raw"SparkSession\s*\.\s*builder".r
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
+      _.toArray.map(_.asInstanceOf[java.nio.file.Path]))
+    val builders = files
+      .filter(p => java.nio.file.Files.isRegularFile(p) &&
+        call.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+      .map(_.getFileName.toString).toSet
+    assert(builders == Set("GraftSession.scala"), s"session built outside GraftSession: $builders")
+  }
+
+  test("query selection: all by default, exactly the named ones, unknown names throw") {
+    assert(GraftSession.selectQueries(None).keySet == SparkEntry.queries.keySet)
+    assert(GraftSession.selectQueries(Some(" mr_wordcount, q10_star_join ,")).keySet ==
+      Set("mr_wordcount", "q10_star_join"))
+    val e = intercept[IllegalArgumentException] {
+      GraftSession.selectQueries(Some("mr_wordcount,no_such_query"))
+    }
+    assert(e.getMessage.contains("no_such_query") && !e.getMessage.contains("mr_wordcount"))
+  }
 }

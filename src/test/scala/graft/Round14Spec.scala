@@ -72,4 +72,19 @@ class Round14Spec extends SparkSpec {
     }
     assert(e.getMessage == "boom", "thunk exceptions propagate unwrapped")
   }
+
+  test("awaitAll: a failure cancels the queued thunks and waits for the started ones") {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val queued = new java.util.concurrent.atomic.AtomicInteger(0)
+    val slow = () => { started.incrementAndGet(); Thread.sleep(200); finished.incrementAndGet(); () }
+    val thunks: Seq[() => Unit] =
+      Seq(() => throw new RuntimeException("first"), slow, slow) ++
+        Seq.fill(5)(() => { queued.incrementAndGet(); () })
+    val e = intercept[RuntimeException](Shared.awaitAll(thunks))
+    assert(e.getMessage == "first")
+    assert(finished.get() == started.get(), "started thunks finish before the rethrow")
+    Thread.sleep(100)
+    assert(queued.get() == 0, s"${queued.get()} queued thunks ran after the failure")
+  }
 }

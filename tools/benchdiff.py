@@ -71,10 +71,6 @@ def isolate(flagged, sf_dir):
                SPARK_GRAFT_ONLY=names,
                SPARK_GRAFT_BENCH_OUT=out,
                SPARK_GRAFT_SF_DIR=sf_dir)
-    # match the driver's parallelism (local[32]) unless the caller
-    # explicitly pinned one — a local[4] isolation run would exaggerate
-    # any parallel query's time and could fake a confirmation
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
     print(f"\ntriage: re-measuring {len(flagged)} flagged quer"
           f"{'y' if len(flagged) == 1 else 'ies'} in isolation "
           f"(fresh JVM, SPARK_GRAFT_ONLY={names}) ...")
@@ -135,7 +131,10 @@ def ab_rerun_old(old_commit, sf_dir):
                    SPARK_GRAFT_BENCH_OUT=out,
                    SPARK_GRAFT_SF_DIR=sf_dir)
         env.pop("SPARK_GRAFT_ONLY", None)  # the A/B is the FULL suite
-        env.setdefault("SPARK_GRAFT_CPUS", "32")
+        # the core count GraftSession.forMain picks for the new side:
+        # older commits default Bench to local[4], and an A/B at a
+        # different N would rebase every gate on the wrong baseline
+        env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
         print(f"A/B: building {old_commit[:9]} in {wt} and running the full "
               "bench on today's host (this is the expensive, honest step) ...")
         r = subprocess.run(["sbt", "-batch", "runMain graft.Bench"],

@@ -32,7 +32,8 @@ T0=$(date +%s.%N)
 T1=$(date +%s.%N)
 echo "reference_wall_sec: $(echo "$T1 $T0" | awk '{printf "%.3f", $1-$2}')"
 
-echo "--- graft (local[${SPARK_GRAFT_CPUS:-32}]) ---"
+# local[SPARK_GRAFT_CPUS], default every core; the JSON line reports it
+echo "--- graft ---"
 cd /root/repo
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} sbt -batch \
+sbt -batch \
   "runMain graft.RefBench $OUT/in $OUT/graftout" 2>&1 | grep -F '"metric"'
