@@ -1,10 +1,16 @@
 package graft
 
 import java.lang.management.ManagementFactory
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Driver-run benchmark: times every SparkEntry query at the configured
   * scale factor and prints one JSON line. A warm-up action first absorbs
@@ -20,6 +26,9 @@ import org.apache.spark.sql.SparkSession
   *               (CompilationMXBean total-compilation-time delta; >wall
   *               is normal, compiler threads run in parallel),
   *   - code-cache occupancy (all CodeHeap pools) after each pass,
+  *   - the [[Meter]]'s counters on the steady pass: jobs, stages, tasks,
+  *     task time, shuffle and spill bytes, and for streaming queries the
+  *     micro-batch count and `durationMs` split,
   * so a recorded 100 s on a trivially-correct plan is visibly a GC storm
   * / JIT stall / neither, instead of indistinguishable from a plan bug
   * (BENCH_r03 recorded 80-676x environment outliers that never
@@ -49,36 +58,71 @@ object Bench {
     pools.map(_.getUsage.getUsed).sum / 1e6
   }
 
-  final case class Sample(secs: Double, gcMs: Long, jitMs: Long,
-    shufReadMb: Double = 0, shufWriteMb: Double = 0, spillMb: Double = 0)
+  final case class Sample(secs: Double, gcMs: Long, jitMs: Long, counts: Map[String, Long])
 
-  /** Task-metrics accumulator: per-query SHUFFLE VOLUME, the number the
-    * 100 TB argument actually turns on — seconds measure this host,
-    * bytes-moved measures the PLAN (a query that shuffles 10× the
-    * input scales 10× worse no matter the hardware). Snapshots are
-    * taken after [[org.apache.spark.graft.ListenerFlush]] drains the
-    * listener bus, so a query's trailing task-end events can't bleed
+  /** The one metering listener. Its counters, by artifact key:
+    *   - `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes` (disk
+    *     + memory): the PLAN's volume — a query that shuffles 10× its
+    *     input scales 10× worse no matter the hardware;
+    *   - `jobs` (`onJobStart`), `stages` and `tasks` (`stageInfo.numTasks`,
+    *     `onStageCompleted`): at sf0.1 wall ≈ jobs × ~30 ms + task time /
+    *     cores (r13), so a job count is what a speed claim commits;
+    *   - `task_ms` (sum of `taskInfo.duration`);
+    *   - `stream_batches` and `stream_ms.<key>`, the sum of each
+    *     `progress.durationMs` key (addBatch, queryPlanning, walCommit,
+    *     triggerExecution, …): a streaming query's wall split into
+    *     execution and driver-side latencies.
+    * [[reading]] drains the listener bus first — streaming progress
+    * travels on the same bus — so a query's trailing events can't bleed
     * into the next query's numbers. */
-  private object ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.LongAdder
-    val read = new LongAdder; val write = new LongAdder; val spill = new LongAdder
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
+  private[graft] final class Meter extends SparkListener {
+    private val counts = new ConcurrentHashMap[String, LongAdder]()
+    private def add(key: String, n: Long): Unit = counts.computeIfAbsent(key, _ => new LongAdder).add(n)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = add("jobs", 1)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      add("stages", 1); add("tasks", e.stageInfo.numTasks)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      if (e.taskInfo != null) add("task_ms", e.taskInfo.duration)
+      val m = e.taskMetrics
       if (m != null) {
-        read.add(m.shuffleReadMetrics.totalBytesRead)
-        write.add(m.shuffleWriteMetrics.bytesWritten)
-        spill.add(m.diskBytesSpilled + m.memoryBytesSpilled)
+        add("shuffle_read_bytes", m.shuffleReadMetrics.totalBytesRead)
+        add("shuffle_write_bytes", m.shuffleWriteMetrics.bytesWritten)
+        add("spill_bytes", m.diskBytesSpilled + m.memoryBytesSpilled)
       }
     }
-    def snapshot(sc: org.apache.spark.SparkContext): (Long, Long, Long) = {
+    private val progress = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        add("stream_batches", 1)
+        e.progress.durationMs.forEach((k, v) => add("stream_ms." + k, v))
+      }
+    }
+
+    def attach(spark: SparkSession): this.type = {
+      spark.sparkContext.addSparkListener(this); spark.streams.addListener(progress); this
+    }
+    def detach(spark: SparkSession): Unit = {
+      spark.sparkContext.removeSparkListener(this); spark.streams.removeListener(progress)
+    }
+
+    /** Cumulative counters once the listener bus is drained. */
+    def reading(sc: SparkContext): Map[String, Long] = {
       // waitUntilEmpty throws TimeoutException after 10 s; a listener-bus
       // stall on a loaded host must degrade ATTRIBUTION (slightly stale
       // counters), never abort the pass and lose the whole artifact
       try org.apache.spark.graft.ListenerFlush.waitUntilEmpty(sc)
       catch { case _: Throwable => () }
-      (read.sum, write.sum, spill.sum)
+      counts.asScala.map { case (k, v) => k -> v.sum }.toMap
     }
   }
+
+  /** What the meter counted between two readings. */
+  private[graft] def delta(after: Map[String, Long], before: Map[String, Long]): Map[String, Long] =
+    after.map { case (k, v) => k -> (v - before.getOrElse(k, 0L)) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -94,7 +138,7 @@ object Bench {
     } catch { case _: Throwable => "" }
     val loadAvgStart = readLoadavg()
     val spark = GraftSession.forMain()
-    spark.sparkContext.addSparkListener(ShuffleMeter)
+    val meter = new Meter().attach(spark)
 
     // warm-up: touch every table once (file listing, footer reads, codegen)
     Tables.all.foreach { t =>
@@ -102,16 +146,15 @@ object Bench {
     }
 
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
-      val (r0, w0, sp0) = ShuffleMeter.snapshot(spark.sparkContext)
+      val before = meter.reading(spark.sparkContext)
       val gc0 = gcMs(); val jit0 = jitMs()
       val t0 = System.nanoTime()
       // a failed query must surface as -1, not masquerade as a fast run
       val secs =
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
-      val (r1, w1, sp1) = ShuffleMeter.snapshot(spark.sparkContext)
-      val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L,
-        (r1 - r0) / 1e6, (w1 - w0) / 1e6, (sp1 - sp0) / 1e6)
+      val counts = delta(meter.reading(spark.sparkContext), before)
+      val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L, counts)
       GraftSession.resetBetweenQueries(spark)
       s
     }
@@ -165,6 +208,12 @@ object Bench {
     val secsOf = (rs: Seq[(String, Sample)]) => rs.map { case (k, s) => k -> s.secs }
     val gcOf = (rs: Seq[(String, Sample)]) => rs.map { case (k, s) => k -> s.gcMs }
     val jitOf = (rs: Seq[(String, Sample)]) => rs.map { case (k, s) => k -> s.jitMs }
+    def count(rs: Seq[(String, Sample)], key: String) = rs.map { case (q, s) => q -> s.counts.getOrElse(key, 0L) }
+    def mb(rs: Seq[(String, Sample)], key: String) = count(rs, key).map { case (q, b) => q -> b / 1e6 }
+    // micro-batch counts and the durationMs split: streaming queries only
+    val streaming = steady.filter(_._2.counts.getOrElse("stream_batches", 0L) > 0)
+    val streamMs = streaming.map { case (q, s) => "\"" + q + "\":" + jsonLong(s.counts.toSeq.sorted
+      .collect { case (k, v) if k.startsWith("stream_ms.") => k.stripPrefix("stream_ms.") -> v }) }
 
     // host-environment snapshot: the r4 driver run's gc_total of 106 s
     // (vs 11.5 s on a quiet host) was only attributable after a local
@@ -192,9 +241,12 @@ object Bench {
       s""""gc_ms_steady_first":${jsonLong(gcOf(retried.toSeq))},""" +
       s""""jit_ms_steady_first":${jsonLong(jitOf(retried.toSeq))},""" +
       s""""gc_total_ms":${cold.map(_._2.gcMs).sum + steady.map(_._2.gcMs).sum},""" +
-      s""""shuffle_write_mb":${jsonNum(steady.map { case (k, s) => k -> s.shufWriteMb })},""" +
-      s""""shuffle_read_mb":${jsonNum(steady.map { case (k, s) => k -> s.shufReadMb })},""" +
-      s""""spilled_mb":${jsonNum(steady.map { case (k, s) => k -> s.spillMb })},""" +
+      s""""shuffle_write_mb":${jsonNum(mb(steady, "shuffle_write_bytes"))},""" +
+      s""""shuffle_read_mb":${jsonNum(mb(steady, "shuffle_read_bytes"))},""" +
+      s""""spilled_mb":${jsonNum(mb(steady, "spill_bytes"))},""" +
+      Seq("jobs", "stages", "tasks", "task_ms").map(k => s""""$k":${jsonLong(count(steady, k))},""").mkString +
+      s""""stream_batches":${jsonLong(count(streaming, "stream_batches"))},""" +
+      s""""stream_ms":${streamMs.mkString("{", ",", "}")},""" +
       s""""codecache_mb_cold":$codeCacheAfterCold,"codecache_mb_steady":$codeCacheAfterSteady,""" +
       s"""$env,"sf":"$sfDir"}"""
     // tail-safe summary: the driver stores only the stdout TAIL and the
@@ -207,9 +259,9 @@ object Bench {
       s""""worst_steady":"${worstSteady.map(_._1).getOrElse("")}",""" +
       s""""worst_steady_sec":${worstSteady.map(_._2.secs).getOrElse(-1.0)},""" +
       s""""gc_total_ms":${cold.map(_._2.gcMs).sum + steady.map(_._2.gcMs).sum},""" +
-      s""""shuffle_write_total_mb":${steady.map(_._2.shufWriteMb).sum},""" +
-      s""""shuffle_read_total_mb":${steady.map(_._2.shufReadMb).sum},""" +
-      s""""spilled_total_mb":${steady.map(_._2.spillMb).sum},$env,"sf":"$sfDir"}"""
+      s""""shuffle_write_total_mb":${mb(steady, "shuffle_write_bytes").map(_._2).sum},""" +
+      s""""shuffle_read_total_mb":${mb(steady, "shuffle_read_bytes").map(_._2).sum},""" +
+      s""""spilled_total_mb":${mb(steady, "spill_bytes").map(_._2).sum},$env,"sf":"$sfDir"}"""
     // Artifact hygiene (r8 judge note): a loaded-host run must never
     // OVERWRITE the quiet-host artifact the committed BASELINE numbers
     // are read from — divert it to <name>.loaded.json so the two can

@@ -95,6 +95,12 @@ private[graft] object Shared {
     p.toString
   }
 
+  /** A fresh directory under the scratch root, for output a lazily-read
+    * frame still needs after its producer returns; the root's shutdown
+    * hook removes it. */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(root), prefix)
+
   private def keyOf(s: SparkSession, d: String, name: String): String =
     System.identityHashCode(s).toHexString + "|" + s.sparkContext.applicationId +
       "|" + d + "|" + name
@@ -200,8 +206,13 @@ private[graft] object Shared {
   // rather than assumed — a second thread entering concurrently would
   // silently race the restore and leave the session with wrong
   // partitioning, so fail loud instead. Same-thread NESTING stays
-  // legal: the finally blocks restore LIFO, inner sees outer's conf.
+  // legal: the finally blocks restore LIFO, and a small-frame inner
+  // call sees the outer's conf.
   private val loopOwner = new java.util.concurrent.atomic.AtomicReference[Thread](null)
+  // the fast path's two keys as they were before the OUTERMOST call: a
+  // data-bound call nested in a small-frame one runs its body under
+  // these, not under the outer's AQE-off conf. Owner thread only.
+  private var preLoop: Seq[(String, Option[String])] = Nil
 
   /** Iterative-loop harness (r13, guide §2's "derive partitioning from
     * input size, not a constant"): runs `body` — a driver loop of small
@@ -251,23 +262,25 @@ private[graft] object Shared {
       true
     }
     try {
+      val current = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+        .map(k => k -> s.conf.getOption(k))
+      if (!nested) preLoop = current
       val ceiling = 4L * s.sparkContext.defaultParallelism
       val wanted = (rows + rowsPerPartition - 1) / rowsPerPartition
-      if (wanted >= ceiling) {
+      val target =
         // data-bound loop: keep AQE (and its skew-join splitting) — the
         // per-stage jobs the fast path saves are noise against real work
-        body
-      } else {
-        val p = math.max(1L, wanted).toString
-        val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-        val prev = keys.map(k => k -> s.conf.getOption(k))
-        s.conf.set("spark.sql.shuffle.partitions", p)
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try body
-        finally prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
-        }
+        if (wanted >= ceiling) preLoop
+        else Seq("spark.sql.shuffle.partitions" -> Some(math.max(1L, wanted).toString),
+          "spark.sql.adaptive.enabled" -> Some("false"))
+      def setAll(kvs: Seq[(String, Option[String])]): Unit = kvs.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None)    => s.conf.unset(k)
+      }
+      if (target == current) body
+      else {
+        setAll(target)
+        try body finally setAll(current)
       }
     } finally if (!nested) loopOwner.set(null)
   }

@@ -177,60 +177,49 @@ object EventStream {
     }
   }
 
-  /** Drains `df` through the PRODUCTION sink shape and returns the
-    * drained table (r13, the r12 verdict item 3): gate queries used to
-    * materialize via a named driver MEMORY sink, and that sink — not
-    * the state store — was the measured 1000× wall
-    * (`driver.maxResultSize` breached at 1 GiB by st_session_window's
-    * 95.5 M-row complete-mode session table while the same pipeline
-    * completed in 215 s through foreachBatch → parquet). The gate now
-    * runs the file sink itself, so the correctness gate exercises the
-    * exact shape the scale rows measure. Row-multiset parity with the
-    * memory sink per output mode (so every oracle is unchanged):
-    * complete overwrites per batch (last batch wins = the memory
-    * sink's table replacement), append/update append each batch's
-    * emitted rows (= the memory sink's table accumulation). `name`
-    * keys the scratch dir; a zero-emission drain (no batch wrote — the
-    * read-back would fail on schema inference) returns an empty frame
-    * with the stream's schema. */
-  private def runToMemorySink(s: SparkSession, d: String, df: DataFrame,
+  /** Drains `df` through the production sink shape — foreachBatch →
+    * parquet, executor-side writes, nothing driver-resident — and
+    * returns the drained table. Gate queries used to materialize via a
+    * driver MEMORY sink, and that sink, not the state store, was the
+    * measured 1000× wall (r12: st_session_window's 95.5 M-row
+    * complete-mode session table breached `driver.maxResultSize` at
+    * 1 GiB, while the same pipeline completed in 215 s through
+    * foreachBatch → parquet). The pipeline runs under the identical
+    * harness wrapper, so the adaptive codegen/state-store decisions
+    * apply unchanged. Row-multiset parity with the memory sink per
+    * output mode (so every oracle is unchanged): complete overwrites per
+    * batch (last batch wins = the memory sink's table replacement),
+    * append/update append each batch's emitted rows (= its table
+    * accumulation). Only the two query-object-certificate gates
+    * (chainedStateful, availableNow — their certificates read
+    * `q.recentProgress`) still hand-build a memory sink.
+    *
+    * `name` keys the output dir. The returned frame reads it lazily, so
+    * it lives under [[Shared]]'s scratch root, which its shutdown hook
+    * removes; the checkpoint is per-run state and goes when the query
+    * stops. A zero-emission drain (no batch wrote — the read-back would
+    * fail on schema inference) returns an empty frame with the stream's
+    * schema. */
+  private def drainToFiles(s: SparkSession, d: String, df: DataFrame,
       name: String, mode: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(s"graft-gate-$name-")
-      .resolve("t").toString
-    runToFileSink(s, d, df, mode, out)
-    if (new java.io.File(out).exists &&
-        new java.io.File(out).list().exists(_.endsWith(".parquet")))
-      s.read.parquet(out)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-  }
-
-  /** File-sink drain — since r13 the GATE path, not probe-only (the
-    * r12 1000× lesson): a memory sink holds the COMPLETE result table
-    * on the driver, and at 1000× the serialized result blows
-    * `spark.driver.maxResultSize` before the state store is even
-    * stressed — measured: st_session_window's session table exceeded
-    * 1 GiB from 4 of its tasks. The production shape for a
-    * complete-mode aggregate is foreachBatch → files (executor-side
-    * writes, nothing driver-resident); this drain runs the IDENTICAL
-    * pipeline under the identical harness wrapper, so the adaptive
-    * codegen/state-store decisions apply unchanged. Only the two
-    * query-object-certificate gates (chainedStateful, availableNow —
-    * their certificates read `q.recentProgress`, an in-flight
-    * observation) still hand-build a memory sink. */
-  private def runToFileSink(s: SparkSession, d: String, df: DataFrame,
-      mode: String, out: String): Unit =
-    withStreamShuffle(s, d) {
+    val out = graft.operators.Shared.scratchDir(s"graft-gate-$name-").resolve("t").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fsink-ckpt-").toString
+    try withStreamShuffle(s, d) {
       val q = df.writeStream
         .outputMode(mode)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-fsink-ckpt-").toString)
+        .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
         }
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    }
+    } finally graft.Scratch.rmTree(ckpt)
+    if (new java.io.File(out).exists &&
+        new java.io.File(out).list().exists(_.endsWith(".parquet")))
+      s.read.parquet(out)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+  }
 
   /** Tumbling 5-minute window counts/sums per event type via a real
     * streaming query. Each parquet file is a micro-batch; complete mode +
@@ -247,7 +236,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_window_agg"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -280,7 +269,7 @@ object EventStream {
         date_format(col("window.end"), fmt).as("window_end"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_append_windows"
-    val drained = runToMemorySink(s, d, stream, name, "append")
+    val drained = drainToFiles(s, d, stream, name, "append")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -403,7 +392,7 @@ object EventStream {
     // and both consumers re-apply their own ordering; each slice stays
     // oracle-gated per query.
     graft.operators.Shared.memo(s, d, "st_sessionize_drained") {
-      runToMemorySink(s, d, sessionFsmStream(s, d), "graft_st_sessionize_stream", "append")
+      drainToFiles(s, d, sessionFsmStream(s, d), "graft_st_sessionize_stream", "append")
     }
 
   /** The flatMapGroupsWithState session FSM without a sink, drained by
@@ -569,7 +558,7 @@ object EventStream {
   def sessionWindowAgg(s: SparkSession, d: String): DataFrame = {
     val stream = sessionWindowStream(s, d)
     val name = "graft_st_session_window"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("user_id", "session_start")
   }
 
@@ -662,7 +651,7 @@ object EventStream {
       }
       .toDF("user_id", "event_id", "window_us", "rnk", "admitted")
     val name = "graft_st_throttle"
-    val drained = runToMemorySink(s, d, decisions, name, "append")
+    val drained = drainToFiles(s, d, decisions, name, "append")
     drained
       .select(col("user_id"), col("event_id"),
         date_format(timestamp_micros(col("window_us")), fmt).as("window_start"),
@@ -699,7 +688,7 @@ object EventStream {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_dedup"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("event_type")
   }
 
@@ -721,7 +710,7 @@ object EventStream {
       .groupBy("c_mktsegment", "event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_enrich"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("c_mktsegment", "event_type")
   }
 
@@ -752,7 +741,7 @@ object EventStream {
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
     val name = "graft_st_stream_join"
-    val drained = runToMemorySink(s, d, joined, name, "append")
+    val drained = drainToFiles(s, d, joined, name, "append")
     drained
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         date_format(col("click_ts"), fmt).as("click_ts"),
@@ -841,7 +830,7 @@ object EventStream {
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
         "left_outer")
       val name = "graft_st_stream_outer"
-      val drained = runToMemorySink(s, dataDir.toString, joined, name, "append")
+      val drained = drainToFiles(s, dataDir.toString, joined, name, "append")
       drained
         .filter(col("click_id") >= 0)
         .select(col("click_id"), col("user_id"),
@@ -891,7 +880,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_topk"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start").orderBy(col("n").desc, col("event_type"))
     drained
@@ -930,7 +919,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_sliding"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -973,7 +962,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_anomaly"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
     drained
       .withColumn("type_total", sum("n").over(w))
@@ -1015,7 +1004,7 @@ object EventStream {
       .select(col("user_id"), col("n_events"), col("total_value"),
         date_format(col("last_ts"), fmt).as("last_seen"))
     val name = "graft_st_running"
-    val drained = runToMemorySink(s, d, stream, name, "complete")
+    val drained = drainToFiles(s, d, stream, name, "complete")
     drained.orderBy("user_id")
   }
 
@@ -1138,7 +1127,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_msw"
-      val drained = runToMemorySink(s, d, agg, name, "append")
+      val drained = drainToFiles(s, d, agg, name, "append")
       // contrast class, from the batch data (pure function of the corpus):
       // groups above B's watermark but at-or-below A's — emitted iff the
       // engine ignored the lagging source
@@ -1238,7 +1227,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_late_data"
-      val drained = runToMemorySink(s, dataDir.toString, agg, name, "update")
+      val drained = drainToFiles(s, dataDir.toString, agg, name, "update")
       val kept = drained.groupBy("window_start", "event_type")
         .agg(max("n").as("n_kept")).localCheckpoint(eager = true)
       val total = ev.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -1390,7 +1379,7 @@ object EventStream {
           org.apache.spark.sql.Encoders.product[LedgerOut])
         .toDF()
       val name = "graft_st_tws_ledger"
-      val drained = withRocksDbState(s) { runToMemorySink(s, dataDir.toString, out, name, "update") }
+      val drained = withRocksDbState(s) { drainToFiles(s, dataDir.toString, out, name, "update") }
       // update mode emits a snapshot per (user, batch); n_events is
       // monotone, so the max-n struct per user is the final state
       drained.groupBy("user_id")
@@ -1462,7 +1451,7 @@ object EventStream {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))
       val name = "graft_st_dedup_wm"
-      val drained = runToMemorySink(s, dataDir.toString, stream, name, "complete")
+      val drained = drainToFiles(s, dataDir.toString, stream, name, "complete")
       drained.orderBy("event_type").localCheckpoint()
     }
   }
@@ -1741,7 +1730,7 @@ object EventStream {
           org.apache.spark.sql.Encoders.product[TimerOut])
         .toDF()
       val name = "graft_st_tws_timers"
-      val drained = withRocksDbState(s) { runToMemorySink(s, dataDir.toString, out, name, "append") }
+      val drained = withRocksDbState(s) { drainToFiles(s, dataDir.toString, out, name, "append") }
       drained.filter(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"),
           date_format(timestamp_micros(col("closed_us")), fmt).as("closed_at"))

@@ -37,15 +37,24 @@ class InventorySpec extends AnyFunSuite {
     }
   }
 
-  test("GraftSession is the only place under src/main that builds a SparkSession") {
-    val call = raw"SparkSession\s*\.\s*builder".r
+  /** Names of the files under src/main whose text matches `call`. */
+  private def mainFilesCalling(call: scala.util.matching.Regex): Set[String] = {
     val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
       _.toArray.map(_.asInstanceOf[java.nio.file.Path]))
-    val builders = files
+    files
       .filter(p => java.nio.file.Files.isRegularFile(p) &&
         call.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
       .map(_.getFileName.toString).toSet
+  }
+
+  test("GraftSession is the only place under src/main that builds a SparkSession") {
+    val builders = mainFilesCalling(raw"SparkSession\s*\.\s*builder".r)
     assert(builders == Set("GraftSession.scala"), s"session built outside GraftSession: $builders")
+  }
+
+  test("Bench's meter is the only Spark or streaming listener registered under src/main") {
+    val registrars = mainFilesCalling(raw"addSparkListener|streams\s*\.\s*addListener".r)
+    assert(registrars == Set("Bench.scala"), s"listener registered outside Bench: $registrars")
   }
 
   test("query selection: all by default, exactly the named ones, unknown names throw") {

@@ -199,6 +199,16 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(streamed.sameElements(batch), "stream/batch consistency")
   }
 
+  test("a streaming gate leaves no drain output or checkpoint directly under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def leftovers(): Set[String] = Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(n => n.startsWith("graft-gate-") || n.startsWith("graft-fsink-ckpt-")).toSet
+    val before = leftovers()
+    SparkEntry.queries("st_window_agg")(spark, sf).collect()
+    val added = leftovers() -- before
+    assert(added.isEmpty, s"streaming gate left temp dirs behind: $added")
+  }
+
   test("sessionize: sessions are ordered, non-overlapping, gap-respecting per user") {
     val rows = EventStream.sessionize(spark, sf).collect()
     assert(rows.nonEmpty)

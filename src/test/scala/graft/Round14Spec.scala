@@ -54,6 +54,25 @@ class Round14Spec extends SparkSpec {
     }
   }
 
+  test("withLoopParallelism: a data-bound call nested in a small-frame one gets the pre-loop conf") {
+    // the inner frame is data-bound, so its body must run under the
+    // production planner (AQE on, configured partitions), not under the
+    // outer call's AQE-off fast path
+    val par = spark.sparkContext.defaultParallelism
+    val configured = spark.conf.get("spark.sql.shuffle.partitions")
+    val configuredAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    Shared.withLoopParallelism(spark, rows = 1L, rowsPerPartition = 1000L) {
+      Shared.withLoopParallelism(spark, rows = 4L * par * 1000L, rowsPerPartition = 1000L) {
+        assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == configured)
+      }
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "1")
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == configuredAqe)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == configured)
+  }
+
   test("awaitAll: bounded in-flight concurrency, order-preserving, failure-propagating") {
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -271,6 +271,7 @@ def main(argv):
                   f"-> host drift {host:+.0%}); new code today = {total_new:.1f} s "
                   f"-> code delta {code:+.0%} ({verdict})")
             os_ = ab_s
+            old = ab
             old_name = f"{old_name} [A/B-rebased: {ab_commit[:9]} on today's host]"
             describe(f"old (rebased): {old_name}", ab, ab_s)
 
@@ -294,13 +295,23 @@ def main(argv):
         elif ratio < 1 / RATIO_MAX and -delta > ABS_FLOOR_SEC:
             improved.append((k, a, b, ratio))
 
+    # per-query job counts (steady pass) from artifacts that carry them:
+    # the structural number a speed claim commits next to its seconds
+    jobs_new = new["full"].get("jobs", {})
+    jobs_old = old["full"].get("jobs", {})
+
+    def jobs(k):
+        if k in jobs_new and k in jobs_old:
+            return f"  jobs {jobs_old[k]}→{jobs_new[k]}"
+        return ""
+
     for title, rows in (("REGRESSED", regressions),
                         ("grew (absolute)", alerts),
                         ("improved", improved)):
         if rows:
             print(f"\n{title}:")
             for k, a, b, r in sorted(rows, key=lambda t: -t[3]):
-                print(f"  {k:30s} {a:7.2f} s -> {b:7.2f} s  ({r:.2f}x)")
+                print(f"  {k:30s} {a:7.2f} s -> {b:7.2f} s  ({r:.2f}x){jobs(k)}")
 
     if regressions and do_triage:
         sf = new.get("full", {}).get("sf", "/root/testdata/sf0.1")
