@@ -85,14 +85,17 @@ object GraftSession {
     // pass of one run, cold pass fine).
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    // ... and no leftover memory-sink tables: every streaming query
-    // leaves its named memory sink registered (the full result table,
-    // DRIVER-resident), and at 100× ten accumulated sinks plus the next
-    // query's state put the steady pass into a GC death spiral the cold
-    // pass never sees (measured: st_session_window steady 690 s of GC
-    // in the r11 xf100 suite run after ten cold sinks, where the same
-    // query completes in a fresh JVM). The result was consumed before
-    // the reset, so the data is unreachable once the view drops.
+    // ... and no leftover memory-sink tables: the two streaming gates
+    // that still write one (EventStream.chainedStateful and
+    // availableNow, whose certificates read the query object; every
+    // other gate drains to files) leave it registered, the full result
+    // table DRIVER-resident. Before the drains, ten accumulated sinks
+    // plus the next query's state put the 100× steady pass into a GC
+    // death spiral the cold pass never sees (measured: st_session_window
+    // steady 690 s of GC in the r11 xf100 suite run after ten cold
+    // sinks, where the same query completes in a fresh JVM). The result
+    // was consumed before the reset, so the data is unreachable once
+    // the view drops.
     spark.catalog.listTables().collect()
       .filter(_.isTemporary)
       .foreach(t => spark.catalog.dropTempView(t.name))

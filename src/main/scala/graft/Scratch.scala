@@ -1,14 +1,40 @@
 package graft
 
-import java.nio.file.{Files, LinkOption, Path}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 
-/** Scratch-directory lifecycle for operators that exercise REAL sinks
-  * (round-trips, compaction, streaming checkpoints): one definition of
-  * recursive delete, so deletion hardening — symlink guards, retry on
-  * lock-holding filesystems — lands in one place instead of a dozen
-  * inlined closures.
+/** The one owner of scratch directories. Two lifecycles:
+  *  - [[withDir]]: a directory that lives exactly as long as one block
+  *    (round-trips, compaction, streaming checkpoints) — created in
+  *    `java.io.tmpdir`, deleted in a `finally`;
+  *  - [[scratchDir]]: a directory under the JVM's scratch [[root]], for
+  *    output a lazily-read frame still needs after its producer returns
+  *    (memo tables, drained gate output) — the root's shutdown hook
+  *    deletes it.
+  * One definition of recursive delete, so deletion hardening — symlink
+  * guards, retry on lock-holding filesystems — lands in one place.
   */
 object Scratch {
+  /** Runs `body` with a fresh directory named `prefix…` in
+    * `java.io.tmpdir`, and deletes the directory when `body` returns or
+    * throws. A frame `body` returns must not read the directory lazily:
+    * materialize it first (`localCheckpoint`, `collect`). */
+  def withDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toString
+    try body(dir) finally rmTree(dir)
+  }
+
+  /** The JVM's scratch root, `graft-shared-…` directly in
+    * `java.io.tmpdir` (perfbench counts memo builds by listing it);
+    * removed by a shutdown hook. */
+  lazy val root: String = {
+    val p = Files.createTempDirectory("graft-shared-")
+    sys.addShutdownHook(rmTree(p.toString))
+    p.toString
+  }
+
+  /** A fresh directory `prefix…` under [[root]]. */
+  def scratchDir(prefix: String): Path = Files.createTempDirectory(Paths.get(root), prefix)
+
   /** Recursive delete; no-op on nonexistent paths. Never follows a
     * symlink out of the tree: a symlinked directory is detected with
     * NOFOLLOW_LINKS and only the link itself is deleted — its target's
@@ -28,7 +54,7 @@ object Scratch {
       try { Files.deleteIfExists(p); () }
       catch { case _: java.io.IOException => () }
     }
-    val p = java.nio.file.Paths.get(path)
+    val p = Paths.get(path)
     if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) rm(p)
   }
 }

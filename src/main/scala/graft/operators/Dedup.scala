@@ -2931,32 +2931,32 @@ object Dedup {
   def bucketedDedup(s: SparkSession, d: String): DataFrame = {
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val tbl = s"graft_dbd_docs_$id"
-    val out = java.nio.file.Files.createTempDirectory("graft_dbd_").toString
-    try {
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"),
-          md5(to_binary(col("text"), lit("utf-8"))).as("fp"))
-        .repartition(8, col("fp"))
-        .write.mode("overwrite").option("path", s"$out/docs")
-        .bucketBy(8, "fp").sortBy("fp")
-        .saveAsTable(tbl)
-      val agg = s.table(tbl).groupBy("fp")
-        .agg(count(lit(1)).as("k"), sum(col("n_chars")).as("chars"))
-      val materialized = agg.localCheckpoint()
-      val shuffles = org.apache.spark.sql.graftbridge.PlanProbe.nodes(agg)
-        .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-      if (shuffles != 0)
-        throw new IllegalStateException(
-          s"bucketed dedup aggregate shuffled ($shuffles exchanges) — layout unused")
-      materialized.agg(
-        count(lit(1)).as("n_groups"),
-        sum(col("k")).as("n_docs"),
-        sum(when(col("k") > 1, col("k")).otherwise(0L)).as("n_dup_docs"),
-        sum(when(col("k") > 1, col("k") - 1).otherwise(0L)).as("n_removable"))
-        .withColumn("zero_shuffle_dedup", lit(true))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      graft.Scratch.rmTree(out)
+    graft.Scratch.withDir("graft_dbd_") { out =>
+      try {
+        Tables.documents(s, d)
+          .select(col("doc_id"), col("n_chars"),
+            md5(to_binary(col("text"), lit("utf-8"))).as("fp"))
+          .repartition(8, col("fp"))
+          .write.mode("overwrite").option("path", s"$out/docs")
+          .bucketBy(8, "fp").sortBy("fp")
+          .saveAsTable(tbl)
+        val agg = s.table(tbl).groupBy("fp")
+          .agg(count(lit(1)).as("k"), sum(col("n_chars")).as("chars"))
+        val materialized = agg.localCheckpoint()
+        val shuffles = org.apache.spark.sql.graftbridge.PlanProbe.nodes(agg)
+          .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+        if (shuffles != 0)
+          throw new IllegalStateException(
+            s"bucketed dedup aggregate shuffled ($shuffles exchanges) — layout unused")
+        materialized.agg(
+          count(lit(1)).as("n_groups"),
+          sum(col("k")).as("n_docs"),
+          sum(when(col("k") > 1, col("k")).otherwise(0L)).as("n_dup_docs"),
+          sum(when(col("k") > 1, col("k") - 1).otherwise(0L)).as("n_removable"))
+          .withColumn("zero_shuffle_dedup", lit(true))
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS $tbl")
+      }
     }
   }
 

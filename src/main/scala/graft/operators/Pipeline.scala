@@ -492,8 +492,7 @@ object Pipeline {
     * the checkpoint happens strictly after the parquet scan. */
   def shardWrite(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_shard_write_").toString
-    try {
+    graft.Scratch.withDir("graft_shard_write_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .write.mode("overwrite").partitionBy("shard").parquet(out)
@@ -502,8 +501,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -548,8 +545,7 @@ object Pipeline {
     * multiLine CSV/JSON, which force one reader per file. */
   def textRoundtrip(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_text_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_text_rt_") { out =>
       graft.Tables.documents(s, d)
         .select(concat(col("doc_id").cast("string"), lit("\t"),
             col("n_chars").cast("string"), lit("\t"),
@@ -564,8 +560,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -582,8 +576,7 @@ object Pipeline {
     * with the parquet original. */
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_jsonl_rt_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .write.mode("overwrite").partitionBy("shard").json(out)
@@ -592,8 +585,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -626,8 +617,7 @@ object Pipeline {
     val all = graft.Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
       .unionByName(planted)
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_csv_rt_") { out =>
       all.write.mode("overwrite")
         .option("quote", "\"").option("escape", "\"")
         .partitionBy("shard").csv(out)
@@ -644,8 +634,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -696,8 +684,7 @@ object Pipeline {
     * compression boundary. */
   def gzipRoundtrip(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_gzip_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_gzip_rt_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .repartition(col("shard"))
@@ -712,8 +699,6 @@ object Pipeline {
         .join(back.groupBy("shard")
           .agg(countDistinct(col("fp_file")).as("n_files")), "shard")
         .orderBy("shard")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -743,8 +728,7 @@ object Pipeline {
     * post-delete corpus, so a rewrite that drops or duplicates an
     * innocent bystander row flips the gate. */
   def forget(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_forget_").toString
-    try {
+    graft.Scratch.withDir("graft_forget_") { out =>
       val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
       val docs = graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
@@ -806,8 +790,6 @@ object Pipeline {
           coalesce(col("total_chars"), lit(0L)).as("total_chars"),
           coalesce(col("manifest_md5"), lit("")).as("manifest_md5"))
         .orderBy("shard")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -920,9 +902,8 @@ object Pipeline {
   }
 
   def timeTravel(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_tt_").toString
-    val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
-    try {
+    graft.Scratch.withDir("graft_tt_") { out =>
+      val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
       buildVersionedLayout(s, d, out, logDir)
       def liveFiles(v: Int): Seq[String] = logLiveFiles(s, logDir, v)
       def snapshot(v: Int): DataFrame =
@@ -938,8 +919,6 @@ object Pipeline {
       val v2v3 = snaps.filter(col("version") >= 2)
         .agg((countDistinct("content_md5") === 1).as("compaction_invariant"))
       snaps.crossJoin(broadcast(v2v3)).orderBy("version")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -985,8 +964,7 @@ object Pipeline {
     * parquet, certifying the manifests describe the files that were
     * actually written. */
   def icebergManifest(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_icb_").toString
-    try {
+    graft.Scratch.withDir("graft_icb_") { out =>
       val docs = graft.Tables.documents(s, d).select("doc_id", "n_chars", "text")
       val mx = docs.agg(max("doc_id")).head().getLong(0)
       val lo = mx / 2
@@ -1069,8 +1047,6 @@ object Pipeline {
         .toDF("n_manifests_total", "n_manifests_read", "n_files_listed",
           "n_files_scanned", "n_rows_scanned", "n_rows_result",
           "sum_chars_result", "prune_sound")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1191,9 +1167,8 @@ object Pipeline {
     * churn; the failure mode it guards — deleting a file a reader
     * still resolves — is the worst data-loss bug a lakehouse has. */
   def vacuum(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_vac_").toString
-    val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
-    try {
+    graft.Scratch.withDir("graft_vac_") { out =>
+      val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
       buildVersionedLayout(s, d, out, logDir)
       val live = logLiveFiles(s, logDir, 3).toSet
       def snapshotMd5(): org.apache.spark.sql.Row =
@@ -1221,8 +1196,6 @@ object Pipeline {
           before.getAs[String]("content_md5") == after.getAs[String]("content_md5")))
         .toDF("files_before", "orphans_deleted", "files_after",
           "n_docs", "total_chars", "content_md5", "live_intact")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1407,8 +1380,7 @@ object Pipeline {
     * `n_found`/`value_c` pin soundness (a missed true file would drop
     * looked-up rows and flip the gate). */
   def bloomIndex(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_bloomidx_").toString
-    try {
+    graft.Scratch.withDir("graft_bloomidx_") { out =>
       val e = graft.Tables.events(s, d)
         .select(col("event_id"),
           round(col("value") * lit(100)).cast("long").as("value_c"),
@@ -1455,8 +1427,6 @@ object Pipeline {
       Seq((nKeys, row.getAs[Long]("n_found"), row.getAs[Long]("value_c"),
           filesRead, filesTotal))
         .toDF("n_keys", "n_found", "value_c", "files_read", "files_total")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1538,8 +1508,7 @@ object Pipeline {
     * on your corpus). At 100 TB: a 2-D dashboard predicate reads ~⅓ of
     * a z-ordered table and 100 % of an insertion-ordered one. */
   def zorder(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    try {
+    graft.Scratch.withDir("graft_zorder_") { out =>
       val e = graft.Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           dayofmonth(col("ts")).cast("long").as("dom"), col("value"))
@@ -1595,8 +1564,6 @@ object Pipeline {
       Seq((row.getAs[Long]("n_rows"), row.getAs[Long]("value_c"),
           filesRead, filesTotal, nOverlapUnclustered))
         .toDF("n_rows", "value_c", "files_read", "files_total", "n_overlap_unclustered")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1652,8 +1619,7 @@ object Pipeline {
     * parquet row groups, so shards stay parallel-readable at 100 TB. */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_orc_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_orc_rt_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .write.mode("overwrite").partitionBy("shard").orc(out)
@@ -1662,8 +1628,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1682,8 +1646,7 @@ object Pipeline {
     * pins the one reader default that silently rewrites data. */
   def xmlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_xml_rt_").toString
-    try {
+    graft.Scratch.withDir("graft_xml_rt_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .write.mode("overwrite").partitionBy("shard")
@@ -1697,8 +1660,6 @@ object Pipeline {
           col("shard").cast("int").as("shard"))
         .localCheckpoint()
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1918,8 +1879,7 @@ object Pipeline {
     * the original table, so a green entry certifies no row loss, the
     * partition column's recovery, and NULL-correct column absence. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_schema_evo_").toString
-    try {
+    graft.Scratch.withDir("graft_schema_evo_") { out =>
       val docs = graft.Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("n_chars"), col("text"))
@@ -1933,8 +1893,6 @@ object Pipeline {
           coalesce(col("lang"), lit("(missing)")).as("lang"))
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
         .orderBy("gen", "lang")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -1962,8 +1920,7 @@ object Pipeline {
     * planting rule is pure), so any reader that drops a good row or
     * passes a bad one flips a count. */
   def corruptRecords(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_corrupt_").toString
-    try {
+    graft.Scratch.withDir("graft_corrupt_") { out =>
       graft.Tables.documents(s, d)
         .select(when(col("doc_id") % 50 === 0,
             concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
@@ -1982,8 +1939,6 @@ object Pipeline {
           sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
           sum(when(col("_corrupt_record").isNull, col("n_chars")).otherwise(0L))
             .as("chars_good"))
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2011,8 +1966,7 @@ object Pipeline {
     * write-read cycles. */
   def compaction(s: SparkSession, d: String): DataFrame = {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_").toString
-    try {
+    graft.Scratch.withDir("graft_compact_") { out =>
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"))
         .repartition(64)
@@ -2024,8 +1978,6 @@ object Pipeline {
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
         .localCheckpoint(eager = true)
       manifestAgg(back)
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2446,8 +2398,7 @@ object Pipeline {
     * low cardinalities keep the sketch exact — exactly the kind of
     * scale-dependent oracle this suite must not encode. */
   def sketchIncremental(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_sketch_inc_").toString
-    try {
+    graft.Scratch.withDir("graft_sketch_inc_") { out =>
       val e = graft.Tables.events(s, d)
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("user_id"), col("event_id"))
@@ -2471,8 +2422,6 @@ object Pipeline {
         .orderBy("day")
       // materialize before the scratch "previous run" artifact vanishes
       res.localCheckpoint()
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2501,8 +2450,7 @@ object Pipeline {
     * same pass. The oracle replays all of it from the logical table,
     * so a provenance column that misattributed even one row goes red. */
   def fileMetadata(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_pmeta_").toString
-    try {
+    graft.Scratch.withDir("graft_pmeta_") { out =>
       graft.Tables.documents(s, d)
         .withColumn("shard", (col("doc_id") % 8).cast("int"))
         .repartition(col("shard"))
@@ -2520,8 +2468,6 @@ object Pipeline {
           sum(col("n_chars")).as("total_chars"))
         .orderBy("shard")
         .localCheckpoint() // materialize before the scratch layout vanishes
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2548,8 +2494,7 @@ object Pipeline {
     * drifted from its key (the DV corruption mode, which silently
     * resurrects deleted rows) goes red. */
   def deletionVectors(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_pdv_").toString
-    try {
+    graft.Scratch.withDir("graft_pdv_") { out =>
       graft.Tables.documents(s, d)
         .withColumn("shard", (col("doc_id") % 8).cast("int"))
         .repartition(col("shard"))
@@ -2569,8 +2514,6 @@ object Pipeline {
           sum(when(col("doc_id") % 17 === 3, 1L).otherwise(0L)).as("leaked_deletes"))
         .orderBy("shard")
         .localCheckpoint() // materialize before the scratch layout vanishes
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2598,9 +2541,8 @@ object Pipeline {
     * layout (`week_prune_ok`: a one-week predicate's path-scoped scan
     * opens exactly one file — vacuity throws). */
   def partitionEvolution(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_pevo_").toString
-    val dayDir = s"$out/by_day"; val wkDir = s"$out/by_week"
-    try {
+    graft.Scratch.withDir("graft_pevo_") { out =>
+      val dayDir = s"$out/by_day"; val wkDir = s"$out/by_week"
       graft.Tables.events(s, d)
         .select(col("event_id"), col("value"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -2648,8 +2590,6 @@ object Pipeline {
         .withColumn("week_prune_ok", lit(true))
         .orderBy("wk")
         .localCheckpoint() // materialize before the scratch layouts vanish
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2686,8 +2626,7 @@ object Pipeline {
     * re-layout. File count is deliberately NOT pinned (empty range
     * slices write no file — an engine detail, not a contract). */
   def rangeLayout(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_prange_").toString
-    try {
+    graft.Scratch.withDir("graft_prange_") { out =>
       graft.Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_shipdate"), col("l_extendedprice"))
         .repartitionByRange(8, col("l_shipdate"))
@@ -2716,8 +2655,6 @@ object Pipeline {
         .withColumn("ranges_disjoint", lit(true))
         .orderBy("month")
         .localCheckpoint()
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2742,8 +2679,7 @@ object Pipeline {
     * (codec library versions move them); the ORDERING is the
     * contract. */
   def zstdParquet(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_pcodec_").toString
-    try {
+    graft.Scratch.withDir("graft_pcodec_") { out =>
       val docs = graft.Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("text"))
       def dirBytes(p: String): Long = {
@@ -2781,8 +2717,6 @@ object Pipeline {
         .toDF("content_md5", "all_codecs_equal", "zstd_smallest")
         .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
         .select("n_docs", "content_md5", "all_codecs_equal", "zstd_smallest")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2811,8 +2745,7 @@ object Pipeline {
     * untouched means untouched, not rewritten-with-same-content;
     * `others_untouched` throws on drift). */
   def dynamicOverwrite(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_pdyn_").toString
-    try {
+    graft.Scratch.withDir("graft_pdyn_") { out =>
       val ev = graft.Tables.events(s, d)
         .select(col("event_id"),
           round(col("value") * lit(100)).cast("long").as("value_c"),
@@ -2835,16 +2768,11 @@ object Pipeline {
         }.toMap
       }
       val before = listFiles()
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      Shared.withConfs(s, Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
         ev.filter(col("day") === target)
           .withColumn("value_c", col("value_c") * 2)
           .repartition(col("day"))
           .write.mode("overwrite").partitionBy("day").parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       val after = listFiles()
       val othersUntouched = before.keySet == after.keySet &&
@@ -2863,8 +2791,6 @@ object Pipeline {
         .withColumn("others_untouched", lit(true))
         .orderBy("day")
         .localCheckpoint()
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -2895,8 +2821,7 @@ object Pipeline {
     * amplification bill; the read-side cost MoR pays instead is the
     * anti-join this very query executes. */
   def morCowEquiv(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_morcow_").toString
-    try {
+    graft.Scratch.withDir("graft_morcow_") { out =>
       graft.Tables.documents(s, d)
         .withColumn("shard", (col("doc_id") % 8).cast("int"))
         .repartition(col("shard"))
@@ -2911,8 +2836,7 @@ object Pipeline {
         .groupBy("shard")
         .agg(count(lit(1)).as("n_live"), sum("n_chars").as("chars_live"))
       // CoW: REALLY rewrite affected shards without the deleted rows
-      val cowDir = java.nio.file.Files.createTempDirectory("graft_morcow_v2_").toString
-      try {
+      graft.Scratch.withDir("graft_morcow_v2_") { cowDir =>
         s.read.parquet(out).filter(!isDel)
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").parquet(cowDir)
@@ -2931,8 +2855,8 @@ object Pipeline {
             lit(0).as("mor_files_rewritten"))
           .orderBy("shard")
           .localCheckpoint()
-      } finally graft.Scratch.rmTree(cowDir)
-    } finally graft.Scratch.rmTree(out)
+      }
+    }
   }
 
   /** Analytic oracle: live census per shard, delete census per shard,

@@ -79,45 +79,45 @@ object RelationalExt4 {
     val id = invocation.incrementAndGet()
     val tO = s"graft_q56_orders_$id"
     val tL = s"graft_q56_lineitem_$id"
-    val out = java.nio.file.Files.createTempDirectory("graft_q56_").toString
-    try {
-      val ordersProj = Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
-      val lineitemProj = Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
-      // ONE count for BOTH sides, from the larger (bucketed joins need
-      // equal counts to stay exchange-free; Spark's bucket coalescing
-      // could relax this to a 2^k multiple, but equal is the layout a
-      // warehouse co-bucketing a fact pair would write)
-      val nBuckets = bucketCountFor(
-        lineitemProj.queryExecution.optimizedPlan.stats.sizeInBytes max
-          ordersProj.queryExecution.optimizedPlan.stats.sizeInBytes)
-      // the two bucketed-table writes are independent — overlap them
-      // (Shared.awaitAll, guide §2.6)
-      Shared.awaitAll[Unit](Seq(
-        () => ordersProj
-          .repartition(nBuckets, col("o_orderkey"))
-          .write.mode("overwrite").option("path", s"$out/orders")
-          .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(tO),
-        () => lineitemProj
-          .repartition(nBuckets, col("l_orderkey"))
-          .write.mode("overwrite").option("path", s"$out/lineitem")
-          .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(tL)))
-      val agg = s.table(tO).hint("merge")
-        .join(s.table(tL).hint("merge"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_lines"),
-          sum(round(col("l_extendedprice") * lit(1000000L)).cast("long")).as("rev_us"))
-        .orderBy("o_orderpriority")
-      // materialize BEFORE probing (metrics/final plan exist only after
-      // execution) and BEFORE dropping the tables it reads
-      val materialized = agg.localCheckpoint()
-      val (nShuffles, _) = PlanProbe.shufflesAndSortsUnderSmj(agg)
-      materialized.withColumn("n_shuffles_below_join", lit(nShuffles))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tO")
-      s.sql(s"DROP TABLE IF EXISTS $tL")
-      graft.Scratch.rmTree(out)
+    graft.Scratch.withDir("graft_q56_") { out =>
+      try {
+        val ordersProj = Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
+        val lineitemProj = Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
+        // ONE count for BOTH sides, from the larger (bucketed joins need
+        // equal counts to stay exchange-free; Spark's bucket coalescing
+        // could relax this to a 2^k multiple, but equal is the layout a
+        // warehouse co-bucketing a fact pair would write)
+        val nBuckets = bucketCountFor(
+          lineitemProj.queryExecution.optimizedPlan.stats.sizeInBytes max
+            ordersProj.queryExecution.optimizedPlan.stats.sizeInBytes)
+        // the two bucketed-table writes are independent — overlap them
+        // (Shared.awaitAll, guide §2.6)
+        Shared.awaitAll[Unit](Seq(
+          () => ordersProj
+            .repartition(nBuckets, col("o_orderkey"))
+            .write.mode("overwrite").option("path", s"$out/orders")
+            .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
+            .saveAsTable(tO),
+          () => lineitemProj
+            .repartition(nBuckets, col("l_orderkey"))
+            .write.mode("overwrite").option("path", s"$out/lineitem")
+            .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
+            .saveAsTable(tL)))
+        val agg = s.table(tO).hint("merge")
+          .join(s.table(tL).hint("merge"), col("o_orderkey") === col("l_orderkey"))
+          .groupBy("o_orderpriority")
+          .agg(count(lit(1)).as("n_lines"),
+            sum(round(col("l_extendedprice") * lit(1000000L)).cast("long")).as("rev_us"))
+          .orderBy("o_orderpriority")
+        // materialize BEFORE probing (metrics/final plan exist only after
+        // execution) and BEFORE dropping the tables it reads
+        val materialized = agg.localCheckpoint()
+        val (nShuffles, _) = PlanProbe.shufflesAndSortsUnderSmj(agg)
+        materialized.withColumn("n_shuffles_below_join", lit(nShuffles))
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS $tO")
+        s.sql(s"DROP TABLE IF EXISTS $tL")
+      }
     }
   }
 
@@ -161,8 +161,7 @@ object RelationalExt4 {
       .write.mode("overwrite").partitionBy("day").parquet(out)
 
   def q57PartitionPrune(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_q57_").toString
-    try {
+    graft.Scratch.withDir("graft_q57_") { out =>
       writeDayPartitioned(s, d, out)
       val lo = "2024-01-10"; val hi = "2024-01-19"
       val pruned = s.read.parquet(out)
@@ -180,8 +179,6 @@ object RelationalExt4 {
       import s.implicits._
       Seq((row.getAs[Long]("n_rows"), row.getAs[Long]("value_c"), filesRead, filesTotal))
         .toDF("n_rows", "value_c", "files_read", "files_total")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -211,8 +208,7 @@ object RelationalExt4 {
     * filter is present in the executed fact scan, so a green row can
     * only come from the DPP path. */
   def q58DynamicPrune(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_q58_").toString
-    try {
+    graft.Scratch.withDir("graft_q58_") { out =>
       writeDayPartitioned(s, d, out)
       val fact = s.read.parquet(out)
       val dim = Tables.events(s, d)
@@ -234,8 +230,6 @@ object RelationalExt4 {
       import s.implicits._
       Seq((row.getAs[Long]("n_rows"), row.getAs[Long]("value_c"), filesRead, filesTotal))
         .toDF("n_rows", "value_c", "files_read", "files_total")
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -251,21 +245,6 @@ object RelationalExt4 {
       |  (SELECT count(*) FROM dim) AS files_read,
       |  (SELECT count(DISTINCT day) FROM e) AS files_total
       |FROM e JOIN dim USING (day)""".stripMargin
-
-  /** Set session confs for the duration of `body`, restoring previous
-    * values (or unsetting) after — the [[graft.streaming.EventStream]]
-    * withRocksDbState discipline: never leave a conf set on the shared
-    * session. Sequential-harness-safe; a future parallel harness would
-    * need per-query sessions (`newSession()`) instead. */
-  private def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
 
   /** AQE SKEW-JOIN certificate — the RUNTIME completion of the skew
     * story (q22 salts an aggregate, q52 salts a join BY HAND; this
@@ -283,7 +262,7 @@ object RelationalExt4 {
     * chart. Business result: per-type counts and dim-weighted sums,
     * provably unaffected by the runtime re-plan. */
   def q59AqeSkew(s: SparkSession, d: String): DataFrame =
-    withConfs(s, Map(
+    Shared.withConfs(s, Map(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4096",
       // factor 2 (default 5): the skew test is size > max(factor·median,
       // threshold), and the MEDIAN depends on the session's shuffle
@@ -388,7 +367,7 @@ object RelationalExt4 {
     * row can only come from the runtime-filtered plan. Business
     * result: urgent-order line count + exact-micros revenue. */
   def q61RuntimeFilter(s: SparkSession, d: String): DataFrame =
-    withConfs(s, Map(
+    Shared.withConfs(s, Map(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // fact side must LOOK big enough to be worth filtering: the
       // production floor (10 GB) exists to skip tiny scans — exactly

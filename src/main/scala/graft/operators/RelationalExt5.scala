@@ -389,84 +389,79 @@ object RelationalExt5 {
   def q71CboStats(s: SparkSession, d: String): DataFrame = {
     val id = invocation.incrementAndGet()
     val tbl = s"graft_q71_orders_$id"
-    val out = java.nio.file.Files.createTempDirectory("graft_q71_").toString
-    try {
-      Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
-        .write.mode("overwrite").option("path", s"$out/orders").saveAsTable(tbl)
-      s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS")
-      s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR COLUMNS o_orderkey")
-      // rowCount propagates into plan Statistics only under the cost-based
-      // optimizer (size-only estimation otherwise) — scope CBO on, the
-      // production setting for a stats-maintained warehouse
-      val statRows = withConfsLocal(s, Map("spark.sql.cbo.enabled" -> "true")) {
-        s.table(tbl).queryExecution.optimizedPlan.stats.rowCount
-          .map(_.toLong)
-          .getOrElse(throw new IllegalStateException(
-            "ANALYZE produced no rowCount statistic — stats pipeline broken"))
+    graft.Scratch.withDir("graft_q71_") { out =>
+      // plan statistics resolve their conf (CBO on or off) through
+      // SQLConf.get — the thread's ACTIVE session, not the plan's — so
+      // the certificate runs with `s` active, whatever the caller left
+      val active = SparkSession.getActiveSession
+      SparkSession.setActiveSession(s)
+      try {
+        Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
+          .write.mode("overwrite").option("path", s"$out/orders").saveAsTable(tbl)
+        s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS")
+        s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR COLUMNS o_orderkey")
+        // rowCount propagates into plan Statistics only under the cost-based
+        // optimizer (size-only estimation otherwise) — scope CBO on, the
+        // production setting for a stats-maintained warehouse
+        val statRows = Shared.withConfs(s, Map("spark.sql.cbo.enabled" -> "true")) {
+          s.table(tbl).queryExecution.optimizedPlan.stats.rowCount
+            .map(_.toLong)
+            .getOrElse(throw new IllegalStateException(
+              "ANALYZE produced no rowCount statistic — stats pipeline broken"))
+        }
+        val threshold = 64L * 1024 * 1024
+        val agg = Shared.withConfs(s, Map(
+          // at the driver's scales: large enough for the ANALYZEd orders
+          // projection, far too small for lineitem — a broadcast can
+          // only come from stats
+          "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString)) {
+          val joined = Tables.lineitem(s, d).select("l_orderkey")
+            .join(s.table(tbl), col("l_orderkey") === col("o_orderkey"))
+            .groupBy("o_orderpriority").agg(count(lit(1)).as("n_lines"))
+            .orderBy("o_orderpriority")
+          // the estimate the PLANNER actually consults (ADVICE r11): the
+          // join's build-side LOGICAL SUBTREE statistics in the optimized
+          // plan — column pruning and projection estimation applied — not
+          // the raw ANALYZEd table size. Near the 64 MB boundary the two
+          // legitimately disagree (the planner prices the pruned
+          // projection, which is smaller than the table), and an
+          // expectation derived from the raw size THREW on correct
+          // planner behavior at boundary scales.
+          val joinNode = joined.queryExecution.optimizedPlan.collectFirst {
+            case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+          }.getOrElse(throw new IllegalStateException(
+            "q71: no Join in the optimized plan — the stats certificate has no subject"))
+          val statsBytes = Seq(joinNode.left, joinNode.right)
+            .find(_.output.exists(_.name == "o_orderpriority"))
+            .getOrElse(joinNode.right).stats.sizeInBytes
+          // certify the STATIC plan (queryExecution.sparkPlan — the
+          // physical plan chosen from the ANALYZEd statistics, before the
+          // InsertAdaptiveSparkPlan preparation wraps it): AQE may later
+          // re-plan the join from RUNTIME shuffle sizes, and near the
+          // threshold boundary that re-plan can legitimately disagree
+          // with the static table estimate — correct adaptive behavior,
+          // not a stats-pipeline failure (ADVICE r10: the executed-plan
+          // probe turned exactly that into a throw at intermediate
+          // scales). What this query certifies is that ANALYZE's numbers
+          // REACH the planner; what AQE then improves is its own
+          // certificate (q59/q80).
+          val isBroadcast = joined.queryExecution.sparkPlan
+            .find(_.getClass.getSimpleName.contains("BroadcastHashJoin")).isDefined
+          val expectBroadcast = statsBytes <= threshold
+          if (isBroadcast != expectBroadcast)
+            throw new IllegalStateException(
+              s"static join strategy inconsistent with the build-side subtree estimate " +
+                s"($statsBytes B vs $threshold B threshold): broadcast=$isBroadcast — " +
+                "CBO size estimate unused")
+          val materialized = joined.localCheckpoint()
+          materialized.withColumn("cbo_broadcast", lit(isBroadcast))
+        }
+        agg
+          .withColumn("stat_rows", lit(statRows))
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS $tbl")
+        active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
       }
-      val threshold = 64L * 1024 * 1024
-      val agg = withConfsLocal(s, Map(
-        // at the driver's scales: large enough for the ANALYZEd orders
-        // projection, far too small for lineitem — a broadcast can
-        // only come from stats
-        "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString)) {
-        val joined = Tables.lineitem(s, d).select("l_orderkey")
-          .join(s.table(tbl), col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_orderpriority").agg(count(lit(1)).as("n_lines"))
-          .orderBy("o_orderpriority")
-        // the estimate the PLANNER actually consults (ADVICE r11): the
-        // join's build-side LOGICAL SUBTREE statistics in the optimized
-        // plan — column pruning and projection estimation applied — not
-        // the raw ANALYZEd table size. Near the 64 MB boundary the two
-        // legitimately disagree (the planner prices the pruned
-        // projection, which is smaller than the table), and an
-        // expectation derived from the raw size THREW on correct
-        // planner behavior at boundary scales.
-        val joinNode = joined.queryExecution.optimizedPlan.collectFirst {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-        }.getOrElse(throw new IllegalStateException(
-          "q71: no Join in the optimized plan — the stats certificate has no subject"))
-        val statsBytes = Seq(joinNode.left, joinNode.right)
-          .find(_.output.exists(_.name == "o_orderpriority"))
-          .getOrElse(joinNode.right).stats.sizeInBytes
-        // certify the STATIC plan (queryExecution.sparkPlan — the
-        // physical plan chosen from the ANALYZEd statistics, before the
-        // InsertAdaptiveSparkPlan preparation wraps it): AQE may later
-        // re-plan the join from RUNTIME shuffle sizes, and near the
-        // threshold boundary that re-plan can legitimately disagree
-        // with the static table estimate — correct adaptive behavior,
-        // not a stats-pipeline failure (ADVICE r10: the executed-plan
-        // probe turned exactly that into a throw at intermediate
-        // scales). What this query certifies is that ANALYZE's numbers
-        // REACH the planner; what AQE then improves is its own
-        // certificate (q59/q80).
-        val isBroadcast = joined.queryExecution.sparkPlan
-          .find(_.getClass.getSimpleName.contains("BroadcastHashJoin")).isDefined
-        val expectBroadcast = statsBytes <= threshold
-        if (isBroadcast != expectBroadcast)
-          throw new IllegalStateException(
-            s"static join strategy inconsistent with the build-side subtree estimate " +
-              s"($statsBytes B vs $threshold B threshold): broadcast=$isBroadcast — " +
-              "CBO size estimate unused")
-        val materialized = joined.localCheckpoint()
-        materialized.withColumn("cbo_broadcast", lit(isBroadcast))
-      }
-      agg
-        .withColumn("stat_rows", lit(statRows))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      graft.Scratch.rmTree(out)
-    }
-  }
-
-  /** The [[RelationalExt4]] conf-scoping discipline, local copy. */
-  private def withConfsLocal[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -534,8 +529,7 @@ object RelationalExt5 {
     * mention the touched leaves and must NOT contain the decoy.
     * `pruned_ok` is the oracle-pinned TRUE; vacuity throws. */
   def q73NestedPruning(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_q73_").toString
-    try {
+    graft.Scratch.withDir("graft_q73_") { out =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           struct(col("lang"), col("source"), col("n_chars"),
@@ -557,8 +551,6 @@ object RelationalExt5 {
           "nested pruning did not engage — the decoy payload leaf is in the scan:\n" +
             scans.mkString("\n").take(500))
       materialized.withColumn("pruned_ok", lit(true))
-    } finally {
-      graft.Scratch.rmTree(out)
     }
   }
 
@@ -739,42 +731,42 @@ object RelationalExt5 {
   def q78BucketPruning(s: SparkSession, d: String): DataFrame = {
     val id = invocation.incrementAndGet()
     val tbl = s"graft_q78_orders_$id"
-    val out = java.nio.file.Files.createTempDirectory("graft_q78_").toString
-    try {
-      Tables.orders(s, d).select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .repartition(8, col("o_orderkey"))
-        .write.mode("overwrite").option("path", s"$out/orders")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(tbl)
-      val keys = Seq(1L, 7L, 32L)
-      // DisableUnnecessaryBucketedScan sees no join/agg needing the
-      // bucket distribution and reverts to a plain scan — which also
-      // forfeits PRUNING. Pinning autoBucketedScan off keeps the
-      // bucketed read (and its bucket filter) for the point-lookup
-      // path this query certifies.
-      val (probe, materialized) = withConfsLocal(s, Map(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")) {
-        val p = s.table(tbl)
-          .filter(col("o_orderkey").isin(keys: _*))
-          .select(col("o_orderkey"), col("o_orderpriority"),
-            round(col("o_totalprice") * lit(100)).cast("long").as("price_c"))
-          .orderBy("o_orderkey")
-        (p, p.localCheckpoint())
+    graft.Scratch.withDir("graft_q78_") { out =>
+      try {
+        Tables.orders(s, d).select("o_orderkey", "o_orderpriority", "o_totalprice")
+          .repartition(8, col("o_orderkey"))
+          .write.mode("overwrite").option("path", s"$out/orders")
+          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .saveAsTable(tbl)
+        val keys = Seq(1L, 7L, 32L)
+        // DisableUnnecessaryBucketedScan sees no join/agg needing the
+        // bucket distribution and reverts to a plain scan — which also
+        // forfeits PRUNING. Pinning autoBucketedScan off keeps the
+        // bucketed read (and its bucket filter) for the point-lookup
+        // path this query certifies.
+        val (probe, materialized) = Shared.withConfs(s, Map(
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")) {
+          val p = s.table(tbl)
+            .filter(col("o_orderkey").isin(keys: _*))
+            .select(col("o_orderkey"), col("o_orderpriority"),
+              round(col("o_totalprice") * lit(100)).cast("long").as("price_c"))
+            .orderBy("o_orderkey")
+          (p, p.localCheckpoint())
+        }
+        val scanStr = PlanProbe.nodes(probe)
+          .filter(_.getClass.getSimpleName.contains("FileSourceScan"))
+          .map(_.toString).mkString("\n")
+        val sel = "SelectedBucketsCount: (\\d+) out of 8".r
+          .findFirstMatchIn(scanStr).map(_.group(1).toInt)
+          .getOrElse(throw new IllegalStateException(
+            "scan does not advertise bucket selection — bucket pruning is off"))
+        if (sel > keys.length)
+          throw new IllegalStateException(
+            s"IN-list of ${keys.length} keys opened $sel buckets — pruning did not engage")
+        materialized.withColumn("bucket_pruned", lit(true))
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS $tbl")
       }
-      val scanStr = PlanProbe.nodes(probe)
-        .filter(_.getClass.getSimpleName.contains("FileSourceScan"))
-        .map(_.toString).mkString("\n")
-      val sel = "SelectedBucketsCount: (\\d+) out of 8".r
-        .findFirstMatchIn(scanStr).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          "scan does not advertise bucket selection — bucket pruning is off"))
-      if (sel > keys.length)
-        throw new IllegalStateException(
-          s"IN-list of ${keys.length} keys opened $sel buckets — pruning did not engage")
-      materialized.withColumn("bucket_pruned", lit(true))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      graft.Scratch.rmTree(out)
     }
   }
 

@@ -1551,17 +1551,23 @@ object TextAnalysis {
     (merges.result(), words)
   }
 
-  /** Memoized halves of [[bpeLoop]] (r13): the merge table and the
-    * final merged vocabulary are both vocabulary-sized verified-output
-    * tables, and THREE queries (t_bpe_train; t_bpe_apply and
-    * t_fertility) each re-ran the identical 10-round training loop —
-    * the [[Dedup.ngramJaccard]] memo discipline applied to tokenizer
+  /** One memo for both halves of [[bpeLoop]]: the merge table and the
+    * final merged vocabulary come out of the same 10-round training
+    * loop, so ONE build runs it once and writes both tables, and THREE
+    * queries (t_bpe_train; t_bpe_apply and t_fertility) read their half
+    * — the [[Dedup.ngramJaccard]] memo discipline applied to tokenizer
     * training. Longs and strings only, so the parquet round-trip is
     * exact; every consumer stays oracle-gated. */
-  private def bpeMergesMemo(s: SparkSession, d: String): DataFrame =
-    Shared.memo(s, d, "bpe_merges")(bpeLoop(s, d)._1.reduce(_ unionByName _))
-  private def bpeWordsMemo(s: SparkSession, d: String): DataFrame =
-    Shared.memo(s, d, "bpe_words_final")(bpeLoop(s, d)._2)
+  private def bpeMemo(s: SparkSession, d: String, table: String): DataFrame = {
+    val dir = Shared.memoDir(s, d, "bpe") { dir =>
+      val (merges, words) = bpeLoop(s, d)
+      Shared.writeTable(dir, "merges", merges.reduce(_ unionByName _))
+      Shared.writeTable(dir, "words", words)
+    }
+    s.read.parquet(new java.io.File(dir, table).toString)
+  }
+  private def bpeMergesMemo(s: SparkSession, d: String): DataFrame = bpeMemo(s, d, "merges")
+  private def bpeWordsMemo(s: SparkSession, d: String): DataFrame = bpeMemo(s, d, "words")
 
   def bpeTrain(s: SparkSession, d: String): DataFrame =
     bpeMergesMemo(s, d).orderBy("round")

@@ -111,12 +111,12 @@ object EventStream {
         s.sparkContext.defaultParallelism))
     }
 
-  /** Restores the session shuffle/codegen confs after `body`. */
+  /** Runs `body` under the streaming shuffle width, codegen and
+    * state-store confs ([[graft.operators.Shared.withConfs]] restores
+    * them after). */
   private def withStreamShuffle[T](s: SparkSession, d: String)(body: => T): T = {
-    // parse BOTH pins before mutating any session conf: a fail-loud
+    // parse every pin before mutating any session conf: a fail-loud
     // rejection below must not leave half the harness confs applied
-    // (the restore runs in the finally around `body`, which a bad-pin
-    // sys.error would never reach)
     val pinnedRocks: Option[Boolean] =
       s.conf.getOption(graft.GraftConf.streamStateStoreKey) match {
         case Some("rocksdb") => Some(true)
@@ -125,9 +125,6 @@ object EventStream {
           s"${graft.GraftConf.streamStateStoreKey} must be 'rocksdb' or 'hdfs', got '$bad'")
         case None => None
       }
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevWsc = s.conf.get("spark.sql.codegen.wholeStage")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s, d).toString)
     // whole-stage codegen is a THROUGHPUT trade: each micro-batch
     // re-plans with per-batch literals (watermark value, batch id), so
     // every batch of every stateful stage generates a NEW class —
@@ -143,7 +140,6 @@ object EventStream {
     val codegen = s.conf.getOption(graft.GraftConf.streamCodegenKey)
       .map(_.toBoolean)
       .getOrElse(sourceBytes(s, d) >= graft.GraftConf.streamCodegenBytes)
-    s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
     // ADAPTIVE STATE-STORE BACKEND (r11, the codegen discipline applied
     // to state): the default HDFS-backed provider holds every store's
     // map + retained versions on heap — the 100× streaming probe
@@ -155,27 +151,26 @@ object EventStream {
     // micro-batch size. Only ever SETS RocksDB (restoring after), so a
     // transformWithState query's own RocksDB pin is never overridden;
     // deployments pin via graft.stream.statestore = rocksdb|hdfs.
-    val storeKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevStore = s.conf.getOption(storeKey)
     // fail-loud pin (ADVICE r11): the codegen pin above throws on a
     // non-boolean via toBoolean, and a `match` that defaulted any
     // non-"rocksdb" string to the HDFS backend would turn a typo
     // ("RocksDB", "true") into a silent re-exposure of the 100× heap
-    // OOM this backend decision exists to prevent — pinnedRocks was
-    // parsed (and rejected loudly) BEFORE any conf mutation above.
+    // OOM this backend decision exists to prevent.
     val rocks = pinnedRocks.getOrElse(
       sourceBytes(s, d) >= graft.GraftConf.streamRocksDbBytes)
-    if (rocks) s.conf.set(storeKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.codegen.wholeStage", prevWsc)
-      if (rocks) prevStore match {
-        case Some(v) => s.conf.set(storeKey, v)
-        case None => s.conf.unset(storeKey)
-      }
-    }
+    graft.operators.Shared.withConfs(s, Map(
+      "spark.sql.shuffle.partitions" -> streamShufflePartitions(s, d).toString,
+      "spark.sql.codegen.wholeStage" -> codegen.toString) ++
+      (if (rocks) Map(stateStoreKey -> rocksDbProvider) else Map.empty))(body)
   }
+
+  private val stateStoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  /** Scoped around the `transformWithState` drains, which require the
+    * RocksDB provider (its column-family state layout); every other
+    * stateful query here runs on the adaptive default. */
+  private val rocksDbState = Map(stateStoreKey -> rocksDbProvider)
 
   /** Drains `df` through the production sink shape — foreachBatch →
     * parquet, executor-side writes, nothing driver-resident — and
@@ -194,31 +189,38 @@ object EventStream {
     * (chainedStateful, availableNow — their certificates read
     * `q.recentProgress`) still hand-build a memory sink.
     *
-    * `name` keys the output dir. The returned frame reads it lazily, so
-    * it lives under [[Shared]]'s scratch root, which its shutdown hook
-    * removes; the checkpoint is per-run state and goes when the query
-    * stops. A zero-emission drain (no batch wrote — the read-back would
-    * fail on schema inference) returns an empty frame with the stream's
-    * schema. */
-  private def drainToFiles(s: SparkSession, d: String, df: DataFrame,
+    * Writes into `out`, which the caller owns; the checkpoint is
+    * per-run state and goes when the query stops. A zero-emission drain
+    * (no batch wrote) writes an empty table with the stream's schema, so
+    * `out` always reads back as one parquet table. */
+  private[graft] def drainToFiles(s: SparkSession, d: String, df: DataFrame,
+      out: String, mode: String): Unit = {
+    graft.Scratch.withDir("graft-fsink-ckpt-") { ckpt =>
+      withStreamShuffle(s, d) {
+        val q = df.writeStream
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
+          }
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      }
+    }
+    if (!new java.io.File(out).list().exists(_.endsWith(".parquet")))
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+        .write.mode("append").parquet(out)
+  }
+
+  /** [[drainToFiles]] into a fresh `graft-gate-<name>-` directory under
+    * the scratch root, whose shutdown hook removes it: the returned
+    * frame reads it lazily. */
+  private def drain(s: SparkSession, d: String, df: DataFrame,
       name: String, mode: String): DataFrame = {
-    val out = graft.operators.Shared.scratchDir(s"graft-gate-$name-").resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fsink-ckpt-").toString
-    try withStreamShuffle(s, d) {
-      val q = df.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally graft.Scratch.rmTree(ckpt)
-    if (new java.io.File(out).exists &&
-        new java.io.File(out).list().exists(_.endsWith(".parquet")))
-      s.read.parquet(out)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+    val out = graft.Scratch.scratchDir(s"graft-gate-$name-").toString
+    drainToFiles(s, d, df, out, mode)
+    s.read.parquet(out)
   }
 
   /** Tumbling 5-minute window counts/sums per event type via a real
@@ -236,7 +238,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_window_agg"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -269,7 +271,7 @@ object EventStream {
         date_format(col("window.end"), fmt).as("window_end"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_append_windows"
-    val drained = drainToFiles(s, d, stream, name, "append")
+    val drained = drain(s, d, stream, name, "append")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -383,17 +385,18 @@ object EventStream {
     // r14: TWO declared queries (st_sessionize_stream = the gap-closed
     // slice, st_sessionize_final = the timeout slice) drain this same
     // FSM stream and then filter disjoint halves of it — the shared
-    // derived table pattern (Shared.memo contract: session-scoped,
+    // derived table pattern (Shared.memoDir contract: session-scoped,
     // keyed on applicationId, dies with the JVM). The first consumer
-    // pays the full drain; the second scans the drained session table
-    // instead of replaying the whole micro-batch pipeline. The drained
-    // multiset is deterministic (single events file + the no-data
-    // watermark batch, append mode accumulates every emitted session)
-    // and both consumers re-apply their own ordering; each slice stays
-    // oracle-gated per query.
-    graft.operators.Shared.memo(s, d, "st_sessionize_drained") {
-      drainToFiles(s, d, sessionFsmStream(s, d), "graft_st_sessionize_stream", "append")
-    }
+    // pays the full drain, whose foreachBatch writes land straight in
+    // the memo directory (the table is written once, never copied);
+    // the second scans it instead of replaying the whole micro-batch
+    // pipeline. The drained multiset is deterministic (single events
+    // file + the no-data watermark batch, append mode accumulates every
+    // emitted session) and both consumers re-apply their own ordering;
+    // each slice stays oracle-gated per query.
+    s.read.parquet(graft.operators.Shared.memoDir(s, d, "st_sessionize_drained") { dir =>
+      drainToFiles(s, d, sessionFsmStream(s, d), dir.toString, "append")
+    }.toString)
 
   /** The flatMapGroupsWithState session FSM without a sink, drained by
     * [[runSessionStream]]. */
@@ -558,7 +561,7 @@ object EventStream {
   def sessionWindowAgg(s: SparkSession, d: String): DataFrame = {
     val stream = sessionWindowStream(s, d)
     val name = "graft_st_session_window"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("user_id", "session_start")
   }
 
@@ -651,7 +654,7 @@ object EventStream {
       }
       .toDF("user_id", "event_id", "window_us", "rnk", "admitted")
     val name = "graft_st_throttle"
-    val drained = drainToFiles(s, d, decisions, name, "append")
+    val drained = drain(s, d, decisions, name, "append")
     drained
       .select(col("user_id"), col("event_id"),
         date_format(timestamp_micros(col("window_us")), fmt).as("window_start"),
@@ -688,7 +691,7 @@ object EventStream {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_dedup"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("event_type")
   }
 
@@ -710,7 +713,7 @@ object EventStream {
       .groupBy("c_mktsegment", "event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_enrich"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("c_mktsegment", "event_type")
   }
 
@@ -741,7 +744,7 @@ object EventStream {
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
     val name = "graft_st_stream_join"
-    val drained = drainToFiles(s, d, joined, name, "append")
+    val drained = drain(s, d, joined, name, "append")
     drained
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         date_format(col("click_ts"), fmt).as("click_ts"),
@@ -830,7 +833,7 @@ object EventStream {
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
         "left_outer")
       val name = "graft_st_stream_outer"
-      val drained = drainToFiles(s, dataDir.toString, joined, name, "append")
+      val drained = drain(s, dataDir.toString, joined, name, "append")
       drained
         .filter(col("click_id") >= 0)
         .select(col("click_id"), col("user_id"),
@@ -880,7 +883,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_topk"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start").orderBy(col("n").desc, col("event_type"))
     drained
@@ -919,7 +922,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_sliding"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -962,7 +965,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_anomaly"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
     drained
       .withColumn("type_total", sum("n").over(w))
@@ -1004,7 +1007,7 @@ object EventStream {
       .select(col("user_id"), col("n_events"), col("total_value"),
         date_format(col("last_ts"), fmt).as("last_seen"))
     val name = "graft_st_running"
-    val drained = drainToFiles(s, d, stream, name, "complete")
+    val drained = drain(s, d, stream, name, "complete")
     drained.orderBy("user_id")
   }
 
@@ -1127,7 +1130,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_msw"
-      val drained = drainToFiles(s, d, agg, name, "append")
+      val drained = drain(s, d, agg, name, "append")
       // contrast class, from the batch data (pure function of the corpus):
       // groups above B's watermark but at-or-below A's — emitted iff the
       // engine ignored the lagging source
@@ -1227,7 +1230,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_late_data"
-      val drained = drainToFiles(s, dataDir.toString, agg, name, "update")
+      val drained = drain(s, dataDir.toString, agg, name, "update")
       val kept = drained.groupBy("window_start", "event_type")
         .agg(max("n").as("n_kept")).localCheckpoint(eager = true)
       val total = ev.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -1323,22 +1326,6 @@ object EventStream {
     }
   }
 
-  /** Save/restore the state-store provider around `body`:
-    * `transformWithState` requires the RocksDB provider (its column-
-    * family state layout), while every other stateful query here runs
-    * on the default HDFS-backed store — the conf must not leak. */
-  private def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** The Spark 4 ARBITRARY-STATE API (`transformWithState` +
     * `StatefulProcessor` + typed `ValueState`, over the RocksDB state
     * store) — the successor to [[sessionizeStream]]'s
@@ -1379,7 +1366,9 @@ object EventStream {
           org.apache.spark.sql.Encoders.product[LedgerOut])
         .toDF()
       val name = "graft_st_tws_ledger"
-      val drained = withRocksDbState(s) { drainToFiles(s, dataDir.toString, out, name, "update") }
+      val drained = graft.operators.Shared.withConfs(s, rocksDbState) {
+        drain(s, dataDir.toString, out, name, "update")
+      }
       // update mode emits a snapshot per (user, batch); n_events is
       // monotone, so the max-n struct per user is the final state
       drained.groupBy("user_id")
@@ -1451,7 +1440,7 @@ object EventStream {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))
       val name = "graft_st_dedup_wm"
-      val drained = drainToFiles(s, dataDir.toString, stream, name, "complete")
+      val drained = drain(s, dataDir.toString, stream, name, "complete")
       drained.orderBy("event_type").localCheckpoint()
     }
   }
@@ -1730,7 +1719,9 @@ object EventStream {
           org.apache.spark.sql.Encoders.product[TimerOut])
         .toDF()
       val name = "graft_st_tws_timers"
-      val drained = withRocksDbState(s) { drainToFiles(s, dataDir.toString, out, name, "append") }
+      val drained = graft.operators.Shared.withConfs(s, rocksDbState) {
+        drain(s, dataDir.toString, out, name, "append")
+      }
       drained.filter(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"),
           date_format(timestamp_micros(col("closed_us")), fmt).as("closed_at"))
@@ -1775,8 +1766,7 @@ object EventStream {
       scratchFile(ev.filter(col("event_id") % 2 === 0), dir, "0-first", t0 - 60000)
       scratchFile(ev.filter(col("event_id") % 2 === 1), dir, "1-second", t0)
     }
-    val scratch = java.nio.file.Files.createTempDirectory("graft_st_upsert_").toString
-    try {
+    graft.Scratch.withDir("graft_st_upsert_") { scratch =>
       val stateDir = s"$scratch/state"
       def latest(df: DataFrame): DataFrame =
         df.groupBy("user_id")
@@ -1812,8 +1802,6 @@ object EventStream {
           date_format(timestamp_micros(col("ts_us")), fmt).as("last_ts"))
         .orderBy("user_id")
         .localCheckpoint(eager = true)
-    } finally {
-      graft.Scratch.rmTree(scratch)
     }
   }
 
@@ -1829,35 +1817,33 @@ object EventStream {
       |) WHERE rn = 1 ORDER BY user_id""".stripMargin
 
   def sinkRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_st_sink_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_st_ckpt_").toString
-    try {
-      val q = withStreamShuffle(s, d) {
-        eventStream(s, d)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("value"))
-          .writeStream
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .start()
+    graft.Scratch.withDir("graft_st_sink_") { out =>
+      graft.Scratch.withDir("graft_st_ckpt_") { ckpt =>
+        val q = withStreamShuffle(s, d) {
+          eventStream(s, d)
+            .filter(col("event_type") === "purchase")
+            .select(col("event_id"), col("user_id"), col("value"))
+            .writeStream
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        }
+        try q.processAllAvailable()
+        finally q.stop()
+        // eager = true is LOAD-BEARING, not a default we happen to rely
+        // on: withDir deletes the files the frame was read from when
+        // this block returns, so every block must be materialized first
+        // (and a lost block afterward is unrecoverable — the price of
+        // eagerly deleting scratch; the aggregate is tiny)
+        val back = s.read.parquet(out).localCheckpoint(eager = true)
+        back.groupBy("user_id")
+          .agg(count(lit(1)).as("n_purchases"),
+            countDistinct("event_id").as("n_distinct_events"),
+            moneySum(col("value")).as("total_value"))
+          .orderBy("user_id")
       }
-      try q.processAllAvailable()
-      finally q.stop()
-      // eager = true is LOAD-BEARING, not a default we happen to rely
-      // on: the finally below deletes the files the frame was read
-      // from, so every block must be materialized before this call
-      // returns (and a lost block afterward is unrecoverable — the
-      // price of eagerly deleting scratch; the aggregate is tiny)
-      val back = s.read.parquet(out).localCheckpoint(eager = true)
-      back.groupBy("user_id")
-        .agg(count(lit(1)).as("n_purchases"),
-          countDistinct("event_id").as("n_distinct_events"),
-          moneySum(col("value")).as("total_value"))
-        .orderBy("user_id")
-    } finally {
-      graft.Scratch.rmTree(out); graft.Scratch.rmTree(ckpt)
     }
   }
 
@@ -1886,8 +1872,7 @@ object EventStream {
     * happens AFTER the re-read, batch-side — the stream is a pure
     * pass-through sink, the recovery is what's under test. */
   def restartRecovery(s: SparkSession, d: String): DataFrame = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_st_restart_").toString
-    try {
+    graft.Scratch.withDir("graft_st_restart_") { scratch =>
       val ev = Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
         .localCheckpoint(eager = true)
@@ -1915,8 +1900,6 @@ object EventStream {
           countDistinct("event_id").as("n_distinct_events"),
           moneySum(col("value")).as("total_value"))
         .orderBy("event_type")
-    } finally {
-      graft.Scratch.rmTree(scratch)
     }
   }
 

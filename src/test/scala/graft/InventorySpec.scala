@@ -57,6 +57,16 @@ class InventorySpec extends AnyFunSuite {
     assert(registrars == Set("Bench.scala"), s"listener registered outside Bench: $registrars")
   }
 
+  test("Scratch is the only place under src/main that creates a temp directory") {
+    val creators = mainFilesCalling(raw"createTempDirectory".r)
+    assert(creators == Set("Scratch.scala"), s"temp dir created outside Scratch: $creators")
+  }
+
+  test("Shared.withConfs is the only place under src/main that unsets a session conf") {
+    val unsetters = mainFilesCalling(raw"conf\s*\.\s*unset".r)
+    assert(unsetters == Set("Shared.scala"), s"conf unset outside Shared: $unsetters")
+  }
+
   test("query selection: all by default, exactly the named ones, unknown names throw") {
     assert(GraftSession.selectQueries(None).keySet == SparkEntry.queries.keySet)
     assert(GraftSession.selectQueries(Some(" mr_wordcount, q10_star_join ,")).keySet ==

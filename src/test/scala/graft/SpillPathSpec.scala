@@ -6,7 +6,7 @@ package graft
   * with 0 bytes spilled). Each test pins a query's output bit-for-bit
   * against its default-path result while the relevant operator is
   * forced to spill/fall back via its threshold conf (set/restored, the
-  * RelationalExt4.withConfs discipline).
+  * Shared.withConfs discipline).
   */
 class SpillPathSpec extends SparkSpec {
 
