@@ -82,9 +82,10 @@ object GraftSession {
     // ~250 query executions the zombies crowd the storage pool and
     // persist-dependent queries (the RDD-loop family) degrade 10x late
     // in a pass (measured: d_embed_clusters 2.6 s -> 32 s in the steady
-    // pass of one run, cold pass fine).
+    // pass of one run, cold pass fine). BlockRelease drops a locally
+    // checkpointed RDD without Spark's per-RDD WARN.
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(org.apache.spark.graft.BlockRelease.drop)
     // ... and no leftover memory-sink tables: the two streaming gates
     // that still write one (EventStream.chainedStateful and
     // availableNow, whose certificates read the query object; every

@@ -34,13 +34,11 @@ object Multimodal {
   // spills through temp FILES — a per-image disk round trip)
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** Text → real PNG bytes at the given raster width: pixel p
+  /** The grayscale raster every image codec here encodes: pixel p
     * (row-major) = byte p of the UTF-8 text for p < n, else 0 (zero
-    * padding in the last row); height = ⌈n/w⌉ (min 1). `width = n`
-    * yields a padding-free single-scanline image. PNG is lossless, so
-    * `decodeGray(encodePng(t, w))` returns exactly these values — the
-    * identity the oracles replay. */
-  private[graft] def encodePng(text: String, width: Int = ImgW): Array[Byte] = {
+    * padding in the last row), width `width` (min 1), height ⌈n/w⌉
+    * (min 1) — the identity the oracles replay. */
+  private def grayRaster(text: String, width: Int): java.awt.image.BufferedImage = {
     val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val n = bytes.length
     val w = math.max(1, width)
@@ -53,10 +51,22 @@ object Multimodal {
       raster.setSample(p % w, p / w, 0, if (p < n) bytes(p) & 0xff else 0)
       p += 1
     }
+    img
+  }
+
+  /** `img` through the JDK ImageIO writer for `format`. */
+  private def imageIoBytes(img: java.awt.image.BufferedImage, format: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
+    javax.imageio.ImageIO.write(img, format, bos)
     bos.toByteArray
   }
+
+  /** Text → real PNG bytes of the [[grayRaster]] at the given width.
+    * `width = n` yields a padding-free single-scanline image. PNG is
+    * lossless, so `decodeGray(encodePng(t, w))` returns exactly the
+    * raster's values. */
+  private[graft] def encodePng(text: String, width: Int = ImgW): Array[Byte] =
+    imageIoBytes(grayRaster(text, width), "png")
 
   /** Text → real baseline JPEG bytes, same raster construction as
     * [[encodePng]] (64-wide grayscale, zero-padded last row) through
@@ -67,23 +77,8 @@ object Multimodal {
     * oracle-able; pixel statistics are spec-bounded instead
     * (MultimodalSpec's mixed-corpus test). This is the honest shape of
     * a real crawled-image corpus, which is mostly JPEG. */
-  private[graft] def encodeJpeg(text: String, width: Int = ImgW): Array[Byte] = {
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = bytes.length
-    val w = math.max(1, width)
-    val h = math.max(1, (n + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var p = 0
-    while (p < w * h) {
-      raster.setSample(p % w, p / w, 0, if (p < n) bytes(p) & 0xff else 0)
-      p += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    bos.toByteArray
-  }
+  private[graft] def encodeJpeg(text: String, width: Int = ImgW): Array[Byte] =
+    imageIoBytes(grayRaster(text, width), "jpg")
 
   /** [[encodeJpeg]] with an EXIF APP1 segment spliced in directly after
     * SOI — how camera/phone JPEGs actually arrive in a crawl. The APP1
@@ -303,18 +298,7 @@ object Multimodal {
     * header is LITTLE-endian where PNG's is big — the parse path worth
     * gating separately. */
   private[graft] def encodeGif(text: String, width: Int = ImgW): Array[Byte] = {
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = bytes.length
-    val w = math.max(1, width)
-    val h = math.max(1, (n + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var p = 0
-    while (p < w * h) {
-      raster.setSample(p % w, p / w, 0, if (p < n) bytes(p) & 0xff else 0)
-      p += 1
-    }
+    val img = grayRaster(text, width)
     val bos = new java.io.ByteArrayOutputStream()
     // the JDK writer's DEFAULT metadata sets the interlace flag, and
     // the JDK READER mis-renders small interlaced GIFs (verified by
@@ -1999,23 +1983,8 @@ object Multimodal {
     * header field is an analytic function of the text length (probed:
     * offset 1078, fileSize 1078 + 64·h for a 64-wide row with zero
     * padding since 64 ≡ 0 mod 4). */
-  private[graft] def encodeBmp(text: String, width: Int = ImgW): Array[Byte] = {
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = bytes.length
-    val w = math.max(1, width)
-    val h = math.max(1, (n + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var p = 0
-    while (p < w * h) {
-      raster.setSample(p % w, p / w, 0, if (p < n) bytes(p) & 0xff else 0)
-      p += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "bmp", bos)
-    bos.toByteArray
-  }
+  private[graft] def encodeBmp(text: String, width: Int = ImgW): Array[Byte] =
+    imageIoBytes(grayRaster(text, width), "bmp")
 
   /** BMP header parse — the DIB twin of [[pngMeta]] on the
     * little-endian side: magic, file size, pixel-array offset (54-byte

@@ -712,68 +712,36 @@ object Dedup {
     * labels across edges, (b) replaces every label with its label's own
     * label. Step (b) halves chain depth, so a diameter-D graph converges
     * in O(log D) rounds instead of O(D) — a 200-hop path closes in ~9
-    * rounds (see DedupSpec). The iteration itself runs on co-partitioned
-    * RDDs with per-round lineage truncation (see
-    * [[connectedComponentsLoop]]) — the round-2 lesson: an iterative
-    * self-join on DataFrames doubles the logical plan per round (persist
-    * does NOT truncate plans — Spark re-analyzes/canonicalizes/
-    * stringifies the full tree per action, and the driver burned minutes
-    * per round, or OOM'd in `explainString`, on an 11-round graph), and
-    * even per-round-checkpointed DataFrame rounds re-shuffle the edge
-    * table and pay Catalyst/AQE planning per round. (Local checkpoints
-    * forgo lineage recovery on executor loss; a multi-executor
-    * deployment with preemption should set a checkpoint dir and use
-    * reliable `checkpoint()` — same truncation effect.) Hitting the
-    * round cap without converging throws (silently-split clusters would
-    * be a wrong answer). */
+    * rounds (see DedupSpec). The iteration runs on the co-partitioned
+    * RDD edge list ([[Graph.coPartitionedEdges]]): every round's
+    * propagate join is narrow on the edge side, only the (much smaller)
+    * label table moves, and there is no per-round Catalyst/AQE
+    * re-planning (measured ~0.34 s/round -> ~0.1 s/round at sf0.1 on
+    * the same graph against the DataFrame loop this replaced, which
+    * re-shuffled the edge table every round). Per-round
+    * `localCheckpoint` (lazy — the convergence probe is the single job
+    * per round and materializes it) truncates lineage. All merges are
+    * `min`, so every step is order- and partitioning-independent —
+    * bit-identical labels at any cluster size. The round-2 lesson: an
+    * iterative self-join on DataFrames doubles the logical plan per
+    * round (persist does NOT truncate plans — Spark re-analyzes/
+    * canonicalizes/stringifies the full tree per action, and planning
+    * burned minutes per round, or OOM'd in `explainString`, on an
+    * 11-round graph), and even per-round-checkpointed DataFrame rounds
+    * re-shuffle the edge table and pay Catalyst/AQE planning per round.
+    * (Local checkpoints forgo lineage recovery on executor loss; a
+    * multi-executor deployment with preemption should set a checkpoint
+    * dir and use reliable `checkpoint()` — same truncation effect.)
+    * Hitting the round cap without converging throws (silently-split
+    * clusters would be a wrong answer). */
   private[graft] def connectedComponents(pairsDf: DataFrame, maxRounds: Int = 50): DataFrame = {
-    // materialize the (possibly scan/window-heavy) pair-producing plan
-    // once, eagerly: the checkpoint keeps that big plan out of every
-    // round's analysis, and rounds re-read the cached blocks
-    val cols = pairsDf.columns
-    val pairs = pairsDf.select(col(cols(0)).as("doc_a"), col(cols(1)).as("doc_b"))
-      .localCheckpoint()
-    val labels = connectedComponentsLoop(pairs, maxRounds)
-    // labels is its own materialized checkpoint leaf — the pair blocks
-    // are dead weight from here; drop them so iterative queries don't
-    // accumulate cached RDDs across a session
-    pairs.unpersist()
-    labels
-  }
-
-  /** The iteration runs on CO-PARTITIONED RDDs, not DataFrames — the
-    * classic Spark formulation for iterative graph algorithms, and it
-    * wins twice. (1) The edge list is hash-partitioned ONCE and every
-    * round's propagate join is narrow on the edge side: only the (much
-    * smaller) label table moves per round. The DataFrame loop this
-    * replaced re-shuffled the edge table every round — at 100 TB that
-    * difference is the job. (2) No per-round Catalyst analysis / AQE
-    * re-planning overhead: measured ~0.34 s/round -> ~0.1 s/round at
-    * sf0.1 on the same graph. Per-round `localCheckpoint` (lazy — the
-    * convergence probe is the single job per round and materializes it)
-    * still truncates lineage, which would otherwise grow per round
-    * exactly like the logical plan did in the DataFrame loop. All
-    * merges are `min`, so every step is order- and partitioning-
-    * independent — bit-identical labels at any cluster size. */
-  private def connectedComponentsLoop(pairs: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = pairs.sparkSession
+    val spark = pairsDf.sparkSession
     import spark.implicits._
-    val prs = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].rdd
-    // loop fan-out sized to EDGE VOLUME (GraftConf.edgesPerPartition),
-    // not to the upstream scan width: the pair table is already
-    // materialized, so the count is a cheap cached-block pass. A small
-    // graph contracts inside one union-find partition (zero iterative
-    // rounds beyond the convergence probe); a 100 TB pair graph fans out
-    // to thousands of partitions. Over-partitioning a small graph is
-    // what makes the iteration scheduling-bound — partitions must
-    // follow the data.
-    val nEdges = pairs.count()
-    val partitioner = new org.apache.spark.HashPartitioner(
-      graft.GraftConf.partitionsForEdges(nEdges, prs.getNumPartitions))
-    val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(partitioner)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the (possibly scan/window-heavy) pair-producing plan is
+    // materialized once, eagerly, inside the edge build: the checkpoint
+    // keeps that big plan out of every round's analysis
+    val (symmetric, partitioner) = Graph.coPartitionedEdges(pairsDf)
+    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // BigInt sum: a Long sum of 64-bit labels over billions of nodes can
     // wrap and fake (or mask) convergence; BigInt can't. Labels only
     // ever decrease, so the sum strictly decreases until the fixpoint —
@@ -836,7 +804,7 @@ object Dedup {
       val nextSum = labelSum(jumped)
       converged = nextSum == curSum
       curSum = nextSum
-      labels.unpersist(blocking = false)
+      org.apache.spark.graft.BlockRelease.drop(labels)
       labels = jumped
       rounds += 1
     }

@@ -22,12 +22,50 @@ import graft.Tables
   */
 object Graph {
 
-  /** `iters` rounds of damped PageRank (d = 0.85) over the UNDIRECTED
-    * pair graph: r₀ = ⌊10⁶/N⌋; rₜ₊₁(v) = ⌊0.15·10⁶/N⌋ +
-    * ⌊17·Σ_{u~v}⌊rₜ(u)/deg(u)⌋ / 20⌋. Per round: one equi-join of the
-    * (checkpointed) degree-annotated edge list against the rank table +
-    * one partial-agg shuffle — the standard Pregel-style formulation,
-    * never materializing anything wider than (node, rank).
+  /** The co-partitioned edge list every RDD graph loop iterates on
+    * ([[pagerankLoop]], [[bfsLoop]], [[Dedup.connectedComponents]]):
+    * the first two columns of `pairsDf` cast to long and materialized
+    * once (`localCheckpoint`), symmetrized to both directions and
+    * hash-partitioned ONCE. Rounds then join against these stationary
+    * blocks narrowly on the edge side — only the per-node state moves —
+    * with no per-round Catalyst/AQE planning. The fan-out follows EDGE
+    * VOLUME ([[graft.GraftConf.partitionsForEdges]]), capped by the
+    * pair table's own width, not the upstream scan width: a small graph
+    * stays in a few partitions (over-partitioning is what makes an
+    * iteration scheduling-bound), a 100 TB pair graph fans out to
+    * thousands. Returns the (unpersisted) edges and their partitioner. */
+  private[graft] def coPartitionedEdges(pairsDf: DataFrame)
+      : (org.apache.spark.rdd.RDD[(Long, Long)], org.apache.spark.HashPartitioner) = {
+    val spark = pairsDf.sparkSession
+    import spark.implicits._
+    val cols = pairsDf.columns
+    val pairs = pairsDf.select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
+      .localCheckpoint()
+    val prs = pairs.as[(Long, Long)].rdd
+    val partitioner = new org.apache.spark.HashPartitioner(
+      graft.GraftConf.partitionsForEdges(pairs.count(), prs.getNumPartitions))
+    (prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }.partitionBy(partitioner),
+      partitioner)
+  }
+
+  /** Both directions of every (a, b) pair as (src, dst) — the undirected
+    * edge frame of the DataFrame graph operators. */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+
+  /** `iters` rounds of damped PageRank (d = 0.85) with restart to the
+    * seed set S = {v : isSeed(v)} over the UNDIRECTED pair graph:
+    * r₀(v) = ⌊10⁶/|S|⌋ on seeds, else 0; rₜ₊₁(v) = t(v) +
+    * ⌊17·Σ_{u~v}⌊rₜ(u)/deg(u)⌋ / 20⌋ with teleport t(v) = ⌊0.15·10⁶/|S|⌋
+    * on seeds, else 0. Every node a seed (the default) is global
+    * PageRank (|S| = N); a proper subset is personalized PageRank.
+    * Per round: one join of the stationary degree-annotated edge list
+    * ([[coPartitionedEdges]]) against the rank table + one partial-agg
+    * shuffle — the standard Pregel-style formulation, never
+    * materializing anything wider than (node, rank). With a fixed
+    * small iteration count the lineage stays shallow, so no per-round
+    * checkpoint is needed.
     *
     * `residualEpsMicros ≥ 0` arms an early stop: after each round the
     * max per-node rank change (exact integer micros — same arithmetic as
@@ -44,53 +82,41 @@ object Graph {
     * ε at the few-micros level, and the returned ranks are within ~ε of
     * any longer run (spec-pinned: ε = 4 on the 200-chain stops at round
     * ~30 of a 150 cap, every rank within 1 micro of the round-150
-    * state). The driver query keeps the fixed 5-round form (ε disabled):
-    * its oracle unrolls exactly 5 rounds, and round count is part of
-    * that contract. */
+    * state). g_pagerank and g_ppr keep the fixed 5-round form (ε
+    * disabled): their oracles unroll exactly 5 rounds, and round count
+    * is part of that contract. */
   private[graft] def pagerankLoop(pairsDf: DataFrame, iters: Int,
-      residualEpsMicros: Long = -1L): DataFrame =
-    pagerankLoopWithRounds(pairsDf, iters, residualEpsMicros)._1
+      residualEpsMicros: Long = -1L, isSeed: Long => Boolean = _ => true): DataFrame =
+    pagerankLoopWithRounds(pairsDf, iters, residualEpsMicros, isSeed)._1
 
   /** [[pagerankLoop]] plus the number of rounds actually run — the probe's
     * effect is observable (and spec-pinned) through the count. */
   private[graft] def pagerankLoopWithRounds(pairsDf: DataFrame, iters: Int,
-      residualEpsMicros: Long = -1L): (DataFrame, Int) = {
+      residualEpsMicros: Long = -1L, isSeed: Long => Boolean = _ => true): (DataFrame, Int) = {
     val spark = pairsDf.sparkSession
     import spark.implicits._
-    val cols = pairsDf.columns
-    // iterate on co-partitioned RDDs (same rationale as
-    // Dedup.connectedComponentsLoop): the degree-annotated edge list is
-    // hash-partitioned ONCE and stays put — each round's contribution
-    // join is narrow on the edge side, only the (node, rank) table
-    // moves, and there is no per-round Catalyst/AQE planning. With a
-    // fixed small iteration count the lineage stays shallow, so no
-    // per-round checkpoint is needed at all.
-    val pairs = pairsDf.select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
-      .localCheckpoint()
-    val prs = pairs.as[(Long, Long)].rdd
-    val nEdges = pairs.count()
-    val partitioner = new org.apache.spark.HashPartitioner(
-      graft.GraftConf.partitionsForEdges(nEdges, prs.getNumPartitions))
-    val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(partitioner)
+    val (edges, partitioner) = coPartitionedEdges(pairsDf)
     val deg = edges.mapValues(_ => 1L).reduceByKey(partitioner, _ + _)
     // (src, (dst, deg)) materialized once: every round re-reads these blocks
     val ewd = edges.join(deg, partitioner)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.mapValues(_ => ()).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "pagerank over an empty pair graph")
-    val base = 150000L / n
-    var r = nodes.mapValues(_ => 1000000L / n)
+    // each node carries its seed flag, so the per-round update is a
+    // mapValues that keeps the rank table on the edge partitioner
+    val nodes = deg.mapPartitions(_.map { case (id, _) => (id, isSeed(id)) },
+        preservesPartitioning = true)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nSeeds = nodes.filter(_._2).count()
+    require(nSeeds > 0, "pagerank needs a non-empty seed set")
+    val teleport = nodes.mapValues(seed => if (seed) 150000L / nSeeds else 0L)
+    var r = nodes.mapValues(seed => if (seed) 1000000L / nSeeds else 0L)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
       val contrib = ewd.join(r, partitioner)
         .map { case (_, ((dst, dg), rank)) => (dst, rank / dg) }
         .reduceByKey(partitioner, _ + _)
-      val next = nodes.leftOuterJoin(contrib, partitioner)
-        .mapValues { case (_, c) => base + c.getOrElse(0L) * 17 / 20 }
+      val next = teleport.leftOuterJoin(contrib, partitioner)
+        .mapValues { case (t, c) => t + c.getOrElse(0L) * 17 / 20 }
       if (residualEpsMicros >= 0L) {
         // lazy checkpoint + probe (the CC-loop discipline): the residual
         // fold is the one job per round — it materializes the checkpoint
@@ -105,11 +131,11 @@ object Graph {
       r = next
       it += 1
     }
-    val out = r.toDF("id", "r")
-    val result = out.localCheckpoint()
+    // materialize BEFORE dropping the edge blocks: the rank lineage
+    // reaches back through every round's ewd join
+    val result = r.toDF("id", "r").localCheckpoint()
     ewd.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
-    pairs.unpersist()
     (result, it)
   }
 
@@ -281,8 +307,7 @@ object Graph {
     val pairs = Dedup.embedDup(s, d)
       .select(col("vec_a").as("a"), col("vec_b").as("b"))
       .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val ew = edges.join(deg, "src").select(col("src").as("w"), col("dst").as("u"), col("deg"))
     val cand = ew.join(ew.select(col("w"), col("u").as("v")), "w")
@@ -331,16 +356,8 @@ object Graph {
       isSeed: Long => Boolean): DataFrame = {
     val spark = pairsDf.sparkSession
     import spark.implicits._
-    val cols = pairsDf.columns
-    val pairs = pairsDf.select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
-      .localCheckpoint()
-    val prs = pairs.as[(Long, Long)].rdd
-    val nEdges = pairs.count()
-    val partitioner = new org.apache.spark.HashPartitioner(
-      graft.GraftConf.partitionsForEdges(nEdges, prs.getNumPartitions))
-    val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(partitioner)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (symmetric, partitioner) = coPartitionedEdges(pairsDf)
+    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var dist = edges.mapValues(_ => ()).reduceByKey(partitioner, (a, _) => a)
       .filter { case (id, _) => isSeed(id) }
       .mapValues(_ => 0L)
@@ -353,7 +370,6 @@ object Graph {
     }
     val out = dist.toDF("id", "dist").localCheckpoint()
     edges.unpersist(blocking = false)
-    pairs.unpersist()
     out
   }
 
@@ -407,9 +423,7 @@ object Graph {
   def eccentricity(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d).select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = undirected(pairs).localCheckpoint()
     var dist = edges.select(col("src").as("id")).distinct()
       .filter(col("id") % 5 === 0)
       .select(col("id"), col("id").as("pv"), lit(0L).as("dist"))
@@ -699,9 +713,7 @@ object Graph {
     * the embed-dup candidate build twice. */
   private[graft] def communityFromPairs(s: SparkSession, d: String,
       pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = undirected(pairs).localCheckpoint()
     val nodes = edges.select(col("src").as("id")).distinct()
     val seeds = nodes.join(
         Tables.embeddings(s, d).select(col("vec_id").as("id"), col("label")), "id")
@@ -782,8 +794,7 @@ object Graph {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val withNbrDeg = edges
       .join(deg.select(col("src").as("dst"), col("deg").as("nbr_deg")), "dst")
@@ -830,9 +841,7 @@ object Graph {
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
     val allNodes = pairs.select(col("a").as("id")).union(pairs.select(col("b").as("id"))).distinct()
-    var edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    var edges = undirected(pairs).localCheckpoint()
     var removedInLast = 0L
     var round = 0
     // one count per round (the previous round's count is remembered, not
@@ -908,8 +917,7 @@ object Graph {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val xy = edges
       .join(deg, "src")
@@ -965,6 +973,33 @@ object Graph {
        |FROM mom, nn""".stripMargin
   }
 
+  /** Per-community census of the embed-dup graph under the memoized
+    * [[communityLabels]] partition — what [[modularity]] and
+    * [[conductance]] both score: (com, n_nodes, l_in2, d_tot, m2) with
+    * l_in2 = directed edges inside the community, d_tot = its degree
+    * mass and m2 = the directed edge count of the whole graph. Every
+    * term an exact long from two label joins on the edge list. */
+  private def communityCensus(s: SparkSession, d: String): DataFrame = {
+    val pairs = Dedup.embedDup(s, d)
+      .select(col("vec_a").as("a"), col("vec_b").as("b"))
+      .localCheckpoint()
+    val lab = communityLabels(s, d)
+      .select(col("vec_id").as("id"), col("pred_label").as("com"))
+      .localCheckpoint()
+    val edges = undirected(pairs)
+    val withCom = edges
+      .join(lab.select(col("id").as("src"), col("com").as("com_s")), "src")
+      .join(lab.select(col("id").as("dst"), col("com").as("com_d")), "dst")
+    val lc = withCom.filter(col("com_s") === col("com_d"))
+      .groupBy(col("com_s").as("com")).agg(count(lit(1)).as("l_in2"))
+    val dc = withCom.groupBy(col("com_s").as("com"))
+      .agg(count(lit(1)).as("d_tot"), countDistinct("src").as("n_nodes"))
+    dc.join(lc, Seq("com"), "left")
+      .select(col("com"), col("n_nodes"),
+        coalesce(col("l_in2"), lit(0L)).as("l_in2"), col("d_tot"))
+      .crossJoin(broadcast(edges.agg(count(lit(1)).as("m2"))))
+  }
+
   /** Newman modularity Q of the [[community]] partition over the same
     * embed-dup graph — the "are these communities real" score (Q > 0:
     * denser inside than a degree-preserving random graph; Q ≈ 0: label
@@ -979,26 +1014,7 @@ object Graph {
     * narrow label joins on the edge list + community-sized aggs;
     * numerators fit longs to ~10⁹ directed edges (then decimal(38)). */
   def modularity(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.embedDup(s, d)
-      .select(col("vec_a").as("a"), col("vec_b").as("b"))
-      .localCheckpoint()
-    val lab = communityLabels(s, d)
-      .select(col("vec_id").as("id"), col("pred_label").as("com"))
-      .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-    val withCom = edges
-      .join(lab.select(col("id").as("src"), col("com").as("com_s")), "src")
-      .join(lab.select(col("id").as("dst"), col("com").as("com_d")), "dst")
-    val lc = withCom.filter(col("com_s") === col("com_d"))
-      .groupBy(col("com_s").as("com")).agg(count(lit(1)).as("l_in2"))
-    val dc = withCom.groupBy(col("com_s").as("com"))
-      .agg(count(lit(1)).as("d_tot"), countDistinct("src").as("n_nodes"))
-    val m2df = edges.agg(count(lit(1)).as("m2"))
-    val per = dc.join(lc, Seq("com"), "left")
-      .select(col("com"), col("n_nodes"),
-        coalesce(col("l_in2"), lit(0L)).as("l_in2"), col("d_tot"))
-      .crossJoin(broadcast(m2df))
+    val per = communityCensus(s, d)
       .withColumn("num", col("m2") * col("l_in2") - col("d_tot") * col("d_tot"))
       .localCheckpoint()
     val tot = per.agg(sum("num").as("num_tot"))
@@ -1117,52 +1133,19 @@ object Graph {
     * (the recommendation / similar-items workhorse; global [[pagerank]]
     * asks "globally central?", PPR asks "close to THESE nodes?" — over
     * the near-dup graph that means "documents in the duplication
-    * neighborhood of this template family"): the identical
-    * co-partitioned-RDD integer-micros recurrence with the teleport
-    * mass restricted to seeds (id % 10 == 0 — deterministic so the
-    * oracle knows the set): rank₀ = 1M/|S| on seeds else 0, per round
-    * rank = (150k/|S| if seed else 0) + 0.85·Σ contrib, 5 rounds.
+    * neighborhood of this template family"): [[pagerankLoop]] with the
+    * teleport mass restricted to seeds (id % 10 == 0 — deterministic so
+    * the oracle knows the set): rank₀ = 1M/|S| on seeds else 0, per
+    * round rank = (150k/|S| if seed else 0) + 0.85·Σ contrib, 5 rounds.
     * Non-seed mass decays unless reachable from seeds — exactly the
     * locality the global variant can't express. Same scale shape as
     * pagerank: stationary edge blocks, only the rank table moves. */
-  def personalizedPagerank(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val pairs = Dedup.ngramJaccard(s, d).select("doc_a", "doc_b")
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .localCheckpoint()
-    val prs = pairs.as[(Long, Long)].rdd
-    val nEdges = pairs.count()
-    val partitioner = new org.apache.spark.HashPartitioner(
-      graft.GraftConf.partitionsForEdges(nEdges, prs.getNumPartitions))
-    val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(partitioner)
-    val deg = edges.mapValues(_ => 1L).reduceByKey(partitioner, _ + _)
-    val ewd = edges.join(deg, partitioner)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.mapValues(_ => ()).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nS = nodes.keys.filter(_ % 10 == 0).count()
-    require(nS > 0, "personalized pagerank needs a non-empty seed set")
-    var r = nodes.map { case (id, _) => (id, if (id % 10 == 0) 1000000L / nS else 0L) }
-      .partitionBy(partitioner)
-    (1 to 5).foreach { _ =>
-      val contrib = ewd.join(r, partitioner)
-        .map { case (_, ((dst, dg), rank)) => (dst, rank / dg) }
-        .reduceByKey(partitioner, _ + _)
-      r = nodes.leftOuterJoin(contrib, partitioner)
-        .map { case (id, (_, c)) =>
-          (id, (if (id % 10 == 0) 150000L / nS else 0L) + c.getOrElse(0L) * 17 / 20)
-        }
-        .partitionBy(partitioner)
-    }
-    // materialize BEFORE dropping the edge blocks: the rank lineage
-    // reaches back through every round's ewd join, so an unpersist-
-    // then-action would replay the whole loop uncached
-    val out = r.toDF("doc_id", "ppr_micros").localCheckpoint()
-    ewd.unpersist(blocking = false); nodes.unpersist(blocking = false)
-    out.withColumn("is_seed", col("doc_id") % 10 === 0)
+  def personalizedPagerank(s: SparkSession, d: String): DataFrame =
+    pagerankLoop(Dedup.ngramJaccard(s, d).select("doc_a", "doc_b"), iters = 5,
+        isSeed = _ % 10 == 0)
+      .select(col("id").as("doc_id"), col("r").as("ppr_micros"))
+      .withColumn("is_seed", col("doc_id") % 10 === 0)
       .orderBy("doc_id")
-  }
 
   /** SQL twin: pagerankSql's unrolled chain with the teleport mass
     * conditioned on seed membership. */
@@ -1209,27 +1192,9 @@ object Graph {
     * all-communities `worst` column (max φ) rides along: the single
     * number that says whether ANY block leaks. */
   def conductance(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.embedDup(s, d)
-      .select(col("vec_a").as("a"), col("vec_b").as("b"))
-      .localCheckpoint()
-    val lab = communityLabels(s, d)
-      .select(col("vec_id").as("id"), col("pred_label").as("com"))
-      .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-    val withCom = edges
-      .join(lab.select(col("id").as("src"), col("com").as("com_s")), "src")
-      .join(lab.select(col("id").as("dst"), col("com").as("com_d")), "dst")
-    val lc = withCom.filter(col("com_s") === col("com_d"))
-      .groupBy(col("com_s").as("com")).agg(count(lit(1)).as("l_in2"))
-    val dc = withCom.groupBy(col("com_s").as("com"))
-      .agg(count(lit(1)).as("d_tot"), countDistinct("src").as("n_nodes"))
-    val m2df = edges.agg(count(lit(1)).as("m2"))
-    val per = dc.join(lc, Seq("com"), "left")
-      .select(col("com"), col("n_nodes"),
-        (col("d_tot") - coalesce(col("l_in2"), lit(0L))).as("cut"),
-        col("d_tot").as("vol"))
-      .crossJoin(broadcast(m2df))
+    val per = communityCensus(s, d)
+      .select(col("com"), col("n_nodes"), (col("d_tot") - col("l_in2")).as("cut"),
+        col("d_tot").as("vol"), col("m2"))
       .withColumn("denom", least(col("vol"), col("m2") - col("vol")))
       .withColumn("phi",
         when(col("denom") > 0,
@@ -1438,7 +1403,7 @@ object Graph {
       // jump the identity, so the fixpoint is unchanged. Each round
       // now composes one edge hop with one label-chase, doubling the
       // effective propagation distance — O(D) rounds become O(log D),
-      // the [[Dedup.connectedComponentsLoop]] discipline applied to
+      // the [[Dedup.connectedComponents]] discipline applied to
       // the directed max-label phase.
       var color = active.withColumn("c", col("id")).localCheckpoint(eager = true)
       var round = 0
@@ -1603,9 +1568,7 @@ object Graph {
   private[graft] def stressFromPairs(pairsDf: DataFrame, maxHops: Int,
       seed: Column => Column): DataFrame = {
     val pairs = pairsDf.localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val edges = undirected(pairs).localCheckpoint()
     val nodes = edges.select(col("src").as("id")).distinct().localCheckpoint()
     // ADJACENCY-LIST FRONTIER (r10, the r9 verdict's #2): the 12
     // per-level joins used to re-shuffle the EDGE list every round
@@ -1820,8 +1783,7 @@ object Graph {
     val pairs = Dedup.embedDup(s, d)
       .select(col("vec_a").cast("long").as("a"), col("vec_b").cast("long").as("b"))
       .localCheckpoint()
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    val edges = undirected(pairs)
     val adj = edges.groupBy("src")
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
       .withColumn("deg", size(col("nbrs")).cast("long"))

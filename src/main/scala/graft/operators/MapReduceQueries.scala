@@ -141,6 +141,8 @@ object MapReduceQueries {
     val bucketed = Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .withColumn("bucket", floor(col("n_chars") / 25).cast("long"))
+    // unpartitioned running-sum window, bounded: one row per 25-char
+    // length bucket (the bucket table), not per document
     val offsets = bucketed.groupBy("bucket").agg(count(lit(1)).as("c"))
       .withColumn("offset", coalesce(
         sum("c").over(org.apache.spark.sql.expressions.Window.orderBy("bucket")

@@ -886,14 +886,21 @@ object Pipeline {
     writeFiles(evens, Seq("compact_ev")); commit(3, Seq("compact_ev"), v1Files)
   }
 
-  /** Resolve the file set live at version `v` from the JSONL log alone
-    * (adds up to v, minus removes up to v) — the reader the table
-    * formats run on every query. */
-  private def logLiveFiles(s: SparkSession, logDir: java.io.File, v: Int): Seq[String] = {
-    val log = s.read
+  /** The transaction log's actions, read once per query. The commit
+    * files (`vNNNNN.json`) are listed and passed explicitly: reading the
+    * `_graft_log` directory itself makes Spark treat it as hidden (the
+    * `_` prefix) and warn on every read. */
+  private def readLog(s: SparkSession, logDir: java.io.File): Array[org.apache.spark.sql.Row] =
+    s.read
       .schema("version INT, action STRING, file STRING")
-      .json(logDir.toString)
+      .json(logDir.listFiles().filter(_.getName.matches("v\\d{5}\\.json"))
+        .map(_.toString).sorted.toSeq: _*)
       .collect()
+
+  /** Resolve the file set live at version `v` from the log alone (adds
+    * up to v, minus removes up to v) — the reader the table formats run
+    * on every query. */
+  private def liveFilesAt(log: Array[org.apache.spark.sql.Row], v: Int): Seq[String] = {
     val upTo = log.filter(_.getAs[Int]("version") <= v)
     val removed = upTo.filter(_.getAs[String]("action") == "remove")
       .map(_.getAs[String]("file")).toSet
@@ -905,9 +912,9 @@ object Pipeline {
     graft.Scratch.withDir("graft_tt_") { out =>
       val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
       buildVersionedLayout(s, d, out, logDir)
-      def liveFiles(v: Int): Seq[String] = logLiveFiles(s, logDir, v)
+      val log = readLog(s, logDir)
       def snapshot(v: Int): DataFrame =
-        s.read.parquet(liveFiles(v).map(f => s"$out/$f"): _*)
+        s.read.parquet(liveFilesAt(log, v).map(f => s"$out/$f"): _*)
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"),
             md5(to_binary(array_join(
               transform(array_sort(collect_list(struct(col("doc_id"),
@@ -1170,7 +1177,7 @@ object Pipeline {
     graft.Scratch.withDir("graft_vac_") { out =>
       val logDir = new java.io.File(out, "_graft_log"); logDir.mkdirs()
       buildVersionedLayout(s, d, out, logDir)
-      val live = logLiveFiles(s, logDir, 3).toSet
+      val live = liveFilesAt(readLog(s, logDir), 3).toSet
       def snapshotMd5(): org.apache.spark.sql.Row =
         s.read.parquet(live.toSeq.sorted.map(f => s"$out/$f"): _*)
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"),
@@ -3084,6 +3091,7 @@ object Pipeline {
     if (agree != k)
       throw new IllegalStateException(
         s"shard-merged top-$k disagrees with the global top-$k ($agree/$k shared)")
+    // unpartitioned window, bounded: `global` is the limit(k) top-k
     val rankW = org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("doc_id"))
     global.select(row_number().over(rankW).as("rank_n"), col("doc_id"),
         substring(col("h"), 1, 12).as("h12"), lit(true).as("merge_agrees"))

@@ -254,6 +254,7 @@ object RelationalExt3 {
       .select(col("rev_us"), decile.as("decile"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_customers"), sum("rev_us").as("dec_us"))
+    // unpartitioned running-sum window, bounded: 10 decile rows
     val wd = org.apache.spark.sql.expressions.Window.orderBy("decile")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)

@@ -34,6 +34,28 @@ object Similarity {
   private def sqDist(a: Column, b: Column): Column =
     dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
+  /** The seeded IVF centroids: vectors vec_id < 10 as (centroid_id, c_v). */
+  private def seededCentroids(vs: DataFrame): DataFrame =
+    vs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
+
+  /** Nearest-centroid assignment — the IVF cell and k-means step every
+    * vector operator here shares: each row of `vs` (vec_id, v, …) with
+    * its nearest centroid of the broadcast `cents` (centroid_id, c_v)
+    * and that squared-L2 distance rounded to 6 places (`dist`), ties to
+    * the smaller centroid id. The rounding and the tie-break are what
+    * every SQL twin's `ORDER BY round(…), centroid_id` replays, so they
+    * live here once; callers select what they keep. */
+  private def nearestCentroid(vs: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
+    vs.crossJoin(broadcast(cents))
+      .select(vs.columns.toSeq.map(col) :+ col("centroid_id") :+
+        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .drop("rn")
+  }
+
   /** Brute-force cosine top-10 for one query vector (vec_id = 0). The
     * 1-row query side is broadcast; the corpus is scanned once. */
   def annBrute(s: SparkSession, d: String): DataFrame = {
@@ -217,14 +239,7 @@ object Similarity {
     * single IEEE divisions of exact integers. */
   def ivfStats(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val assigned = nearestCentroid(vs, seededCentroids(vs))
     val total = vs.agg(count(lit(1)).as("n_total"))
     assigned
       .groupBy("centroid_id")
@@ -1288,13 +1303,7 @@ object Similarity {
     * corpus scan — the building block of distributed k-means. */
   def centroids(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val c = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    vs.crossJoin(broadcast(c))
-      .select(col("vec_id"), col("centroid_id"), ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    nearestCentroid(vs, seededCentroids(vs))
       .select("vec_id", "centroid_id", "dist")
       .orderBy("vec_id")
   }
@@ -1335,13 +1344,7 @@ object Similarity {
     * s = 0. */
   def silhouette(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d).select("vec_id", "v").localCheckpoint()
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val assigned = nearestCentroid(vs, seededCentroids(vs))
       .select(col("vec_id"), col("v"), col("centroid_id").as("cl"))
       .localCheckpoint()
     val samples = assigned.filter(col("vec_id") % 20 === 3)
@@ -1439,14 +1442,9 @@ object Similarity {
     val vs = vectors(s, d).select("vec_id", "v").localCheckpoint()
     val base = vs.filter(col("vec_id") % 7 =!= 1)
     val incoming = vs.filter(col("vec_id") % 7 === 1)
-    val cents = base.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
+    val cents = seededCentroids(base)
     def assign(side: DataFrame): DataFrame =
-      side.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("centroid_id"),
-          ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      nearestCentroid(side, cents)
         .select(col("vec_id"), col("centroid_id"),
           round(col("dist") * lit(1000000.0)).cast("long").as("dm"))
     def cellStats(side: DataFrame, nCol: String, mCol: String): DataFrame =
@@ -1528,14 +1526,8 @@ object Similarity {
     // checkpointed vector table — loop partitions from the measured
     // count, AQE off below the skew-guard threshold
     Shared.withLoopParallelism(s, vs.count(), rowsPerPartition = 100_000L) {
-    def assign(cents: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-      vs.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("v"), col("centroid_id"),
-          ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("vec_id", "v", "centroid_id")
-    }
+    def assign(cents: DataFrame): DataFrame =
+      nearestCentroid(vs, cents).select("vec_id", "v", "centroid_id")
     def update(assigned: DataFrame): DataFrame =
       assigned
         .select(col("centroid_id"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -1620,16 +1612,9 @@ object Similarity {
     * deterministic, so it gets a SQL oracle. */
   def annIvf(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
+    val cents = seededCentroids(vs)
     // cell assignment for every vector (same computation as `centroids`)
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "norm", "centroid_id")
+    val assigned = nearestCentroid(vs, cents).select("vec_id", "v", "norm", "centroid_id")
     // the query's 2 nearest cells
     val probeCells = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v0"), col("norm").as("q_norm0"))
@@ -1676,41 +1661,9 @@ object Similarity {
       |ORDER BY cosine DESC, a.vec_id
       |LIMIT 10""".stripMargin
 
-  /** FILTERED ANN — metadata-constrained vector search (the "top-k
-    * nearest where label = X" query every retrieval stack grows into;
-    * RAG with source/tenant/language filters is this). Strategy is
-    * PRE-FILTER inside the probed cells: the label predicate applies to
-    * the posting lists BEFORE scoring, so scan cost is the filtered
-    * subset of the probed cells, not the whole cells — and because a
-    * filter thins every cell, the probe count is WIDENED 2 → 4 (the
-    * standard filtered-search adjustment: selectivity s roughly divides
-    * per-cell yield, so nprobe scales ~1/s to restore candidate count;
-    * post-filtering top-k instead would return < k rows whenever the
-    * filter eats the unfiltered top-k). Same IVF machinery as
-    * [[annIvf]]: broadcast centroids, one assignment pass, bucket
-    * equi-join — the filter is one pushed predicate, which is the whole
-    * point: filtered search at 100 TB is a PARTITION-PRUNED scan, not a
-    * new index. Exact cosine within probed cells keeps the oracle
-    * bit-exact. */
-  /** Labeled IVF cell assignment shared by [[annFiltered]] and
-    * [[filteredRecall]] (one definition, so an assignment-tiebreak or
-    * rounding change can't diverge the operator from its own
-    * measurement): nearest of the vec_id<10 seed centroids per vector,
-    * rounded-distance argmin, (dist, centroid_id) tiebreak. */
-  private def labeledAssign(vs: DataFrame): (DataFrame, DataFrame) = {
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("label"), col("v"), col("norm"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "label", "v", "norm", "centroid_id")
-    (assigned, cents)
-  }
-
-  /** SQL twin of [[labeledAssign]] — spliced into both consumers' oracles. */
+  /** SQL twin of the labeled seeded-centroid assignment
+    * ([[nearestCentroid]] over [[seededCentroids]]) — spliced into the
+    * oracles of [[annFiltered]] and [[filteredRecall]]. */
   private val labeledAssignCte: String =
     """e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
@@ -1727,8 +1680,26 @@ object Similarity {
       |  ) WHERE rn = 1
       |)""".stripMargin
 
+  /** FILTERED ANN — metadata-constrained vector search (the "top-k
+    * nearest where label = X" query every retrieval stack grows into;
+    * RAG with source/tenant/language filters is this). Strategy is
+    * PRE-FILTER inside the probed cells: the label predicate applies to
+    * the posting lists BEFORE scoring, so scan cost is the filtered
+    * subset of the probed cells, not the whole cells — and because a
+    * filter thins every cell, the probe count is WIDENED 2 → 4 (the
+    * standard filtered-search adjustment: selectivity s roughly divides
+    * per-cell yield, so nprobe scales ~1/s to restore candidate count;
+    * post-filtering top-k instead would return < k rows whenever the
+    * filter eats the unfiltered top-k). Same IVF machinery as
+    * [[annIvf]]: broadcast centroids, one assignment pass, bucket
+    * equi-join — the filter is one pushed predicate, which is the whole
+    * point: filtered search at 100 TB is a PARTITION-PRUNED scan, not a
+    * new index. Exact cosine within probed cells keeps the oracle
+    * bit-exact. */
   def annFiltered(s: SparkSession, d: String): DataFrame = {
-    val (assigned, cents) = labeledAssign(vectors(s, d))
+    val vs = vectors(s, d)
+    val cents = seededCentroids(vs)
+    val assigned = nearestCentroid(vs, cents)
     val probeCells = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v0"), col("norm").as("q_norm0"), col("label").as("q_label0"))
       .crossJoin(broadcast(cents))
@@ -1775,8 +1746,8 @@ object Similarity {
     * replays the PROBE, never the index build). */
   def filteredRecall(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val (assigned0, cents) = labeledAssign(vs)
-    val assigned = assigned0.localCheckpoint()
+    val cents = seededCentroids(vs)
+    val assigned = nearestCentroid(vs, cents).drop("dist").localCheckpoint()
     val qRow = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v"), col("norm").as("q_norm"), col("label").as("q_label"))
     // query-to-centroid rank: 10 rows, the unpartitioned window is bounded
@@ -2028,15 +1999,8 @@ object Similarity {
   def annIvfPq(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
     // --- IVF coarse half (annIvf's machinery)
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "norm", "centroid_id")
+    val cents = seededCentroids(vs)
+    val assigned = nearestCentroid(vs, cents).select("vec_id", "v", "norm", "centroid_id")
     val probeCells = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v0"), col("norm").as("q_norm0"))
       .crossJoin(broadcast(cents))
@@ -2147,6 +2111,7 @@ object Similarity {
     * join touches ≤ 2k rows regardless of corpus size. */
   def hybridRrf(s: SparkSession, d: String): DataFrame = {
     val k = 20
+    // unpartitioned windows, bounded: each ranks a limit(k) candidate list
     val tw = Window.orderBy(col("tscore").desc, col("id"))
     val textTop = graft.Tables.documents(s, d)
       .select(col("doc_id").as("id"),
@@ -2349,15 +2314,8 @@ object Similarity {
     * [[annIvf]], so the whole sweep replays bit-exactly in SQL. */
   def ivfProbeSweep(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "norm", "centroid_id")
+    val cents = seededCentroids(vs)
+    val assigned = nearestCentroid(vs, cents).select("vec_id", "v", "norm", "centroid_id")
       .localCheckpoint()
     val q = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v"), col("norm").as("q_norm"))
@@ -2701,15 +2659,8 @@ object Similarity {
     * no global sort anywhere. */
   def ivfBatch(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
-    val cents = vs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("centroid_id"))
-    val assigned = vs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("centroid_id"),
-        ExactRound.r(sqDist(col("v"), col("c_v")), 6).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "norm", "centroid_id")
+    val cents = seededCentroids(vs)
+    val assigned = nearestCentroid(vs, cents).select("vec_id", "v", "norm", "centroid_id")
     val queries = vs.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("norm").as("q_norm"))
     val wProbe = Window.partitionBy("q_id").orderBy(col("qdist"), col("centroid_id"))

@@ -1032,6 +1032,7 @@ object TextAnalysis {
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     val totals = tf.agg(sum(col("cnt")).as("total_tokens"),
       count(lit(1)).as("vocab_size"))
+    // unpartitioned window, bounded: it ranks the limit(1000) top tokens
     val top = tf.orderBy(col("cnt").desc, col("token")).limit(1000)
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("cnt").desc, col("token"))))
@@ -2482,6 +2483,8 @@ object TextAnalysis {
     val inv2 = kept.unionByName(charsAll).groupBy("piece").agg(max("u").as("f"))
     val u2 = usage(viterbi(inv2))
     val totDf = u2.agg(sum("u").as("tot"))
+    // unpartitioned rank window, bounded: ~200 learned pieces plus the
+    // corpus's single characters
     u2.crossJoin(broadcast(totDf))
       .select(col("piece"), length(col("piece")).cast("long").as("piece_len"),
         col("u").as("n_uses"), expr("(1000000 * u) div tot").as("p_us"))

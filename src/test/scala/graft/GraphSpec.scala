@@ -55,6 +55,45 @@ class GraphSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("pagerankLoop with every node a seed is global PageRank; with a seed subset it is g_ppr") {
+    import spark.implicits._
+    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // the global recurrence replayed in memory: r0 = 1M/n, teleport 150k/n
+    val n = 200L
+    val deg = (0L until n).map(v => v -> (if (v == 0 || v == n - 1) 1L else 2L)).toMap
+    var r = (0L until n).map(_ -> 1000000L / n).toMap
+    for (_ <- 1 to 20) {
+      val contrib = collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+      (0L until n - 1).foreach { u =>
+        contrib(u + 1) += r(u) / deg(u); contrib(u) += r(u + 1) / deg(u + 1)
+      }
+      r = (0L until n).map(v => v -> (150000L / n + contrib(v) * 17 / 20)).toMap
+    }
+    assert(ranks(Graph.pagerankLoop(chain, iters = 20)) == r)
+    assert(ranks(Graph.pagerankLoop(chain, iters = 20, isSeed = _ => true)) == r)
+
+    // the personalized recurrence replayed in memory on the sf0.01
+    // near-dup graph: S = ids ≡ 0 mod 10, r0 = 1M/|S| and teleport
+    // 150k/|S| on seeds, 0 elsewhere, 5 rounds
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").toString
+    val pairsDf = Dedup.ngramJaccard(spark, sf01).select("doc_a", "doc_b")
+    val edges = pairsDf.collect().flatMap(x => Seq((x.getLong(0), x.getLong(1)), (x.getLong(1), x.getLong(0))))
+    val pdeg = edges.groupBy(_._1).map { case (k, v) => k -> v.length.toLong }
+    val nodes = pdeg.keys.toSeq
+    val nS = nodes.count(_ % 10 == 0).toLong
+    var pr = nodes.map(v => v -> (if (v % 10 == 0) 1000000L / nS else 0L)).toMap
+    for (_ <- 1 to 5) {
+      val contrib = collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+      edges.foreach { case (u, v) => contrib(v) += pr(u) / pdeg(u) }
+      pr = nodes.map(v => v -> ((if (v % 10 == 0) 150000L / nS else 0L) + contrib(v) * 17 / 20)).toMap
+    }
+    val seeded = ranks(Graph.pagerankLoop(pairsDf, iters = 5, isSeed = _ % 10 == 0).select("id", "r"))
+    assert(nS > 0 && seeded == pr)
+    assert(ranks(Graph.personalizedPagerank(spark, sf01).select("doc_id", "ppr_micros")) == pr)
+  }
+
   test("triangles equals a brute-force in-memory count") {
     val pairs = Dedup.ngramJaccard(spark, sf).select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -67,6 +67,24 @@ class InventorySpec extends AnyFunSuite {
     assert(unsetters == Set("Shared.scala"), s"conf unset outside Shared: $unsetters")
   }
 
+  /** How many times `text` occurs across the files under src/main. */
+  private def mainOccurrences(text: String): Int = {
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
+      _.toArray.map(_.asInstanceOf[java.nio.file.Path]))
+    files.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => java.util.regex.Pattern.quote(text).r.findAllIn(java.nio.file.Files.readString(p)).size)
+      .sum
+  }
+
+  test("one definition per graph and vector primitive under src/main") {
+    val edgeSizing = mainOccurrences("partitionsForEdges(") - mainOccurrences("def partitionsForEdges(")
+    assert(edgeSizing == 1, s"partitionsForEdges called at $edgeSizing sites, not one edge-list helper")
+    val argmin = mainOccurrences("""orderBy(col("dist"), col("centroid_id"))""")
+    assert(argmin == 1, s"nearest-centroid tie-break written $argmin times")
+    val raster = mainOccurrences("raster.setSample(p % w, p / w")
+    assert(raster == 1, s"grayscale raster fill written $raster times")
+  }
+
   test("query selection: all by default, exactly the named ones, unknown names throw") {
     assert(GraftSession.selectQueries(None).keySet == SparkEntry.queries.keySet)
     assert(GraftSession.selectQueries(Some(" mr_wordcount, q10_star_join ,")).keySet ==

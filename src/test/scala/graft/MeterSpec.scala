@@ -26,4 +26,31 @@ class MeterSpec extends SparkSpec {
       assert(empty.values.forall(_ == 0), s"counts bled into an empty measurement: $empty")
     } finally meter.detach(spark)
   }
+
+  test("between-query reset: a locally checkpointed frame's blocks drop without a WARN") {
+    // count Spark's "was locally checkpointed … after unpersisting" WARN,
+    // which RDD.unpersist logs for every checkpointed RDD it drops
+    val warned = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "checkpoint-warn", null, null, true, Array.empty) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("was locally checkpointed")) warned.incrementAndGet()
+    }
+    appender.start()
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(appender)
+    try {
+      val frame = spark.range(0, 1000).toDF("id").localCheckpoint()
+      assert(frame.count() == 1000)
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "localCheckpoint persisted nothing")
+      GraftSession.resetBetweenQueries(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"reset left ${spark.sparkContext.getPersistentRDDs.keys.toSeq.sorted} persistent")
+      assert(warned.get == 0, s"reset logged ${warned.get} locally-checkpointed WARNs")
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }
