@@ -66,9 +66,11 @@ object GraftSession {
       case None => SparkEntry.queries
     }
 
-  /** Between-query reset: the next query starts with an empty cache, an
-    * empty block manager and no temp views. Call it after a query's
-    * result has been consumed (counted, collected or written). */
+  /** Between-query reset: the next query starts with an empty cache and
+    * an empty block manager. Call it after a query's result has been
+    * consumed (counted, collected or written). Temp views are not its
+    * business: each query that registers one drops it in its own
+    * `finally`, and no query leaves a streaming sink table behind. */
   def resetBetweenQueries(spark: SparkSession): Unit = {
     // an empty CacheManager: a query's persisted frames are ITS cost,
     // and without the clear every later query pays a canonicalization
@@ -86,19 +88,5 @@ object GraftSession {
     // checkpointed RDD without Spark's per-RDD WARN.
     spark.sparkContext.getPersistentRDDs.values
       .foreach(org.apache.spark.graft.BlockRelease.drop)
-    // ... and no leftover memory-sink tables: the two streaming gates
-    // that still write one (EventStream.chainedStateful and
-    // availableNow, whose certificates read the query object; every
-    // other gate drains to files) leave it registered, the full result
-    // table DRIVER-resident. Before the drains, ten accumulated sinks
-    // plus the next query's state put the 100× steady pass into a GC
-    // death spiral the cold pass never sees (measured: st_session_window
-    // steady 690 s of GC in the r11 xf100 suite run after ten cold
-    // sinks, where the same query completes in a fresh JVM). The result
-    // was consumed before the reset, so the data is unreachable once
-    // the view drops.
-    spark.catalog.listTables().collect()
-      .filter(_.isTemporary)
-      .foreach(t => spark.catalog.dropTempView(t.name))
   }
 }

@@ -6,11 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.operators.ExactRound.{moneySum, moneySumSql, valueMicros}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 
 /** Streaming operators over the events table (SURVEY.md §2G).
   *
   * `windowAgg` runs a REAL Structured Streaming query (readStream over the
-  * parquet dir, watermark, tumbling window, memory sink) and returns the
+  * parquet dir, watermark, tumbling window, file drain) and returns the
   * materialized result; the DuckDB oracle is the batch-equivalent SQL, so
   * the driver check proves stream/batch consistency — Spark's core
   * streaming guarantee. `sessionize` is the classic stateful operator,
@@ -22,8 +27,9 @@ object EventStream {
 
   /** Per-user open-session state for [[sessionizeStream]]. `totalMicros`
     * accumulates the session value in exact micros (the long twin of
-    * [[moneySum]]'s integer arithmetic), so totals are order-insensitive
-    * and agree with the batch/oracle arithmetic bit-for-bit. */
+    * [[graft.operators.ExactRound.moneySum]]'s integer arithmetic), so
+    * totals are order-insensitive and agree with the batch/oracle
+    * arithmetic bit-for-bit. */
   case class SessionState(start: Long, end: Long, n: Long, totalMicros: Long)
 
   /** Per-user throttle state for [[throttle]]: the open day window and
@@ -32,20 +38,8 @@ object EventStream {
     * another event, so the counter is overwritten, not accumulated. */
   case class ThrottleState(dayUs: Long, n: Long)
 
-  /** Exact cross-engine money sum rounded to cents — see
-    * [[graft.operators.ExactRound.moneySum]]. */
-  private def moneySum(value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.operators.ExactRound.moneySum(value)
-
-  private def moneySumSql(expr: String): String =
-    graft.operators.ExactRound.moneySumSql(expr)
-
-  /** Double → exact micros — see [[graft.operators.ExactRound.valueMicros]]. */
-  private def valueMicros(v: Double): Long =
-    graft.operators.ExactRound.valueMicros(v)
-
   /** Micros → the rounded-to-cents double the queries emit, matching
-    * [[moneySum]]'s integer arithmetic. */
+    * [[graft.operators.ExactRound.moneySum]]'s integer arithmetic. */
   private def microsToValue(m: Long): Double = {
     val cents = if (m >= 0) (m + 5000) / 10000 else -((-m + 5000) / 10000)
     cents.toDouble / 100.0
@@ -91,32 +85,50 @@ object EventStream {
 
   private val fmt = "yyyy-MM-dd HH:mm:ss"
 
-  /** Stateful streaming operators allocate one state store per shuffle
-    * partition per micro-batch, so the partition count is sized to the
-    * SOURCE VOLUME (~32 MB of input per store, capped at the session's
-    * parallelism) rather than the batch default of one per core — at
-    * small volume the empty stores are pure overhead, at large volume
-    * the cap keeps stores from outnumbering cores. Deployments with
-    * known key cardinality/throughput can pin `graft.stream.shuffle`
-    * instead. */
-  private[graft] def sourceBytes(s: SparkSession, d: String): Long =
-    try {
-      val p = new org.apache.hadoop.fs.Path(d, "events.parquet")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
-    } catch { case _: Throwable => 0L }
+  /** The bytes a streaming frame reads: every file its stream sources
+    * match (`pathGlobFilter` applied), each distinct path once — the
+    * events file for [[eventStream]], the whole layout directory for a
+    * scratch-batch stream. A source that matches nothing throws with its
+    * path: sized as 0 bytes, it would silently get the small-input
+    * settings at every scale. */
+  private[graft] def sourceBytes(s: SparkSession, df: DataFrame): Long = {
+    val conf = s.sparkContext.hadoopConfiguration
+    df.queryExecution.analyzed.collect { case r: StreamingRelation => r.dataSource }
+      .flatMap { ds =>
+        val opts = CaseInsensitiveMap(ds.options)
+        val glob = opts.get("pathGlobFilter")
+        (ds.paths ++ opts.get("path")).map(p => glob.fold(new Path(p))(new Path(p, _)))
+      }
+      .distinct
+      .map { p =>
+        val fs = p.getFileSystem(conf)
+        val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
+        if (matched.isEmpty)
+          throw new java.io.FileNotFoundException(s"streaming source $p matches no file")
+        matched.map(f => fs.getContentSummary(f.getPath).getLength).sum
+      }
+      .sum
+  }
 
-  private[graft] def streamShufflePartitions(s: SparkSession, d: String): Int =
+  /** Stateful streaming operators allocate one state store per shuffle
+    * partition per micro-batch, so [[runStream]] sizes the partition
+    * count to the source volume (~32 MB of input per store, capped at
+    * the session's parallelism) rather than the batch default of one per
+    * core — at small volume the empty stores are pure overhead, at large
+    * volume the cap keeps stores from outnumbering cores. Deployments
+    * with known key cardinality/throughput can pin `graft.stream.shuffle`
+    * instead. */
+  private[graft] def streamShufflePartitions(s: SparkSession, bytes: Long): Int =
     s.conf.getOption(graft.GraftConf.streamShuffleKey).map(_.toInt).getOrElse {
-      math.max(1, math.min((sourceBytes(s, d) / graft.GraftConf.streamBytesPerStore + 1).toInt,
+      math.max(1, math.min((bytes / graft.GraftConf.streamBytesPerStore + 1).toInt,
         s.sparkContext.defaultParallelism))
     }
 
-  /** Runs `body` under the streaming shuffle width, codegen and
-    * state-store confs ([[graft.operators.Shared.withConfs]] restores
-    * them after). */
-  private def withStreamShuffle[T](s: SparkSession, d: String)(body: => T): T = {
-    // parse every pin before mutating any session conf: a fail-loud
-    // rejection below must not leave half the harness confs applied
+  /** The confs [[runStream]] starts a query under: shuffle width, codegen
+    * and state-store backend sized from `bytes`, and AQE off. Every pin is
+    * parsed here, before [[graft.operators.Shared.withConfs]] sets any of
+    * them, so a fail-loud rejection leaves no conf half applied. */
+  private def streamConfs(s: SparkSession, bytes: Long): Map[String, String] = {
     val pinnedRocks: Option[Boolean] =
       s.conf.getOption(graft.GraftConf.streamStateStoreKey) match {
         case Some("rocksdb") => Some(true)
@@ -139,7 +151,7 @@ object EventStream {
     // deployments pin it via the graft.stream.codegen conf.
     val codegen = s.conf.getOption(graft.GraftConf.streamCodegenKey)
       .map(_.toBoolean)
-      .getOrElse(sourceBytes(s, d) >= graft.GraftConf.streamCodegenBytes)
+      .getOrElse(bytes >= graft.GraftConf.streamCodegenBytes)
     // ADAPTIVE STATE-STORE BACKEND (r11, the codegen discipline applied
     // to state): the default HDFS-backed provider holds every store's
     // map + retained versions on heap — the 100× streaming probe
@@ -156,78 +168,100 @@ object EventStream {
     // non-"rocksdb" string to the HDFS backend would turn a typo
     // ("RocksDB", "true") into a silent re-exposure of the 100× heap
     // OOM this backend decision exists to prevent.
-    val rocks = pinnedRocks.getOrElse(
-      sourceBytes(s, d) >= graft.GraftConf.streamRocksDbBytes)
-    graft.operators.Shared.withConfs(s, Map(
-      "spark.sql.shuffle.partitions" -> streamShufflePartitions(s, d).toString,
-      "spark.sql.codegen.wholeStage" -> codegen.toString) ++
-      (if (rocks) Map(stateStoreKey -> rocksDbProvider) else Map.empty))(body)
+    val rocks = pinnedRocks.getOrElse(bytes >= graft.GraftConf.streamRocksDbBytes)
+    // AQE off: Spark turns it off for every stateful plan anyway, and a
+    // start with it on logs ResolveWriteToStream's "not supported in
+    // streaming" WARN. The stateless drains (sink round trip, restart,
+    // upsert) read and write without a shuffle; only the upsert's merge
+    // aggregates, and it runs without AQE.
+    Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(s, bytes).toString,
+      "spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.adaptive.enabled" -> "false") ++
+      (if (rocks) rocksDbState else Map.empty)
   }
 
   private val stateStoreKey = "spark.sql.streaming.stateStore.providerClass"
   private val rocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  /** Scoped around the `transformWithState` drains, which require the
-    * RocksDB provider (its column-family state layout); every other
-    * stateful query here runs on the adaptive default. */
+  /** The RocksDB state-store conf: [[streamConfs]] sets it past the size
+    * crossover, and the `transformWithState` drains are scoped in it at
+    * any size, since they require the RocksDB provider (its
+    * column-family state layout). */
   private val rocksDbState = Map(stateStoreKey -> rocksDbProvider)
+
+  /** THE streaming runner: the one place a streaming query starts. It
+    * sizes the run from the bytes `df` reads ([[sourceBytes]]) and sets
+    * the streaming confs for it ([[streamConfs]]); takes the checkpoint
+    * from [[graft.Scratch]] unless the caller owns one (a restart shares
+    * one across runs); runs the query until its input is consumed — or,
+    * under `Trigger.AvailableNow`, waits for it to stop itself, throwing
+    * if it does not; then stops it and returns its progress, which a
+    * certificate can read. `sink` completes the writer: output mode and
+    * foreachBatch, or a format and its path. */
+  private def runStream(s: SparkSession, df: DataFrame,
+      trigger: Trigger = Trigger.ProcessingTime(0L), checkpoint: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Array[StreamingQueryProgress] = {
+    val confs = streamConfs(s, sourceBytes(s, df))
+    def run(ckpt: String) = graft.operators.Shared.withConfs(s, confs) {
+      val q = sink(df.writeStream).option("checkpointLocation", ckpt).trigger(trigger).start()
+      try {
+        if (trigger != Trigger.AvailableNow()) q.processAllAvailable()
+        else if (!q.awaitTermination(120000))
+          throw new IllegalStateException("Trigger.AvailableNow did not self-terminate")
+        q.recentProgress
+      } finally q.stop()
+    }
+    checkpoint.fold(graft.Scratch.withDir("graft-fsink-ckpt-")(run))(run)
+  }
 
   /** Drains `df` through the production sink shape — foreachBatch →
     * parquet, executor-side writes, nothing driver-resident — and
-    * returns the drained table. Gate queries used to materialize via a
+    * returns the run's progress. Gate queries used to materialize via a
     * driver MEMORY sink, and that sink, not the state store, was the
     * measured 1000× wall (r12: st_session_window's 95.5 M-row
     * complete-mode session table breached `driver.maxResultSize` at
     * 1 GiB, while the same pipeline completed in 215 s through
-    * foreachBatch → parquet). The pipeline runs under the identical
-    * harness wrapper, so the adaptive codegen/state-store decisions
-    * apply unchanged. Row-multiset parity with the memory sink per
-    * output mode (so every oracle is unchanged): complete overwrites per
-    * batch (last batch wins = the memory sink's table replacement),
+    * foreachBatch → parquet). Row-multiset parity with the memory sink
+    * per output mode (so every oracle is unchanged): complete overwrites
+    * per batch (last batch wins = the memory sink's table replacement),
     * append/update append each batch's emitted rows (= its table
-    * accumulation). Only the two query-object-certificate gates
-    * (chainedStateful, availableNow — their certificates read
-    * `q.recentProgress`) still hand-build a memory sink.
+    * accumulation).
     *
     * Writes into `out`, which the caller owns; the checkpoint is
     * per-run state and goes when the query stops. A zero-emission drain
     * (no batch wrote) writes an empty table with the stream's schema, so
     * `out` always reads back as one parquet table. */
-  private[graft] def drainToFiles(s: SparkSession, d: String, df: DataFrame,
-      out: String, mode: String): Unit = {
-    graft.Scratch.withDir("graft-fsink-ckpt-") { ckpt =>
-      withStreamShuffle(s, d) {
-        val q = df.writeStream
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
-          }
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
+  private[graft] def drainToFiles(s: SparkSession, df: DataFrame, out: String, mode: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): Array[StreamingQueryProgress] = {
+    val progress = runStream(s, df, trigger) {
+      _.outputMode(mode).foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
       }
     }
     if (!new java.io.File(out).list().exists(_.endsWith(".parquet")))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+      s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema)
         .write.mode("append").parquet(out)
+    progress
   }
 
-  /** [[drainToFiles]] into a fresh `graft-gate-<name>-` directory under
-    * the scratch root, whose shutdown hook removes it: the returned
-    * frame reads it lazily. */
-  private def drain(s: SparkSession, d: String, df: DataFrame,
-      name: String, mode: String): DataFrame = {
-    val out = graft.Scratch.scratchDir(s"graft-gate-$name-").toString
-    drainToFiles(s, d, df, out, mode)
+  /** A fresh `graft-gate-<name>-` output directory under the scratch
+    * root, whose shutdown hook removes it. */
+  private def gateDir(name: String): String =
+    graft.Scratch.scratchDir(s"graft-gate-$name-").toString
+
+  /** [[drainToFiles]] into a fresh [[gateDir]]: the returned frame reads
+    * it lazily. */
+  private def drain(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
+    val out = gateDir(name)
+    drainToFiles(s, df, out, mode)
     s.read.parquet(out)
   }
 
   /** Tumbling 5-minute window counts/sums per event type via a real
-    * streaming query. Each parquet file is a micro-batch; complete mode +
-    * memory sink materializes the final state — and in complete mode the
-    * watermark is a no-op (state holds all windows, late data is never
-    * evicted). A continuous deployment runs the same plan in
+    * streaming query. Each parquet file is a micro-batch; complete mode
+    * drained to files materializes the final state — and in complete
+    * mode the watermark is a no-op (state holds all windows, late data
+    * is never evicted). A continuous deployment runs the same plan in
     * append/update mode against a changelog sink, where the watermark
     * genuinely bounds state. */
   def windowAgg(s: SparkSession, d: String): DataFrame = {
@@ -238,7 +272,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_window_agg"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -271,7 +305,7 @@ object EventStream {
         date_format(col("window.end"), fmt).as("window_end"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_append_windows"
-    val drained = drain(s, d, stream, name, "append")
+    val drained = drain(s, stream, name, "append")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -300,9 +334,9 @@ object EventStream {
     * closes them. This is a shuffle-sort window — it spills instead of
     * buffering a whole user in memory, so a key with years of history is
     * fine at scale — and it mirrors the SQL oracle structurally.
-    * `total_value` is summed via [[moneySum]]: exact integer micros,
-    * order-insensitive, identical across engines regardless of partial-
-    * aggregation order. */
+    * `total_value` is summed via [[graft.operators.ExactRound.moneySum]]:
+    * exact integer micros, order-insensitive, identical across engines
+    * regardless of partial-aggregation order. */
   def sessionize(s: SparkSession, d: String): DataFrame = {
     val gapMicros = 30L * 60 * 1000 * 1000
     val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
@@ -395,7 +429,7 @@ object EventStream {
     // emitted session) and both consumers re-apply their own ordering;
     // each slice stays oracle-gated per query.
     s.read.parquet(graft.operators.Shared.memoDir(s, d, "st_sessionize_drained") { dir =>
-      drainToFiles(s, d, sessionFsmStream(s, d), dir.toString, "append")
+      drainToFiles(s, sessionFsmStream(s, d), dir.toString, "append")
     }.toString)
 
   /** The flatMapGroupsWithState session FSM without a sink, drained by
@@ -561,7 +595,7 @@ object EventStream {
   def sessionWindowAgg(s: SparkSession, d: String): DataFrame = {
     val stream = sessionWindowStream(s, d)
     val name = "graft_st_session_window"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("user_id", "session_start")
   }
 
@@ -654,7 +688,7 @@ object EventStream {
       }
       .toDF("user_id", "event_id", "window_us", "rnk", "admitted")
     val name = "graft_st_throttle"
-    val drained = drain(s, d, decisions, name, "append")
+    val drained = drain(s, decisions, name, "append")
     drained
       .select(col("user_id"), col("event_id"),
         date_format(timestamp_micros(col("window_us")), fmt).as("window_start"),
@@ -691,7 +725,7 @@ object EventStream {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_dedup"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("event_type")
   }
 
@@ -713,7 +747,7 @@ object EventStream {
       .groupBy("c_mktsegment", "event_type")
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
     val name = "graft_st_enrich"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("c_mktsegment", "event_type")
   }
 
@@ -744,7 +778,7 @@ object EventStream {
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
     val name = "graft_st_stream_join"
-    val drained = drain(s, d, joined, name, "append")
+    val drained = drain(s, joined, name, "append")
     drained
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         date_format(col("click_ts"), fmt).as("click_ts"),
@@ -762,6 +796,29 @@ object EventStream {
       | AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
       | AND CAST(p.ts AS TIMESTAMP) <= CAST(c.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
       |ORDER BY click_id, purchase_id""".stripMargin
+
+  /** Memoized two-batch layout shared by [[streamStreamOuter]] and
+    * [[chainedStateful]]: batch 0 = the whole events table, batch 1 =
+    * the two can-match-nothing tick rows at max(ts) + 1 hour that
+    * flush both sides' watermarks. A pure function of the events
+    * table, so one build serves every consumer in the session. */
+  private def clickPurchaseDir(s: SparkSession, d: String): java.io.File =
+    graft.operators.Shared.memoDir(s, d, "st_click_purchase") { dir =>
+      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
+        .localCheckpoint(eager = true)
+      val ticks = ev.agg(max("ts").as("mts"))
+        .select(explode(array(
+          struct(lit(-1L).as("event_id"),
+            (col("mts") + expr("INTERVAL 1 HOUR")).as("ts"),
+            lit(-1L).as("user_id"), lit("click").as("event_type")),
+          struct(lit(-2L).as("event_id"),
+            (col("mts") + expr("INTERVAL 1 HOUR")).as("ts"),
+            lit(-2L).as("user_id"), lit("purchase").as("event_type")))).as("r"))
+        .select(col("r.event_id"), col("r.ts"), col("r.user_id"), col("r.event_type"))
+      val t0 = System.currentTimeMillis()
+      scratchFile(ev, dir, "0-data", t0 - 60000)
+      scratchFile(ticks, dir, "1-ticks", t0)
+    }
 
   /** LEFT-OUTER stream-stream join — the interval-join semantics
     * surface [[streamJoin]]'s inner join cannot pin: a click with NO
@@ -786,29 +843,6 @@ object EventStream {
     * `purchase_ts`, `matched` flag) keeps the cross-engine compare
     * type-stable — a nullable BIGINT decays to float on both pandas
     * paths. */
-  /** Memoized two-batch layout shared by [[streamStreamOuter]] and
-    * [[chainedStateful]]: batch 0 = the whole events table, batch 1 =
-    * the two can-match-nothing tick rows at max(ts) + 1 hour that
-    * flush both sides' watermarks. A pure function of the events
-    * table, so one build serves every consumer in the session. */
-  private def clickPurchaseDir(s: SparkSession, d: String): java.io.File =
-    graft.operators.Shared.memoDir(s, d, "st_click_purchase") { dir =>
-      val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
-        .localCheckpoint(eager = true)
-      val ticks = ev.agg(max("ts").as("mts"))
-        .select(explode(array(
-          struct(lit(-1L).as("event_id"),
-            (col("mts") + expr("INTERVAL 1 HOUR")).as("ts"),
-            lit(-1L).as("user_id"), lit("click").as("event_type")),
-          struct(lit(-2L).as("event_id"),
-            (col("mts") + expr("INTERVAL 1 HOUR")).as("ts"),
-            lit(-2L).as("user_id"), lit("purchase").as("event_type")))).as("r"))
-        .select(col("r.event_id"), col("r.ts"), col("r.user_id"), col("r.event_type"))
-      val t0 = System.currentTimeMillis()
-      scratchFile(ev, dir, "0-data", t0 - 60000)
-      scratchFile(ticks, dir, "1-ticks", t0)
-    }
-
   def streamStreamOuter(s: SparkSession, d: String): DataFrame = {
     // input layout memoized per (session, dir): a pure function of the
     // events table, so later runs skip straight to the stream drain
@@ -833,7 +867,7 @@ object EventStream {
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
         "left_outer")
       val name = "graft_st_stream_outer"
-      val drained = drain(s, dataDir.toString, joined, name, "append")
+      val drained = drain(s, joined, name, "append")
       drained
         .filter(col("click_id") >= 0)
         .select(col("click_id"), col("user_id"),
@@ -883,7 +917,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_topk"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start").orderBy(col("n").desc, col("event_type"))
     drained
@@ -922,7 +956,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"), col("total_value"))
     val name = "graft_st_sliding"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("window_start", "event_type")
   }
 
@@ -965,7 +999,7 @@ object EventStream {
       .select(date_format(col("window.start"), fmt).as("window_start"),
         col("event_type"), col("n"))
     val name = "graft_st_anomaly"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
     drained
       .withColumn("type_total", sum("n").over(w))
@@ -1007,7 +1041,7 @@ object EventStream {
       .select(col("user_id"), col("n_events"), col("total_value"),
         date_format(col("last_ts"), fmt).as("last_seen"))
     val name = "graft_st_running"
-    val drained = drain(s, d, stream, name, "complete")
+    val drained = drain(s, stream, name, "complete")
     drained.orderBy("user_id")
   }
 
@@ -1017,47 +1051,6 @@ object EventStream {
        | strftime(max(CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS last_seen
        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  /** Streaming parquet SINK + checkpoint behind the correctness gate —
-    * the streaming twin of p_shard_write (which gated the BATCH
-    * partitioned sink): the purchase stream is written through a real
-    * `writeStream.format("parquet")` with a checkpoint directory (the
-    * exactly-once file-sink commit protocol — _spark_metadata manifest +
-    * WAL), the files are READ BACK, and the re-read rows must aggregate
-    * to the batch oracle. Any dropped/duplicated/corrupted row flips a
-    * count or a micros-exact sum. The scratch dirs are deleted eagerly
-    * (the re-read is checkpointed first); the emitted result COMES from
-    * the files, not the stream. */
-  /** Late-data accounting under a REAL advancing watermark — the one
-    * watermark behavior a single-file stream can never exercise: with
-    * the whole table in micro-batch 0 the watermark is still at its
-    * initial −∞ while every row is processed, so nothing is ever late.
-    * Here the table is split deterministically into an on-time batch
-    * (even event_ids), a one-row TICK batch (the odd row with max
-    * (ts, event_id), its event time REWRITTEN to max(even ts)), and a
-    * straggler batch (the remaining odd ids), written as three scratch
-    * parquet files with forced modification times and streamed with
-    * `maxFilesPerTrigger=1`. The tick batch exists because the
-    * watermark LAGS micro-batches behind the data that produced it
-    * (measured on this engine: batch N's event times take effect for
-    * batch N+2's input filter) — without it the stragglers would
-    * arrive while the filter still sits at its initial −∞ and nothing
-    * would ever be late. The tick's REWRITTEN timestamp is what makes
-    * the oracle engine-portable: batches 0 and 1 then advance the
-    * watermark to the same value, so the batch-2 filter is exactly
-    * `max(even ts)ms − 10 min` whether the engine's propagation lag is
-    * one batch or two — the drop rule is a pure function of the data,
-    * not of scheduler internals (ADVICE r5). Stragglers whose 5-minute
-    * window end ≤ that watermark (the same boundary [[appendWindows]]
-    * pins for emission) are DROPPED by the stateful aggregation; the
-    * rest update live state. The update-mode memory sink records each key's count after
-    * every batch; max(n) per key is the final count. The result joins
-    * streamed counts against the batch totals: `n_late_dropped =
-    * n_total − n_kept` is the per-window accounting a production
-    * pipeline alerts on (data loss to watermark eviction, the #1
-    * silent-wrongness source in streaming aggs). Everything is
-    * deterministic — the split is id-parity, the tick is an argmax,
-    * the watermark is a pure function of the even half — so the DuckDB
-    * twin reproduces the drop rule exactly. */
   /** Write `df` as a single parquet file `<dataDir>/<name>.parquet`
     * with a forced modification time — the deterministic-micro-batch
     * building block: FileStreamSource orders new files by (mtime,
@@ -1130,7 +1123,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_msw"
-      val drained = drain(s, d, agg, name, "append")
+      val drained = drain(s, agg, name, "append")
       // contrast class, from the batch data (pure function of the corpus):
       // groups above B's watermark but at-or-below A's — emitted iff the
       // engine ignored the lagging source
@@ -1181,6 +1174,37 @@ object EventStream {
       |WHERE epoch_us(wstart + INTERVAL '5 minutes') // 1000 <= wmb_ms
       |ORDER BY window_start, event_type""".stripMargin
 
+  /** Late-data accounting under a REAL advancing watermark — the one
+    * watermark behavior a single-file stream can never exercise: with
+    * the whole table in micro-batch 0 the watermark is still at its
+    * initial −∞ while every row is processed, so nothing is ever late.
+    * Here the table is split deterministically into an on-time batch
+    * (even event_ids), a one-row TICK batch (the odd row with max
+    * (ts, event_id), its event time REWRITTEN to max(even ts)), and a
+    * straggler batch (the remaining odd ids), written as three scratch
+    * parquet files with forced modification times and streamed with
+    * `maxFilesPerTrigger=1`. The tick batch exists because the
+    * watermark LAGS micro-batches behind the data that produced it
+    * (measured on this engine: batch N's event times take effect for
+    * batch N+2's input filter) — without it the stragglers would
+    * arrive while the filter still sits at its initial −∞ and nothing
+    * would ever be late. The tick's REWRITTEN timestamp is what makes
+    * the oracle engine-portable: batches 0 and 1 then advance the
+    * watermark to the same value, so the batch-2 filter is exactly
+    * `max(even ts)ms − 10 min` whether the engine's propagation lag is
+    * one batch or two — the drop rule is a pure function of the data,
+    * not of scheduler internals (ADVICE r5). Stragglers whose 5-minute
+    * window end ≤ that watermark (the same boundary [[appendWindows]]
+    * pins for emission) are DROPPED by the stateful aggregation; the
+    * rest update live state. The update-mode drain appends each key's
+    * count after every batch; max(n) per key is the final count. The result joins
+    * streamed counts against the batch totals: `n_late_dropped =
+    * n_total − n_kept` is the per-window accounting a production
+    * pipeline alerts on (data loss to watermark eviction, the #1
+    * silent-wrongness source in streaming aggs). Everything is
+    * deterministic — the split is id-parity, the tick is an argmax,
+    * the watermark is a pure function of the even half — so the DuckDB
+    * twin reproduces the drop rule exactly. */
   def lateData(s: SparkSession, d: String): DataFrame = {
     val dataDir = graft.operators.Shared.memoDir(s, d, "st_late") { dir =>
       val raw = Tables.events(s, d).select("event_id", "ts", "event_type")
@@ -1230,7 +1254,7 @@ object EventStream {
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("event_type"), col("n"))
       val name = "graft_st_late_data"
-      val drained = drain(s, dataDir.toString, agg, name, "update")
+      val drained = drain(s, agg, name, "update")
       val kept = drained.groupBy("window_start", "event_type")
         .agg(max("n").as("n_kept")).localCheckpoint(eager = true)
       val total = ev.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -1367,7 +1391,7 @@ object EventStream {
         .toDF()
       val name = "graft_st_tws_ledger"
       val drained = graft.operators.Shared.withConfs(s, rocksDbState) {
-        drain(s, dataDir.toString, out, name, "update")
+        drain(s, out, name, "update")
       }
       // update mode emits a snapshot per (user, batch); n_events is
       // monotone, so the max-n struct per user is the final state
@@ -1440,7 +1464,7 @@ object EventStream {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))
       val name = "graft_st_dedup_wm"
-      val drained = drain(s, dataDir.toString, stream, name, "complete")
+      val drained = drain(s, stream, name, "complete")
       drained.orderBy("event_type").localCheckpoint()
     }
   }
@@ -1498,24 +1522,13 @@ object EventStream {
           min(col("user_id")).as("min_user"), max(col("user_id")).as("max_user"))
         .select(date_format(col("window.start"), fmt).as("window_start"),
           col("n_pairs"), col("min_user"), col("max_user"))
-      val name = "graft_st_chained"
-      s.streams.active.find(_.name == name).foreach(_.stop())
-      withStreamShuffle(s, dataDir.toString) {
-        val q = agg.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try {
-          q.processAllAvailable()
-          val stateful = q.recentProgress
-            .flatMap(_.stateOperators.map(_.operatorName)).distinct
-          if (stateful.length < 2)
-            throw new IllegalStateException(
-              s"expected >=2 chained stateful operators, saw ${stateful.mkString(",")}")
-        } finally q.stop()
-      }
-      s.table(name)
+      val out = gateDir("graft_st_chained")
+      val stateful = drainToFiles(s, agg, out, "append")
+        .flatMap(_.stateOperators.map(_.operatorName)).distinct
+      if (stateful.length < 2)
+        throw new IllegalStateException(
+          s"expected >=2 chained stateful operators, saw ${stateful.mkString(",")}")
+      s.read.parquet(out)
         .withColumn("two_stateful_ops", lit(true))
         .orderBy("window_start")
         .localCheckpoint()
@@ -1551,8 +1564,9 @@ object EventStream {
     * the new files in bounded-size batches (bounded state, bounded
     * executor memory) and the checkpoint makes the next run
     * incremental. Both halves of the contract are certificates, not
-    * claims: the harness never calls stop() — `awaitTermination` must
-    * return on its own (self-termination, or the query throws) — and
+    * claims: [[runStream]] waits for the query to end on its own
+    * (self-termination, or the runner throws), never stopping it
+    * first — and
     * the 3-file source under `maxFilesPerTrigger=1` must report ≥3
     * data micro-batches (rate limits HONORED across batches — the
     * difference from the old Trigger.Once, which slurped everything
@@ -1578,28 +1592,15 @@ object EventStream {
         .parquet(dataDir.toString)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("v_us")).as("total_us"))
-      val name = "graft_st_available_now"
-      s.streams.active.find(_.name == name).foreach(_.stop())
-      withStreamShuffle(s, dataDir.toString) {
-        val q = agg.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // the harness never stops the query — AvailableNow must end it
-        val terminated = q.awaitTermination(120000)
-        if (!terminated) {
-          q.stop()
-          throw new IllegalStateException(
-            "Trigger.AvailableNow did not self-terminate — certificate is vacuous")
-        }
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 3)
-          throw new IllegalStateException(
-            s"maxFilesPerTrigger=1 over 3 files must yield >=3 data batches, saw $dataBatches")
-      }
-      s.table(name)
+      // the runner waits for an AvailableNow query to end itself and
+      // throws if it does not, so returning IS the self-termination
+      val out = gateDir("graft_st_available_now")
+      val dataBatches = drainToFiles(s, agg, out, "complete", Trigger.AvailableNow())
+        .count(_.numInputRows > 0)
+      if (dataBatches < 3)
+        throw new IllegalStateException(
+          s"maxFilesPerTrigger=1 over 3 files must yield >=3 data batches, saw $dataBatches")
+      s.read.parquet(out)
         .withColumn("self_terminated", lit(true))
         .withColumn("rate_limited_batches", lit(true))
         .orderBy("event_type")
@@ -1720,7 +1721,7 @@ object EventStream {
         .toDF()
       val name = "graft_st_tws_timers"
       val drained = graft.operators.Shared.withConfs(s, rocksDbState) {
-        drain(s, dataDir.toString, out, name, "append")
+        drain(s, out, name, "append")
       }
       drained.filter(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"),
@@ -1773,29 +1774,26 @@ object EventStream {
           .agg(max(struct(col("ts_us"), col("event_id"), col("event_type"))).as("m"))
           .select(col("user_id"), col("m.ts_us").as("ts_us"),
             col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
-      val q = withStreamShuffle(s, dataDir.toString) {
-        s.readStream
-          .schema(StructType(Seq(StructField("event_id", LongType),
-            StructField("user_id", LongType), StructField("event_type", StringType),
-            StructField("ts_us", LongType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dataDir.toString)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val cand = latest(batch)
-            val merged =
-              if (new java.io.File(stateDir).exists()) {
-                val state = s.read.parquet(stateDir)
-                // union + argmax IS the merge: greatest (ts, id) per key
-                latest(state.unionByName(cand))
-              } else cand
-            merged.localCheckpoint(eager = true)
-              .write.mode("overwrite").parquet(stateDir)
-            ()
-          }
-          .start()
+      val src = s.readStream
+        .schema(StructType(Seq(StructField("event_id", LongType),
+          StructField("user_id", LongType), StructField("event_type", StringType),
+          StructField("ts_us", LongType))))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(dataDir.toString)
+      runStream(s, src) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          val cand = latest(batch)
+          val merged =
+            if (new java.io.File(stateDir).exists()) {
+              val state = s.read.parquet(stateDir)
+              // union + argmax IS the merge: greatest (ts, id) per key
+              latest(state.unionByName(cand))
+            } else cand
+          merged.localCheckpoint(eager = true)
+            .write.mode("overwrite").parquet(stateDir)
+          ()
+        }
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(stateDir)
         .select(col("user_id"), col("event_id").as("last_event_id"),
           col("event_type").as("last_type"),
@@ -1816,34 +1814,33 @@ object EventStream {
       |  FROM events
       |) WHERE rn = 1 ORDER BY user_id""".stripMargin
 
+  /** Streaming parquet SINK + checkpoint behind the correctness gate —
+    * the streaming twin of p_shard_write (which gated the BATCH
+    * partitioned sink): the purchase stream is written through a real
+    * `writeStream.format("parquet")` with a checkpoint directory (the
+    * exactly-once file-sink commit protocol — _spark_metadata manifest +
+    * WAL), the files are READ BACK, and the re-read rows must aggregate
+    * to the batch oracle. Any dropped/duplicated/corrupted row flips a
+    * count or a micros-exact sum. The scratch dirs are deleted eagerly
+    * (the re-read is checkpointed first); the emitted result COMES from
+    * the files, not the stream. */
   def sinkRoundtrip(s: SparkSession, d: String): DataFrame = {
     graft.Scratch.withDir("graft_st_sink_") { out =>
-      graft.Scratch.withDir("graft_st_ckpt_") { ckpt =>
-        val q = withStreamShuffle(s, d) {
-          eventStream(s, d)
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id"), col("user_id"), col("value"))
-            .writeStream
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        }
-        try q.processAllAvailable()
-        finally q.stop()
-        // eager = true is LOAD-BEARING, not a default we happen to rely
-        // on: withDir deletes the files the frame was read from when
-        // this block returns, so every block must be materialized first
-        // (and a lost block afterward is unrecoverable — the price of
-        // eagerly deleting scratch; the aggregate is tiny)
-        val back = s.read.parquet(out).localCheckpoint(eager = true)
-        back.groupBy("user_id")
-          .agg(count(lit(1)).as("n_purchases"),
-            countDistinct("event_id").as("n_distinct_events"),
-            moneySum(col("value")).as("total_value"))
-          .orderBy("user_id")
-      }
+      val purchases = eventStream(s, d)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("value"))
+      runStream(s, purchases)(_.format("parquet").option("path", out).outputMode("append"))
+      // eager = true is LOAD-BEARING, not a default we happen to rely
+      // on: withDir deletes the files the frame was read from when
+      // this block returns, so every block must be materialized first
+      // (and a lost block afterward is unrecoverable — the price of
+      // eagerly deleting scratch; the aggregate is tiny)
+      val back = s.read.parquet(out).localCheckpoint(eager = true)
+      back.groupBy("user_id")
+        .agg(count(lit(1)).as("n_purchases"),
+          countDistinct("event_id").as("n_distinct_events"),
+          moneySum(col("value")).as("total_value"))
+        .orderBy("user_id")
     }
   }
 
@@ -1878,16 +1875,13 @@ object EventStream {
         .localCheckpoint(eager = true)
       val dataDir = new java.io.File(scratch, "data"); dataDir.mkdirs()
       val out = s"$scratch/sink"; val ckpt = s"$scratch/ckpt"
-      def runOnce(): Unit = withStreamShuffle(s, dataDir.toString) {
-        val q = s.readStream
-          .schema(StructType(Seq(StructField("event_id", LongType),
-            StructField("user_id", LongType), StructField("event_type", StringType),
-            StructField("value", DoubleType))))
-          .parquet(dataDir.toString)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+      val src = s.readStream
+        .schema(StructType(Seq(StructField("event_id", LongType),
+          StructField("user_id", LongType), StructField("event_type", StringType),
+          StructField("value", DoubleType))))
+        .parquet(dataDir.toString)
+      def runOnce(): Unit = runStream(s, src, checkpoint = Some(ckpt)) {
+        _.format("parquet").option("path", out).outputMode("append")
       }
       val t0 = System.currentTimeMillis()
       scratchFile(ev.filter(col("event_id") % 2 === 0), dataDir, "0-first", t0 - 60000)

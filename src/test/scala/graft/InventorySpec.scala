@@ -85,6 +85,15 @@ class InventorySpec extends AnyFunSuite {
     assert(raster == 1, s"grayscale raster fill written $raster times")
   }
 
+  test("one streaming runner under src/main: one writer start, no memory sink, no query names") {
+    val starts = mainOccurrences(".start()")
+    assert(starts == 1, s"a streaming writer is started at $starts sites, not one runner")
+    val memorySinks = mainOccurrences("""format("memory")""")
+    assert(memorySinks == 0, s"$memorySinks driver memory sinks")
+    val names = mainOccurrences("queryName(")
+    assert(names == 0, s"$names named streaming queries")
+  }
+
   test("query selection: all by default, exactly the named ones, unknown names throw") {
     assert(GraftSession.selectQueries(None).keySet == SparkEntry.queries.keySet)
     assert(GraftSession.selectQueries(Some(" mr_wordcount, q10_star_join ,")).keySet ==

@@ -483,7 +483,7 @@ class Round6Spec extends SparkSpec {
   test("st_chained_stateful: both state stores live in one query, no lingering stream") {
     val rows = streaming.EventStream.chainedStateful(spark, sf).collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("two_stateful_ops")))
-    assert(!spark.streams.active.exists(_.name == "graft_st_chained"))
+    assert(spark.streams.active.isEmpty)
     // window totals must cover every joined pair exactly once
     val expected = {
       val ev = Tables.events(spark, sf).select("event_id", "ts", "user_id", "event_type")
@@ -513,7 +513,7 @@ class Round6Spec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val rows = streaming.EventStream.availableNow(spark, sf).collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("self_terminated")))
-    assert(!spark.streams.active.exists(_.name == "graft_st_available_now"),
+    assert(spark.streams.active.isEmpty,
       "the AvailableNow query must be terminated, not lingering")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
   }

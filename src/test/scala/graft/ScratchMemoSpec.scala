@@ -66,7 +66,7 @@ class ScratchMemoSpec extends SparkSpec {
     val stream = streaming.EventStream.eventStream(spark, sf)
       .filter(lit(false)).select(col("event_id"), col("event_type"))
     Scratch.withDir("graft_spec_drain_") { out =>
-      streaming.EventStream.drainToFiles(spark, sf, stream, out, "append")
+      streaming.EventStream.drainToFiles(spark, stream, out, "append")
       val back = spark.read.parquet(out)
       assert(back.schema.fieldNames.toSeq == Seq("event_id", "event_type"))
       assert(back.schema.map(_.dataType) == stream.schema.map(_.dataType))

@@ -8,6 +8,7 @@ type/format mismatches like HUGEINT->float "1.0" vs "1").
 Reads <out>/<name>/ parquet (Spark results) + <out>/oracle_sql.json,
 runs each SQL in DuckDB with the sf tables registered as views, and
 compares row counts, sorted-column-name value hashes, and cell values.
+An oracle key with no result directory (the query threw) is a failure.
 """
 import sys, json, glob, os
 import duckdb
@@ -37,10 +38,13 @@ def main(out_dir, sf_dir, exact=False):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    results = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+    # a query that threw in Verify writes no directory: it fails here,
+    # rather than dropping out of the count
+    for name in sorted(set(oracle) - results):
+        print(f"[FAIL] {name}: no result"); n_fail += 1
+    for name in sorted(results):
         path = os.path.join(out_dir, name)
-        if not os.path.isdir(path):
-            continue
         files = glob.glob(f"{path}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
         if name not in oracle:
