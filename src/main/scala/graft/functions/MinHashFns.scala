@@ -239,6 +239,16 @@ private[graft] trait ArrayInputCheck { self: UnaryExpression =>
   }
 }
 
+/** Both inputs must be array<bigint>; a failure names the function and
+  * both input types. */
+private[graft] trait LongArrayPairCheck { self: BinaryExpression =>
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"${self.prettyName} expects two array<bigint>, got $l, $r")
+  }
+}
+
 /** array<string> tokens → array<string> distinct word k-gram shingles
   * (first-occurrence order). The interpreted transform+element_at+
   * concat_ws+array_distinct chain measured ~1.6 ms per document. */
@@ -329,15 +339,8 @@ case class WordHashes(child: Expression) extends UnaryExpression with ArrayInput
 /** (array<long> SORTED, array<long> SORTED) → exact set Jaccard as one
   * codegen'd merge pass — see [[MinHashImpl.jaccardSorted]] for the
   * measured rationale (the r12 d_setsim_join verify-stage fix). */
-case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpression {
-  private def isLongArray(t: DataType) = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_jaccard expects two array<long>, got ${left.dataType}, ${right.dataType}")
+case class SortedJaccard(left: Expression, right: Expression)
+    extends BinaryExpression with LongArrayPairCheck {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     MinHashImpl.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -349,15 +352,8 @@ case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpr
 
 /** (array<long> SORTED, array<long> SORTED) → distinct-intersection
   * count, one codegen'd merge pass ([[MinHashImpl.overlapSorted]]). */
-case class SortedOverlap(left: Expression, right: Expression) extends BinaryExpression {
-  private def isLongArray(t: DataType) = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_overlap expects two array<long>, got ${left.dataType}, ${right.dataType}")
+case class SortedOverlap(left: Expression, right: Expression)
+    extends BinaryExpression with LongArrayPairCheck {
   override def dataType: DataType = LongType
   override def nullSafeEval(a: Any, b: Any): Any =
     MinHashImpl.overlapSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -397,15 +393,7 @@ object MinHashFns {
 
 /** (sig_a, sig_b) → fraction of equal positions. */
 case class EstJaccard(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  private def isLongArray(t: DataType) = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"est_jaccard expects two array<bigint>, got ${left.dataType}, ${right.dataType}")
+    extends BinaryExpression with LongArrayPairCheck {
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     MinHashImpl.estJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

@@ -1,6 +1,10 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.ByteOrder.{BIG_ENDIAN => BE, LITTLE_ENDIAN => LE}
+
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -10,19 +14,33 @@ import graft.operators.ExactRound
   *
   * Media are opaque `binary` columns with typed metadata beside them —
   * the layout a 100 TB image/audio corpus uses (bytes in parquet,
-  * decode at point of use). The image path is REAL: assets are genuine
-  * PNGs (encoded with the JDK's `javax.imageio` — zero external deps)
-  * and [[featureExtract]]/[[phash]] run `ImageIO.read` on executor
-  * threads inside the batched `mapPartitions`, computing features over
-  * the DECODED PIXELS. Because the synthesized pixels are a known
-  * function of `documents.text` and PNG is lossless, the decoded values
-  * are analytically replayable — so even the real-codec path keeps a
-  * bit-exact DuckDB oracle (a corpus of external images would drop to
-  * the rows-only check, with the same plans).
+  * decode at point of use). The per-document container and codec
+  * queries share two definitions (the shard codecs — tar, zip,
+  * TFRecord, WebDataset, WARC, safetensors — build one file per shard
+  * in `groupByKey.mapGroups` instead):
+  *
+  *  - Encode (and decode) per document in [[perDocument]], the one
+  *    asset builder: a `(doc_id, text) => row` function applied in one
+  *    mapPartitions pass over the parallelized documents. The codecs
+  *    are REAL — genuine PNG/JPEG/GIF/BMP through the JDK's
+  *    `javax.imageio`, WAV through `javax.sound`, zstd through zstd-jni,
+  *    and hand-built containers for the rest — and the real-decode
+  *    queries ([[featureExtract]], [[resize]], [[wavEnergy]], …)
+  *    compute over the DECODED samples in the same function.
+  *  - Parse the resulting `media` column declaratively: every unsigned
+  *    integer comes out of [[uint]], the one byte-field reader (1-based
+  *    Column offset, width, byte order → BIGINT), so container walks
+  *    stay codegen'd column ops and higher-order `transform` /
+  *    `filter` / `aggregate` lambdas over it.
   *
   * The testdata has no binary table, so assets are synthesized
   * deterministically from `documents.text` (UTF-8 bytes as the "blob";
-  * for the image queries, as grayscale pixel data).
+  * for the image queries, as grayscale pixel data). Because the
+  * synthesized content is a known function of the text and the
+  * lossless codecs return it exactly, every parsed or decoded value is
+  * analytically replayable — so even the real-codec path keeps a
+  * bit-exact DuckDB oracle (a corpus of external images would drop to
+  * the rows-only check, with the same plans).
   */
 object Multimodal {
 
@@ -242,33 +260,26 @@ object Multimodal {
     * declarative re-parse of the scrubbed IFD finds no tag 34853; and
     * the surviving metadata (orientation, DateTime) re-parsed intact.
     * The JPEG image stream passes through untouched by construction.
-    * Scale shape: surgery is per-row JVM work in batched
-    * mapPartitions (byte slicing, no codec), the verification parse is
+    * Scale shape: surgery is per-row JVM work in the [[perDocument]]
+    * pass (byte slicing, no codec), the verification parse is
     * codegen'd column ops. */
   def exifScrub(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val rows = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(32).flatMap(_.map { case (id, t) =>
+    val rows = perDocument(s, d) { (id, t) =>
         val withGps = encodeExifGpsJpeg(id, t)
         val scrubbed = stripExifGps(withGps)
         val reference = encodeExifJpeg(id, t)
         (id, scrubbed, withGps.length.toLong,
           java.util.Arrays.equals(scrubbed, reference))
-      }))
+      }
       .toDF("asset_id", "media", "gps_bytes", "scrub_exact")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def le16(off: Int) = u8(off) + u8(off + 1) * 256L
     // TIFF base is 1-based byte 13 (SOI 2 + APP1 marker 2 + len 2 +
     // "Exif\0\0" 6); IFD0 count at +8, entries at +10/+22, orientation
     // value at entry0+8, DateTime data at TIFF offset 38 (byte 51)
     rows.select(col("asset_id"),
         col("scrub_exact"),
-        le16(21).as("n_entries"),
-        (le16(23) =!= 34853L && le16(35) =!= 34853L).as("gps_gone"),
-        le16(31).as("orientation"),
+        uint(lit(21), 2, LE).as("n_entries"),
+        (uint(lit(23), 2, LE) =!= 34853L && uint(lit(35), 2, LE) =!= 34853L).as("gps_gone"),
+        uint(lit(31), 2, LE).as("orientation"),
         expr("string(substring(media, 51, 19))").as("datetime"),
         (col("gps_bytes") - expr("length(media)")).as("bytes_removed"))
       .orderBy("asset_id")
@@ -492,6 +503,40 @@ object Multimodal {
     out
   }
 
+  /** The documents scan every per-document query starts from, spread
+    * over the cores ([[Tables.parallelize]]). */
+  private def docs(s: SparkSession, d: String): DataFrame =
+    Tables.parallelize(Tables.documents(s, d))
+
+  /** The one asset builder: `f(doc_id, text)` for every document, in one
+    * mapPartitions pass over [[docs]]. Codecs are imperative per-row
+    * work, so each query's encode (and, for the real-decode queries,
+    * decode) lives in `f`; everything after it is declarative column
+    * work on the result. */
+  private def perDocument[T <: Product : TypeTag](s: SparkSession, d: String)(
+      f: (Long, String) => T): Dataset[T] = {
+    import s.implicits._
+    docs(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map(f.tupled))
+  }
+
+  /** The one byte-field reader: the unsigned integer in `width` bytes of
+    * `media` from the 1-based `off`, in byte order `order`, as BIGINT.
+    * Each byte is a codegen'd substring + hex + conv, so `off` may be
+    * any integral Column, a lambda variable inside `transform` or
+    * `aggregate` included. A byte past the end of `media` reads NULL,
+    * and so does any field that reaches past the end. Callers whose
+    * output column is INT cast there. */
+  private[graft] def uint(off: Column, width: Int, order: java.nio.ByteOrder): Column = {
+    val pos = off.cast("int")
+    (0 until width).map { i =>
+      val b = conv(hex(col("media").substr(if (i == 0) pos else pos + i, lit(1))), 16, 10)
+        .cast("long")
+      val shift = 8 * (if (order == LE) i else width - 1 - i)
+      if (shift == 0) b else b * (1L << shift)
+    }.reduce(_ + _)
+  }
+
   /** documents → (asset_id, media: binary, n_chars metadata). */
   def assets(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(
@@ -535,49 +580,27 @@ object Multimodal {
       |)
       |ORDER BY asset_id, frame_idx""".stripMargin
 
-  /** Real-decode batched feature extractor: encode each document as a
-    * genuine PNG, then `ImageIO.read` it back on the executor and
-    * compute features over the DECODED pixels — true image dimensions
-    * plus the L2 norm of an 8-bin pixel-value histogram. The
-    * mapPartitions + fixed-size batch shape is how a model decode runs
-    * at scale (amortize codec/model init per partition, bounded batch
-    * memory); swapping the gray histogram for a CNN forward pass
-    * changes only the function applied to `px`. */
+  /** Real-decode feature extractor: encode each document as a genuine
+    * PNG, then `ImageIO.read` it back on the executor and compute
+    * features over the DECODED pixels — true image dimensions plus the
+    * L2 norm of an 8-bin pixel-value histogram. Encode, decode and
+    * features run row by row in the one [[perDocument]] pass, the
+    * shape a model decode takes at scale (codec work stays inside the
+    * partition; only the feature row leaves it); swapping the gray
+    * histogram for a CNN forward pass changes only the function applied
+    * to `px`. */
   def featureExtract(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val batchSize = 64
-    imageAssets(s, d)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // one "codec init" per partition, then fixed-size batches
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { case (id, png) =>
-            val (w, h, px) = decodeGray(png)
-            val hist = new Array[Long](8)
-            var i = 0
-            while (i < px.length) { hist(px(i) % 8) += 1; i += 1 }
-            val norm = math.sqrt(hist.map(x => x.toDouble * x).sum)
-            (id, w, h, norm)
-          }
-        }
+    perDocument(s, d) { (id, text) =>
+        val (w, h, px) = decodeGray(encodePng(text))
+        val hist = new Array[Long](8)
+        var i = 0
+        while (i < px.length) { hist(px(i) % 8) += 1; i += 1 }
+        val norm = math.sqrt(hist.map(x => x.toDouble * x).sum)
+        (id, w, h, norm)
       }
       .toDF("asset_id", "width", "height", "feat_norm")
       .withColumn("feat_norm", ExactRound.r(col("feat_norm"), 6))
       .orderBy("asset_id")
-  }
-
-  /** documents → (asset_id, real PNG bytes), the binary column the image
-    * queries decode. Encoded in a mapPartitions (the codec is imperative
-    * per-row work, exactly what mapPartitions is for). */
-  private def imageAssets(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodePng(text)) })
-      .toDF("asset_id", "media")
   }
 
   /** SQL twin of [[featureExtract]]: PNG is lossless, so decoded pixels
@@ -616,19 +639,19 @@ object Multimodal {
     * blob's header bytes — signature check on bytes 1-8, big-endian
     * 32-bit ints at offsets 17/21, depth/color at 25/26 (PNG spec layout:
     * 8-byte signature, 4-byte chunk length, "IHDR", then the fields).
-    * All declarative column ops (`substring` on binary + hex/conv), so
+    * All declarative column ops (the [[uint]] byte-field reader), so
     * the parse is codegen'd and map-side — the metadata pass that runs
     * BEFORE any decode at 100 TB (a corrupt header never reaches the
     * codec). Oracle: the assets are [[encodePng]]'s own output, so every
     * field is an analytic function of the document length. */
   def pngMeta(s: SparkSession, d: String): DataFrame = {
-    def be32(off: Int) = conv(hex(substring(col("media"), off, 4)), 16, 10).cast("int")
-    def be8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("int")
-    imageAssets(s, d)
+    perDocument(s, d)((id, text) => (id, encodePng(text))).toDF("asset_id", "media")
       .select(col("asset_id"),
         (hex(substring(col("media"), 1, 8)) === "89504E470D0A1A0A").as("valid_sig"),
-        be32(17).as("width"), be32(21).as("height"),
-        be8(25).as("bit_depth"), be8(26).as("color_type"))
+        uint(lit(17), 4, BE).cast("int").as("width"),
+        uint(lit(21), 4, BE).cast("int").as("height"),
+        uint(lit(25), 1, BE).cast("int").as("bit_depth"),
+        uint(lit(26), 1, BE).cast("int").as("color_type"))
       .orderBy("asset_id")
   }
 
@@ -702,17 +725,6 @@ object Multimodal {
     bb.array()
   }
 
-  /** documents → (asset_id, real AVI bytes). */
-  private def videoAssets(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeAvi(text)) })
-      .toDF("asset_id", "media")
-  }
-
   /** REAL frame-index parse over a video container — the upgrade the
     * round-4 verdict asked of [[frameSample]]'s pseudo-frames: per
     * frame, the byte offset/size/keyframe flag read from the AVI
@@ -726,21 +738,17 @@ object Multimodal {
     * (that is the point of an index: at 100 TB a frame sampler seeks
     * straight to keyframe offsets instead of demuxing the stream). */
   def framesMeta(s: SparkSession, d: String): DataFrame = {
-    def u8(off: org.apache.spark.sql.Column) =
-      conv(hex(col("media").substr(off.cast("int"), lit(1))), 16, 10).cast("long")
-    def le32(off: org.apache.spark.sql.Column) =
-      u8(off) + u8(off + 1) * 256L + u8(off + 2) * 65536L + u8(off + 3) * 16777216L
-    def fourcc(off: org.apache.spark.sql.Column) =
+    def fourcc(off: Column) =
       decode(unbase64(base64(col("media").substr(off.cast("int"), lit(4)))), "US-ASCII")
-    val idxOff = le32(lit(217)) + 221L // 'idx1' fourcc: movi LIST content end
-    videoAssets(s, d)
+    val idxOff = uint(lit(217), 4, LE) + 221L // 'idx1' fourcc: movi LIST content end
+    perDocument(s, d)((id, text) => (id, encodeAvi(text))).toDF("asset_id", "media")
       .select(col("asset_id"), col("media"),
         (hex(col("media").substr(lit(1), lit(4))) === "52494646" &&
           hex(col("media").substr(lit(9), lit(4))) === "41564920" &&
           fourcc(idxOff) === "idx1").as("valid_avi"),
-        (lit(1000000L) / le32(lit(33))).cast("long").as("fps"),
-        le32(lit(49)).as("n_frames"),
-        le32(lit(65)).as("width"), le32(lit(69)).as("height"),
+        (lit(1000000L) / uint(lit(33), 4, LE)).cast("long").as("fps"),
+        uint(lit(49), 4, LE).as("n_frames"),
+        uint(lit(65), 4, LE).as("width"), uint(lit(69), 4, LE).as("height"),
         (idxOff + 8L).as("idx_base"))
       .select(col("asset_id"), col("media"), col("valid_avi"), col("fps"),
         col("n_frames"), col("width"), col("height"),
@@ -749,10 +757,10 @@ object Multimodal {
       .select(col("asset_id"), col("valid_avi"), col("fps"),
         col("n_frames"), col("width"), col("height"), col("frame_idx"),
         fourcc(col("idx_base") + col("frame_idx") * 16L).as("frame_ckid"),
-        ((le32(col("idx_base") + col("frame_idx") * 16L + 4L)
+        ((uint(col("idx_base") + col("frame_idx") * 16L + 4L, 4, LE)
           .cast("int").bitwiseAND(lit(0x10))) =!= 0).as("keyframe"),
-        le32(col("idx_base") + col("frame_idx") * 16L + 8L).as("frame_offset"),
-        le32(col("idx_base") + col("frame_idx") * 16L + 12L).as("frame_bytes"))
+        uint(col("idx_base") + col("frame_idx") * 16L + 8L, 4, LE).as("frame_offset"),
+        uint(col("idx_base") + col("frame_idx") * 16L + 12L, 4, LE).as("frame_bytes"))
       .orderBy("asset_id", "frame_idx")
   }
 
@@ -774,21 +782,10 @@ object Multimodal {
       |)
       |ORDER BY asset_id, frame_idx""".stripMargin
 
-  /** documents → (asset_id, real JPEG bytes). */
-  private def jpegImageAssets(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeJpeg(text)) })
-      .toDF("asset_id", "media")
-  }
-
   /** JPEG SOF0 frame-header parse — [[pngMeta]]'s lossy-codec twin:
     * image precision/height/width/component count read straight out of
     * the baseline start-of-frame segment with declarative binary ops
-    * (substring + hex + conv, codegen'd, no codec on this path). JPEG
+    * ([[uint]], codegen'd, no codec on this path). JPEG
     * does not pin segment order the way PNG pins IHDR-first, but the
     * JDK's JFIF writer emits a fixed grayscale prelude — SOI(2) +
     * APP0(18) + DQT(69) — putting the FFC0 marker at byte offset 90
@@ -802,14 +799,14 @@ object Multimodal {
     * so they stay bit-exact oracle-able even though JPEG pixels are
     * not. */
   def jpegMeta(s: SparkSession, d: String): DataFrame = {
-    def be16(off: Int) = conv(hex(substring(col("media"), off, 2)), 16, 10).cast("int")
-    def be8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("int")
-    jpegImageAssets(s, d)
+    perDocument(s, d)((id, text) => (id, encodeJpeg(text))).toDF("asset_id", "media")
       .select(col("asset_id"),
         (hex(substring(col("media"), 1, 2)) === "FFD8" &&
           hex(substring(col("media"), 90, 2)) === "FFC0").as("valid_sof"),
-        be8(94).as("precision"), be16(95).as("height"),
-        be16(97).as("width"), be8(99).as("n_components"))
+        uint(lit(94), 1, BE).cast("int").as("precision"),
+        uint(lit(95), 2, BE).cast("int").as("height"),
+        uint(lit(97), 2, BE).cast("int").as("width"),
+        uint(lit(99), 1, BE).cast("int").as("n_components"))
       .orderBy("asset_id")
   }
 
@@ -822,39 +819,24 @@ object Multimodal {
     * TIFF header, NOT the file — the classic EXIF parser bug), and
     * exercises both storage classes: Orientation (SHORT, inline in the
     * value field) and DateTime (ASCII 20, stored at an offset past the
-    * IFD, followed to read the string). Declarative substring+conv
-    * chain, codegen'd, no codec. `valid_exif` pins the full envelope:
+    * IFD, followed to read the string). Declarative [[uint]] reads,
+    * codegen'd, no codec. `valid_exif` pins the full envelope:
     * SOI, APP1 marker, "Exif\0\0" signature, "II" byte order, magic 42. */
   def exifMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    def u8(o: String) = s"CAST(conv(hex(substring(media, ($o) + 1, 1)), 16, 10) AS INT)"
-    def le16(o: String) = s"(${u8(o)} + 256 * ${u8(s"($o) + 1")})"
-    def le32(o: String) = s"(${le16(o)} + 65536 * ${le16(s"($o) + 2")})"
     // TIFF base: SOI(2) + APP1 marker(2) + length(2) + "Exif\0\0"(6)
     val base = 12
-    val ifd = s"($base + ${le32(s"$base + 4")})"
-    val entries =
-      s"""transform(sequence(0, ${le16(ifd)} - 1), i -> named_struct(
-         |  'tag', ${le16(s"($ifd) + 2 + 12 * i")},
-         |  'v', ${le32(s"($ifd) + 2 + 12 * i + 8")}))""".stripMargin
-    def tagVal(tag: Int) = s"filter(es, e -> e.tag = $tag)[0].v"
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeExifJpeg(id, text)) })
-      .toDF("asset_id", "media")
-      .withColumn("es", expr(entries))
+    perDocument(s, d)((id, text) => (id, encodeExifJpeg(id, text))).toDF("asset_id", "media")
+      .withColumn("es", ifd0Entries(base))
       .select(col("asset_id"),
         (hex(substring(col("media"), 1, 2)) === "FFD8" &&
           hex(substring(col("media"), 3, 2)) === "FFE1" &&
           substring(col("media"), 7, 4).cast("string") === "Exif" &&
           substring(col("media"), base + 1, 2).cast("string") === "II" &&
-          expr(le16(s"$base + 2")) === 42).as("valid_exif"),
-        expr(tagVal(274)).as("orientation"),
-        (expr(tagVal(274)) =!= 1).as("needs_rotate"),
-        expr(s"CAST(substring(media, $base + 1 + ${tagVal(306)}, 19) AS STRING)")
-          .as("taken_at"))
+          uint(lit(base + 3), 2, LE) === 42).as("valid_exif"),
+        ifdTag(274).cast("int").as("orientation"),
+        (ifdTag(274) =!= 1).as("needs_rotate"),
+        col("media").substr((lit(base + 1) + ifdTag(306)).cast("int"), lit(19))
+          .cast("string").as("taken_at"))
       .orderBy("asset_id")
   }
 
@@ -902,7 +884,7 @@ object Multimodal {
          |  'start_ms', ${ts(l2, 1)},
          |  'end_ms', ${ts(l2, 18)},
          |  'n_words', size(split(element_at(split(b, '\\n'), 3), ' '))))""".stripMargin
-    Tables.parallelize(Tables.documents(s, d))
+    docs(s, d)
       .select(col("doc_id"), split(trim(col("text")), "[ \t\n\r]+").as("words"))
       .select(col("doc_id"), expr(gen).as("srt"))
       .withColumn("caps", expr(parsed))
@@ -937,34 +919,25 @@ object Multimodal {
     * has not been tested): signature check on "GIF89a"/"GIF87a", LE
     * dims at offsets 7/9, and the global-color-table flag from the
     * packed byte at 11 (the JDK writer always emits a GCT for a
-    * palette image). Declarative substring+conv arithmetic, codegen'd
-    * map-side like the other header parses. Oracle: the assets are
+    * palette image). Declarative [[uint]] reads, codegen'd map-side
+    * like the other header parses. Oracle: the assets are
     * [[encodeGif]]'s own output — every field analytic in the doc
     * length. */
   def gifMeta(s: SparkSession, d: String): DataFrame = {
-    def le16(off: Int) =
-      (conv(hex(substring(col("media"), off, 1)), 16, 10).cast("int") +
-        conv(hex(substring(col("media"), off + 1, 1)), 16, 10).cast("int") * 256)
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeGif(text)) })
-      .toDF("asset_id", "media")
+    perDocument(s, d)((id, text) => (id, encodeGif(text))).toDF("asset_id", "media")
       .select(col("asset_id"),
         (substring(col("media"), 1, 6).cast("string") === "GIF89a" ||
           substring(col("media"), 1, 6).cast("string") === "GIF87a").as("valid_sig"),
-        le16(7).as("width"), le16(9).as("height"),
-        (conv(hex(substring(col("media"), 11, 1)), 16, 10).cast("int") >= 128)
-          .as("has_gct"))
+        uint(lit(7), 2, LE).cast("int").as("width"),
+        uint(lit(9), 2, LE).cast("int").as("height"),
+        (uint(lit(11), 1, LE) >= 128).as("has_gct"))
       .orderBy("asset_id")
   }
 
   /** 2-D RESIZE over REAL decoded pixels — the remaining member of the
     * decode / feature-extract / resize / frame-sample quartet: each
-    * PNG asset is decoded (`ImageIO` on executors, batched
-    * mapPartitions like [[featureExtract]]) and box-average
+    * PNG asset is decoded (`ImageIO` on executors, in the
+    * [[perDocument]] pass like [[featureExtract]]) and box-average
     * downsampled onto an 8×8 grid — source pixel (y, x) lands in cell
     * (y·8 div h, x div 8), cell value = integer-micros mean of its
     * pixels — the thumbnail/normalization step every vision pipeline
@@ -977,17 +950,9 @@ object Multimodal {
     * grid reduce is a (asset, cell) partial agg — nothing wider than
     * 64 cells per asset crosses the shuffle. */
   def resize(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val batchSize = 64
-    val pixels = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, text) =>
-          val (w, h, px) = decodeGray(encodePng(text))
-          (id, w, h, px)
-        })
+    val pixels = perDocument(s, d) { (id, text) =>
+        val (w, h, px) = decodeGray(encodePng(text))
+        (id, w, h, px)
       }
       .toDF("asset_id", "w", "h", "px")
     pixels
@@ -1043,40 +1008,42 @@ object Multimodal {
     * shape: a TIFF directory reached through a pointer): the IFD
     * offset is read from the header, the entry COUNT from that dynamic
     * position, and the entries enumerated with `transform(sequence(0,
-    * n−1))` at offsets computed from the parsed pointer — `substring`
-    * with COLUMN offsets keeps the whole chain declarative and
-    * codegen'd, no UDF. Tag lookups (width/height/bits/strip size)
-    * filter the parsed entry array. LE u16/u32 arithmetic; SHORT
-    * values read through the same le32 (little-endian zero padding
-    * makes them equal). Oracle: analytic in doc length, like the other
-    * synthesized containers. */
+    * n−1))` ([[ifd0Entries]]) — [[uint]] with COLUMN offsets keeps the
+    * whole chain declarative and codegen'd, no UDF. Tag lookups
+    * (width/height/bits/strip size) filter the parsed entry array.
+    * Oracle: analytic in doc length, like the other synthesized
+    * containers. */
   def tiffMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    def le1(o: String) = s"CAST(conv(hex(substring(media, ($o) + 1, 1)), 16, 10) AS INT)"
-    def le16(o: String) = s"(${le1(o)} + 256 * ${le1(s"($o) + 1")})"
-    def le32(o: String) = s"(${le16(o)} + 65536 * ${le16(s"($o) + 2")})"
-    val ifd = le32("4")
-    val entries =
-      s"""transform(sequence(0, ${le16(ifd)} - 1), i -> named_struct(
-         |  'tag', ${le16(s"($ifd) + 2 + 12 * i")},
-         |  'v', ${le32(s"($ifd) + 2 + 12 * i + 8")}))""".stripMargin
-    def tagVal(tag: Int) = s"filter(es, e -> e.tag = $tag)[0].v"
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeTiff(text)) })
-      .toDF("asset_id", "media")
-      .withColumn("es", expr(entries))
+    perDocument(s, d)((id, text) => (id, encodeTiff(text))).toDF("asset_id", "media")
+      .withColumn("es", ifd0Entries(0))
       .select(col("asset_id"),
         (substring(col("media"), 1, 2).cast("string") === "II" &&
-          expr(le16("2")) === 42).as("valid_sig"),
-        expr(tagVal(256)).as("width"),
-        expr(tagVal(257)).as("height"),
-        expr(tagVal(258)).as("bits_per_sample"),
-        expr(tagVal(279)).as("strip_bytes"))
+          uint(lit(3), 2, LE) === 42).as("valid_sig"),
+        ifdTag(256).cast("int").as("width"),
+        ifdTag(257).cast("int").as("height"),
+        ifdTag(258).cast("int").as("bits_per_sample"),
+        ifdTag(279).cast("int").as("strip_bytes"))
       .orderBy("asset_id")
   }
+
+  /** IFD0 of the little-endian TIFF header at 0-based byte `base` of
+    * `media` (0 for a TIFF file, 12 inside an EXIF APP1 segment): one
+    * (tag, v) struct per entry. TIFF offsets count from the header, so
+    * IFD0 sits at 1-based byte `base + 1 + offset`; the entry COUNT is
+    * read there and the entries enumerated with `transform(sequence(0,
+    * n−1))` at offsets computed from the parsed pointer. SHORT values
+    * read through the same 4-byte little-endian `v` (zero padding
+    * makes them equal). */
+  private def ifd0Entries(base: Int): Column = {
+    val ifd = lit(base + 1) + uint(lit(base + 5), 4, LE)
+    transform(sequence(lit(0L), uint(ifd, 2, LE) - 1L), i => struct(
+      uint(ifd + i * 12 + 2, 2, LE).as("tag"),
+      uint(ifd + i * 12 + 10, 4, LE).as("v")))
+  }
+
+  /** The value of the first `es` entry ([[ifd0Entries]]) tagged `tag`. */
+  private def ifdTag(tag: Int): Column =
+    filter(col("es"), e => e("tag") === tag).getItem(0)("v")
 
   val tiffMetaSql: String =
     """SELECT doc_id AS asset_id, TRUE AS valid_sig,
@@ -1098,48 +1065,38 @@ object Multimodal {
     * the nested walk. Oracle: analytic in doc length, like the other
     * synthesized containers. */
   def mp4Boxes(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    def be1(o: String) = s"CAST(conv(hex(substring(media, ($o) + 1, 1)), 16, 10) AS INT)"
-    def be32(o: String) =
-      s"(16777216 * ${be1(o)} + 65536 * ${be1(s"($o) + 1")} + " +
-        s"256 * ${be1(s"($o) + 2")} + ${be1(s"($o) + 3")})"
+    // a box header at 0-based `off`: big-endian u32 size, then the fourcc
+    def boxSize(off: Column) = uint(off + 1, 4, BE)
+    def boxType(off: Column) = col("media").substr((off + 5).cast("int"), lit(4)).cast("string")
     // top-level walk: fold over a generous fixed iteration budget; each
     // step consumes one box or passes through once the offset hits EOF
-    val topWalk =
-      s"""aggregate(sequence(1, 8),
-         |  named_struct('off', 0,
-         |    'bs', CAST(array() AS ARRAY<STRUCT<t: STRING, sz: INT, off: INT>>)),
-         |  (acc, i) -> IF(acc.off >= length(media), acc,
-         |    named_struct('off', acc.off + ${be32("acc.off")},
-         |      'bs', acc.bs || array(named_struct(
-         |        't', CAST(substring(media, acc.off + 5, 4) AS STRING),
-         |        'sz', ${be32("acc.off")},
-         |        'off', acc.off)))),
-         |  acc -> acc.bs)""".stripMargin
+    val topWalk = aggregate(sequence(lit(1), lit(8)),
+      struct(lit(0L).as("off"),
+        array().cast("array<struct<t:string,sz:bigint,off:bigint>>").as("bs")),
+      (acc, _) => when(acc("off") >= length(col("media")), acc).otherwise(struct(
+        (acc("off") + boxSize(acc("off"))).as("off"),
+        concat(acc("bs"), array(struct(boxType(acc("off")).as("t"),
+          boxSize(acc("off")).as("sz"), acc("off").as("off")))).as("bs"))),
+      acc => acc("bs"))
     // nested walk: count trak children between moov's payload start and end
-    val trakWalk =
-      s"""aggregate(sequence(1, 8),
-         |  named_struct('off', moov.off + 8, 'n', 0),
-         |  (acc, i) -> IF(acc.off >= moov.off + moov.sz, acc,
-         |    named_struct('off', acc.off + ${be32("acc.off")},
-         |      'n', acc.n + IF(CAST(substring(media, acc.off + 5, 4) AS STRING) = 'trak',
-         |                      1, 0))),
-         |  acc -> acc.n)""".stripMargin
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, encodeMp4(text)) })
-      .toDF("asset_id", "media")
-      .withColumn("bs", expr(topWalk))
-      .withColumn("moov", expr("filter(bs, b -> b.t = 'moov')[0]"))
+    val moov = col("moov")
+    val trakWalk = aggregate(sequence(lit(1), lit(8)),
+      struct((moov("off") + 8).as("off"), lit(0).as("n")),
+      (acc, _) => when(acc("off") >= moov("off") + moov("sz"), acc).otherwise(struct(
+        (acc("off") + boxSize(acc("off"))).as("off"),
+        (acc("n") + when(boxType(acc("off")) === "trak", 1).otherwise(0)).as("n"))),
+      acc => acc("n"))
+    perDocument(s, d)((id, text) => (id, encodeMp4(text))).toDF("asset_id", "media")
+      .withColumn("bs", topWalk)
+      .withColumn("moov", filter(col("bs"), b => b("t") === "moov").getItem(0))
       .select(col("asset_id"),
-        expr("array_join(transform(bs, b -> b.t), ',')").as("box_types"),
-        expr("filter(bs, b -> b.t = 'mdat')[0].sz - 8").as("mdat_bytes"),
+        array_join(transform(col("bs"), b => b("t")), ",").as("box_types"),
+        (filter(col("bs"), b => b("t") === "mdat").getItem(0)("sz") - 8).cast("int")
+          .as("mdat_bytes"),
         // mvhd is moov's first child: header at moov.off+8, payload +16
-        expr(be32("moov.off + 28")).as("timescale"),
-        expr(be32("moov.off + 32")).as("duration_ms"),
-        expr(trakWalk).as("n_traks"))
+        boxSize(moov("off") + 28).cast("int").as("timescale"),
+        boxSize(moov("off") + 32).cast("int").as("duration_ms"),
+        trakWalk.as("n_traks"))
       .orderBy("asset_id")
   }
 
@@ -1151,41 +1108,35 @@ object Multimodal {
     * re-verifies the 11-bit sync plus version/layer bits at every
     * boundary — a one-byte framing error desynchronizes every later
     * frame and flips `all_sync`/`size_ok`. Declarative aggregate-fold
-    * walk (codegen'd conv/substring integer arithmetic, no UDF) over
+    * walk ([[uint]] integer arithmetic, no UDF) over
     * the [[encodeMp3]] stream; certificates: frame count, exact
     * 24 ms/frame duration (1152 samples at 48 kHz), summed per-frame
     * kbps (the VBR profile), padding census, every-boundary sync, and
     * final-offset-equals-EOF. */
   def mp3Frames(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    def be1(o: String) = s"CAST(conv(hex(substring(media, ($o) + 1, 1)), 16, 10) AS INT)"
-    val b2 = be1("acc.off + 2")
-    val idx = s"(($b2) div 16)"
-    val pad = s"((($b2) div 2) % 2)"
-    val kbps = s"(CASE $idx WHEN 5 THEN 64 WHEN 7 THEN 96 WHEN 9 THEN 128 WHEN 10 THEN 160 ELSE 0 END)"
-    val sync = s"(${be1("acc.off")} = 255 AND ${be1("acc.off + 1")} = 251 AND " +
-      s"((($b2) div 4) % 4) = 1 AND $kbps > 0)"
-    val walk =
-      s"""aggregate(sequence(1, 8),
-         |  named_struct('off', CAST(0 AS BIGINT), 'n', CAST(0 AS BIGINT),
-         |    'sk', CAST(0 AS BIGINT), 'np', CAST(0 AS BIGINT), 'ok', true),
-         |  (acc, i) -> IF(acc.off >= length(media), acc,
-         |    IF($sync,
-         |      named_struct('off', CAST(acc.off + 3 * $kbps + $pad AS BIGINT),
-         |        'n', CAST(acc.n + 1 AS BIGINT),
-         |        'sk', CAST(acc.sk + $kbps AS BIGINT),
-         |        'np', CAST(acc.np + $pad AS BIGINT), 'ok', acc.ok),
-         |      named_struct('off', CAST(length(media) AS BIGINT), 'n', acc.n,
-         |        'sk', acc.sk, 'np', acc.np, 'ok', false))),
-         |  acc -> named_struct('n', acc.n, 'dur', 24 * acc.n, 'sk', acc.sk,
-         |    'np', acc.np, 'ok', acc.ok, 'szok', acc.off = length(media)))""".stripMargin
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeMp3(t)) }))
-      .toDF("asset_id", "media")
-      .withColumn("w", expr(walk))
+    val len = length(col("media")).cast("long")
+    val walk = aggregate(sequence(lit(1), lit(8)),
+      struct(lit(0L).as("off"), lit(0L).as("n"), lit(0L).as("sk"), lit(0L).as("np"),
+        lit(true).as("ok")),
+      { (acc, _) =>
+        // the 4-byte frame header at 0-based acc.off
+        val b2 = uint(acc("off") + 3, 1, BE)
+        val idx = shiftright(b2, 4)
+        val pad = shiftright(b2, 1) % 2
+        val kbps = when(idx === 5, 64).when(idx === 7, 96).when(idx === 9, 128)
+          .when(idx === 10, 160).otherwise(0)
+        val sync = uint(acc("off") + 1, 1, BE) === 255 && uint(acc("off") + 2, 1, BE) === 251 &&
+          shiftright(b2, 2) % 4 === 1 && kbps > 0
+        when(acc("off") >= len, acc)
+          .when(sync, struct((acc("off") + kbps * 3 + pad).as("off"), (acc("n") + 1).as("n"),
+            (acc("sk") + kbps).as("sk"), (acc("np") + pad).as("np"), acc("ok").as("ok")))
+          .otherwise(struct(len.as("off"), acc("n").as("n"), acc("sk").as("sk"),
+            acc("np").as("np"), lit(false).as("ok")))
+      },
+      acc => struct(acc("n").as("n"), (acc("n") * 24).as("dur"), acc("sk").as("sk"),
+        acc("np").as("np"), acc("ok").as("ok"), (acc("off") === len).as("szok")))
+    perDocument(s, d)((id, text) => (id, encodeMp3(text))).toDF("asset_id", "media")
+      .withColumn("w", walk)
       .select(col("asset_id"),
         col("w.n").cast("long").as("n_frames"),
         col("w.dur").cast("long").as("duration_ms"),
@@ -1249,7 +1200,7 @@ object Multimodal {
 
   /** Real-decode audio stats: encode each document as genuine 16-bit PCM
     * WAV, decode it back with `javax.sound.sampled.AudioSystem` on the
-    * executor (same batched-mapPartitions shape as [[featureExtract]] —
+    * executor (the [[perDocument]] pass, as in [[featureExtract]] —
     * the codec is the only imperative step), and report exact sample
     * statistics: count, duration, peak amplitude and total energy
     * (Σ sample², exact in a long — an 8 kHz corpus of hour-long clips
@@ -1259,8 +1210,8 @@ object Multimodal {
   /** AUDIO DECIMATION (resample by 2) — the preprocessing step every
     * speech pipeline runs before feature extraction (48 kHz capture →
     * 16 kHz model rate; here ÷2 with a pair-average anti-alias stub):
-    * real JDK WAV decode on executors ([[decodePcm]], the
-    * [[wavEnergy]] batched-mapPartitions discipline), then the
+    * real JDK WAV decode on executors ([[decodePcm]] in the
+    * [[perDocument]] pass, as in [[wavEnergy]]), then the
     * DECIMATION itself is declarative — a `transform(sequence(...))`
     * pair fold over the sample array, floor-averaged pairs with an odd
     * tail passthrough, plus exact integer energy sums on both sides of
@@ -1269,23 +1220,13 @@ object Multimodal {
     * one IEEE division) is the level-preservation check an audio QA
     * gate alerts on. */
   def audioResample(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val batchSize = 64
     val resampled =
       """transform(sequence(0, CAST(((size(px) + 1) div 2) - 1 AS INT)), j ->
         |  CASE WHEN 2 * j + 2 <= size(px)
         |    THEN CAST(floor((CAST(element_at(px, 2 * j + 1) AS BIGINT)
         |      + element_at(px, 2 * j + 2)) / 2) AS BIGINT)
         |    ELSE CAST(element_at(px, 2 * j + 1) AS BIGINT) END)""".stripMargin
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, text) =>
-          (id, decodePcm(encodeWav(text)))
-        })
-      }
+    perDocument(s, d)((id, text) => (id, decodePcm(encodeWav(text))))
       .toDF("asset_id", "px")
       .withColumn("out", expr(resampled))
       .select(col("asset_id"),
@@ -1337,31 +1278,21 @@ object Multimodal {
   }
 
   def wavEnergy(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val batchSize = 64
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { case (id, text) =>
-            val px = decodePcm(encodeWav(text))
-            var sumSq = 0L; var peak = 0L
-            var lead = 0; var trail = 0
-            var i = 0
-            while (i < px.length) {
-              val v = px(i).toLong
-              sumSq += v * v
-              val a = math.abs(v)
-              if (a > peak) peak = a
-              i += 1
-            }
-            while (lead < px.length && math.abs(px(lead)) <= 512) lead += 1
-            while (trail < px.length - lead && math.abs(px(px.length - 1 - trail)) <= 512) trail += 1
-            (id, px.length.toLong, sumSq, peak, (lead + trail).toLong)
-          }
+    perDocument(s, d) { (id, text) =>
+        val px = decodePcm(encodeWav(text))
+        var sumSq = 0L; var peak = 0L
+        var lead = 0; var trail = 0
+        var i = 0
+        while (i < px.length) {
+          val v = px(i).toLong
+          sumSq += v * v
+          val a = math.abs(v)
+          if (a > peak) peak = a
+          i += 1
         }
+        while (lead < px.length && math.abs(px(lead)) <= 512) lead += 1
+        while (trail < px.length - lead && math.abs(px(px.length - 1 - trail)) <= 512) trail += 1
+        (id, px.length.toLong, sumSq, peak, (lead + trail).toLong)
       }
       .toDF("asset_id", "n_samples", "energy", "peak", "n_silent_edge")
       .orderBy("asset_id")
@@ -1430,10 +1361,9 @@ object Multimodal {
     * shape as `d_exact`, applied at sub-asset granularity. Emits per
     * asset: chunk count, bytes, bytes in shared chunks, dedup ratio. */
   def cdcChunks(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.parallelize(Tables.documents(s, d))
+    val chunks = docs(s, d)
       .select(col("doc_id").as("asset_id"), col("text"),
         graft.functions.CdcFns.cdc_boundaries(col("text")).as("bounds"))
-    val chunks = docs
       .select(col("asset_id"), col("text"),
         explode(zip_with(
           concat(array(lit(0)), col("bounds")),
@@ -1733,45 +1663,27 @@ object Multimodal {
       |    + bit_count(xor(a.c2, b.c2)) + bit_count(xor(a.c3, b.c3)) <= 3
       |ORDER BY asset_a, asset_b""".stripMargin
 
-  /** documents → (asset_id, media: real WAV bytes) via the JDK encoder —
-    * the batched-mapPartitions codec step, after which everything is
-    * declarative column work on the binary. */
-  private def wavAssets(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeWav(t)) }))
-      .toDF("asset_id", "media")
-  }
-
   /** RIFF/WAVE container header parse — the audio twin of [[pngMeta]]:
     * magic validation plus the fmt-chunk fields (PCM tag, channels,
     * sample rate, bit depth) and the data-chunk byte count, all
-    * extracted DECLARATIVELY from the binary column (substring + hex +
-    * conv, codegen'd — no codec on this path). RIFF integers are
-    * little-endian, so each field is reassembled from per-byte extracts
-    * (hex/conv reads big-endian); n_samples = data_bytes / block_align.
-    * The codec appears only in the [[wavAssets]] encode step; a corpus
+    * extracted DECLARATIVELY from the binary column ([[uint]] with
+    * little-endian RIFF integers, codegen'd — no codec on this path);
+    * n_samples = data_bytes / block_align.
+    * The codec appears only in the [[encodeWav]] step; a corpus
     * whose WAVs already sit in the binary column runs this as ONE
     * scan-only metadata pass — the cheap audit before any decode-heavy
     * job (compare [[wavEnergy]], which decodes every sample). */
   def wavMeta(s: SparkSession, d: String): DataFrame = {
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def le32(off: Int) = u8(off) + u8(off + 1) * 256L + u8(off + 2) * 65536L +
-      u8(off + 3) * 16777216L
-    def le16(off: Int) = u8(off) + u8(off + 1) * 256L
-    wavAssets(s, d)
+    perDocument(s, d)((id, text) => (id, encodeWav(text))).toDF("asset_id", "media")
       .select(col("asset_id"),
         (hex(substring(col("media"), 1, 4)) === "52494646" &&
           hex(substring(col("media"), 9, 4)) === "57415645" &&
           hex(substring(col("media"), 37, 4)) === "64617461").as("valid_riff"),
-        le32(5).as("riff_size"),
-        le16(21).as("audio_format"), le16(23).as("channels"),
-        le32(25).as("sample_rate"), le16(35).as("bits_per_sample"),
-        le32(41).as("data_bytes"),
-        (le32(41) / le16(33)).cast("long").as("n_samples"))
+        uint(lit(5), 4, LE).as("riff_size"),
+        uint(lit(21), 2, LE).as("audio_format"), uint(lit(23), 2, LE).as("channels"),
+        uint(lit(25), 4, LE).as("sample_rate"), uint(lit(35), 2, LE).as("bits_per_sample"),
+        uint(lit(41), 4, LE).as("data_bytes"),
+        (uint(lit(41), 4, LE) / uint(lit(33), 2, LE)).cast("long").as("n_samples"))
       .orderBy("asset_id")
   }
 
@@ -1816,7 +1728,7 @@ object Multimodal {
     * actually load ([[npyTensor]]'s multi-tensor successor): embeddings
     * are packed 4 shards × 2 I64 tensors by [[encodeSafetensors]], and
     * the PARSE side recovers everything from the bytes alone,
-    * declaratively: the LE64 header length by per-byte conv arithmetic,
+    * declaratively: the LE64 header length through [[uint]],
     * the tensor table via `get_json_object` on the header slice (shape,
     * dtype, data_offsets per tensor), and the tensor CONTENTS by
     * exploding byte positions and reassembling each little-endian I64 —
@@ -1840,12 +1752,8 @@ object Multimodal {
         (shard, encodeSafetensors(rows.map(_._2), rows.map(_._3)))
       }
       .toDF("shard", "media")
-    def u8(b: Column, off: Column) =
-      conv(hex(substring(b, off.cast("int"), lit(1))), 16, 10).cast("long")
-    def le64(b: Column, off: Column): Column =
-      (0 to 7).map(i => u8(b, off + i) * (1L << (8 * i)): Column).reduce(_ + _)
     val meta = shards
-      .withColumn("hlen", le64(col("media"), lit(1)))
+      .withColumn("hlen", uint(lit(1), 8, LE))
       .withColumn("json", expr("substring(media, 9, cast(hlen as int))").cast("string"))
       .withColumn("n", get_json_object(col("json"), "$.labels.shape[0]").cast("long"))
       .withColumn("lab_dtype", get_json_object(col("json"), "$.labels.dtype"))
@@ -1858,8 +1766,8 @@ object Multimodal {
       .select(col("shard"), col("media"), col("hlen"), col("n"), col("vid_beg"))
       .withColumn("i", explode(expr("sequence(0, cast(n - 1 as int))")))
       .select(col("shard"),
-        le64(col("media"), lit(9) + col("hlen") + col("i") * 8L).as("label_v"),
-        le64(col("media"), lit(9) + col("hlen") + col("vid_beg") + col("i") * 8L).as("vid_v"))
+        uint(lit(9) + col("hlen") + col("i") * 8L, 8, LE).as("label_v"),
+        uint(lit(9) + col("hlen") + col("vid_beg") + col("i") * 8L, 8, LE).as("vid_v"))
       .groupBy("shard")
       .agg(sum("label_v").as("labels_sum"), sum("vid_v").as("vecids_sum"))
     meta.join(vals, "shard")
@@ -1928,29 +1836,20 @@ object Multimodal {
     * magic + block-header decode (last flag, type, 24-bit BE length)
     * and the bit-packed 20/3/5/36 STREAMINFO fields recovered with
     * shift/mask arithmetic on the big-endian 64-bit word, all
-    * DECLARATIVE substring + conv column ops (codegen'd, no codec).
+    * DECLARATIVE [[uint]] column ops (codegen'd, no codec).
     * The stream-MD5 is surfaced as hex — the integrity handle an audio
     * corpus dedups and verifies on without ever decoding frames. One
     * scan, no shuffle: the 100 TB audio-catalog audit shape. */
   def flacMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeFlac(t)) }))
-      .toDF("asset_id", "media")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def be16(off: Int) = u8(off) * 256L + u8(off + 1)
-    def be24(off: Int) = u8(off) * 65536L + u8(off + 1) * 256L + u8(off + 2)
-    val packed = conv(hex(substring(col("media"), 19, 8)), 16, 10).cast("long")
-    assets.select(col("asset_id"),
+    val packed = uint(lit(19), 8, BE)
+    perDocument(s, d)((id, text) => (id, encodeFlac(text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (hex(substring(col("media"), 1, 4)) === "664C6143").as("valid_magic"),
-        (u8(5) >= 128L).as("is_last"),
-        (u8(5) % 128L).as("block_type"),
-        be24(6).as("block_len"),
-        be16(9).as("min_blocksize"), be16(11).as("max_blocksize"),
-        be24(13).as("min_framesize"), be24(16).as("max_framesize"),
+        (uint(lit(5), 1, BE) >= 128L).as("is_last"),
+        (uint(lit(5), 1, BE) % 128L).as("block_type"),
+        uint(lit(6), 3, BE).as("block_len"),
+        uint(lit(9), 2, BE).as("min_blocksize"), uint(lit(11), 2, BE).as("max_blocksize"),
+        uint(lit(13), 3, BE).as("min_framesize"), uint(lit(16), 3, BE).as("max_framesize"),
         shiftright(packed, 44).as("sample_rate"),
         (shiftright(packed, 41).bitwiseAND(lit(7L)) + 1L).as("channels"),
         (shiftright(packed, 36).bitwiseAND(lit(31L)) + 1L).as("bits_per_sample"),
@@ -1990,30 +1889,21 @@ object Multimodal {
     * little-endian side: magic, file size, pixel-array offset (54-byte
     * headers + 1024-byte palette), BITMAPINFOHEADER geometry
     * (width/height/planes/bpp/compression/image size), all declarative
-    * substring + conv ops. `size_ok` cross-checks the header's file
+    * [[uint]] reads. `size_ok` cross-checks the header's file
     * size against actual container length (pinned TRUE) — BMP's
     * header-vs-truth mismatch is the classic malformed-upload signal a
     * crawler triage pass screens on. */
   def bmpMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeBmp(t)) }))
-      .toDF("asset_id", "media")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def le16(off: Int) = u8(off) + u8(off + 1) * 256L
-    def le32(off: Int) = le16(off) + le16(off + 2) * 65536L
-    assets.select(col("asset_id"),
+    perDocument(s, d)((id, text) => (id, encodeBmp(text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (hex(substring(col("media"), 1, 2)) === "424D").as("valid_magic"),
-        le32(3).as("file_size"),
-        le32(11).as("pixel_offset"),
-        le32(15).as("header_size"),
-        le32(19).as("width"), le32(23).as("height"),
-        le16(27).as("planes"), le16(29).as("bpp"),
-        le32(31).as("compression"), le32(35).as("image_size"),
-        (le32(3) === expr("length(media)")).as("size_ok"))
+        uint(lit(3), 4, LE).as("file_size"),
+        uint(lit(11), 4, LE).as("pixel_offset"),
+        uint(lit(15), 4, LE).as("header_size"),
+        uint(lit(19), 4, LE).as("width"), uint(lit(23), 4, LE).as("height"),
+        uint(lit(27), 2, LE).as("planes"), uint(lit(29), 2, LE).as("bpp"),
+        uint(lit(31), 4, LE).as("compression"), uint(lit(35), 4, LE).as("image_size"),
+        (uint(lit(3), 4, LE) === expr("length(media)")).as("size_ok"))
       .orderBy("asset_id")
   }
 
@@ -2139,37 +2029,28 @@ object Multimodal {
   /** ID3v2.4 TAG parse — magic/version/flags, the syncsafe 28-bit tag
     * size, the TIT2 frame walked to its title string, and the audio
     * region sized from `total − 10 − tag_size` — all declarative
-    * substring + arithmetic (the syncsafe decode is four u8 reads and
-    * three shifts, codegen'd). `size_ok` pins the syncsafe arithmetic
+    * [[uint]] reads + arithmetic (the syncsafe decode is four one-byte
+    * reads and three shifts, codegen'd). `size_ok` pins the syncsafe arithmetic
     * against the actual byte length: a parser that reads the size as a
     * plain big-endian int (the classic ID3 bug — off by the MSB
     * stuffing) lands 10.5 MB away on a real tag and flips the gate
     * here. One scan, no codec, the audio-crawler triage shape. */
   def id3Meta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeId3(id, t)) }))
-      .toDF("asset_id", "media")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def ss4(off: Int) = u8(off) * 2097152L + u8(off + 1) * 16384L +
-      u8(off + 2) * 128L + u8(off + 3)
+    // syncsafe: four bytes of 7 value bits each, MSB first
+    def ss4(off: Int) = uint(lit(off), 1, BE) * 2097152L + uint(lit(off + 1), 1, BE) * 16384L +
+      uint(lit(off + 2), 1, BE) * 128L + uint(lit(off + 3), 1, BE)
     val tagSize = ss4(7)
     val tit2Size = ss4(15)
     // title payload sits after the 10-byte TIT2 header + 1 encoding
     // byte (offset 22, 1-based); its length is the frame body minus
     // the encoding byte — read through the SAME syncsafe decode the
     // gate is certifying
-    val title = expr("string(substring(media, 22, " +
-      "cast(conv(hex(substring(media, 15, 1)), 16, 10) as int) * 2097152 + " +
-      "cast(conv(hex(substring(media, 16, 1)), 16, 10) as int) * 16384 + " +
-      "cast(conv(hex(substring(media, 17, 1)), 16, 10) as int) * 128 + " +
-      "cast(conv(hex(substring(media, 18, 1)), 16, 10) as int) - 1))")
-    assets.select(col("asset_id"),
+    val title = col("media").substr(lit(22), (tit2Size - 1).cast("int")).cast("string")
+    perDocument(s, d)((id, text) => (id, encodeId3(id, text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (expr("string(substring(media, 1, 3))") === "ID3").as("valid_magic"),
-        u8(4).as("version_major"), u8(5).as("version_rev"), u8(6).as("flags"),
+        uint(lit(4), 1, BE).as("version_major"), uint(lit(5), 1, BE).as("version_rev"),
+        uint(lit(6), 1, BE).as("flags"),
         tagSize.as("tag_size"),
         (expr("string(substring(media, 11, 4))") === "TIT2").as("has_title_frame"),
         title.as("title"),
@@ -2203,39 +2084,31 @@ object Multimodal {
     * bit field (Frame_Content_Size flag, Single_Segment, checksum,
     * dictionary id), and the variable-width Frame_Content_Size field
     * (1 byte as-is / 2 bytes LE + 256 / 4 bytes LE — RFC 8878 §3.1.1),
-    * decoded declaratively with shift/mask substring+conv ops. The
+    * decoded declaratively with shift/mask ops over [[uint]]. The
     * parsed content size must equal the document's BYTE length — the
     * header-vs-truth check an object store runs to size decompression
     * buffers WITHOUT trusting the payload; `roundtrip_ok` (real
     * decompress equals source bytes) is pinned TRUE beside it. One
-    * scan; the codec runs batched in mapPartitions, the parse is
+    * scan; the codec runs in the [[perDocument]] pass, the parse is
     * codegen'd column ops. */
   def zstdFrame(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) =>
+    val assets = perDocument(s, d) { (id, t) =>
         val src = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val c = com.github.luben.zstd.Zstd.compress(src, 3)
         val back = com.github.luben.zstd.Zstd.decompress(c, src.length)
         (id, c, java.util.Arrays.equals(back, src))
-      }))
+      }
       .toDF("asset_id", "media", "roundtrip_ok")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def le16(off: Int) = u8(off) + u8(off + 1) * 256L
-    def le32(off: Int) = le16(off) + le16(off + 2) * 65536L
-    val fhd = u8(5)
+    val fhd = uint(lit(5), 1, LE)
     val fcsFlag = shiftright(fhd, 6)
     assets.select(col("asset_id"),
         (hex(substring(col("media"), 1, 4)) === "28B52FFD").as("valid_magic"),
         (shiftright(fhd, 5).bitwiseAND(lit(1L)) === 1L).as("single_segment"),
         (shiftright(fhd, 2).bitwiseAND(lit(1L)) === 1L).as("has_checksum"),
         fhd.bitwiseAND(lit(3L)).as("dict_id_flag"),
-        when(fcsFlag === 0L, u8(6))
-          .when(fcsFlag === 1L, le16(6) + 256L)
-          .when(fcsFlag === 2L, le32(6))
+        when(fcsFlag === 0L, uint(lit(6), 1, LE))
+          .when(fcsFlag === 1L, uint(lit(6), 2, LE) + 256L)
+          .when(fcsFlag === 2L, uint(lit(6), 4, LE))
           .as("content_size"),
         col("roundtrip_ok"))
       .orderBy("asset_id")
@@ -2318,22 +2191,13 @@ object Multimodal {
     * cross-varint identity a mis-stride breaks), `sync_ok` (trailing
     * sync equals header sync, byte-compared at a VARINT-COMPUTED
     * offset), `size_ok` (total file length replays from the parsed
-    * sizes). One scan, codegen'd column ops; the encode runs batched in
-    * mapPartitions. */
+    * sizes). One scan, codegen'd column ops; the encode runs in the
+    * [[perDocument]] pass. */
   def avroOcf(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) =>
-        (id, encodeAvroOcf(id, t))
-      }))
+    val assets = perDocument(s, d)((id, text) => (id, encodeAvroOcf(id, text)))
       .toDF("asset_id", "media")
-    def u8(off: Column): Column =
-      conv(hex(col("media").substr(off, lit(1))), 16, 10).cast("long")
     def varint(off: Column): (Column, Column) = {
-      val b0 = u8(off); val b1 = u8(off + 1); val b2 = u8(off + 2)
+      val b0 = uint(off, 1, LE); val b1 = uint(off + 1, 1, LE); val b2 = uint(off + 2, 1, LE)
       val v = when(b0 < 128, b0)
         .when(b1 < 128, (b0 - 128) + b1 * 128)
         .otherwise((b0 - 128) + (b1 - 128) * 128 + b2 * 16384)
@@ -2347,7 +2211,7 @@ object Multimodal {
     val (plZ, w3) = varint(hdr + w1 + w2 + 1)
     val payloadLen = shiftright(plZ, 1)
     // codec value: its length varint sits right after the 10-byte key
-    val codecLen = shiftright(u8(lit(17L)), 1)
+    val codecLen = shiftright(uint(lit(17L), 1, LE), 1)
     assets.select(col("asset_id"),
         (hex(col("media").substr(lit(1L), lit(4L))) === "4F626A01").as("valid_magic"),
         col("media").substr(lit(18L), codecLen).cast("string").as("codec"),
@@ -2424,17 +2288,10 @@ object Multimodal {
     * sizes alone — a mis-stride anywhere flips one of the pinned
     * booleans. One scan, codegen'd column ops. */
   def ebmlMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeEbml(t)) }))
+    val assets = perDocument(s, d)((id, text) => (id, encodeEbml(text)))
       .toDF("asset_id", "media")
-    def u8(off: Column): Column =
-      conv(hex(col("media").substr(off, lit(1))), 16, 10).cast("long")
     def vint(off: Column): (Column, Column) = {
-      val b0 = u8(off); val b1 = u8(off + 1); val b2 = u8(off + 2)
+      val b0 = uint(off, 1, BE); val b1 = uint(off + 1, 1, BE); val b2 = uint(off + 2, 1, BE)
       val v = when(b0 >= 128, b0 - 128)
         .when(b0 >= 64, (b0 - 64) * 256 + b1)
         .otherwise((b0 - 32) * 65536 + b1 * 256 + b2)
@@ -2506,15 +2363,10 @@ object Multimodal {
     * and `code_sum` (the summed encoded bytes — a content checksum of
     * the companded stream both engines must reproduce bit-for-bit from
     * the SPEC ARITHMETIC, not a shared implementation). JVM loop runs
-    * batched in mapPartitions (the codec shape); the oracle replays the
-    * identical integer CASE ladder per codepoint. */
+    * in the [[perDocument]] pass (the codec shape); the oracle replays
+    * the identical integer CASE ladder per codepoint. */
   def pcmUlaw(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, text) =>
+    perDocument(s, d) { (id, text) =>
         var n = 0L; var errSum = 0L; var errMax = 0L
         var codeSum = 0L; var boundOk = true
         val it = text.codePoints().iterator()
@@ -2535,7 +2387,7 @@ object Multimodal {
           if (math.abs(v) <= 32635 && err > (1L << (exp + 2))) boundOk = false
         }
         (id, n, errSum, errMax, boundOk, codeSum)
-      }))
+      }
       .toDF("asset_id", "n_samples", "err_sum", "err_max", "bound_ok", "code_sum")
       .orderBy("asset_id")
   }
@@ -2632,25 +2484,14 @@ object Multimodal {
     * `size_ok` replays total page length from the parsed segment count
     * and lacing alone. One scan, codegen'd column ops. */
   def oggPages(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeOgg(id, t)) }))
-      .toDF("asset_id", "media")
-    def u8(off: Column): Column =
-      conv(hex(col("media").substr(off, lit(1))), 16, 10).cast("long")
-    def leN(off: Int, n: Int): Column =
-      (0 until n).map(i => u8(lit((off + i).toLong)) * (1L << (8 * i)) : Column)
-        .reduce(_ + _)
-    val nSeg = u8(lit(27L))
-    val lastLacing = u8(lit(27L) + nSeg)
+    val nSeg = uint(lit(27L), 1, LE)
+    val lastLacing = uint(lit(27L) + nSeg, 1, LE)
     val payloadLen = (nSeg - 1L) * 255L + lastLacing
-    assets.select(col("asset_id"),
+    perDocument(s, d)((id, text) => (id, encodeOgg(id, text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (col("media").substr(lit(1L), lit(4L)).cast("string") === "OggS").as("valid_magic"),
-        u8(lit(5L)).as("version"), u8(lit(6L)).as("header_type"),
-        leN(7, 8).as("granule"), leN(15, 4).as("serial"),
+        uint(lit(5L), 1, LE).as("version"), uint(lit(6L), 1, LE).as("header_type"),
+        uint(lit(7), 8, LE).as("granule"), uint(lit(15), 4, LE).as("serial"),
         nSeg.as("n_segments"), payloadLen.as("payload_len"),
         // all-0xFF check: the hex rendering of the non-final lacing
         // region may contain no nibble other than F (FF is the only
@@ -2700,17 +2541,11 @@ object Multimodal {
     * that a writer which forgot the pad byte fails on every odd
     * payload. One scan, codegen'd column ops. */
   def arMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeAr(t)) }))
-      .toDF("asset_id", "media")
     def str(off: Int, len: Int): Column =
       col("media").substr(lit(off.toLong), lit(len.toLong)).cast("string")
     val size = trim(str(57, 10)).cast("long")
-    assets.select(col("asset_id"),
+    perDocument(s, d)((id, text) => (id, encodeAr(text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (str(1, 8) === "!<arch>\n").as("valid_magic"),
         trim(str(9, 16)).as("member_name"),
         trim(str(49, 8)).as("mode"),
@@ -2778,13 +2613,6 @@ object Multimodal {
     * pass runs before handing files to a real renderer fleet. One
     * scan, no shuffle, no codec. */
   def pdfMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodePdf(t)) }))
-      .toDF("asset_id", "media")
     // the ASCII trailer region (xref table + trailer + startxref tops
     // out at 174 bytes): the last 200 bytes always cover it; a tail
     // window that starts mid-payload only feeds extra bytes ahead of
@@ -2792,7 +2620,8 @@ object Multimodal {
     val tail = expr("string(substring(media, greatest(length(media) - 199, 1), 200))")
     val full = expr("string(media)")
     val sxr = regexp_extract(tail, "startxref\\n(\\d+)\\n%%EOF$", 1).cast("long")
-    assets.select(col("asset_id"),
+    perDocument(s, d)((id, text) => (id, encodePdf(text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (expr("string(substring(media, 1, 5))") === "%PDF-").as("valid_header"),
         expr("string(substring(media, 6, 3))").as("version"),
         regexp_extract(tail, "xref\\n0 (\\d+)\\n", 1).cast("int").as("n_objects"),
@@ -2849,33 +2678,24 @@ object Multimodal {
   /** WebP/VP8L header parse — RIFF + chunk framing plus the bit-packed
     * dimensions word recovered with shift/mask arithmetic (the
     * [[flacMeta]] discipline, little-endian this time), all
-    * declarative substring + conv ops. `size_ok` re-verifies the RIFF
+    * declarative [[uint]] reads. `size_ok` re-verifies the RIFF
     * size field against actual container length INCLUDING the spec's
     * even-size pad byte — the off-by-one every hand-rolled RIFF walker
     * gets wrong, pinned TRUE by the oracle. */
   def webpMeta(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val assets = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.grouped(64).flatMap(_.map { case (id, t) => (id, encodeWebp(t)) }))
-      .toDF("asset_id", "media")
-    def u8(off: Int) = conv(hex(substring(col("media"), off, 1)), 16, 10).cast("long")
-    def le32(off: Int) = u8(off) + u8(off + 1) * 256L + u8(off + 2) * 65536L +
-      u8(off + 3) * 16777216L
-    val bits = le32(22)
-    assets.select(col("asset_id"),
+    val bits = uint(lit(22), 4, LE)
+    perDocument(s, d)((id, text) => (id, encodeWebp(text))).toDF("asset_id", "media")
+      .select(col("asset_id"),
         (hex(substring(col("media"), 1, 4)) === "52494646" &&
           hex(substring(col("media"), 9, 4)) === "57454250" &&
           hex(substring(col("media"), 13, 4)) === "5650384C").as("valid_riff"),
-        (u8(21) === 0x2fL).as("valid_sig"),
-        le32(17).as("chunk_len"),
+        (uint(lit(21), 1, LE) === 0x2fL).as("valid_sig"),
+        uint(lit(17), 4, LE).as("chunk_len"),
         (bits.bitwiseAND(lit(0x3fffL)) + 1L).as("width"),
         (shiftright(bits, 14).bitwiseAND(lit(0x3fffL)) + 1L).as("height"),
         (shiftright(bits, 28).bitwiseAND(lit(1L)) === 1L).as("has_alpha"),
         shiftright(bits, 29).bitwiseAND(lit(7L)).as("version"),
-        (le32(5) === expr("length(media)") - 8L).as("size_ok"))
+        (uint(lit(5), 4, LE) === expr("length(media)") - 8L).as("size_ok"))
       .orderBy("asset_id")
   }
 
@@ -3181,44 +3001,38 @@ object Multimodal {
     * training-example container, and at 100 TB the payload decode must
     * live next to the scan, not in a driver library. */
   def varintParse(s: SparkSession, d: String): DataFrame = {
-    val session = s
-    import session.implicits._
-    val B = "CAST(conv(hex(substring(media, i, 1)), 16, 10) AS INT)"
-    val v = s"a.acc + CAST($B % 128 AS BIGINT) * shiftleft(CAST(1 AS BIGINT), a.shift)"
-    def st(mode: String, fld: String, wt: String, acc: String, shift: String,
-        skip: String, f1: String, f2: String, f3pos: String, f3len: String) =
-      s"""named_struct('mode', $mode, 'fld', $fld, 'wt', $wt, 'acc', $acc,
-         |  'shift', $shift, 'skip', $skip, 'f1', $f1, 'f2', $f2,
-         |  'f3pos', $f3pos, 'f3len', $f3len)""".stripMargin
-    val zero = st("0", "0", "0", "CAST(0 AS BIGINT)", "0", "CAST(0 AS BIGINT)",
-      "CAST(-1 AS BIGINT)", "CAST(-1 AS BIGINT)", "CAST(-1 AS BIGINT)", "CAST(-1 AS BIGINT)")
-    val step =
-      s"""CASE
-         |  WHEN a.mode = 0 THEN ${st(s"1", s"CAST($B div 8 AS INT)", s"$B % 8",
-             "CAST(0 AS BIGINT)", "0", "a.skip", "a.f1", "a.f2", "a.f3pos", "a.f3len")}
-         |  WHEN a.mode = 1 AND $B >= 128 THEN ${st("1", "a.fld", "a.wt", v, "a.shift + 7",
-             "a.skip", "a.f1", "a.f2", "a.f3pos", "a.f3len")}
-         |  WHEN a.mode = 1 AND a.wt = 0 THEN ${st("0", "0", "0", "CAST(0 AS BIGINT)", "0",
-             "a.skip", s"IF(a.fld = 1, $v, a.f1)", s"IF(a.fld = 2, $v, a.f2)",
-             "a.f3pos", "a.f3len")}
-         |  WHEN a.mode = 1 THEN ${st(s"IF(($v) = 0, 0, 3)", "0", "0", "CAST(0 AS BIGINT)",
-             "0", v, "a.f1", "a.f2", "CAST(i + 1 AS BIGINT)", v)}
-         |  ELSE ${st("IF(a.skip = 1, 0, 3)", "0", "0", "CAST(0 AS BIGINT)", "0",
-             "a.skip - 1", "a.f1", "a.f2", "a.f3pos", "a.f3len")}
-         |END""".stripMargin
-    val fold = s"aggregate(sequence(1, length(media)), $zero, (a, i) -> $step)"
-    Tables.parallelize(Tables.documents(s, d))
+    import s.implicits._
+    val fields = Seq("mode", "fld", "wt", "acc", "shift", "skip", "f1", "f2", "f3pos", "f3len")
+    def st(vals: Column*): Column = struct(vals.zip(fields).map { case (v, f) => v.as(f) }: _*)
+    val none = lit(-1L)
+    val zero = st(lit(0), lit(0), lit(0), lit(0L), lit(0), lit(0L), none, none, none, none)
+    val step = { (a: Column, i: Column) =>
+      val b = uint(i, 1, LE)
+      val v = a("acc") + (b % 128) * call_function("shiftleft", lit(1L), a("shift"))
+      when(a("mode") === 0, st(lit(1), shiftright(b, 3).cast("int"), (b % 8).cast("int"),
+          lit(0L), lit(0), a("skip"), a("f1"), a("f2"), a("f3pos"), a("f3len")))
+        .when(a("mode") === 1 && b >= 128, st(lit(1), a("fld"), a("wt"), v, a("shift") + 7,
+          a("skip"), a("f1"), a("f2"), a("f3pos"), a("f3len")))
+        .when(a("mode") === 1 && a("wt") === 0, st(lit(0), lit(0), lit(0), lit(0L), lit(0),
+          a("skip"), when(a("fld") === 1, v).otherwise(a("f1")),
+          when(a("fld") === 2, v).otherwise(a("f2")), a("f3pos"), a("f3len")))
+        .when(a("mode") === 1, st(when(v === 0, 0).otherwise(3), lit(0), lit(0), lit(0L),
+          lit(0), v, a("f1"), a("f2"), (i + 1).cast("long"), v))
+        .otherwise(st(when(a("skip") === 1, 0).otherwise(3), lit(0), lit(0), lit(0L), lit(0),
+          a("skip") - 1, a("f1"), a("f2"), a("f3pos"), a("f3len")))
+    }
+    docs(s, d)
       .select(col("doc_id"), col("n_chars"), col("lang"))
       .as[(Long, Long, String)]
       .mapPartitions(_.map { case (id, nc, lang) =>
         (id, encodeVarintMsg(id, nc, lang)) })
       .toDF("asset_id", "media")
-      .withColumn("m", expr(fold))
+      .withColumn("m", aggregate(sequence(lit(1), length(col("media"))), zero, step))
       .select(col("asset_id"),
         col("m.f1").as("doc_id_pb"),
         col("m.f2").as("n_chars_pb"),
-        expr("CAST(substring(media, CAST(m.f3pos AS INT), CAST(m.f3len AS INT)) AS STRING)")
-          .as("lang_pb"),
+        col("media").substr(col("m.f3pos").cast("int"), col("m.f3len").cast("int"))
+          .cast("string").as("lang_pb"),
         (col("m.mode") === 0 && col("m.f1") >= 0 && col("m.f2") >= 0 &&
           col("m.f3pos") > 0).as("valid"))
       .orderBy("asset_id")

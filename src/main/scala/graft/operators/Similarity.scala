@@ -335,6 +335,26 @@ object Similarity {
 
   private def planeLit(p: Seq[Double]): Column = array(p.map(lit): _*)
 
+  /** A hyperplane as a DuckDB list literal: the oracle twin of [[planeLit]]. */
+  private def planeLitSql(p: Seq[Double]): String = p.mkString("[", ", ", "]")
+
+  /** Oracle-SQL cosine of two (vector, norm) pairs, micros-rounded
+    * ([[ExactRound.rSql]]). */
+  private def cosSql(xv: String, xn: String, yv: String, yn: String): String =
+    ExactRound.rSql(s"list_inner_product($xv, $yv) / ($xn * $yn)", 6)
+
+  /** Oracle-SQL squared L2 distance |a|² − 2⟨a,b⟩ + |b|² in integer
+    * micros (the PQ subdistance). */
+  private def sqMicrosSql(a: String, b: String): String =
+    s"CAST(round((list_inner_product($a, $a) - 2*list_inner_product($a, $b)" +
+      s" + list_inner_product($b, $b)) * 1000000) AS BIGINT)"
+
+  /** Oracle-SQL sign pack of dims `lo..lo+31` (1-based) of `v` into one
+    * 32-bit word: bit i−1 set iff the i-th dim is ≥ 0. */
+  private def packSql(lo: Int): String =
+    s"CAST(list_sum(list_transform(v[$lo:${lo + 31}], " +
+      "(x, i) -> CASE WHEN x >= 0 THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE 0 END)) AS BIGINT)"
+
   private def bucketOf(v: Column): Column =
     planes.zipWithIndex.map { case (p, i) =>
       when(dot(v, planeLit(p)) > 0, lit(1 << i)).otherwise(lit(0))
@@ -364,7 +384,6 @@ object Similarity {
     * expression: returns (the `apl(p)` CTE body, the bucket expression
     * over the 16-plane pool with planes ≥ p contributing 0). */
   private def adaptivePlanesSql: (String, String) = {
-    def planeLitS(pl: Seq[Double]): String = pl.mkString("[", ", ", "]")
     val ladder = (NumPlanes to MaxPlanes).mkString(", ")
     val apl =
       s"""apl AS MATERIALIZED (
@@ -374,7 +393,7 @@ object Similarity {
          |       (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings)
          |)""".stripMargin
     val bucketExpr = planePool.zipWithIndex.map { case (pl, i) =>
-      s"(CASE WHEN $i < (SELECT p FROM apl) AND list_inner_product(v, ${planeLitS(pl)}) > 0 THEN ${1 << i} ELSE 0 END)"
+      s"(CASE WHEN $i < (SELECT p FROM apl) AND list_inner_product(v, ${planeLitSql(pl)}) > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
     (apl, bucketExpr)
   }
@@ -404,9 +423,8 @@ object Similarity {
     * [[graft.functions.DotProduct]]'s left-to-right fold bit-for-bit),
     * and the multiprobe result has an exact oracle. */
   val annLshSql: String = {
-    def planeLit(p: Seq[Double]): String = p.mkString("[", ", ", "]")
     val bucketExpr = planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_inner_product(v, ${planeLit(p)}) > 0 THEN ${1 << i} ELSE 0 END)"
+      s"(CASE WHEN list_inner_product(v, ${planeLitSql(p)}) > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
     val flips = (0 +: (0 until NumPlanes).map(1 << _)).mkString("[", ", ", "]")
     s"""WITH e AS (
@@ -507,8 +525,6 @@ object Similarity {
 
   val nnDescentSql: String = {
     val (aplCte, bucketExpr) = adaptivePlanesSql
-    def cosOf(xv: String, xn: String, yv: String, yn: String) =
-      graft.operators.ExactRound.rSql(s"list_inner_product($xv, $yv) / ($xn * $yn)", 6)
     s"""WITH $aplCte, e AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
        |         sqrt(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
@@ -517,7 +533,7 @@ object Similarity {
        |  SELECT vec_id, v, nrm, $bucketExpr AS bucket FROM e
        |), init AS (
        |  SELECT x.vec_id AS a, y.vec_id AS nb,
-       |    ${cosOf("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
+       |    ${cosSql("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
        |  FROM eb x JOIN eb y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
        |), g0 AS (
        |  SELECT a, nb FROM (
@@ -530,14 +546,14 @@ object Similarity {
        |), g1 AS (
        |  SELECT a, nb FROM (
        |    SELECT c.a, c.nb, row_number() OVER (PARTITION BY c.a
-       |      ORDER BY ${cosOf("x.v", "x.nrm", "y.v", "y.nrm")} DESC, c.nb) AS rn
+       |      ORDER BY ${cosSql("x.v", "x.nrm", "y.v", "y.nrm")} DESC, c.nb) AS rn
        |    FROM cand c JOIN eb x ON c.a = x.vec_id JOIN eb y ON c.nb = y.vec_id
        |  ) WHERE rn <= 5
        |), smp AS (SELECT vec_id, v, nrm FROM eb WHERE vec_id % 25 = 0
        |), truth AS (
        |  SELECT a, nb FROM (
        |    SELECT s.vec_id AS a, t.vec_id AS nb, row_number() OVER (PARTITION BY s.vec_id
-       |      ORDER BY ${cosOf("s.v", "s.nrm", "t.v", "t.nrm")} DESC, t.vec_id) AS rn
+       |      ORDER BY ${cosSql("s.v", "s.nrm", "t.v", "t.nrm")} DESC, t.vec_id) AS rn
        |    FROM smp s JOIN eb t ON t.vec_id <> s.vec_id
        |  ) WHERE rn <= 5
        |), hits AS (
@@ -620,14 +636,12 @@ object Similarity {
   /** Oracle: identical graph, identical unrolled 3-round walk. */
   val graphSearchSql: String = {
     val (aplCte, bucketExpr) = adaptivePlanesSql
-    def cosOf(xv: String, xn: String, yv: String, yn: String) =
-      graft.operators.ExactRound.rSql(s"list_inner_product($xv, $yv) / ($xn * $yn)", 6)
     val rounds = (1 to 3).map { r =>
       val prev = if (r == 1) "b0" else s"b${r - 1}"
       s"""s$r AS MATERIALIZED (
          |  SELECT q, id, cos, row_number() OVER (PARTITION BY q ORDER BY cos DESC, id) AS rn
          |  FROM (
-         |    SELECT c.q, c.id, ${cosOf("x.v", "x.nrm", "qq.qv", "qq.qn")} AS cos
+         |    SELECT c.q, c.id, ${cosSql("x.v", "x.nrm", "qq.qv", "qq.qn")} AS cos
          |    FROM (
          |      SELECT DISTINCT q, id FROM (
          |        SELECT b.q, g0.nb AS id FROM $prev b JOIN g0 ON g0.a = b.id
@@ -647,7 +661,7 @@ object Similarity {
        |  SELECT vec_id, v, nrm, $bucketExpr AS bucket FROM e
        |), init AS (
        |  SELECT x.vec_id AS a, y.vec_id AS nb,
-       |    ${cosOf("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
+       |    ${cosSql("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
        |  FROM eb x JOIN eb y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
        |), g0 AS MATERIALIZED (
        |  SELECT a, nb FROM (
@@ -773,12 +787,10 @@ object Similarity {
     * unrolled, same candidate-count audit. */
   val hnswSql: String = {
     val (aplCte, bucketExpr) = adaptivePlanesSql
-    def cosOf(xv: String, xn: String, yv: String, yn: String) =
-      graft.operators.ExactRound.rSql(s"list_inner_product($xv, $yv) / ($xn * $yn)", 6)
     def knn(name: String, src: String, k: Int): String =
       s"""${name}i AS (
          |  SELECT x.vec_id AS a, y.vec_id AS nb,
-         |    ${cosOf("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
+         |    ${cosSql("x.v", "x.nrm", "y.v", "y.nrm")} AS cos
          |  FROM $src x JOIN $src y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
          |), $name AS MATERIALIZED (
          |  SELECT a, nb FROM (
@@ -787,7 +799,7 @@ object Similarity {
          |)""".stripMargin
     def stepS(prev: String, g: String, width: Int, tag: String): String =
       s"""sc$tag AS MATERIALIZED (
-         |  SELECT c.q, c.id, ${cosOf("x.v", "x.nrm", "qq.qv", "qq.qn")} AS cos
+         |  SELECT c.q, c.id, ${cosSql("x.v", "x.nrm", "qq.qv", "qq.qn")} AS cos
          |  FROM (
          |    SELECT DISTINCT q, id FROM (
          |      SELECT b.q, $g.nb AS id FROM $prev b JOIN $g ON $g.a = b.id
@@ -1005,9 +1017,8 @@ object Similarity {
   /** Oracle: identical 16-plane code, mask ladder and chosen-rung
     * arithmetic. */
   val bucketCensusSql: String = {
-    def planeLitS(pl: Seq[Double]): String = pl.mkString("[", ", ", "]")
     val b16 = planePool.zipWithIndex.map { case (pl, i) =>
-      s"(CASE WHEN list_inner_product(v, ${planeLitS(pl)}) > 0 THEN ${1 << i} ELSE 0 END)"
+      s"(CASE WHEN list_inner_product(v, ${planeLitSql(pl)}) > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
     val ladder = (NumPlanes to MaxPlanes).mkString(", ")
     s"""WITH e AS (
@@ -1887,9 +1898,6 @@ object Similarity {
     * the same |a|²−2⟨a,b⟩+|b|² subdistances in integer micros, the same
     * (distance, code) tie-break, BIGINT ADC sums. */
   val annPqSql: String = {
-    def sq(a: String, b: String) =
-      s"CAST(round((list_inner_product($a, $a) - 2*list_inner_product($a, $b)" +
-        s" + list_inner_product($b, $b)) * 1000000) AS BIGINT)"
     s"""WITH e AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
        |         sqrt(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
@@ -1903,11 +1911,11 @@ object Similarity {
        |  SELECT vec_id, j, code FROM (
        |    SELECT s.vec_id, s.j, c.code,
        |      row_number() OVER (PARTITION BY s.vec_id, s.j
-       |        ORDER BY ${sq("s.sub", "c.c_sub")}, c.code) AS rn
+       |        ORDER BY ${sqMicrosSql("s.sub", "c.c_sub")}, c.code) AS rn
        |    FROM sub s JOIN cb c USING (j)
        |  ) WHERE rn = 1
        |), adc AS (
-       |  SELECT c.j, c.code, ${sq("s.sub", "c.c_sub")} AS qd
+       |  SELECT c.j, c.code, ${sqMicrosSql("s.sub", "c.c_sub")} AS qd
        |  FROM sub s JOIN cb c USING (j) WHERE s.vec_id = 0
        |), approx AS (
        |  SELECT codes.vec_id, CAST(sum(adc.qd) AS BIGINT) AS approx_micros
@@ -2047,9 +2055,6 @@ object Similarity {
   /** SQL twin: the two standalone chains composed with the candidate
     * semi-join between them. */
   val annIvfPqSql: String = {
-    def sq(a: String, b: String) =
-      s"CAST(round((list_inner_product($a, $a) - 2*list_inner_product($a, $b)" +
-        s" + list_inner_product($b, $b)) * 1000000) AS BIGINT)"
     s"""WITH e AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
        |         sqrt(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
@@ -2081,11 +2086,11 @@ object Similarity {
        |  SELECT vec_id, j, code FROM (
        |    SELECT s.vec_id, s.j, cc.code,
        |      row_number() OVER (PARTITION BY s.vec_id, s.j
-       |        ORDER BY ${sq("s.sub", "cc.c_sub")}, cc.code) AS rn
+       |        ORDER BY ${sqMicrosSql("s.sub", "cc.c_sub")}, cc.code) AS rn
        |    FROM sub s JOIN cand USING (vec_id) JOIN cb cc USING (j)
        |  ) WHERE rn = 1
        |), adc AS (
-       |  SELECT cc.j, cc.code, ${sq("s.sub", "cc.c_sub")} AS qd
+       |  SELECT cc.j, cc.code, ${sqMicrosSql("s.sub", "cc.c_sub")} AS qd
        |  FROM sub s JOIN cb cc USING (j) WHERE s.vec_id = 0
        |), top AS (
        |  SELECT codes.vec_id, CAST(sum(adc.qd) AS BIGINT) AS approx_micros
@@ -2814,9 +2819,6 @@ object Similarity {
     * bit), Hamming = popcount(xor) per word, same candidate cutoff and
     * exact re-rank. */
   val binaryHammingSql: String = {
-    def pack(lo: Int) =
-      s"CAST(list_sum(list_transform(v[$lo:${lo + 31}], " +
-        "(x, i) -> CASE WHEN x >= 0 THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE 0 END)) AS BIGINT)"
     val rFull = graft.operators.ExactRound.rSql(
       "list_inner_product(c.v, c.q_v) / (c.nrm * c.q_nrm)", 6)
     s"""WITH e AS (
@@ -2824,7 +2826,7 @@ object Similarity {
        |    sqrt(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
        |  FROM embeddings
        |), p AS (
-       |  SELECT vec_id, v, nrm, ${pack(1)} AS lo, ${pack(33)} AS hi FROM e
+       |  SELECT vec_id, v, nrm, ${packSql(1)} AS lo, ${packSql(33)} AS hi FROM e
        |), q AS (SELECT v AS q_v, nrm AS q_nrm, lo AS q_lo, hi AS q_hi FROM p WHERE vec_id = 0
        |), coarse AS (
        |  SELECT p.vec_id, p.v, p.nrm, q.q_v, q.q_nrm,
@@ -2973,9 +2975,6 @@ object Similarity {
 
   /** SQL twin: same three coarse top-10s vs the exact top-10. */
   val quantizerRecallSql: String = {
-    def pack(lo: Int) =
-      s"CAST(list_sum(list_transform(v[$lo:${lo + 31}], " +
-        "(x, i) -> CASE WHEN x >= 0 THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE 0 END)) AS BIGINT)"
     val rows = jlSigns.map(r => r.map(x => if (x > 0) "1.0" else "-1.0")
       .mkString("[", ", ", "]"))
     val projList = rows.map(r => s"list_inner_product(v, $r)").mkString("[", ",\n    ", "]")
@@ -2988,7 +2987,7 @@ object Similarity {
        |    sqrt(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
        |  FROM embeddings
        |), e AS (
-       |  SELECT vec_id, v, nrm, ${pack(1)} AS lo, ${pack(33)} AS hi,
+       |  SELECT vec_id, v, nrm, ${packSql(1)} AS lo, ${packSql(33)} AS hi,
        |    $projList AS p, v[1:16] AS pre
        |  FROM e0
        |), q AS (SELECT v AS q_v, nrm AS q_nrm, lo AS q_lo, hi AS q_hi,

@@ -32,6 +32,20 @@ class GraftFunctionsSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("must be a literal integer"),
       s"expected a descriptive error, got: ${err.getMessage}")
+    // the array<bigint> pair functions name themselves and both input types
+    import spark.implicits._
+    import graft.functions.MinHashFns._
+    val pair = Seq((Seq(1L), Seq("a"))).toDF("a", "b")
+    Seq[(String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column)](
+      "sorted_jaccard" -> sorted_jaccard, "sorted_overlap" -> sorted_overlap,
+      "est_jaccard" -> est_jaccard).foreach { case (name, f) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        pair.select(f(org.apache.spark.sql.functions.col("a"), org.apache.spark.sql.functions.col("b"))))
+      assert(e.getMessage.contains(s"$name expects two array<bigint>") &&
+        e.getMessage.contains("ArrayType(LongType") && e.getMessage.contains("ArrayType(StringType"),
+        e.getMessage)
+    }
   }
 
   test("cdc_boundaries: chunks tile the text, and an insertion shifts at most one boundary region") {

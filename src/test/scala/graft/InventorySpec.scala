@@ -94,6 +94,17 @@ class InventorySpec extends AnyFunSuite {
     assert(names == 0, s"$names named streaming queries")
   }
 
+  test("one asset builder and one byte-field reader for the multimodal queries") {
+    val readers = mainOccurrences("conv(hex(")
+    assert(readers == 1, s"conv(hex( written $readers times under src/main, not one byte-field reader")
+    val mm = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/multimodal/Multimodal.scala"))
+    val scans = java.util.regex.Pattern.quote("Tables.parallelize(Tables.documents").r
+      .findAllIn(mm).size
+    assert(scans == 1, s"Multimodal parallelizes the documents at $scans sites, not one")
+    assert(!mm.contains(".grouped("), "Multimodal still batches rows with .grouped(")
+  }
+
   test("query selection: all by default, exactly the named ones, unknown names throw") {
     assert(GraftSession.selectQueries(None).keySet == SparkEntry.queries.keySet)
     assert(GraftSession.selectQueries(Some(" mr_wordcount, q10_star_join ,")).keySet ==
