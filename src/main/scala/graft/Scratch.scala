@@ -17,7 +17,8 @@ object Scratch {
   /** Runs `body` with a fresh directory named `prefix…` in
     * `java.io.tmpdir`, and deletes the directory when `body` returns or
     * throws. A frame `body` returns must not read the directory lazily:
-    * materialize it first (`localCheckpoint`, `collect`). */
+    * materialize it first (`collect`, or a `localCheckpoint()` tagged
+    * `// keep: outlives`, the reason InventorySpec accepts for it). */
   def withDir[T](prefix: String)(body: String => T): T = {
     val dir = Files.createTempDirectory(prefix).toString
     try body(dir) finally rmTree(dir)

@@ -82,7 +82,7 @@ object MapReduce {
     * ordered by `secondary` — the classic MapReduce pattern for
     * first/last/transition logic, done by sorting the shuffle files
     * on the composite key instead of buffering per-key in memory. */
-  def runSorted[T, K: ClassTag: Ordering, S: ClassTag: Ordering, V: ClassTag, O: ClassTag](
+  def runSorted[T, K: Ordering, S: Ordering, V: ClassTag, O: ClassTag](
       input: RDD[T],
       mapper: T => IterableOnce[(K, (S, V))],
       reducer: (K, Iterator[V]) => O,

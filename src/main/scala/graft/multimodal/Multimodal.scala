@@ -1564,7 +1564,7 @@ object Multimodal {
         (id, c(0), c(1), c(2), c(3))
       })
       .toDF("asset_id", "c0", "c1", "c2", "c3")
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     // canonicalize-before-pair (the Dedup.bandCandidates hot-key guard):
     // assets with an identical 64-bit hash are interchangeable in every
     // chunk bucket — block one representative per signature, expand
@@ -1761,7 +1761,7 @@ object Multimodal {
       .withColumn("lab_end", get_json_object(col("json"), "$.labels.data_offsets[1]").cast("long"))
       .withColumn("vid_beg", get_json_object(col("json"), "$.vec_ids.data_offsets[0]").cast("long"))
       .withColumn("vid_end", get_json_object(col("json"), "$.vec_ids.data_offsets[1]").cast("long"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val vals = meta
       .select(col("shard"), col("media"), col("hlen"), col("n"), col("vid_beg"))
       .withColumn("i", explode(expr("sequence(0, cast(n - 1 as int))")))

@@ -158,7 +158,7 @@ object Dedup {
   private[graft] def signaturesOf(docs: DataFrame): DataFrame =
     withShinglesOf(docs)
       .withColumn("sig", graft.functions.MinHashFns.minhash_sig(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
 
   /** 128-permutation MinHash signature via the native [[graft.functions.MinHashSig]]
     * expression — one generated static call per document over primitive
@@ -175,7 +175,7 @@ object Dedup {
   private def signatures(s: SparkSession, d: String): DataFrame =
     withShingles(s, d)
       .withColumn("sig", graft.functions.MinHashFns.minhash_sig(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
 
   /** Signature-identity groups: each doc labeled with the min doc_id
     * among docs carrying an IDENTICAL 128-perm signature (`rep`). The
@@ -183,7 +183,7 @@ object Dedup {
   private[graft] def sigGroups(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), col("sig"))
       .withColumn("rep", min("doc_id").over(Window.partitionBy("sig")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
 
   /** Band-bucket candidate pairs over one REPRESENTATIVE per signature
     * group. This is the join a hot key would otherwise blow up; its
@@ -249,7 +249,7 @@ object Dedup {
     * every banding twin already carries). */
   private[graft] def censusBandRows(sigs: DataFrame): Int = {
     val distinctSigs = sigs.select("sig").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val priced = Seq(1, 2).map { r =>
       r -> distinctSigs
         .select(posexplode(graft.functions.MinHashFns.band_hashes(col("sig"), r))
@@ -265,6 +265,8 @@ object Dedup {
   /** Candidate pairs only -- signatures are NOT carried through the band
     * join (they'd multiply shuffle width by 128); callers re-join the few
     * surviving pairs against the persisted signature/shingle table.
+    * `groups` is the caller's [[sigGroups]] table, built once however
+    * many band geometries read it.
     *
     * CANONICALIZE-BEFORE-PAIR (the hot-key pair-explosion guard): the
     * band self-join runs over ONE representative per identical-signature
@@ -282,8 +284,7 @@ object Dedup {
     * byte-identical copies never reach the sketch — the composition
     * [[graft.operators.Pipeline.curate]] uses. Spec-pinned in DedupSpec
     * ("hot-key stress"). */
-  private[graft] def bandCandidates(sigs: DataFrame, bandRows: Int): DataFrame = {
-    val groups = sigGroups(sigs)
+  private[graft] def bandCandidates(groups: DataFrame, bandRows: Int): DataFrame = {
     val members = groups.select(col("rep"), col("doc_id"))
     val cross = bandCandidateReps(groups, bandRows)
       .join(members.select(col("rep").as("rep_a"), col("doc_id").as("a")), "rep_a")
@@ -305,7 +306,7 @@ object Dedup {
     val sigs = signatures(s, d).select("doc_id", "sig")
     val sigA = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
     val sigB = sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    bandCandidates(sigs, bandRows = graft.GraftConf.lshBandRowsCandidates)
+    bandCandidates(sigGroups(sigs), bandRows = graft.GraftConf.lshBandRowsCandidates)
       .join(sigA, "doc_a").join(sigB, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         round(graft.functions.MinHashFns.est_jaccard(col("sig_a"), col("sig_b")), 6).as("est_jaccard"))
@@ -419,7 +420,8 @@ object Dedup {
 
   private def ngramJaccardBuild(s: SparkSession, d: String): DataFrame = {
     val sigs = signatures(s, d)
-    val cands = bandCandidates(sigs.select("doc_id", "sig"), bandRows = graft.GraftConf.lshBandRowsVerify).select("doc_a", "doc_b")
+    val cands = bandCandidates(sigGroups(sigs.select("doc_id", "sig")),
+      bandRows = graft.GraftConf.lshBandRowsVerify).select("doc_a", "doc_b")
     // r13: sorted_jaccard over hashed sorted shingles + SHUFFLE_HASH on
     // the array-carrying sides (the r12 d_setsim_join verify lesson;
     // collision bound: [[graft.functions.Hash64Collision]]) — same exact
@@ -551,7 +553,7 @@ object Dedup {
     // two consumers (freq, dict join) — persist, or the scan+shingle
     // chain recomputes per consumer (measured 4x on signatures)
     val tokens = sh.select(col("doc_id"), explode(col("hs")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val freq = tokens.groupBy("h").agg(count(lit(1)).as("f"))
     import s.implicits._
     val dict = freq.orderBy("h").select(col("h"), col("f")).as[(Long, Long)].rdd
@@ -562,12 +564,12 @@ object Dedup {
     // both verify sides — persist each once instead of recomputing the
     // token join / per-doc pack per consumer
     val toks = tokens.join(dict, "h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val packed = toks.groupBy("doc_id")
       .agg(graft.functions.PackedSetFns.pack_sorted(
           sort_array(collect_list(col("hid")))).as("p"),
         count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     AllPairsPrep(toks, packed, tokens)
   }
 
@@ -667,7 +669,7 @@ object Dedup {
     // and the brute-force oracle on every run.
     val prep = allPairsPrep(s, d)
     val pe = setsimPrefix(prep.toks, t)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // candidate budget BEFORE the distinct: Σ_h c_h·(c_h−1)/2 over the
     // prefix census — see allPairsRefuseIfOverBudget
     val priced = setsimCandPriced(pe)
@@ -741,7 +743,7 @@ object Dedup {
     // materialized once, eagerly, inside the edge build: the checkpoint
     // keeps that big plan out of every round's analysis
     val (symmetric, partitioner) = Graph.coPartitionedEdges(pairsDf)
-    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // BigInt sum: a Long sum of 64-bit labels over billions of nodes can
     // wrap and fake (or mask) convergence; BigInt can't. Labels only
     // ever decrease, so the sum strictly decreases until the fixpoint —
@@ -780,7 +782,7 @@ object Dedup {
       parent.keysIterator.toArray.iterator.map(k => (k, find(k)))
     }
     var labels = localRoots.reduceByKey(partitioner, math.min(_: Long, _: Long))
-    labels.localCheckpoint()
+    labels.localCheckpoint() // keep: round
     var curSum = labelSum(labels)
     var converged = false
     var rounds = 0
@@ -800,7 +802,7 @@ object Dedup {
       // lazy checkpoint + probe: the sum action is the ONE job per round —
       // it materializes the checkpoint blocks (truncating lineage) and
       // computes the convergence sum
-      jumped.localCheckpoint()
+      jumped.localCheckpoint() // keep: round
       val nextSum = labelSum(jumped)
       converged = nextSum == curSum
       curSum = nextSum
@@ -869,7 +871,7 @@ object Dedup {
     // [[graft.functions.Hash64Collision]] (merge-only failure mode,
     // birthday-bounded, string-exact DuckDB twin audits it).
     val toks = docs.select(col("doc_id"), split(trim(col("text")), WS).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // r14 (guide §2.4 "remove passes outright"): the four widths used to
     // run four chained per-width pipelines — a head() price action plus
     // two checkpoints and THREE count actions each, ~20 small jobs even
@@ -890,7 +892,7 @@ object Dedup {
           graft.functions.MinHashFns.word_shingles(col("toks"), w))).as("g"))
     }.reduce(_ unionAll _)
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val joinRows: Map[Int, Long] = tokAll.groupBy("w", "g").agg(count(lit(1)).as("c"))
       .groupBy("w").agg(sum(col("c") * (col("c") - 1) / 2).cast("long").as("jr"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -899,7 +901,7 @@ object Dedup {
       .join(tokV.select(col("w"), col("doc_id").as("doc_b"), col("g")), Seq("w", "g"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("w", "doc_a", "doc_b").agg(count(lit(1)).as("isz"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val sz = tokV.groupBy("w", "doc_id").agg(count(lit(1)).as("n"))
     // SHUFFLE_HASH on the doc-size sides (r13 width attribution:
     // SMJ sorted the 113 M-row pair side TWICE against a 500 k-row
@@ -914,7 +916,7 @@ object Dedup {
         .hint("SHUFFLE_HASH"), Seq("w", "doc_b"))
       .filter(ExactRound.r(col("isz").cast("double")
         / (col("na") + col("nb") - col("isz")), 6) >= 0.5)
-      .select("w", "doc_a", "doc_b").localCheckpoint()
+      .select("w", "doc_a", "doc_b").localCheckpoint() // keep: reuse
     val counts: Map[(Int, String), Long] =
       pr.groupBy("w").agg(count(lit(1)).as("v"))
         .select(col("w"), lit("cand").as("k"), col("v"))
@@ -1073,14 +1075,14 @@ object Dedup {
     val sims = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
         graft.functions.MinHashFns.simhash64(split(trim(col("text")), WS)).as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // canonicalize-before-pair (the [[bandCandidates]] hot-key guard,
     // same argument): docs with an IDENTICAL 64-bit signature are
     // interchangeable in every chunk bucket, so the chunk join runs
     // over one representative per signature and pairs expand after —
     // identical result set, k-copy hot doc contributes 1 join row
     val groups = sims.withColumn("rep", min("doc_id").over(Window.partitionBy("simhash")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val reps = groups.filter(col("doc_id") === col("rep")).select("doc_id", "simhash")
     val chunks = reps.select(col("doc_id"), col("simhash"),
       explode(expr("transform(sequence(0, 3), i -> struct(i AS chunk_idx, " +
@@ -1120,7 +1122,8 @@ object Dedup {
     * restricted to cross-split pairs before the exact verify. */
   def contamination(s: SparkSession, d: String): DataFrame = {
     val sigs = signatures(s, d)
-    val cands = bandCandidates(sigs.select("doc_id", "sig"), bandRows = graft.GraftConf.lshBandRowsVerify)
+    val cands = bandCandidates(sigGroups(sigs.select("doc_id", "sig")),
+        bandRows = graft.GraftConf.lshBandRowsVerify)
       .filter(pmod(col("doc_a"), lit(2)) =!= pmod(col("doc_b"), lit(2)))
     // r13: hashed sorted shingles + sorted_jaccard (see ngramJaccardBuild;
     // collision bound: [[graft.functions.Hash64Collision]])
@@ -1277,7 +1280,7 @@ object Dedup {
     val fps = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
         explode(graft.functions.WinnowFns.winnow_fingerprints(col("text"))).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val a = fps.select(col("fp"), col("doc_id").as("doc_a"))
     val b = fps.select(col("fp"), col("doc_id").as("doc_b"))
     a.join(b, "fp")
@@ -1461,14 +1464,14 @@ object Dedup {
     val angles = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cell"),
         ang(dot_product(col("v"), col("c_v")) / (col("norm") * col("c_norm"))).as("ang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val wAssign = Window.partitionBy("vec_id").orderBy(col("ang"), col("cell"))
     val home = angles
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cell"), col("ang"))
     val assigned = home.join(e, "vec_id") // (vec_id, cell, ang, v, norm)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val radii = assigned.groupBy("cell").agg(max("ang").as("r"))
     // per-vector probes: v reaches cell c only if ang(v,c) − r_c ≤ acos t
     val probes = angles.join(broadcast(radii), "cell")
@@ -1746,7 +1749,7 @@ object Dedup {
         posexplode(graft.functions.MinHashFns.band_hashes(
           col("sig"), graft.GraftConf.lshBandRowsVerify)))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val probe = banded.filter(col("doc_id") % 10 === 0)
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("p"))
     val cands = probe
@@ -1932,7 +1935,7 @@ object Dedup {
     val prep = allPairsPrep(s, d)
     val ranked = containmentRanked(prep.toks)
     val pref = containmentPrefix(ranked)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val priced = containmentCandPriced(pref)
     val (nDocs, totSig) = packedSigStats(prep.packed)
     allPairsRefuseIfOverBudget(s, "containmentJoin", priced, nDocs, totSig, {
@@ -1996,14 +1999,8 @@ object Dedup {
     * in integer arithmetic both engines compute exactly. */
   def setsimBudget(s: SparkSession, d: String): DataFrame = {
     val prep = allPairsPrep(s, d)
-    val pe = setsimPrefix(prep.toks, 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pricedSetsim = setsimCandPriced(pe)
-    pe.unpersist(blocking = false)
-    val pref = containmentPrefix(containmentRanked(prep.toks))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pricedCont = containmentCandPriced(pref)
-    pref.unpersist(blocking = false)
+    val pricedSetsim = setsimCandPriced(setsimPrefix(prep.toks, 0.5))
+    val pricedCont = containmentCandPriced(containmentPrefix(containmentRanked(prep.toks)))
     val (nDocs, totSig) = packedSigStats(prep.packed)
     prep.unpersistAll()
     val avgSig = allPairsAvgSigBytes(nDocs, totSig)
@@ -2216,8 +2213,10 @@ object Dedup {
       sort_array(graft.functions.MinHashFns.word_hashes(col("sh"))).as("sh_a"))
     val shB = sigs.select(col("doc_id").as("doc_b"),
       sort_array(graft.functions.MinHashFns.word_hashes(col("sh"))).as("sh_b"))
-    val cand2 = bandCandidates(sigs.select("doc_id", "sig"), bandRows = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one signature-group table feeds all three band geometries
+    val groups = sigGroups(sigs.select("doc_id", "sig"))
+    val cand2 = bandCandidates(groups, bandRows = 2)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // ONE shingle verify over the superset candidate list = the truth
     // table (identical arithmetic to [[ngramJaccard]])
     val truthPairs = cand2
@@ -2226,10 +2225,10 @@ object Dedup {
         graft.functions.MinHashFns.sorted_jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jacc") >= 0.5)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("is_true"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val allCands = cand2.withColumn("band_rows", lit(2)) unionByName
       Seq(4, 8).map { r =>
-        bandCandidates(sigs.select("doc_id", "sig"), bandRows = r)
+        bandCandidates(groups, bandRows = r)
           .withColumn("band_rows", lit(r))
       }.reduce(_ unionByName _)
     val perConfig = allCands
@@ -2479,7 +2478,7 @@ object Dedup {
     val shA = sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
     val shB = sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
     val isz = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val candAgg = bandCandidates(sigs.select("doc_id", "sig"), bandRows = r)
+    val candAgg = bandCandidates(sigGroups(sigs.select("doc_id", "sig")), bandRows = r)
       .join(shA, "doc_a").join(shB, "doc_b")
       .withColumn("jacc",
         ExactRound.r(isz / (size(col("sh_a")) + size(col("sh_b")) - isz), 6))
@@ -2800,7 +2799,7 @@ object Dedup {
       .select(col("doc_id"), col("fp"),
         graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16).as("shard_id"),
         graft.functions.Djb2.djb2_partition(col("fp"), 16).as("shard_content"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val groups = docs.groupBy("fp").agg(count(lit(1)).as("k")).filter(col("k") > 1)
     val dup = docs.join(groups.select("fp"), "fp")
     def pairsBy(shardCol: String, out: String) = dup.groupBy(col("fp"), col(shardCol))
@@ -2910,7 +2909,7 @@ object Dedup {
           .saveAsTable(tbl)
         val agg = s.table(tbl).groupBy("fp")
           .agg(count(lit(1)).as("k"), sum(col("n_chars")).as("chars"))
-        val materialized = agg.localCheckpoint()
+        val materialized = agg.localCheckpoint() // keep: certificate
         val shuffles = org.apache.spark.sql.graftbridge.PlanProbe.nodes(agg)
           .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
         if (shuffles != 0)

@@ -195,9 +195,9 @@ private[graft] object EmbedBands {
       e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       math.ceil(n.toDouble * l * (8 * Dim + 80) / (64L << 20)).toInt)
     val sigs = bandSigs(e.repartition(sigParts), r, l)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY) // keep: reuse
     val census = keptCensus(sigs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val priced = census.agg(coalesce(sum(expr("bc * (bc - 1) div 2")), lit(0L)))
       .head().getLong(0)
     if (priced > graft.GraftConf.maxBandedCandidates) {
@@ -233,7 +233,7 @@ private[graft] object EmbedBands {
           s"threshold, or pin ${graft.GraftConf.bandedShuffleBudgetKey} if this " +
           "deployment's shuffle capacity is larger than the derived budget")
     }
-    val out = verifyJoin(sigs, census, n, l, t).localCheckpoint()
+    val out = verifyJoin(sigs, census, n, l, t).localCheckpoint() // keep: outlives
     sigs.unpersist(blocking = false); census.unpersist(blocking = false)
     out
   }
@@ -369,7 +369,7 @@ private[graft] object EmbedBands {
     else {
       val k = math.max(1L, (priced + sampleTarget - 1) / sampleTarget)
       val sampled = census.filter(bucketHash(col("band"), col("sig")) % k === 0L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
       // an EMPTY sample is the absence of a measurement, not a measured
       // rate of 0: when the 1/K hash lands on no candidate-bearing
       // bucket, extrapolating samp = 0 would wave through the exact

@@ -40,7 +40,7 @@ object Graph {
     import spark.implicits._
     val cols = pairsDf.columns
     val pairs = pairsDf.select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val prs = pairs.as[(Long, Long)].rdd
     val partitioner = new org.apache.spark.HashPartitioner(
       graft.GraftConf.partitionsForEdges(pairs.count(), prs.getNumPartitions))
@@ -99,12 +99,12 @@ object Graph {
     val deg = edges.mapValues(_ => 1L).reduceByKey(partitioner, _ + _)
     // (src, (dst, deg)) materialized once: every round re-reads these blocks
     val ewd = edges.join(deg, partitioner)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // each node carries its seed flag, so the per-round update is a
     // mapValues that keeps the rank table on the edge partitioner
     val nodes = deg.mapPartitions(_.map { case (id, _) => (id, isSeed(id)) },
         preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val nSeeds = nodes.filter(_._2).count()
     require(nSeeds > 0, "pagerank needs a non-empty seed set")
     val teleport = nodes.mapValues(seed => if (seed) 150000L / nSeeds else 0L)
@@ -122,7 +122,7 @@ object Graph {
         // fold is the one job per round — it materializes the checkpoint
         // (truncating lineage, which matters once rounds are unbounded)
         // and computes max |r_{t+1} − r_t| in the same pass
-        next.localCheckpoint()
+        next.localCheckpoint() // keep: round
         val maxResid = next.join(r, partitioner)
           .map { case (_, (nr, or)) => math.abs(nr - or) }
           .fold(0L)(math.max)
@@ -133,7 +133,7 @@ object Graph {
     }
     // materialize BEFORE dropping the edge blocks: the rank lineage
     // reaches back through every round's ewd join
-    val result = r.toDF("id", "r").localCheckpoint()
+    val result = r.toDF("id", "r").localCheckpoint() // keep: outlives
     ewd.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     (result, it)
@@ -195,7 +195,7 @@ object Graph {
   private def triangleCounts(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     // deg feeds the orientation build twice plus the final join, and the
     // oriented edge list e feeds FOUR consumers (wedge self-join twice,
     // closing union twice) — materialize both once instead of replaying
@@ -204,7 +204,7 @@ object Graph {
     // stationary-edge-list discipline the iterative loops use)
     val deg = pairs.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val e = pairs
       .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
@@ -213,7 +213,7 @@ object Graph {
           (col("da") === col("db") && col("a") < col("b")), col("a")).otherwise(col("b")).as("u"),
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")), col("b")).otherwise(col("a")).as("v"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val wedges = e.join(e.select(col("u"), col("v").as("w")), "u")
       .filter(col("v") < col("w"))
     // {v,w} closes the triangle in exactly one orientation; probing both
@@ -306,7 +306,7 @@ object Graph {
   def linkpred(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.embedDup(s, d)
       .select(col("vec_a").as("a"), col("vec_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val ew = edges.join(deg, "src").select(col("src").as("w"), col("dst").as("u"), col("deg"))
@@ -357,7 +357,7 @@ object Graph {
     val spark = pairsDf.sparkSession
     import spark.implicits._
     val (symmetric, partitioner) = coPartitionedEdges(pairsDf)
-    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = symmetric.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     var dist = edges.mapValues(_ => ()).reduceByKey(partitioner, (a, _) => a)
       .filter { case (id, _) => isSeed(id) }
       .mapValues(_ => 0L)
@@ -368,7 +368,7 @@ object Graph {
       dist = dist.union(cand).reduceByKey(partitioner, (a: Long, b: Long) => math.min(a, b))
       hop += 1
     }
-    val out = dist.toDF("id", "dist").localCheckpoint()
+    val out = dist.toDF("id", "dist").localCheckpoint() // keep: outlives
     edges.unpersist(blocking = false)
     out
   }
@@ -422,17 +422,17 @@ object Graph {
     * confidence census the estimator reads before trusting the bound). */
   def eccentricity(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d).select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
-    val edges = undirected(pairs).localCheckpoint()
+      .localCheckpoint() // keep: reuse
+    val edges = undirected(pairs).localCheckpoint() // keep: reuse
     var dist = edges.select(col("src").as("id")).distinct()
       .filter(col("id") % 5 === 0)
       .select(col("id"), col("id").as("pv"), lit(0L).as("dist"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: round
     (1 to 6).foreach { _ =>
       val cand = edges.join(dist, edges("src") === dist("id"))
         .select(col("dst").as("id"), col("pv"), (col("dist") + 1L).as("dist"))
       dist = dist.union(cand).groupBy("id", "pv").agg(min("dist").as("dist"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
     }
     dist.groupBy("id")
       .agg(max("dist").as("ecc_lb"),
@@ -493,14 +493,14 @@ object Graph {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a"), col("doc_b"),
         round(col("jaccard") * lit(1000000.0)).cast("long").as("wm"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"), col("wm"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"), col("wm")))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     var b = edges.select(col("src").as("id")).distinct()
       .filter(col("id") % 10 === 0)
       .select(col("id"), lit(1000000L).as("bm"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: round
     // monotone-state convergence probe: node ids are only ever added and
     // bottlenecks only ever rise, so (row count, Σ bm) stable across a
     // round == fixpoint. One tiny two-aggregate action per round.
@@ -518,7 +518,7 @@ object Graph {
       while (!converged && rounds < 12) {
         val cand = edges.join(b, edges("src") === b("id"))
           .select(col("dst").as("id"), least(col("bm"), col("wm")).as("bm"))
-        b = b.union(cand).groupBy("id").agg(max("bm").as("bm")).localCheckpoint()
+        b = b.union(cand).groupBy("id").agg(max("bm").as("bm")).localCheckpoint() // keep: round
         val nfp = fingerprint(b)
         converged = nfp == fp
         fp = nfp
@@ -580,9 +580,9 @@ object Graph {
     val edges = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"),
         (lit(1000000L) - round(col("jaccard") * lit(1000000.0)).cast("long")).as("wm"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     var comp = edges.select(explode(array(col("a"), col("b"))).as("id")).distinct()
-      .select(col("id"), col("id").as("c")).localCheckpoint()
+      .select(col("id"), col("id").as("c")).localCheckpoint() // keep: round
     var forest: DataFrame = null
     var rounds = 0
     var converged = false
@@ -594,7 +594,7 @@ object Graph {
         val ca = comp.select(col("id").as("a"), col("c").as("ca"))
         val cb = comp.select(col("id").as("b"), col("c").as("cb"))
         val ce = edges.join(ca, "a").join(cb, "b").filter(col("ca") =!= col("cb"))
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
         if (ce.isEmpty) converged = true
         else {
           val dir = ce.select(col("ca").as("c"), col("cb").as("oc"), col("wm"), col("a"), col("b"))
@@ -603,13 +603,13 @@ object Graph {
             .agg(min(struct(col("wm"), col("a"), col("b"), col("oc"))).as("m"))
             .select(col("c"), col("m.oc").as("oc"), col("m.a").as("ea"),
               col("m.b").as("eb"), col("m.wm").as("ewm"))
-            .localCheckpoint()
+            .localCheckpoint() // keep: round
           val roundEdges = pick.select(col("ea"), col("eb"), col("ewm")).distinct()
           forest = if (forest == null) roundEdges else forest.union(roundEdges)
           val labels = Dedup.connectedComponents(pick.select("c", "oc"))
           comp = comp.join(labels.withColumnRenamed("id", "c"), Seq("c"), "left")
             .select(col("id"), coalesce(col("label"), col("c")).as("c"))
-            .localCheckpoint()
+            .localCheckpoint() // keep: round
         }
         rounds += 1
       }
@@ -706,20 +706,20 @@ object Graph {
     Shared.memo(s, d, "community_labels")(
       communityFromPairs(s, d, Dedup.embedDup(s, d)
         .select(col("vec_a").as("a"), col("vec_b").as("b"))
-        .localCheckpoint()))
+        .localCheckpoint())) // keep: reuse
 
   /** [[community]] over a pre-built (and checkpointed) pair table —
     * lets [[modularity]] audit the SAME candidate graph without paying
     * the embed-dup candidate build twice. */
   private[graft] def communityFromPairs(s: SparkSession, d: String,
       pairs: DataFrame): DataFrame = {
-    val edges = undirected(pairs).localCheckpoint()
+    val edges = undirected(pairs).localCheckpoint() // keep: reuse
     val nodes = edges.select(col("src").as("id")).distinct()
     val seeds = nodes.join(
         Tables.embeddings(s, d).select(col("vec_id").as("id"), col("label")), "id")
       .filter(col("id") % 5 === 0)
       .select(col("id"), col("label").cast("long").as("label"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     var labels = seeds
     // loop partitions from the measured edge count, AQE's per-stage
     // jobs off for the rounds (Shared.withLoopParallelism)
@@ -735,7 +735,7 @@ object Graph {
         // seeds are clamped; non-seeds take this round's mode
         labels = seeds.union(
             modes.join(seeds.select("id"), Seq("id"), "left_anti"))
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
       }
     }
     nodes.join(labels, Seq("id"), "left")
@@ -747,7 +747,6 @@ object Graph {
 
   /** SQL twin: same graph, 3 unrolled mode-propagation rounds. */
   val communitySql: String = {
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     val rounds = (1 to 3).map { k =>
       s"""v$k AS (
          |  SELECT e.dst AS id, l.label, count(*) AS n
@@ -793,7 +792,7 @@ object Graph {
   def degreeStats(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val withNbrDeg = edges
@@ -839,9 +838,9 @@ object Graph {
   def kcore(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val allNodes = pairs.select(col("a").as("id")).union(pairs.select(col("b").as("id"))).distinct()
-    var edges = undirected(pairs).localCheckpoint()
+    var edges = undirected(pairs).localCheckpoint() // keep: round
     var removedInLast = 0L
     var round = 0
     // one count per round (the previous round's count is remembered, not
@@ -856,7 +855,7 @@ object Graph {
           .join(keep.withColumnRenamed("k", "src"), "src", "left_semi")
           .join(keep.withColumnRenamed("k", "dst"), "dst", "left_semi")
           .select("src", "dst")
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
         val nextCount = next.count()
         removedInLast = edgeCount - nextCount
         edgeCount = nextCount
@@ -916,7 +915,7 @@ object Graph {
   def assortativity(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = undirected(pairs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val xy = edges
@@ -982,10 +981,10 @@ object Graph {
   private def communityCensus(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.embedDup(s, d)
       .select(col("vec_a").as("a"), col("vec_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val lab = communityLabels(s, d)
       .select(col("vec_id").as("id"), col("pred_label").as("com"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = undirected(pairs)
     val withCom = edges
       .join(lab.select(col("id").as("src"), col("com").as("com_s")), "src")
@@ -1016,7 +1015,7 @@ object Graph {
   def modularity(s: SparkSession, d: String): DataFrame = {
     val per = communityCensus(s, d)
       .withColumn("num", col("m2") * col("l_in2") - col("d_tot") * col("d_tot"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val tot = per.agg(sum("num").as("num_tot"))
     // per rows only exist when the edge list is nonempty (m2 ≥ 1), but
     // the zero-denominator guard costs nothing and keeps the contract
@@ -1037,7 +1036,6 @@ object Graph {
   /** SQL twin: the communitySql CTE chain re-emitted, then the same
     * exact-integer modularity tail. */
   val modularitySql: String = {
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     val rounds = (1 to 3).map { k =>
       s"""v$k AS (
          |  SELECT e.dst AS id, l.label, count(*) AS n
@@ -1200,7 +1198,7 @@ object Graph {
         when(col("denom") > 0,
           ExactRound.r(col("cut").cast("double") / col("denom").cast("double"), 6))
           .otherwise(lit(0.0)))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val worst = per.agg(max("phi").as("worst"))
     per.crossJoin(broadcast(worst))
       .select("com", "n_nodes", "cut", "vol", "phi", "worst")
@@ -1210,7 +1208,6 @@ object Graph {
   /** SQL twin: the communitySql CTE chain re-emitted, same exact-long
     * cut/volume terms, one rounded division. */
   val conductanceSql: String = {
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     val rounds = (1 to 3).map { k =>
       s"""v$k AS (
          |  SELECT e.dst AS id, l.label, count(*) AS n
@@ -1287,12 +1284,12 @@ object Graph {
     * and a join proportional to the day's new pairs. */
   def wccIncremental(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d).select("doc_a", "doc_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val base = pairs.filter((col("doc_a") + col("doc_b")) % 5 =!= 0)
     val inc = pairs.filter((col("doc_a") + col("doc_b")) % 5 === 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val baseLabels = Dedup.connectedComponents(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // contract: each endpoint becomes its existing component label;
     // endpoints unseen in the base keep their own id (they ARE their
     // 1-node component's min). Self-loops = already-connected, drop.
@@ -1365,7 +1362,7 @@ object Graph {
     // scale-adaptive shape: a 100 TB scan has thousands of splits and
     // the loop inherits them.
     val ids = Tables.documents(s, d)
-      .select(col("doc_id").as("id")).localCheckpoint(eager = true)
+      .select(col("doc_id").as("id")).localCheckpoint() // keep: reuse
     val within = ids.filter(col("id") % 8 < 7)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
     val closing = ids.filter(col("id") % 8 === 7 && expr("(id div 8) % 3") =!= 0)
@@ -1374,7 +1371,7 @@ object Graph {
       .select(col("id").as("src"), (col("id") + 8).as("dst"))
     val edges = within.union(closing).union(chord)
       .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-      .select("src", "dst").localCheckpoint(eager = true)
+      .select("src", "dst").localCheckpoint() // keep: reuse
 
     var active = ids
     var claimed: List[DataFrame] = Nil
@@ -1394,7 +1391,7 @@ object Graph {
       val eAct = edges
         .join(active.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(active.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst").localCheckpoint(eager = true)
+        .select("src", "dst").localCheckpoint() // keep: round
       // phase 1: forward max-label fixpoint, accelerated by POINTER
       // JUMPING on the color table: after each edge relaxation,
       // c(v) ← max(c(v), c(c(v))). Sound because c(c(v)) reaches c(v)
@@ -1405,7 +1402,7 @@ object Graph {
       // effective propagation distance — O(D) rounds become O(log D),
       // the [[Dedup.connectedComponents]] discipline applied to
       // the directed max-label phase.
-      var color = active.withColumn("c", col("id")).localCheckpoint(eager = true)
+      var color = active.withColumn("c", col("id")).localCheckpoint() // keep: round
       var round = 0
       var changed = 1L
       while (changed > 0) {
@@ -1427,13 +1424,13 @@ object Graph {
           .join(relaxed.select(col("id").as("c"), col("c").as("cc")), Seq("c"), "left")
           .select(col("id"), col("c0"),
             greatest(col("c"), coalesce(col("cc"), col("c"))).as("c"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint() // keep: round
         changed = next.filter(col("c") =!= col("c0")).count()
         color = next.select("id", "c")
       }
       // phase 2: backward containment within the color class
       var mark = color.withColumn("m", col("id") === col("c"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: round
       var nMarked = mark.filter(col("m")).count()
       if (nMarked == 0) throw new IllegalStateException(
         "no roots found — coloring fixpoint is inconsistent")
@@ -1449,17 +1446,17 @@ object Graph {
         val next = mark
           .join(reach.withColumn("hit", lit(true)), Seq("id", "c"), "left")
           .select(col("id"), col("c"), (col("m") || col("hit").isNotNull).as("m"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint() // keep: round
         val nNext = next.filter(col("m")).count()
         changed = nNext - nMarked
         nMarked = nNext
         mark = next
       }
       val newly = mark.filter(col("m"))
-        .select(col("id"), col("c").as("scc_id")).localCheckpoint(eager = true)
+        .select(col("id"), col("c").as("scc_id")).localCheckpoint() // keep: round
       claimed ::= newly
       active = active.join(newly.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: round
       activeCount -= nMarked // newly has exactly nMarked rows, all active
     }
     } // withLoopParallelism
@@ -1567,9 +1564,9 @@ object Graph {
 
   private[graft] def stressFromPairs(pairsDf: DataFrame, maxHops: Int,
       seed: Column => Column): DataFrame = {
-    val pairs = pairsDf.localCheckpoint()
-    val edges = undirected(pairs).localCheckpoint()
-    val nodes = edges.select(col("src").as("id")).distinct().localCheckpoint()
+    val pairs = pairsDf.localCheckpoint() // keep: reuse
+    val edges = undirected(pairs).localCheckpoint() // keep: reuse
+    val nodes = edges.select(col("src").as("id")).distinct().localCheckpoint() // keep: reuse
     // ADJACENCY-LIST FRONTIER (r10, the r9 verdict's #2): the 12
     // per-level joins used to re-shuffle the EDGE list every round
     // (frontier ⋈ edges on src exchanges both sides — the 10× probe
@@ -1584,7 +1581,7 @@ object Graph {
     // Pure plan reshape — row-for-row identical sums, same oracle.
     val adj = edges.groupBy(col("src"))
       .agg(collect_list(col("dst")).as("nbrs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // materialize NOW so the cached relation carries ACCURATE size
     // stats: on the 10×-probe graph the adjacency table is a few MB
     // and the planner then BROADCASTS it (every round's join becomes
@@ -1601,7 +1598,7 @@ object Graph {
     // for data that was already in checkpointed blocks.
     var levels = List(nodes.filter(seed(col("id")))
       .select(col("id").as("root"), col("id"), lit(1L).as("sigma"), lit(0).as("lvl"))
-      .localCheckpoint())
+      .localCheckpoint()) // keep: round
     def reached: DataFrame = levels.reduce(_ unionByName _)
     var frontier = levels.head
     var k = 1
@@ -1627,7 +1624,7 @@ object Graph {
       frontier = cand
         .join(reached.select("root", "id"), Seq("root", "id"), "left_anti")
         .withColumn("lvl", lit(k))
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
       frontierRows = frontier.count()
       stateRows += frontierRows
       if (stateRows > graft.GraftConf.maxBfsStateRows)
@@ -1651,7 +1648,7 @@ object Graph {
     val byLvl: Map[Int, DataFrame] = levels.zipWithIndex.map(_.swap).toMap
     var pPrev = byLvl(topLvl)
       .select(col("root"), col("id"), lit(0L).as("p"), col("lvl"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: round
     var pLevels = List(pPrev)
     Shared.withLoopParallelism(pairsDf.sparkSession, nEdgeRows) {
     for (lv <- (topLvl - 1) to 0 by -1) {
@@ -1667,7 +1664,7 @@ object Graph {
         .join(succSum, Seq("root", "id"), "left")
         .select(col("root"), col("id"), coalesce(col("psum"), lit(0L)).as("p"),
           lit(lv).as("lvl"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
       pLevels = pLevels :+ pk
       pPrev = pk
     }
@@ -1717,7 +1714,6 @@ object Graph {
          |  GROUP BY 1, 2
          |)""".stripMargin
     } mkString ", "
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     s"""WITH ${OracleCtes.embedPairsCtes(0.4)}, edges AS MATERIALIZED (
        |  SELECT pa AS src, pb AS dst FROM pairs UNION ALL SELECT pb, pa FROM pairs
        |), nodes AS MATERIALIZED (
@@ -1782,12 +1778,12 @@ object Graph {
     val L = 8
     val pairs = Dedup.embedDup(s, d)
       .select(col("vec_a").cast("long").as("a"), col("vec_b").cast("long").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = undirected(pairs)
     val adj = edges.groupBy("src")
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
       .withColumn("deg", size(col("nbrs")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val seeds = adj.select(col("src").as("node"))
       .crossJoin(broadcast(s.range(0, 2).select(col("id").cast("int").as("r"))))
       .select(col("node"), col("r"),
@@ -1795,7 +1791,7 @@ object Graph {
           concat(col("node").cast("string"), lit("#"), col("r").cast("string")))
           .bitwiseAND(lit(2147483647L)).as("x"),
         array(col("node")).as("path"))
-    var walk = seeds.localCheckpoint()
+    var walk = seeds.localCheckpoint() // keep: round
     // loop partitions from the measured walker count, AQE's per-stage
     // jobs off for the steps (Shared.withLoopParallelism); the adjacency
     // side stays a broadcast, so steps are shuffle-free either way
@@ -1809,7 +1805,7 @@ object Graph {
             concat(col("path"),
               array(element_at(col("nbrs"), (pmod(col("x"), col("deg"))).cast("int") + 1))))
           .select("node", "r", "x", "path")
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
       }
     }
     val pos = walk
@@ -1838,7 +1834,6 @@ object Graph {
          |  FROM w${t - 1} w JOIN adj a ON a.src = w.path[len(w.path)]
          |)""".stripMargin
     }.mkString(", ")
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     s"""WITH RECURSIVE ${OracleCtes.embedPairsCtes(0.4)}, edges AS MATERIALIZED (
        |  SELECT pa AS src, pb AS dst FROM pairs UNION ALL SELECT pb, pa FROM pairs
        |), adj AS MATERIALIZED (
@@ -1890,7 +1885,7 @@ object Graph {
   def hits(s: SparkSession, d: String): DataFrame = {
     val edges = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
     var hub = nodes.withColumn("h", lit(1L))
@@ -1902,11 +1897,11 @@ object Graph {
         auth = edges.join(hub.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(sum("h").as("a"))
         auth = nodes.join(auth, Seq("id"), "left")
-          .select(col("id"), coalesce(col("a"), lit(0L)).as("a")).localCheckpoint()
+          .select(col("id"), coalesce(col("a"), lit(0L)).as("a")).localCheckpoint() // keep: round
         hub = edges.join(auth.withColumnRenamed("id", "dst"), "dst")
           .groupBy(col("src").as("id")).agg(sum("a").as("h"))
         hub = nodes.join(hub, Seq("id"), "left")
-          .select(col("id"), coalesce(col("h"), lit(0L)).as("h")).localCheckpoint()
+          .select(col("id"), coalesce(col("h"), lit(0L)).as("h")).localCheckpoint() // keep: round
       }
     }
     nodes.join(hub, "id").join(auth, "id")
@@ -1976,7 +1971,7 @@ object Graph {
     val t = Similarity.effectiveThreshold(s, d, requested = 0.3)
     var edges = Dedup.embedPairsMemo(s, d, t)
       .select(col("vec_a").cast("long").as("a"), col("vec_b").cast("long").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     // rounds only shrink the edge set, so round 1's price bounds them all
     priceWedges(edges, "g_ktruss")
     def supports(e: DataFrame): DataFrame = {
@@ -1994,7 +1989,7 @@ object Graph {
       for (_ <- 1 to rounds) {
         edges = edges.join(supports(edges), Seq("a", "b"), "left")
           .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-          .select("a", "b").localCheckpoint()
+          .select("a", "b").localCheckpoint() // keep: round
         prevN = lastN; lastN = edges.count()
       }
     }
@@ -2023,7 +2018,6 @@ object Graph {
          |  WHERE coalesce(s.n, 0) >= 1
          |)""".stripMargin
     }.mkString(", ")
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     s"""WITH ${OracleCtes.embedPairsCtes(0.3)}, e0 AS MATERIALIZED (
        |  SELECT pa, pb FROM pairs
        |), $rounds, adj4 AS MATERIALIZED (
@@ -2062,7 +2056,7 @@ object Graph {
   def richClub(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val deg = pairs.select(col("a").as("id")).union(pairs.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     val ks = s.range(0, 5).select(col("id").cast("int").as("k"))
@@ -2169,7 +2163,7 @@ object Graph {
     val t = Similarity.effectiveThreshold(s, d, requested = 0.25)
     val edges = Dedup.embedPairsMemo(s, d, t)
       .select(col("vec_a").cast("long").as("a"), col("vec_b").cast("long").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     priceWedges(edges, "g_cliques4")
     // triangles a < b < c via the ordered wedge join (edges carry a < b)
     val tri = edges
@@ -2183,7 +2177,7 @@ object Graph {
       .join(edges.select(col("a").as("b"), col("b").as("d")), Seq("b", "d"))
       .join(edges.select(col("a").as("c"), col("b").as("d")), Seq("c", "d"))
       .select(col("a"), col("b"), col("c"), col("d"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     Seq("a", "b", "c", "d")
       .map(x => k4.select(col(x).as("vec_id")))
       .reduce(_ unionAll _)
@@ -2194,7 +2188,6 @@ object Graph {
   /** SQL twin: identical ordered triangle + extension joins on the
     * same auto-thresholded graph (effTCtes replays the ladder pick). */
   val cliques4Sql: String = {
-    val cosine = ExactRound.rSql("list_inner_product(a.v, b.v) / (a.nrm * b.nrm)", 6)
     s"""WITH ${OracleCtes.embedPairsCtes(0.25)}, e AS MATERIALIZED (
        |  SELECT pa AS a, pb AS b FROM pairs
        |), tri AS MATERIALIZED (
@@ -2237,17 +2230,17 @@ object Graph {
     val rounds = 4
     val pairs = Dedup.ngramJaccard(s, d)
       .select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val nodes = pairs.select(col("a").as("id"))
       .union(pairs.select(col("b").as("id"))).distinct()
     def prio(r: Int) =
       (graft.functions.Djb2.djb2_hash(
         concat(lit(r.toString), lit("#"), col("id").cast("string")))
         .bitwiseAND(lit(2147483647L)) * 100000000L + col("id")).as("p")
-    var active = nodes.localCheckpoint()
+    var active = nodes.localCheckpoint() // keep: round
     var edges = pairs.select(col("a").as("u"), col("b").as("w"))
       .union(pairs.select(col("b").as("u"), col("a").as("w")))
-      .localCheckpoint()
+      .localCheckpoint() // keep: round
     var colored = nodes.filter(lit(false))
       .select(col("id"), lit(-1).as("color"))
     // loop partitions from the measured edge count, AQE's per-stage
@@ -2260,13 +2253,13 @@ object Graph {
           .groupBy(col("u").as("id")).agg(max("pw").as("max_nbr"))
         val winners = pr.join(nbrMax, Seq("id"), "left")
           .filter(col("p") > coalesce(col("max_nbr"), lit(-1L)))
-          .select("id").localCheckpoint()
+          .select("id").localCheckpoint() // keep: round
         colored = colored.union(winners.select(col("id"), lit(r).as("color")))
-        active = active.join(winners, Seq("id"), "left_anti").localCheckpoint()
+        active = active.join(winners, Seq("id"), "left_anti").localCheckpoint() // keep: round
         edges = edges
           .join(active.select(col("id").as("u")), "u")
           .join(active.select(col("id").as("w")), "w")
-          .select("u", "w").localCheckpoint()
+          .select("u", "w").localCheckpoint() // keep: round
       }
     }
     val nUncolored = active.count()

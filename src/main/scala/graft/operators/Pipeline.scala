@@ -145,7 +145,7 @@ object Pipeline {
     val q = TextAnalysis.quality(s, d)
       .select(col("doc_id"), col("n_tokens"),
         round(col("quality_score") * 1000000).cast("long").as("sm"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val edges = q.agg(expr("percentile(sm, array(0.2D, 0.4D, 0.6D, 0.8D))").as("es"))
       .select((1 to 4).map(k => element_at(col("es"), k).as(s"e$k")): _*)
     val stage = (1 to 4).map(k => (col("sm") > col(s"e$k")).cast("long"))
@@ -499,7 +499,7 @@ object Pipeline {
       val back = s.read.parquet(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -558,7 +558,7 @@ object Pipeline {
           parts.getItem(1).cast("long").as("n_chars"),
           unescLine(parts.getItem(2)).as("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -583,7 +583,7 @@ object Pipeline {
       val back = s.read.schema("doc_id LONG, n_chars LONG, text STRING").json(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -632,7 +632,7 @@ object Pipeline {
         .csv(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -694,7 +694,7 @@ object Pipeline {
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"),
           col("_metadata.file_path").as("fp_file"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back.drop("fp_file"))
         .join(back.groupBy("shard")
           .agg(countDistinct(col("fp_file")).as("n_files")), "shard")
@@ -774,7 +774,7 @@ object Pipeline {
       val back = s.read.option("basePath", out).parquet(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       // the erasure gate: no listed doc may survive
       if (back.filter(col("doc_id") % 97 === 0).limit(1).count() > 0)
         throw new IllegalStateException("a listed doc survived the forget job")
@@ -922,7 +922,7 @@ object Pipeline {
                 x => concat(x.getField("doc_id").cast("string"), lit(":"), x.getField("fp"))),
               ","), lit("utf-8"))).as("content_md5"))
           .select(lit(v).as("version"), col("n_docs"), col("total_chars"), col("content_md5"))
-      val snaps = (1 to 3).map(snapshot).reduce(_ unionByName _).localCheckpoint()
+      val snaps = (1 to 3).map(snapshot).reduce(_ unionByName _).localCheckpoint() // keep: outlives
       val v2v3 = snaps.filter(col("version") >= 2)
         .agg((countDistinct("content_md5") === 1).as("compaction_invariant"))
       snaps.crossJoin(broadcast(v2v3)).orderBy("version")
@@ -979,7 +979,7 @@ object Pipeline {
       val keyed = docs
         .withColumn("parity", col("doc_id") % 2)
         .withColumn("q", expr(s"(doc_id * 4) div ${mx + 1}"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
       // per-file stats BEFORE writing — bounded: 8 manifest entries
       val stats = keyed.groupBy("parity", "q")
         .agg(count(lit(1)).as("n_rows"), min("doc_id").as("mn"),
@@ -1401,11 +1401,11 @@ object Pipeline {
         .select(col("day"), expr("p div 32").as("w"),
           expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT))").as("m"))
         .groupBy("day", "w").agg(expr("bit_or(m)").as("bits"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: reuse
       // the lookup set: 5 data-derived ids (deterministic, both engines)
       val keys = e.select(col("event_id").as("k")).distinct()
         .filter(col("k") % 17 === 3).orderBy("k").limit(5)
-        .localCheckpoint()
+        .localCheckpoint() // keep: reuse
       // per-key query masks, matched per day iff EVERY word's bits present
       val q = keys
         .select(col("k"), explode(expr(bloomPositions("k"))).as("p"))
@@ -1552,7 +1552,7 @@ object Pipeline {
       val manifest = layout.groupBy("zbucket")
         .agg(min("user_id").as("mn_u"), max("user_id").as("mx_u"),
           min("dom").as("mn_d"), max("dom").as("mx_d"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: reuse
       // FILE PLANNING: driver-side selection over the ≤16-row manifest —
       // the one place a collect is the design, same as every table format
       val selected = manifest
@@ -1633,7 +1633,7 @@ object Pipeline {
       val back = s.read.schema("doc_id LONG, n_chars LONG, text STRING").orc(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -1665,7 +1665,7 @@ object Pipeline {
         .format("xml").load(out)
         .select(col("doc_id"), col("n_chars"), col("text"),
           col("shard").cast("int").as("shard"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -1895,7 +1895,7 @@ object Pipeline {
         .select(col("doc_id"), col("n_chars"), col("text"), col("lang"), col("source"))
         .write.mode("overwrite").parquet(s"$out/gen=2")
       val back = s.read.option("mergeSchema", "true").parquet(out)
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: outlives
       back.groupBy(col("gen").cast("long").as("gen"),
           coalesce(col("lang"), lit("(missing)")).as("lang"))
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
@@ -1940,7 +1940,7 @@ object Pipeline {
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(out)
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: outlives
       back.agg(count(lit(1)).as("n_total"),
           sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("n_good"),
           sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
@@ -1983,7 +1983,7 @@ object Pipeline {
         .write.mode("overwrite").parquet(s"$out/compacted")
       val back = s.read.parquet(s"$out/compacted")
         .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: outlives
       manifestAgg(back)
     }
   }
@@ -2291,7 +2291,7 @@ object Pipeline {
     val docs = graft.Tables.documents(s, d)
       .select(col("doc_id"), fp.as("fp"), bucket.as("bucket"))
       .select(col("doc_id"), col("fp"), splitCol.as("split"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val nearRows = graft.operators.Dedup.ngramJaccard(s, d)
       .select(col("doc_a"), col("doc_b"))
       .join(docs.select(col("doc_id").as("doc_a"), col("split").as("sa")), "doc_a")
@@ -2303,7 +2303,7 @@ object Pipeline {
     val dupFps = docs.groupBy("fp").agg(count(lit(1)).as("k")).filter(col("k") > 1)
     val ksp = docs.join(dupFps.select("fp"), "fp")
       .groupBy("fp", "split").agg(count(lit(1)).as("ks"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val exactSame = ksp.filter(col("ks") > 1)
       .select(col("split").as("split_a"), col("split").as("split_b"),
         expr("(ks * (ks - 1)) div 2").as("n"))
@@ -2428,7 +2428,7 @@ object Pipeline {
           (abs(col("est_disk") - col("n_exact")) * lit(20L) <= col("n_exact")).as("est_ok"))
         .orderBy("day")
       // materialize before the scratch "previous run" artifact vanishes
-      res.localCheckpoint()
+      res.localCheckpoint() // keep: outlives
     }
   }
 
@@ -2474,7 +2474,7 @@ object Pipeline {
           (min(col("fs")) > 0).as("size_ok"),
           sum(col("n_chars")).as("total_chars"))
         .orderBy("shard")
-        .localCheckpoint() // materialize before the scratch layout vanishes
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -2512,7 +2512,6 @@ object Pipeline {
       // write path: resolve the keyed delete to positions, once
       val dv = withPos.filter(col("doc_id") % 17 === 3)
         .select(col("shard"), col("pos"))
-        .localCheckpoint() // the sidecar artifact
       // read path: positional anti-join — the key predicate never re-runs
       withPos.join(dv, Seq("shard", "pos"), "left_anti")
         .groupBy("shard")
@@ -2520,7 +2519,7 @@ object Pipeline {
           sum(col("n_chars")).as("chars_live"),
           sum(when(col("doc_id") % 17 === 3, 1L).otherwise(0L)).as("leaked_deletes"))
         .orderBy("shard")
-        .localCheckpoint() // materialize before the scratch layout vanishes
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -2596,7 +2595,7 @@ object Pipeline {
         .withColumn("files_after", lit(filesAfter))
         .withColumn("week_prune_ok", lit(true))
         .orderBy("wk")
-        .localCheckpoint() // materialize before the scratch layouts vanish
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -2642,7 +2641,7 @@ object Pipeline {
       val back = s.read.parquet(out)
         .select(col("l_shipdate"), col("l_extendedprice"),
           col("_metadata.file_path").as("f"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
       // lexicographic == chronological for this format, and immune to
       // the column's TIMESTAMP vs TIMESTAMP_NTZ external type
       val fmtCol = date_format(col("l_shipdate"), "yyyy-MM-dd HH:mm:ss")
@@ -2661,7 +2660,7 @@ object Pipeline {
           sum(round(col("l_extendedprice") * lit(1000000L)).cast("long")).as("rev_us"))
         .withColumn("ranges_disjoint", lit(true))
         .orderBy("month")
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -2797,7 +2796,7 @@ object Pipeline {
         .agg(count(lit(1)).as("n_rows"), sum(col("value_c")).as("value_c"))
         .withColumn("others_untouched", lit(true))
         .orderBy("day")
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -2838,7 +2837,7 @@ object Pipeline {
           col("_metadata.row_index").as("pos"))
       val isDel = col("doc_id") % 17 === 3
       // MoR: positions resolved once into the sidecar, read = anti-join
-      val dv = base.filter(isDel).select(col("shard"), col("pos")).localCheckpoint()
+      val dv = base.filter(isDel).select(col("shard"), col("pos"))
       val morLive = base.join(dv, Seq("shard", "pos"), "left_anti")
         .groupBy("shard")
         .agg(count(lit(1)).as("n_live"), sum("n_chars").as("chars_live"))
@@ -2861,7 +2860,7 @@ object Pipeline {
               .as("cow_files_rewritten"),
             lit(0).as("mor_files_rewritten"))
           .orderBy("shard")
-          .localCheckpoint()
+          .localCheckpoint() // keep: outlives
       }
     }
   }
@@ -3078,7 +3077,7 @@ object Pipeline {
     val k = 50
     val h = md5(concat_ws("-", lit("doc"), col("doc_id"), lit("salt42")))
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), h.as("h"))
-    val global = docs.orderBy(col("h"), col("doc_id")).limit(k).localCheckpoint()
+    val global = docs.orderBy(col("h"), col("doc_id")).limit(k).localCheckpoint() // keep: reuse
     val shardW = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy(col("h"), col("doc_id"))
     val merged = docs

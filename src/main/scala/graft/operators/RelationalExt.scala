@@ -156,7 +156,7 @@ object RelationalExt {
     // three consumers of one exchange must leave ≥ 2 ReusedExchange
     // nodes in the executed plan — a regression to per-branch scans
     // flips the gate, not just a bench number
-    val materialized = res.localCheckpoint()
+    val materialized = res.localCheckpoint() // keep: certificate
     if (org.apache.spark.sql.graftbridge.PlanProbe.reusedExchanges(res) < 2)
       throw new IllegalStateException(
         "q21_approx: lineitem exchange not reused across the sketch/median/rank branches")

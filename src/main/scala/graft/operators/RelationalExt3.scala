@@ -427,15 +427,15 @@ object RelationalExt3 {
   /** SQL twin: identical per-period quantile_cont edges, absent-as-0
     * coalesce, and share arithmetic. */
   val q48Sql: String = {
-    def es(p: Int) = (1 to 4).map(k => s"quantile_cont(rev_us, 0.${2 * k}) AS e$k")
+    val es = (1 to 4).map(k => s"quantile_cont(rev_us, 0.${2 * k}) AS e$k")
       .mkString(", ")
     val q = (1 to 4).map(k => s"CAST(rev_us > e$k AS INT)").mkString(" + ")
     s"""WITH rev AS (
        |  SELECT o_custkey, CAST(year(o_orderdate) >= 1998 AS INT) AS period,
        |    CAST(sum(CAST(round(o_totalprice * 1000000) AS BIGINT)) AS BIGINT) AS rev_us
        |  FROM orders GROUP BY 1, 2
-       |), e0 AS (SELECT ${es(0)} FROM rev WHERE period = 0
-       |), e1 AS (SELECT ${es(1)} FROM rev WHERE period = 1
+       |), e0 AS (SELECT $es FROM rev WHERE period = 0
+       |), e1 AS (SELECT $es FROM rev WHERE period = 1
        |), q0 AS (
        |  SELECT o_custkey, CAST(1 + $q AS BIGINT) AS qb FROM rev, e0 WHERE period = 0
        |), q1 AS (

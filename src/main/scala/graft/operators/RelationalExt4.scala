@@ -111,7 +111,7 @@ object RelationalExt4 {
           .orderBy("o_orderpriority")
         // materialize BEFORE probing (metrics/final plan exist only after
         // execution) and BEFORE dropping the tables it reads
-        val materialized = agg.localCheckpoint()
+        val materialized = agg.localCheckpoint() // keep: certificate
         val (nShuffles, _) = PlanProbe.shufflesAndSortsUnderSmj(agg)
         materialized.withColumn("n_shuffles_below_join", lit(nShuffles))
       } finally {
@@ -293,7 +293,7 @@ object RelationalExt4 {
         .agg(count(lit(1)).as("n_events"),
           sum(col("value_c") * col("mult")).as("weighted_c"))
         .orderBy("event_type")
-      val materialized = agg.localCheckpoint()
+      val materialized = agg.localCheckpoint() // keep: certificate
       val nSkewed = PlanProbe.skewedShuffleReads(agg)
       if (nSkewed < 1)
         throw new IllegalStateException(
@@ -390,7 +390,7 @@ object RelationalExt4 {
       val agg = fact.join(urgent.hint("merge"), col("l_orderkey") === col("o_orderkey"))
         .agg(count(lit(1)).as("n_lines"),
           sum(round(col("l_extendedprice") * lit(1000000L)).cast("long")).as("rev_us"))
-      val materialized = agg.localCheckpoint()
+      val materialized = agg.localCheckpoint() // keep: certificate
       val nBloom = PlanProbe.bloomFilterApplications(agg)
       if (nBloom < 1)
         throw new IllegalStateException(

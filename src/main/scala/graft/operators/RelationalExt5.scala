@@ -116,7 +116,7 @@ object RelationalExt5 {
         expr("shiftright(user_id, 6)").as("block"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 64 AS INT))").as("bit"))
     val bm = bits.groupBy("event_type", "block")
-      .agg(expr("bit_or(bit)").as("bm")).persist()
+      .agg(expr("bit_or(bit)").as("bm")).persist() // keep: reuse
     try {
       val aud = bm.groupBy("event_type")
         .agg(sum(expr("bit_count(bm)")).cast("long").as("aud"))
@@ -133,7 +133,7 @@ object RelationalExt5 {
       grid.join(inter, Seq("type_a", "type_b"), "left")
         .na.fill(0L, Seq("n_shared"))
         .orderBy("type_a", "type_b")
-        .localCheckpoint()
+        .localCheckpoint() // keep: outlives
     } finally bm.unpersist()
   }
 
@@ -337,14 +337,14 @@ object RelationalExt5 {
     val daily = Tables.events(s, d)
       .select(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      .persist()
+      .persist() // keep: reuse
     try {
       daily.count() // materialize the cache
       val perType = daily.groupBy("event_type").agg(sum(col("n")).as("n_events"),
         count(lit(1)).as("n_days"))
       val total = daily.agg(sum(col("n")).as("n_total"))
       val res = perType.crossJoin(broadcast(total)).orderBy("event_type")
-      val materialized = res.localCheckpoint()
+      val materialized = res.localCheckpoint() // keep: certificate
       import org.apache.spark.sql.graftbridge.PlanProbe
       val hits = PlanProbe.nodes(res)
         .count(_.getClass.getSimpleName.contains("InMemoryTableScan"))
@@ -453,7 +453,7 @@ object RelationalExt5 {
               s"static join strategy inconsistent with the build-side subtree estimate " +
                 s"($statsBytes B vs $threshold B threshold): broadcast=$isBroadcast — " +
                 "CBO size estimate unused")
-          val materialized = joined.localCheckpoint()
+          val materialized = joined.localCheckpoint() // keep: outlives
           materialized.withColumn("cbo_broadcast", lit(isBroadcast))
         }
         agg
@@ -540,7 +540,7 @@ object RelationalExt5 {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
         .orderBy("lang")
-      val materialized = agg.localCheckpoint()
+      val materialized = agg.localCheckpoint() // keep: certificate
       val scans = PlanProbe.nodes(agg)
         .filter(_.getClass.getSimpleName.contains("FileSourceScan"))
         .map(_.toString)
@@ -751,7 +751,7 @@ object RelationalExt5 {
             .select(col("o_orderkey"), col("o_orderpriority"),
               round(col("o_totalprice") * lit(100)).cast("long").as("price_c"))
             .orderBy("o_orderkey")
-          (p, p.localCheckpoint())
+          (p, p.localCheckpoint()) // keep: certificate
         }
         val scanStr = PlanProbe.nodes(probe)
           .filter(_.getClass.getSimpleName.contains("FileSourceScan"))
@@ -837,7 +837,7 @@ object RelationalExt5 {
       .agg(count(lit(1)).as("n_signups"),
         sum(round(col("value") * lit(100)).cast("long")).as("value_c"))
       .orderBy("day")
-    val materialized = ev.localCheckpoint()
+    val materialized = ev.localCheckpoint() // keep: certificate
     val (nCoalesced, minParts) = PlanProbe.coalescedShuffleReads(ev)
     if (nCoalesced < 1)
       throw new IllegalStateException(
@@ -880,7 +880,7 @@ object RelationalExt5 {
       .filter(col("rn") <= 3)
       .select("o_orderpriority", "rn", "o_orderkey", "price_c")
       .orderBy("o_orderpriority", "rn")
-    val materialized = top.localCheckpoint()
+    val materialized = top.localCheckpoint() // keep: certificate
     if (PlanProbe.windowGroupLimits(top) < 1)
       throw new IllegalStateException(
         "no WindowGroupLimit in executed plan — top-k ran as a full window sort")
@@ -986,7 +986,7 @@ object RelationalExt5 {
     val topV = daily.orderBy(col("value_c").desc, col("day")).limit(1)
       .withColumn("metric", lit("max_value"))
     val res = topN.unionByName(topV).select("metric", "day", "n_events", "value_c")
-    val materialized = res.localCheckpoint()
+    val materialized = res.localCheckpoint() // keep: certificate
     if (PlanProbe.reusedExchanges(res) < 1)
       throw new IllegalStateException(
         "no ReusedExchange in executed plan — the duplicate shuffle was recomputed")

@@ -143,7 +143,7 @@ object RelationalExt6 {
         .agg(count(lit(1)).as("n_orders"),
           countDistinct(col("c_custkey")).as("n_customers"))
         .withColumn("variant", lit(name))
-      val m = joined.localCheckpoint()
+      val m = joined.localCheckpoint() // keep: certificate
       val execs = PlanProbe.nodes(joined).map(_.getClass.getSimpleName)
       if (!execs.exists(_.startsWith(expect)))
         throw new IllegalStateException(

@@ -164,7 +164,7 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("norm"), simqMicros.as("simq_micros"))
       .orderBy(col("simq_micros").desc, col("vec_id"))
       .limit(20)
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     def pickNext(selected: DataFrame, rank: Int): DataFrame = {
       val remaining = cand.join(selected.select("vec_id"), Seq("vec_id"), "left_anti")
       val sel = selected.select(col("v").as("s_v"), col("norm").as("s_norm"))
@@ -187,7 +187,7 @@ object Similarity {
       .limit(1)
       .withColumn("rank", lit(1L))
     val selected = (2 to 5).foldLeft(first) { (sel, k) =>
-      sel.union(pickNext(sel, k)).localCheckpoint()
+      sel.union(pickNext(sel, k)).localCheckpoint() // keep: round
     }
     selected.select(col("rank"), col("vec_id"), col("simq_micros"), col("mmr_decimicros"))
       .orderBy("rank")
@@ -474,7 +474,7 @@ object Similarity {
     Shared.withLoopParallelism(s, nVec, rowsPerPartition = 100_000L) {
     val b = vectors(s, d).select(col("vec_id"), col("v"), col("norm"))
       .withColumn("bucket", bucketOfN(col("v"), p))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val byA = Window.partitionBy("a").orderBy(col("cos").desc, col("nb"))
     val g0 = b.as("x")
       .join(b.as("y"),
@@ -483,7 +483,7 @@ object Similarity {
         ExactRound.r(dot(col("x.v"), col("y.v")) / (col("x.norm") * col("y.norm")), 6)
           .as("cos"))
       .withColumn("rn", row_number().over(byA)).filter(col("rn") <= 5)
-      .select("a", "nb").localCheckpoint()
+      .select("a", "nb").localCheckpoint() // keep: reuse
     val cand = g0.as("p").join(g0.as("q"), col("p.nb") === col("q.a"))
       .select(col("p.a").as("a"), col("q.nb").as("nb"))
       .filter(col("a") =!= col("nb"))
@@ -516,9 +516,7 @@ object Similarity {
       // materialize INSIDE the loop scope so the whole refinement chain
       // runs under the sized partitioning (the wrapper restores confs on
       // exit; a lazy tail would otherwise execute under session confs)
-      .localCheckpoint()
-    b.unpersist(blocking = false)
-    g0.unpersist(blocking = false)
+      .localCheckpoint() // keep: scope
     out
     }
   }
@@ -593,7 +591,7 @@ object Similarity {
     Shared.withLoopParallelism(s, nVec, rowsPerPartition = 100_000L) {
     val b = vectors(s, d).select(col("vec_id"), col("v"), col("norm"))
       .withColumn("bucket", bucketOfN(col("v"), p))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val byA = Window.partitionBy("a").orderBy(col("cos").desc, col("nb"))
     val g0 = b.as("x")
       .join(b.as("y"),
@@ -602,10 +600,10 @@ object Similarity {
         ExactRound.r(dot(col("x.v"), col("y.v")) / (col("x.norm") * col("y.norm")), 6)
           .as("cos"))
       .withColumn("rn", row_number().over(byA)).filter(col("rn") <= 5)
-      .select("a", "nb").localCheckpoint()
+      .select("a", "nb").localCheckpoint() // keep: reuse
     val qs = b.filter(col("vec_id") % 25 === 7)
       .select(col("vec_id").as("q"), col("v").as("qv"), col("norm").as("qn"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val corpus = b.select(col("vec_id").as("id"), col("v"), col("norm"))
     val wq = Window.partitionBy("q").orderBy(col("cos").desc, col("id"))
     def step(beam: DataFrame): DataFrame =
@@ -619,16 +617,13 @@ object Similarity {
         .select(col("q"), col("id"),
           ExactRound.r(dot(col("v"), col("qv")) / (col("norm") * col("qn")), 6).as("cos"))
         .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 3)
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
     val b0 = qs.select(col("q"), lit(1L).as("id"))
     val fin = step(step(step(b0)))
     val out = fin.select(col("q").as("query_id"), col("rn").as("rank_n"),
       col("id").as("vec_id"), col("cos"))
       .orderBy("query_id", "rank_n")
-      .localCheckpoint()
-    b.unpersist(blocking = false)
-    g0.unpersist(blocking = false)
-    qs.unpersist(blocking = false)
+      .localCheckpoint() // keep: scope
     out
     }
   }
@@ -701,10 +696,10 @@ object Similarity {
     val p = adaptivePlaneCount(nVec)
     val b = vectors(s, d).select(col("vec_id"), col("v"), col("norm"))
       .withColumn("bucket", bucketOfN(col("v"), p))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val qs = b.filter(col("vec_id") % 25 === 7)
       .select(col("vec_id").as("q"), col("v").as("qv"), col("norm").as("qn"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val corpus = b.select(col("vec_id").as("id"), col("v"), col("norm"))
     def knnGraph(nodes: DataFrame, k: Int): DataFrame = {
       val byA = Window.partitionBy("a").orderBy(col("cos").desc, col("nb"))
@@ -715,7 +710,7 @@ object Similarity {
           ExactRound.r(dot(col("x.v"), col("y.v")) / (col("x.norm") * col("y.norm")), 6)
             .as("cos"))
         .withColumn("rn", row_number().over(byA)).filter(col("rn") <= k)
-        .select("a", "nb").localCheckpoint()
+        .select("a", "nb").localCheckpoint() // keep: reuse
     }
     val g0 = knnGraph(b, 5)
     // the sparse upper layer needs LONGER-RANGE links than the base
@@ -728,9 +723,9 @@ object Similarity {
       // historical 4 cells); the 16x-sparser layer keeps ~annBucketRows
       // per cell as the corpus grows
       .withColumn("bucket", col("bucket") % lit(1 << math.max(2, p - 4)))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val g1 = knnGraph(upper, 3)
-    val entryDf = upper.agg(min("vec_id").as("entry")).localCheckpoint()
+    val entryDf = upper.agg(min("vec_id").as("entry")).localCheckpoint() // keep: reuse
     val wq = Window.partitionBy("q").orderBy(col("cos").desc, col("id"))
     // one greedy-beam step over graph g; returns (new beam with rn, the
     // scored candidate set for the walk's cost audit)
@@ -750,7 +745,7 @@ object Similarity {
       val scored = cand.join(corpus, "id").join(broadcast(qs), "q")
         .select(col("q"), col("id"),
           ExactRound.r(dot(col("v"), col("qv")) / (col("norm") * col("qn")), 6).as("cos"))
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
       (scored.withColumn("rn", row_number().over(wq)).filter(col("rn") <= width),
         scored.select("q", "id"))
     }
@@ -997,7 +992,7 @@ object Similarity {
     val n = Tables.embeddings(s, d).select("vec_id").count()
     val chosen = adaptivePlaneCount(n)
     val b16 = vectors(s, d).select(bucketOfN(col("v"), MaxPlanes).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val out = (NumPlanes to MaxPlanes).map { p =>
       b16.select(pmod(col("b"), lit(1 << p)).as("bk"))
         .groupBy("bk").agg(count(lit(1)).as("c"))
@@ -1009,7 +1004,7 @@ object Similarity {
           lit(p == chosen).as("chosen"))
     }.reduce(_ unionByName _)
       .orderBy("p")
-      .localCheckpoint()
+      .localCheckpoint() // keep: outlives
     b16.unpersist(blocking = false)
     out
   }
@@ -1183,9 +1178,9 @@ object Similarity {
       .getOrElse(EmbedBands.maxBandableRung(n))
     val l = EmbedBands.lTable((t, r))
     val sigs = EmbedBands.bandSigs(e, r, l)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val census = EmbedBands.keptCensus(sigs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val priced = census.agg(coalesce(sum(expr("bc * (bc - 1) div 2")), lit(0L)))
       .head().getLong(0)
     val combos = Seq(
@@ -1354,10 +1349,10 @@ object Similarity {
     * singleton has no a(i); it reports NULL means and the conventional
     * s = 0. */
   def silhouette(s: SparkSession, d: String): DataFrame = {
-    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint()
+    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint() // keep: reuse
     val assigned = nearestCentroid(vs, seededCentroids(vs))
       .select(col("vec_id"), col("v"), col("centroid_id").as("cl"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val samples = assigned.filter(col("vec_id") % 20 === 3)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("cl").as("q_cl"))
     val pc = assigned.crossJoin(broadcast(samples))
@@ -1450,7 +1445,7 @@ object Similarity {
     * Numerics: micros-folded distance sums, one IEEE division per
     * (cell, side) — hex-exact. */
   def incrementalIvf(s: SparkSession, d: String): DataFrame = {
-    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint()
+    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint() // keep: reuse
     val base = vs.filter(col("vec_id") % 7 =!= 1)
     val incoming = vs.filter(col("vec_id") % 7 === 1)
     val cents = seededCentroids(base)
@@ -1532,7 +1527,7 @@ object Similarity {
     * emptied by reassignment drops out (inner joins — mirrored in the
     * twin). */
   def kmeansIter(s: SparkSession, d: String): DataFrame = {
-    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint()
+    val vs = vectors(s, d).select("vec_id", "v").localCheckpoint() // keep: reuse
     // r14 (verdict item 6): two unrolled assign/update rounds over the
     // checkpointed vector table — loop partitions from the measured
     // count, AQE off below the skew-guard threshold
@@ -1551,12 +1546,12 @@ object Similarity {
           x => x.getField("m")).as("c_v"))
     val c0 = vs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("v").as("c_v"))
-    val c1 = update(assign(c0)).localCheckpoint()
+    val c1 = update(assign(c0)).localCheckpoint() // keep: reuse
     // a1 feeds BOTH the second update and the membership report — the
     // checkpoint keeps the crossJoin+argmin (the round's dominant cost)
-    // from running twice, same discipline as c1/c2
-    val a1 = assign(c1).localCheckpoint()
-    val c2 = update(a1).localCheckpoint()
+    // from running twice, same discipline as c1
+    val a1 = assign(c1).localCheckpoint() // keep: reuse
+    val c2 = update(a1)
     val sizes = a1.groupBy("centroid_id").agg(count(lit(1)).as("n_members"))
     val out = c1.select(col("centroid_id"), col("c_v").as("c_old"))
       .join(c2.select(col("centroid_id"), col("c_v").as("c_new")), "centroid_id")
@@ -1564,11 +1559,7 @@ object Similarity {
       .select(col("centroid_id"), col("n_members"),
         ExactRound.r(sqDist(col("c_old"), col("c_new")), 6).as("movement"))
       .orderBy("centroid_id")
-      .localCheckpoint()
-    vs.unpersist(blocking = false)
-    a1.unpersist(blocking = false)
-    c1.unpersist(blocking = false)
-    c2.unpersist(blocking = false)
+      .localCheckpoint() // keep: scope
     out
     }
   }
@@ -1758,7 +1749,7 @@ object Similarity {
   def filteredRecall(s: SparkSession, d: String): DataFrame = {
     val vs = vectors(s, d)
     val cents = seededCentroids(vs)
-    val assigned = nearestCentroid(vs, cents).drop("dist").localCheckpoint()
+    val assigned = nearestCentroid(vs, cents).drop("dist").localCheckpoint() // keep: reuse
     val qRow = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v"), col("norm").as("q_norm"), col("label").as("q_label"))
     // query-to-centroid rank: 10 rows, the unpartitioned window is bounded
@@ -1767,7 +1758,7 @@ object Similarity {
         ExactRound.r(sqDist(col("q_v"), col("c_v")), 6).as("qdist"))
       .withColumn("crn", row_number().over(
         Window.orderBy(col("qdist"), col("centroid_id"))))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val truth = vs.filter(col("vec_id") =!= 0).crossJoin(broadcast(qRow))
       .filter(col("label") === col("q_label"))
       .select(col("vec_id"),
@@ -1784,7 +1775,7 @@ object Similarity {
     }.reduce(_ union _)
       // cand feeds both the top-k/hit path and the candidate-count agg;
       // without this the probe joins (and qRow broadcast) execute twice
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val top = cand.withColumn("rn", row_number().over(
         Window.partitionBy("n_probe").orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rn") <= 5)
@@ -2018,7 +2009,7 @@ object Similarity {
       .limit(2).select("centroid_id")
     val cand = assigned.join(broadcast(probeCells), "centroid_id")
       .filter(col("vec_id") =!= 0)
-      .select("vec_id").localCheckpoint()
+      .select("vec_id")
     // --- PQ ADC half (annPq's machinery), candidates only
     val jays = explode(array((0 until PqM).map(lit): _*)).as("j")
     val subs = vs.select(col("vec_id"), jays, col("v"))
@@ -2180,14 +2171,12 @@ object Similarity {
     * recall = hits/10.0 is a dyadic-exact division — bit-portable with
     * no rounding. */
   def recallEval(s: SparkSession, d: String): DataFrame = {
-    // each retrieval is a complex multi-stage plan; materialize its
-    // 10-row result so the eval union is three tiny joins instead of
-    // one giant composed plan (truth alone had three consumers —
-    // measured: 11 s → ~2 s, the retrievals' own cost)
+    // truth has three consumers, one per retrieval — materialize it
+    // once (measured: 11 s → ~2 s, the retrievals' own cost)
     val truth = annBrute(s, d).select(col("vec_id")).withColumn("hit", lit(1L))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     def evalOf(name: String, approx: DataFrame): DataFrame =
-      approx.select("vec_id").localCheckpoint().join(truth, Seq("vec_id"), "left")
+      approx.select("vec_id").join(truth, Seq("vec_id"), "left")
         .agg(count(lit(1)).as("n_retrieved"),
           coalesce(sum("hit"), lit(0L)).as("n_hits"))
         .select(lit(name).as("method"), col("n_retrieved"), col("n_hits"),
@@ -2321,7 +2310,7 @@ object Similarity {
     val vs = vectors(s, d)
     val cents = seededCentroids(vs)
     val assigned = nearestCentroid(vs, cents).select("vec_id", "v", "norm", "centroid_id")
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val q = assigned.filter(col("vec_id") === 0)
       .select(col("v").as("q_v"), col("norm").as("q_norm"))
     val cellRank = cents.crossJoin(broadcast(q))
@@ -2941,7 +2930,7 @@ object Similarity {
       .withColumn("lo", expr(packLo)).withColumn("hi", expr(packHi))
       .withColumn("p", jl(col("v")))
       .withColumn("pre", slice(col("v"), 1, 16))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     val q = vs.filter(col("vec_id") === 0)
       .select(col("v").as("q_v"), col("norm").as("q_norm"),
         col("lo").as("q_lo"), col("hi").as("q_hi"),

@@ -252,7 +252,7 @@ object TextAnalysis {
       .groupBy("gram", "doc_id").agg(count(lit(1)).as("c"))
       .groupBy("gram")
       .agg(count(lit(1)).as("doc_support"), sum("c").as("total_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val suppressed = stats.filter(col("doc_support") < 5).limit(1).count()
     require(suppressed > 0, "ngram release vacuous: no gram below the support threshold")
     val released = stats.filter(col("doc_support") >= 5)
@@ -1324,7 +1324,7 @@ object TextAnalysis {
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
       .filter(length(col("w")) >= 3)
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: reuse
     // D₀ ∪ D₁ ∪ D₂: the word, every 1-deletion, every 2-deletion
     // (delete j > i after j so index i stays valid). ed(u,v) ≤ 2 ⟹ the
     // neighborhoods intersect (FastSS); a shared variant only bounds
@@ -1396,7 +1396,7 @@ object TextAnalysis {
         split(trim(col("text")), "[ \t\n\r]+"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), split(col("bg"), " ").getItem(0).as("w1"),
         split(col("bg"), " ").getItem(1).as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val model = pair.filter(col("doc_id") % 2 === 0)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val ctx = model.groupBy("w1").agg(sum("c12").as("c1"))
@@ -1529,7 +1529,7 @@ object TextAnalysis {
           "transform(sequence(1, size(syms) - 1), i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum("n").as("n_occ"))
-    var words = vocab.localCheckpoint()
+    var words = vocab.localCheckpoint() // keep: reuse
     val merges = Seq.newBuilder[DataFrame]
     // loop partitions from the measured vocabulary size, AQE's
     // per-stage jobs off for the rounds (Shared.withLoopParallelism)
@@ -1537,7 +1537,7 @@ object TextAnalysis {
       for (r <- 1 to BpeRounds) {
         val best = pairCounts(words)
           .orderBy(col("n_occ").desc, col("l"), col("r")).limit(1)
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
         merges += best.select(lit(r).as("round"),
           col("l").as("left_sym"), col("r").as("right_sym"), col("n_occ"))
         words = words.crossJoin(broadcast(best))
@@ -1546,7 +1546,7 @@ object TextAnalysis {
               concat(lit("<"), col("l"), lit("><"), col("r"), lit(">")),
               concat(lit("<"), col("l"), col("r"), lit(">"))).as("w"),
             col("n"))
-          .localCheckpoint()
+          .localCheckpoint() // keep: round
       }
     }
     (merges.result(), words)
@@ -1949,15 +1949,15 @@ object TextAnalysis {
     val sets = chunks.distinct()
       .groupBy("doc_id")
       .agg(sort_array(collect_set(col("chunk_hash"))).as("chs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val sigs = sets
       .withColumn("sig", graft.functions.MinHashFns.minhash_sig(col("chs")))
       .select(col("doc_id"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // census-derived geometry (priced over distinct signatures BEFORE
     // any pair exists) — lands on rung 2 on every driver corpus
     val chosenR = Dedup.censusBandRows(sigs)
-    val cands = Dedup.bandCandidates(sigs, bandRows = chosenR)
+    val cands = Dedup.bandCandidates(Dedup.sigGroups(sigs), bandRows = chosenR)
     // r13: the exact verify runs sorted_jaccard over 64-bit hashes of
     // the chunk md5s instead of array_intersect/array_union over the
     // md5 STRING arrays (the d_lsh_tune treatment; signature/candidate
@@ -1981,7 +1981,7 @@ object TextAnalysis {
           .as("cdc_jaccard"),
         lit(chosenR.toLong).as("band_rows"))
       .filter(col("cdc_jaccard") >= 0.5)
-      .localCheckpoint()
+      .localCheckpoint() // keep: outlives
     sets.unpersist(blocking = false); sigs.unpersist(blocking = false)
     out.orderBy("doc_a", "doc_b")
   }
@@ -2083,7 +2083,7 @@ object TextAnalysis {
     val words = Tables.parallelize(Tables.documents(s, d))
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
       .groupBy("term").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val prefTop = words.filter(length(col("term")) >= 2)
       .select(explode(expr(
         "transform(sequence(2, least(4, length(term))), l -> substring(term, 1, l))"))
@@ -2117,7 +2117,7 @@ object TextAnalysis {
     var state = words
       .select(col("term"), col("cnt"), lit(1).as("pos"),
         array().cast("array<string>").as("pieces"))
-      .localCheckpoint()
+      .localCheckpoint() // keep: round
     var done: DataFrame = state.filter(lit(false))
     var round = 0
     while (!state.isEmpty) {
@@ -2130,9 +2130,9 @@ object TextAnalysis {
             .otherwise(concat(lit("##"), expr("substring(term, pos, pick)"))))))
         .withColumn("pos", col("pos") + col("pick"))
         .select("term", "cnt", "pos", "pieces")
-        .localCheckpoint()
+        .localCheckpoint() // keep: round
       done = done.unionByName(stepped.filter(col("pos") > length(col("term"))))
-      state = stepped.filter(col("pos") <= length(col("term"))).localCheckpoint()
+      state = stepped.filter(col("pos") <= length(col("term"))).localCheckpoint() // keep: round
     }
     done.select(explode(col("pieces")).as("piece"), col("cnt"))
       .groupBy("piece")
@@ -2401,7 +2401,7 @@ object TextAnalysis {
       .select(explode(split(trim(col("text")), "[ \t\n\r]+")).as("term"))
       .filter(col("term").rlike("^[!-~]{1,12}$"))
       .groupBy("term").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // seed: every substring of length 1..4 of every distinct term,
     // frequency-weighted by term count (overlapping occurrences count)
     val subs = words.select(col("cnt"), explode(expr(
@@ -2409,7 +2409,7 @@ object TextAnalysis {
           |  p -> transform(sequence(p, least(p + 3, length(term))),
           |       q -> substring(term, p, q - p + 1))))""".stripMargin)).as("piece"))
       .groupBy("piece").agg(sum("cnt").as("f"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     val chars1 = subs.filter(length(col("piece")) === 1)
     val top300 = subs.filter(length(col("piece")) >= 2)
       .orderBy(desc("f"), col("piece")).limit(300)
@@ -2474,7 +2474,7 @@ object TextAnalysis {
         .groupBy("piece").agg(sum("cnt").as("u"))
 
     val u1 = usage(viterbi(inv1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // M-step prune: keep the 200 most-used pieces, plus every single
     // char (coverage: any term stays segmentable), re-scored by usage
     val kept = u1.orderBy(desc("u"), col("piece")).limit(200)

@@ -193,21 +193,19 @@ object EventStream {
     * sizes the run from the bytes `df` reads ([[sourceBytes]]) and sets
     * the streaming confs for it ([[streamConfs]]); takes the checkpoint
     * from [[graft.Scratch]] unless the caller owns one (a restart shares
-    * one across runs); runs the query until its input is consumed — or,
-    * under `Trigger.AvailableNow`, waits for it to stop itself, throwing
-    * if it does not; then stops it and returns its progress, which a
-    * certificate can read. `sink` completes the writer: output mode and
-    * foreachBatch, or a format and its path. */
-  private def runStream(s: SparkSession, df: DataFrame,
-      trigger: Trigger = Trigger.ProcessingTime(0L), checkpoint: Option[String] = None)(
+    * one across runs); runs the query under `Trigger.AvailableNow` — every
+    * source is a finite file set, so the query drains what is there at
+    * start and stops itself — waits for that, then returns its progress,
+    * which a certificate can read. `sink` completes the writer: output
+    * mode and foreachBatch, or a format and its path. */
+  private def runStream(s: SparkSession, df: DataFrame, checkpoint: Option[String] = None)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Array[StreamingQueryProgress] = {
     val confs = streamConfs(s, sourceBytes(s, df))
     def run(ckpt: String) = graft.operators.Shared.withConfs(s, confs) {
-      val q = sink(df.writeStream).option("checkpointLocation", ckpt).trigger(trigger).start()
+      val q = sink(df.writeStream).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
       try {
-        if (trigger != Trigger.AvailableNow()) q.processAllAvailable()
-        else if (!q.awaitTermination(120000))
-          throw new IllegalStateException("Trigger.AvailableNow did not self-terminate")
+        q.awaitTermination()
         q.recentProgress
       } finally q.stop()
     }
@@ -231,9 +229,9 @@ object EventStream {
     * per-run state and goes when the query stops. A zero-emission drain
     * (no batch wrote) writes an empty table with the stream's schema, so
     * `out` always reads back as one parquet table. */
-  private[graft] def drainToFiles(s: SparkSession, df: DataFrame, out: String, mode: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): Array[StreamingQueryProgress] = {
-    val progress = runStream(s, df, trigger) {
+  private[graft] def drainToFiles(s: SparkSession, df: DataFrame, out: String,
+      mode: String): Array[StreamingQueryProgress] = {
+    val progress = runStream(s, df) {
       _.outputMode(mode).foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         batch.write.mode(if (mode == "complete") "overwrite" else "append").parquet(out)
       }
@@ -254,8 +252,13 @@ object EventStream {
   private def drain(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
     val out = gateDir(name)
     drainToFiles(s, df, out, mode)
-    s.read.parquet(out)
+    readGate(s, out, df)
   }
+
+  /** Reads back what [[drainToFiles]] wrote from `df` into `out`, with
+    * the schema the drain wrote it with: no schema-inference job. */
+  private def readGate(s: SparkSession, out: String, df: DataFrame): DataFrame =
+    s.read.schema(df.schema).parquet(out)
 
   /** Tumbling 5-minute window counts/sums per event type via a real
     * streaming query. Each parquet file is a micro-batch; complete mode
@@ -805,7 +808,7 @@ object EventStream {
   private def clickPurchaseDir(s: SparkSession, d: String): java.io.File =
     graft.operators.Shared.memoDir(s, d, "st_click_purchase") { dir =>
       val ev = Tables.events(s, d).select("event_id", "ts", "user_id", "event_type")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val ticks = ev.agg(max("ts").as("mts"))
         .select(explode(array(
           struct(lit(-1L).as("event_id"),
@@ -876,7 +879,6 @@ object EventStream {
           coalesce(date_format(col("purchase_ts"), fmt), lit("")).as("purchase_ts"),
           col("purchase_id").isNotNull.as("matched"))
         .orderBy("click_id", "purchase_id")
-        .localCheckpoint()
     }
   }
 
@@ -1092,7 +1094,7 @@ object EventStream {
   def multiSourceWatermark(s: SparkSession, d: String): DataFrame = {
     val base = graft.operators.Shared.memoDir(s, d, "st_msw") { dir =>
       val raw = Tables.events(s, d).select("event_id", "ts", "event_type")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val da = new java.io.File(dir, "a"); da.mkdirs()
       val db = new java.io.File(dir, "b"); db.mkdirs()
       val ev = raw.filter(col("event_id") % 2 === 0)
@@ -1208,7 +1210,7 @@ object EventStream {
   def lateData(s: SparkSession, d: String): DataFrame = {
     val dataDir = graft.operators.Shared.memoDir(s, d, "st_late") { dir =>
       val raw = Tables.events(s, d).select("event_id", "ts", "event_type")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       def writeBatch(df: DataFrame, name: String, mtime: Long): Unit =
         scratchFile(df, dir, name, mtime)
       // The tick row CARRIES max(even ts) as its event time, so batches
@@ -1228,7 +1230,7 @@ object EventStream {
         .select(col("event_id"),
           when(col("event_id") === col("tick_id"), col("mts")).otherwise(col("ts")).as("ts"),
           col("event_type"), col("tick_id"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val odd = ev.filter(col("event_id") % 2 === 1)
       // FileStreamSource orders by (mtime, path): force strictly older
       // mtimes so batch 0 = evens, batch 1 = tick, batch 2 = stragglers
@@ -1256,7 +1258,7 @@ object EventStream {
       val name = "graft_st_late_data"
       val drained = drain(s, agg, name, "update")
       val kept = drained.groupBy("window_start", "event_type")
-        .agg(max("n").as("n_kept")).localCheckpoint(eager = true)
+        .agg(max("n").as("n_kept"))
       val total = ev.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_total"))
         .select(date_format(col("window.start"), fmt).as("window_start"),
@@ -1367,7 +1369,7 @@ object EventStream {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           round(col("value") * lit(1000000L)).cast("long").as("v_us"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val t0 = System.currentTimeMillis()
       scratchFile(ev.filter(col("event_id") % 2 === 0), dir, "0-first", t0 - 60000)
       scratchFile(ev.filter(col("event_id") % 2 === 1), dir, "1-second", t0)
@@ -1437,7 +1439,7 @@ object EventStream {
   def dedupWatermark(s: SparkSession, d: String): DataFrame = {
     val dataDir = graft.operators.Shared.memoDir(s, d, "st_ddw") { dir =>
       val ev = Tables.events(s, d).select("event_id", "ts", "event_type", "value")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val mts = ev.agg(max("ts").as("mts"))
       val b0 = ev.unionAll(ev.filter(col("event_id") % 50 === 0))
       val tick = mts.select(lit(-1L).as("event_id"), col("mts").as("ts"),
@@ -1465,7 +1467,7 @@ object EventStream {
         .agg(count(lit(1)).as("n"))
       val name = "graft_st_dedup_wm"
       val drained = drain(s, stream, name, "complete")
-      drained.orderBy("event_type").localCheckpoint()
+      drained.orderBy("event_type")
     }
   }
 
@@ -1528,10 +1530,9 @@ object EventStream {
       if (stateful.length < 2)
         throw new IllegalStateException(
           s"expected >=2 chained stateful operators, saw ${stateful.mkString(",")}")
-      s.read.parquet(out)
+      readGate(s, out, agg)
         .withColumn("two_stateful_ops", lit(true))
         .orderBy("window_start")
-        .localCheckpoint()
     }
   }
 
@@ -1554,9 +1555,8 @@ object EventStream {
       |  TRUE AS two_stateful_ops
       |FROM j GROUP BY window_start ORDER BY window_start""".stripMargin
 
-  /** `Trigger.AvailableNow` — the INCREMENTAL-BATCH runner, and the
-    * trigger every other query here does NOT use (they drain under the
-    * default micro-batch trigger and are stopped from outside): the
+  /** `Trigger.AvailableNow` — the INCREMENTAL-BATCH runner every query
+    * here drains under ([[runStream]]), certified on its own: the
     * query takes a snapshot of what the source has AT START, processes
     * it honoring the source's rate limits across as many micro-batches
     * as the limits dictate, then terminates ON ITS OWN. At 100 TB this
@@ -1564,9 +1564,8 @@ object EventStream {
     * the new files in bounded-size batches (bounded state, bounded
     * executor memory) and the checkpoint makes the next run
     * incremental. Both halves of the contract are certificates, not
-    * claims: [[runStream]] waits for the query to end on its own
-    * (self-termination, or the runner throws), never stopping it
-    * first — and
+    * claims: [[runStream]] waits for the query to end on its own,
+    * never stopping it first — and
     * the 3-file source under `maxFilesPerTrigger=1` must report ≥3
     * data micro-batches (rate limits HONORED across batches — the
     * difference from the old Trigger.Once, which slurped everything
@@ -1578,7 +1577,7 @@ object EventStream {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"),
           round(col("value") * lit(1000000L)).cast("long").as("v_us"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val t0 = System.currentTimeMillis()
       scratchFile(ev.filter(col("event_id") % 3 === 0), dir, "0-a", t0 - 120000)
       scratchFile(ev.filter(col("event_id") % 3 === 1), dir, "1-b", t0 - 60000)
@@ -1592,19 +1591,18 @@ object EventStream {
         .parquet(dataDir.toString)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("v_us")).as("total_us"))
-      // the runner waits for an AvailableNow query to end itself and
-      // throws if it does not, so returning IS the self-termination
+      // the runner waits for the query to end itself, so returning IS
+      // the self-termination
       val out = gateDir("graft_st_available_now")
-      val dataBatches = drainToFiles(s, agg, out, "complete", Trigger.AvailableNow())
+      val dataBatches = drainToFiles(s, agg, out, "complete")
         .count(_.numInputRows > 0)
       if (dataBatches < 3)
         throw new IllegalStateException(
           s"maxFilesPerTrigger=1 over 3 files must yield >=3 data batches, saw $dataBatches")
-      s.read.parquet(out)
+      readGate(s, out, agg)
         .withColumn("self_terminated", lit(true))
         .withColumn("rate_limited_batches", lit(true))
         .orderBy("event_type")
-        .localCheckpoint()
     }
   }
 
@@ -1685,7 +1683,7 @@ object EventStream {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("ts").as("event_time"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val maxUs = ev.agg(max("ts_us")).collect()(0).getLong(0)
       val tickUs = maxUs + 41L * 60 * 1000000
       val session = s
@@ -1762,7 +1760,7 @@ object EventStream {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val t0 = System.currentTimeMillis()
       scratchFile(ev.filter(col("event_id") % 2 === 0), dir, "0-first", t0 - 60000)
       scratchFile(ev.filter(col("event_id") % 2 === 1), dir, "1-second", t0)
@@ -1789,7 +1787,7 @@ object EventStream {
               // union + argmax IS the merge: greatest (ts, id) per key
               latest(state.unionByName(cand))
             } else cand
-          merged.localCheckpoint(eager = true)
+          merged.localCheckpoint() // keep: outlives
             .write.mode("overwrite").parquet(stateDir)
           ()
         }
@@ -1799,7 +1797,7 @@ object EventStream {
           col("event_type").as("last_type"),
           date_format(timestamp_micros(col("ts_us")), fmt).as("last_ts"))
         .orderBy("user_id")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: outlives
     }
   }
 
@@ -1830,12 +1828,11 @@ object EventStream {
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
       runStream(s, purchases)(_.format("parquet").option("path", out).outputMode("append"))
-      // eager = true is LOAD-BEARING, not a default we happen to rely
-      // on: withDir deletes the files the frame was read from when
-      // this block returns, so every block must be materialized first
-      // (and a lost block afterward is unrecoverable — the price of
-      // eagerly deleting scratch; the aggregate is tiny)
-      val back = s.read.parquet(out).localCheckpoint(eager = true)
+      // withDir deletes the files the frame was read from when this
+      // block returns, so every block is materialized first (and a lost
+      // block afterward is unrecoverable — the price of eagerly
+      // deleting scratch; the aggregate is tiny)
+      val back = s.read.parquet(out).localCheckpoint() // keep: outlives
       back.groupBy("user_id")
         .agg(count(lit(1)).as("n_purchases"),
           countDistinct("event_id").as("n_distinct_events"),
@@ -1872,7 +1869,7 @@ object EventStream {
     graft.Scratch.withDir("graft_st_restart_") { scratch =>
       val ev = Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
-        .localCheckpoint(eager = true)
+        .localCheckpoint() // keep: reuse
       val dataDir = new java.io.File(scratch, "data"); dataDir.mkdirs()
       val out = s"$scratch/sink"; val ckpt = s"$scratch/ckpt"
       val src = s.readStream
@@ -1888,7 +1885,7 @@ object EventStream {
       runOnce()                 // run 1: half 1 committed, then the query dies
       scratchFile(ev.filter(col("event_id") % 2 === 1), dataDir, "1-second", t0)
       runOnce()                 // run 2: fresh query, same checkpoint
-      val back = s.read.parquet(out).localCheckpoint(eager = true)
+      val back = s.read.parquet(out).localCheckpoint() // keep: outlives
       back.groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct("event_id").as("n_distinct_events"),

@@ -332,7 +332,7 @@ class DedupSpec extends SparkSpec {
     // the hot clique alone is 2000*1999/2 pairs — output-cardinality-
     // bound work, not join work (the policy: run d_exact first if intra-
     // identical pairs are not wanted)
-    val expanded = Dedup.bandCandidates(sigs.select("doc_id", "sig"), bandRows = 4).count()
+    val expanded = Dedup.bandCandidates(groups, bandRows = 4).count()
     assert(expanded >= 2000L * 1999 / 2,
       s"expanded candidates $expanded missing the hot clique")
     sigs.unpersist(); groups.unpersist()
@@ -340,13 +340,12 @@ class DedupSpec extends SparkSpec {
 
   test("canonicalize-before-pair candidate set equals naive all-docs banding") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     val base = Tables.documents(spark, sf).select("doc_id", "text")
     // plant a small identical cluster so the collapse actually engages
     val copies = base.filter(col("doc_id") % 11 === 0)
       .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
     val sigs = Dedup.signaturesOf(base.union(copies)).select("doc_id", "sig")
-    val got = Dedup.bandCandidates(sigs, bandRows = 4)
+    val got = Dedup.bandCandidates(Dedup.sigGroups(sigs), bandRows = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // naive reference: band every doc directly, no representative collapse
     val banded = sigs.select(col("doc_id"),

@@ -144,7 +144,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("community: labels match an in-memory 3-round clamped mode-propagation replay") {
-    import org.apache.spark.sql.functions.col
     val pairs = Dedup.embedDup(spark, sf)
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -200,7 +199,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("linkpred: pairs are non-adjacent, share >= 1 neighbor, cn verified in-memory") {
-    import org.apache.spark.sql.functions.col
     val edges = Dedup.embedDup(spark, sf)
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The judge's machine check as a CI test: SURVEY.md §2's operator
@@ -103,6 +105,71 @@ class InventorySpec extends AnyFunSuite {
       .findAllIn(mm).size
     assert(scans == 1, s"Multimodal parallelizes the documents at $scans sites, not one")
     assert(!mm.contains(".grouped("), "Multimodal still batches rows with .grouped(")
+  }
+
+  /** (file name, 1-based line number, line) of every line under src/main. */
+  private def mainLines: Seq[(String, Int, String)] = {
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
+      _.toArray.map(_.asInstanceOf[java.nio.file.Path]))
+    files.toSeq.filter(java.nio.file.Files.isRegularFile(_)).sortBy(_.toString).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .map { case (l, i) => (p.getFileName.toString, i + 1, l) }
+    }
+  }
+
+  /** The code part of a source line: "" for a comment line, else the
+    * text before a trailing `//` comment. */
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+    else line.split("//", 2)(0)
+  }
+
+  test("every materialization under src/main states one reason from the closed set") {
+    val reasons = Set("round", "scope", "reuse", "outlives", "certificate")
+    val site = raw"localCheckpoint\(|\.persist\(".r
+    val tag = raw"// keep: (\w+)".r
+    val sites = mainLines.filter { case (_, _, l) => site.findFirstIn(code(l)).nonEmpty }
+    val bad = sites.filter { case (_, _, l) =>
+      val tags = tag.findAllMatchIn(l).map(_.group(1)).toList
+      tags.size != 1 || !reasons.contains(tags.head)
+    }
+    assert(bad.isEmpty, "sites without exactly one keep tag from the closed set:\n" +
+      bad.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+    val counts = sites.groupBy { case (_, _, l) => tag.findFirstMatchIn(l).get.group(1) }
+      .view.mapValues(_.size).toMap
+    info(s"${sites.size} materialization sites: " +
+      reasons.toSeq.sorted.map(r => s"$r ${counts.getOrElse(r, 0)}").mkString(", "))
+    assert(mainOccurrences("eager = true") == 0, "a Dataset checkpoint is spelled with eager = true")
+  }
+
+  test("no unpersist under src/main is called on a checkpointed frame") {
+    // a checkpoint's blocks belong to its RDD, not to a CacheManager
+    // entry, so Dataset.unpersist on a checkpointed frame is a no-op
+    val call = raw"(\w+)\.unpersist\(".r
+    val stops = Set("val ", "var ", "def ", "}", "//")
+    val noOps = mainLines.groupBy(_._1).toSeq.flatMap { case (_, lines) =>
+      val text = lines.map(_._3).toIndexedSeq
+      lines.flatMap { case (f, n, l) =>
+        call.findAllMatchIn(code(l)).map(_.group(1)).flatMap { name =>
+          val define = raw"\b(val|var) $name\s*=".r
+          text.take(n - 1).lastIndexWhere(define.findFirstIn(_).nonEmpty) match {
+            case -1 => None
+            case at =>
+              val statement = text(at) +: text.drop(at + 1).takeWhile { t =>
+                val tt = t.trim
+                tt.nonEmpty && !stops.exists(tt.startsWith)
+              }
+              if (statement.exists(_.contains("localCheckpoint("))) Some(s"$f:$n: $name") else None
+          }
+        }
+      }
+    }
+    assert(noOps.isEmpty, s"unpersist on checkpointed frames: ${noOps.mkString(", ")}")
+  }
+
+  test("one trigger under src/main: no ProcessingTime") {
+    assert(mainOccurrences("ProcessingTime") == 0, "a streaming query still runs under ProcessingTime")
   }
 
   test("query selection: all by default, exactly the named ones, unknown names throw") {

@@ -72,7 +72,7 @@ class MapReduceSpec extends SparkSpec {
     val parts = MapReduce.run[String, String, Int, (String, Int)](
       docs.rdd,
       mapper = line => line.split("[ \t\n\r]+").iterator.filter(_.nonEmpty).map((_, 1)),
-      reducer = (k, vs) => (k, org.apache.spark.TaskContext.getPartitionId()),
+      reducer = (k, _) => (k, org.apache.spark.TaskContext.getPartitionId()),
       numParts = 10)
       .collect()
     parts.foreach { case (token, pid) =>

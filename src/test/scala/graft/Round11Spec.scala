@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-11 regression pins: the per-key-serialized memo (ADVICE r10),
   * the size-derived bucket layout (verdict item 4), the one-scan
   * q21_approx (item 5) and the census-derived MinHash band geometry

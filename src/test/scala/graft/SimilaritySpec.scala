@@ -130,7 +130,7 @@ class SimilaritySpec extends SparkSpec {
       .map { case (id, v) => (id, v, simMicros(v, qv)) }
       .sortBy { case (id, _, sq) => (-sq, id) }.take(20)
     var selected = Vector.empty[(Long, Long, Long)] // (id, simq, score)
-    for (k <- 1 to 5) {
+    for (_ <- 1 to 5) {
       val pick = cand.filter(c => !selected.exists(_._1 == c._1)).map { case (id, v, sq) =>
         val pen = if (selected.isEmpty) -1000000L
           else selected.map(s => simMicros(v, vecs(s._1))).max
