@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** djb2 string hash as a native Catalyst expression: `h = 5381;
   * h = h*33 + c` over ALL of the key's bytes, accumulated in 64-bit
   * arithmetic (C `unsigned long` wraparound == Java long wraparound).
-  * This is the SKETCH hash — its SQL oracles fold every character. For
+  * This is the SKETCH hash — its SQL oracles fold every byte. For
   * C `MR_Partitioner` parity (which stops at the first NUL byte) use
   * [[Djb2Partition]] / [[Djb2.partition]], which route through
   * [[Djb2.hashC]].
@@ -58,9 +58,10 @@ case class Djb2Partition(child: Expression, numParts: Int) extends UnaryExpressi
 
 object Djb2 {
   /** djb2 over ALL bytes (signed-char promotion, 64-bit wraparound) —
-    * the sketch/base-hash variant. The minhash/simhash/p_mix SQL oracles
-    * recompute exactly this (every character, recursive CTE), so this
-    * function must NOT stop early. For the C partitioner's
+    * the sketch/base-hash variant. Every SQL oracle recomputes exactly
+    * this through [[graft.operators.OracleCtes.djb2Sql]] (the same fold
+    * over the key's UTF-8 bytes, mod 2⁶⁴), so this function must NOT
+    * stop early. For the C partitioner's
     * `while ((c = *key++))` semantics see [[hashC]]. */
   def hash(bytes: Array[Byte]): Long = {
     var h = 5381L

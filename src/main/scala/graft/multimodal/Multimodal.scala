@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.ExactRound
+import graft.operators.{ExactRound, OracleCtes}
 
 /** Multimodal column plumbing (SURVEY.md §2F).
   *
@@ -1383,36 +1383,18 @@ object Multimodal {
       .orderBy("asset_id")
   }
 
-  /** SQL twin of [[cdcChunks]]: the same K=16 polynomial rolling hash as
-    * the winnow oracle (recursive CTE, HUGEINT mod 2⁶⁴), boundaries where
-    * hash % 64 = 0, chunk reassembly via lockstep unnest of the
-    * prepend(0)/append(len) offset lists. */
-  /** The CDC chunking pipeline as a reusable CTE list ending in
+  /** SQL twin of [[cdcChunks]] as a reusable CTE list ending in
     * `ch(doc_id, chunk_hash, len)` — one row per content-defined chunk
-    * of each document's text. Splice as `WITH RECURSIVE $cdcChunkCte,
-    * ...`; consumed by [[cdcChunksSql]] and the text family's
-    * CDC-MinHash dedup twin. */
-  private[graft] val cdcChunkCte: String = {
-    val K = graft.functions.CdcImpl.K
-    val B = graft.functions.CdcImpl.B
-    val m64 = "CAST('18446744073709551616' AS HUGEINT)"
-    val bpk1 = java.lang.Long.toUnsignedString(graft.functions.WinnowImpl.bpow(K - 1))
-    val bpLits = (0 until K)
-      .map(j => java.lang.Long.toUnsignedString(graft.functions.WinnowImpl.bpow(j)))
-      .mkString("[", ", ", "]")
+    * of each document's text: the winnow oracle's K=16 rolling hash
+    * ([[OracleCtes.rollCte]]), boundaries where hash % 64 = 0, chunk
+    * reassembly via lockstep unnest of the prepend(0)/append(len)
+    * offset lists. Splice as `WITH RECURSIVE $cdcChunkCte, ...`;
+    * consumed by [[cdcChunksSql]] and the text family's CDC-MinHash
+    * dedup twin. */
+  private[graft] val cdcChunkCte: String =
     s"""docs AS (
-       |  SELECT doc_id, text, greatest(length(text) - ${K - 1}, 0) AS m FROM documents
-       |), roll AS (
-       |  SELECT doc_id, text, m, 1 AS i,
-       |    CAST(list_sum(list_transform(generate_series(1, $K),
-       |      j -> ord(substr(text, j, 1)) * ($bpLits::HUGEINT[])[$K + 1 - j])) AS HUGEINT) % $m64 AS h
-       |  FROM docs WHERE m >= 2
-       |  UNION ALL
-       |  SELECT doc_id, text, m, i + 1,
-       |    ((((h - ord(substr(text, i, 1)) * CAST('$bpk1' AS HUGEINT)) % $m64 + $m64) % $m64)
-       |      * $B + ord(substr(text, i + $K, 1))) % $m64
-       |  FROM roll WHERE i < m
-       |), bounds AS (
+       |  SELECT doc_id, text, greatest(length(text) - ${graft.functions.CdcImpl.K - 1}, 0) AS m FROM documents
+       |), ${OracleCtes.rollCte("m >= 2")}, bounds AS (
        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos FROM roll WHERE i >= 2 AND h % 64 = 0
        |), blist AS (
        |  SELECT doc_id, list(pos ORDER BY pos) AS bs FROM bounds GROUP BY doc_id
@@ -1425,7 +1407,6 @@ object Multimodal {
        |  SELECT doc_id, md5(substr(text, off + 1, e - off)) AS chunk_hash, e - off AS len
        |  FROM (SELECT doc_id, text, unnest(offs) AS off, unnest(ends) AS e FROM chunkdef)
        |)""".stripMargin
-  }
 
   val cdcChunksSql: String = {
     s"""WITH RECURSIVE $cdcChunkCte, refs AS (
@@ -1970,24 +1951,15 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Analytic oracle: shard = C-parity djb2 % 16 (recursive CTE), txt
+  /** Analytic oracle: shard = C-parity djb2 % 16 (OracleCtes.djb2Sql), txt
     * always present, png present iff doc_id % 13 != 0. */
   val wdsPairedSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, strlen(text) AS n FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, n, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, n, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |)
-      |SELECT CAST(hash % 16 AS INT) AS shard, doc_id,
+    s"""SELECT CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard, doc_id,
       |  TRUE AS has_txt, doc_id % 13 <> 0 AS has_img,
-      |  CAST(n AS BIGINT) AS txt_bytes,
+      |  CAST(strlen(text) AS BIGINT) AS txt_bytes,
       |  CAST(CASE WHEN doc_id % 13 <> 0 THEN 2 ELSE 1 END AS INT) AS n_members,
       |  doc_id % 13 <> 0 AS complete
-      |FROM h WHERE i = length(key)+1
+      |FROM documents
       |ORDER BY doc_id""".stripMargin
 
   // ----------------------------------------------------------------- ID3
@@ -2792,17 +2764,10 @@ object Multimodal {
     val fixed = WarcVer.length + WarcType.length +
       WarcIdPre.length + 2 + WarcUriPre.length + 2 +
       WarcClenPre.length + 2 + 2 + 4
-    s"""WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, text FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, text, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, text, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, text, CAST(hash % 16 AS INT) AS shard
-      |  FROM h WHERE i = length(key)+1
+    s"""WITH b AS (
+      |  SELECT doc_id, text,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
+      |  FROM documents
       |), r AS (
       |  SELECT shard, doc_id, CAST(strlen(text) AS BIGINT) AS content_length,
       |    md5(text) AS payload_md5,

@@ -315,9 +315,10 @@ object Dedup {
   }
 
   /** SQL twin of [[minhashLsh]]: every stage of the sketch is
-    * deterministic and SQL-expressible — djb2 base hash (recursive CTE,
-    * same as mr_partition_hist), the 128 affine permutations as literal
-    * coefficient arrays, banding as signature-slice equality. The Spark
+    * deterministic and SQL-expressible — djb2 base hash
+    * ([[OracleCtes.djb2Sql]], same as mr_partition_hist), the 128
+    * affine permutations as literal coefficient arrays, banding as
+    * signature-slice equality. The Spark
     * side joins on a 64-bit band hash rather than the slice itself;
     * equal slices always hash equal, and unequal-slice hash collisions
     * (~2⁻⁶⁴) are removed by the est_jaccard ≥ 0.3 filter, so the results
@@ -334,7 +335,7 @@ object Dedup {
   val minhashLshSql: String = {
     val pa = graft.functions.MinHashImpl.permA.mkString("[", ", ", "]")
     val pb = graft.functions.MinHashImpl.permB.mkString("[", ", ", "]")
-    s"""WITH RECURSIVE docs AS (
+    s"""WITH docs AS (
        |  SELECT doc_id, list_distinct(list_transform(
        |    generate_series(1, greatest(len(toks)-2, 0)),
        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
@@ -343,15 +344,9 @@ object Dedup {
        |), docsh AS (
        |  SELECT doc_id, unnest(sh) AS shingle FROM docs
        |), shing AS (SELECT DISTINCT shingle FROM docsh
-       |), h AS (
-       |  SELECT shingle, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM shing
-       |  UNION ALL
-       |  SELECT shingle, i+1,
-       |    (hash*33 + ord(substr(shingle,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(shingle)
        |), sh31 AS (
-       |  SELECT shingle, CAST(hash % 2147483648 AS BIGINT) AS h31
-       |  FROM h WHERE i = length(shingle)+1
+       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
+       |  FROM shing
        |), perms AS (
        |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
        |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
@@ -375,16 +370,11 @@ object Dedup {
        |  JOIN bsz z ON z.bd = n.bd AND z.slice = n.slice
        |  WHERE z.b <= ${graft.GraftConf.maxBandBucket}
        |), cand AS MATERIALIZED (
-       |  -- DISTINCT over UNION ALL, not UNION: inside WITH RECURSIVE,
-       |  -- DuckDB 1.0.0 treats a CTE-body UNION as the recursive
-       |  -- (non-deduplicating) combinator
-       |  SELECT DISTINCT doc_a, doc_b FROM (
-       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |    FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-       |    UNION ALL
-       |    SELECT a.doc_id, b.doc_id
-       |    FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
-       |  )
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
+       |  UNION
+       |  SELECT a.doc_id, b.doc_id
+       |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
        |)
        |SELECT doc_a, doc_b, est_jaccard FROM (
        |  SELECT c.doc_a, c.doc_b,
@@ -1157,28 +1147,21 @@ object Dedup {
     * force. */
   /** The simhash derivation as a reusable CTE fragment ending in
     * `dsim(doc_id, bits)` — bits is the 64-entry 0/1 list in bit order.
-    * Must be spliced into a `WITH RECURSIVE` list (the djb2 member is
-    * recursive). Shared by [[simhashSql]] and [[simhashRecallSql]]. */
+    * Shared by [[simhashSql]] and [[simhashRecallSql]]. */
   private[graft] val simhashCtes: String = {
     val avalanche = java.lang.Long.toUnsignedString(0x9E3779B97F4A7C15L)
-    val m64 = "CAST('18446744073709551616' AS HUGEINT)"
+    import OracleCtes.m64
     val divs = (0 until 64).map(b => (BigInt(1) << b).toString).mkString("[", ", ", "]")
     s"""doctok AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS token FROM documents
        |), tokcnt AS (
        |  SELECT doc_id, token, count(*) AS cnt FROM doctok GROUP BY doc_id, token
        |), toks AS (SELECT DISTINCT token FROM doctok
-       |), h AS (
-       |  SELECT token, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM toks
-       |  UNION ALL
-       |  SELECT token, i+1,
-       |    (hash*33 + ord(substr(token,i,1))) % $m64
-       |  FROM h WHERE i <= length(token)
        |), hm AS (
        |  SELECT token,
        |    ((((hash // 4294967296) * $avalanche) % $m64) * 4294967296
        |      + (hash % 4294967296) * $avalanche) % $m64 AS hv
-       |  FROM h WHERE i = length(token)+1
+       |  FROM (SELECT token, ${OracleCtes.djb2Sql("token")} AS hash FROM toks)
        |), bits AS (
        |  SELECT token, list_transform($divs::HUGEINT[], dv ->
        |    CASE WHEN (hv // dv) % 2 = 1 THEN 1 ELSE -1 END) AS tb
@@ -1201,7 +1184,7 @@ object Dedup {
        |      CASE WHEN $a.bits[i] <> $b.bits[i] THEN 1 ELSE 0 END)) AS BIGINT)""".stripMargin
 
   val simhashSql: String =
-    s"""WITH RECURSIVE $simhashCtes
+    s"""WITH $simhashCtes
        |SELECT doc_a, doc_b, hamming FROM (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    ${dsimHammingSql("a", "b")} AS hamming
@@ -1248,7 +1231,7 @@ object Dedup {
     * [[simhashCtes]] bit lists, hamming per pair, same decile rollup. */
   val simhashRecallSql: String = {
     val j = OracleCtes.ngramJaccardExpr
-    s"""WITH RECURSIVE ${OracleCtes.ngramOverlap}, prj AS MATERIALIZED (
+    s"""WITH ${OracleCtes.ngramOverlap}, prj AS MATERIALIZED (
        |  SELECT pa, pb, $j AS j FROM ng_pair WHERE $j >= 0.5
        |), $simhashCtes, ham AS MATERIALIZED (
        |  SELECT prj.j, ${dsimHammingSql("a", "b")} AS hamming
@@ -1290,38 +1273,18 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** SQL twin of [[substringDup]]: the rolling hash as a recursive CTE in
-    * HUGEINT mod 2⁶⁴ (one iteration per character position), converted to
+  /** SQL twin of [[substringDup]]: the rolling hash
+    * ([[OracleCtes.rollCte]], HUGEINT mod 2⁶⁴), converted to
     * signed BIGINT (Spark's long wrap) BEFORE the window min so min
     * semantics agree bit-for-bit, winnow as a W-row window min, then the
     * same distinct-fingerprint pair join. */
   val substringDupSql: String = {
     val K = graft.functions.WinnowImpl.K
     val W = graft.functions.WinnowImpl.W
-    val B = graft.functions.WinnowImpl.B
-    val m64 = "CAST('18446744073709551616' AS HUGEINT)"
-    val half = "CAST('9223372036854775808' AS HUGEINT)"
-    val bpk1 = java.lang.Long.toUnsignedString(graft.functions.WinnowImpl.bpow(K - 1))
-    // init hash: sum_j ord(text[j]) * B^(K-1-j), j = 1..K (1-based SQL)
-    val bpLits = (0 until K)
-      .map(j => java.lang.Long.toUnsignedString(graft.functions.WinnowImpl.bpow(j)))
-      .mkString("[", ", ", "]")
     s"""WITH RECURSIVE docs AS (
        |  SELECT doc_id, text, length(text) - ${K - 1} AS m FROM documents
-       |  WHERE length(text) >= ${K + W - 1}
-       |), roll AS (
-       |  SELECT doc_id, text, m, 1 AS i,
-       |    CAST(list_sum(list_transform(generate_series(1, $K),
-       |      j -> ord(substr(text, j, 1)) * ($bpLits::HUGEINT[])[$K + 1 - j])) AS HUGEINT) % $m64 AS h
-       |  FROM docs
-       |  UNION ALL
-       |  SELECT doc_id, text, m, i + 1,
-       |    ((((h - ord(substr(text, i, 1)) * CAST('$bpk1' AS HUGEINT)) % $m64 + $m64) % $m64)
-       |      * $B + ord(substr(text, i + $K, 1))) % $m64
-       |  FROM roll WHERE i < m
-       |), hs AS (
-       |  SELECT doc_id, i, m,
-       |    CAST(CASE WHEN h >= $half THEN h - $m64 ELSE h END AS BIGINT) AS hsig
+       |), ${OracleCtes.rollCte(s"m >= $W")}, hs AS (
+       |  SELECT doc_id, i, m, ${OracleCtes.signedSql("h")} AS hsig
        |  FROM roll
        |), wins AS (
        |  SELECT doc_id, i, m,
@@ -1692,21 +1655,15 @@ object Dedup {
   }
 
   val bloomSql: String =
-    """WITH RECURSIVE norm AS (
-      |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS fp
+    s"""WITH norm AS (
+      |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
       |  FROM documents
       |), keys AS (
       |  SELECT doc_id, fp, CAST(i AS VARCHAR) || ':' || fp AS key
       |  FROM norm, (SELECT unnest([0, 1, 2]) AS i)
-      |), h AS (
-      |  SELECT doc_id, fp, key, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM keys
-      |  UNION ALL
-      |  SELECT doc_id, fp, key, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
       |), pos AS (
-      |  SELECT doc_id, fp, CAST(hash % 8192 AS BIGINT) AS pos
-      |  FROM h WHERE i = length(key)+1
+      |  SELECT doc_id, fp, CAST(${OracleCtes.djb2Sql("key")} % 8192 AS BIGINT) AS pos
+      |  FROM keys
       |), bits AS (
       |  SELECT DISTINCT pos FROM pos WHERE doc_id % 2 = 0
       |), evalhits AS (
@@ -1842,7 +1799,7 @@ object Dedup {
 
   val bloomNgramSql: String = {
     val abLits = BloomAB.map { case (a, b) => s"[$a, $b]" }.mkString("[", ", ", "]")
-    s"""WITH RECURSIVE g8 AS MATERIALIZED (
+    s"""WITH g8 AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, g FROM (
        |    SELECT doc_id,
        |      toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' ||
@@ -1854,14 +1811,8 @@ object Dedup {
        |  )
        |), dg AS MATERIALIZED (
        |  SELECT DISTINCT g FROM g8
-       |), h AS (
-       |  SELECT g, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM dg
-       |  UNION ALL
-       |  SELECT g, i+1,
-       |    (hash*33 + ord(substr(g,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(g)
        |), h31 AS MATERIALIZED (
-       |  SELECT g, CAST(hash % 2147483648 AS BIGINT) AS h31 FROM h WHERE i = length(g)+1
+       |  SELECT g, CAST(${OracleCtes.djb2Sql("g")} % 2147483648 AS BIGINT) AS h31 FROM dg
        |), pos AS MATERIALIZED (
        |  SELECT g, CAST((ab[1]*h31 + ab[2]) % 2147483647 % 131072 AS BIGINT) AS pos
        |  FROM h31, (SELECT unnest($abLits) AS ab)
@@ -2023,8 +1974,8 @@ object Dedup {
       .orderBy("path", "budget_bytes")
   }
 
-  /** Oracle: distinct grams → per-gram djb2 (recursive chain, HUGEINT
-    * 2⁶⁴ wraparound) × the golden-ratio avalanche constant, folded to
+  /** Oracle: distinct grams → per-gram djb2 ([[OracleCtes.djb2Sql]],
+    * HUGEINT 2⁶⁴ wraparound) × the golden-ratio avalanche constant, folded to
     * the SIGNED 64-bit value Spark orders by; then the two prefix
     * censuses and the priced×rowBytes decision per pinned budget.
     * The u64·u64 avalanche multiply would overflow INT128, so the
@@ -2042,7 +1993,7 @@ object Dedup {
       s"""(CASE WHEN $x < 128 THEN 1 WHEN $x < 16384 THEN 2
          |  WHEN $x < 2097152 THEN 3 WHEN $x < 268435456 THEN 4
          |  WHEN $x < 34359738368 THEN 5 ELSE 9 END)""".stripMargin
-    s"""WITH RECURSIVE sb_grams AS MATERIALIZED (
+    s"""WITH sb_grams AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, g FROM (
        |    SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g FROM (
        |      SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks)-2, 0))) AS i
@@ -2052,20 +2003,12 @@ object Dedup {
        |  )
        |), sb_dg AS MATERIALIZED (
        |  SELECT DISTINCT g FROM sb_grams
-       |), sb_hc AS (
-       |  SELECT g, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM sb_dg
-       |  UNION ALL
-       |  SELECT g, i+1,
-       |    (hash*33 + ord(substr(g,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM sb_hc WHERE i <= length(g)
        |), sb_h AS MATERIALIZED (
-       |  SELECT g,
-       |    CAST(CASE WHEN hu >= CAST('9223372036854775808' AS HUGEINT)
-       |              THEN hu - CAST('18446744073709551616' AS HUGEINT) ELSE hu END AS BIGINT) AS h
+       |  SELECT g, ${OracleCtes.signedSql("hu")} AS h
        |  FROM (SELECT g,
        |          (((hash * 2654435769) % 4294967296) * 4294967296 + hash * 2135587861)
-       |            % CAST('18446744073709551616' AS HUGEINT) AS hu
-       |        FROM sb_hc WHERE i = length(g)+1)
+       |            % ${OracleCtes.m64} AS hu
+       |        FROM (SELECT g, ${OracleCtes.djb2Sql("g")} AS hash FROM sb_dg))
        |), sb_tok AS MATERIALIZED (
        |  SELECT t.doc_id, hh.h FROM sb_grams t JOIN sb_h hh ON hh.g = t.g
        |), sb_f AS MATERIALIZED (
@@ -2250,7 +2193,7 @@ object Dedup {
 
   /** The DuckDB 128-perm MinHash signature replay over the document
     * shingle table — CTE chain ending in `sigs(doc_id, sig)`; splice
-    * as `WITH RECURSIVE $minhashSigCtes, ...`. Shared by the lshTune
+    * as `WITH $minhashSigCtes, ...`. Shared by the lshTune
     * and hotBuckets oracles (one definition of the djb2 + affine-perm
     * arithmetic both must match bit-for-bit). */
   private lazy val minhashSigCtes: String = {
@@ -2259,15 +2202,9 @@ object Dedup {
     s"""${OracleCtes.ngramOverlap}, docsh AS MATERIALIZED (
        |  SELECT doc_id, g AS shingle FROM ng_grams
        |), shing AS MATERIALIZED (SELECT DISTINCT shingle FROM docsh
-       |), h AS (
-       |  SELECT shingle, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM shing
-       |  UNION ALL
-       |  SELECT shingle, i+1,
-       |    (hash*33 + ord(substr(shingle,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(shingle)
        |), sh31 AS MATERIALIZED (
-       |  SELECT shingle, CAST(hash % 2147483648 AS BIGINT) AS h31
-       |  FROM h WHERE i = length(shingle)+1
+       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
+       |  FROM shing
        |), perms AS MATERIALIZED (
        |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
        |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
@@ -2314,16 +2251,12 @@ object Dedup {
          |  ) z ON z.bd = n.bd AND z.slice = n.slice
          |  WHERE z.b <= ${graft.GraftConf.maxBandBucket}
          |), cand$r AS MATERIALIZED (
-         |  -- DISTINCT over UNION ALL: CTE-body UNION inside WITH
-         |  -- RECURSIVE is non-deduplicating in DuckDB 1.0.0
-         |  SELECT DISTINCT pa, pb FROM (
-         |    SELECT a.doc_id AS pa, b.doc_id AS pb
-         |    FROM cold$r a JOIN cold$r b
-         |      ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-         |    UNION ALL
-         |    SELECT a.doc_id, b.doc_id
-         |    FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
-         |  )
+         |  SELECT a.doc_id AS pa, b.doc_id AS pb
+         |  FROM cold$r a JOIN cold$r b
+         |    ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
+         |  UNION
+         |  SELECT a.doc_id, b.doc_id
+         |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
          |)""".stripMargin
     }.mkString(", ")
     val jacOnPair = ExactRound.rSql("CAST(p.isz AS DOUBLE) / (p.na + p.nb - p.isz)", 6)
@@ -2336,7 +2269,7 @@ object Dedup {
          |  FROM cand$r c LEFT JOIN ng_pair p ON p.pa = c.pa AND p.pb = c.pb
          |)""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH RECURSIVE $minhashSigCtes, $bands, truth AS (
+    s"""WITH $minhashSigCtes, $bands, truth AS (
        |  SELECT count(*) AS n_true FROM ng_pair WHERE $jaccardSqlExpr >= 0.5
        |), cfg AS (
        |$configs
@@ -2415,7 +2348,7 @@ object Dedup {
          |  GROUP BY bd, slice
          |)""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH RECURSIVE $minhashSigCtes, reps AS MATERIALIZED (
+    s"""WITH $minhashSigCtes, reps AS MATERIALIZED (
        |  SELECT DISTINCT sig FROM sigs
        |)
        |SELECT CAST(band_rows AS BIGINT) AS band_rows, CAST(n_bands AS BIGINT) AS n_bands,
@@ -2508,7 +2441,7 @@ object Dedup {
     val nb = 128 / r
     val iszS = "CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)"
     val jacc = ExactRound.rSql(s"$iszS / (len(da.sh) + len(db.sh) - $iszS)", 6)
-    s"""WITH RECURSIVE pd AS MATERIALIZED (
+    s"""WITH pd AS MATERIALIZED (
        |  SELECT s.doc_id * 12 + g.k AS pid,
        |    CASE WHEN g.k = 11 AND s.doc_id % 10 = 0
        |         THEN 'c1 c2 c3 u' || CAST(s.doc_id * 12 + 1 AS VARCHAR) || ' x'
@@ -2523,15 +2456,9 @@ object Dedup {
        |  WHERE len(toks) >= 3
        |), docsh AS (SELECT doc_id, unnest(sh) AS shingle FROM docs
        |), shing AS MATERIALIZED (SELECT DISTINCT shingle FROM docsh
-       |), h AS (
-       |  SELECT shingle, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM shing
-       |  UNION ALL
-       |  SELECT shingle, i+1,
-       |    (hash*33 + ord(substr(shingle,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(shingle)
        |), sh31 AS MATERIALIZED (
-       |  SELECT shingle, CAST(hash % 2147483648 AS BIGINT) AS h31
-       |  FROM h WHERE i = length(shingle)+1
+       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
+       |  FROM shing
        |), perms AS MATERIALIZED (
        |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
        |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
@@ -2560,15 +2487,11 @@ object Dedup {
        |  ) n JOIN bsz z ON z.bd = n.bd AND z.slice = n.slice
        |  WHERE z.b <= $cap
        |), cand AS MATERIALIZED (
-       |  -- DISTINCT over UNION ALL: CTE-body UNION inside WITH
-       |  -- RECURSIVE is non-deduplicating in DuckDB 1.0.0
-       |  SELECT DISTINCT doc_a, doc_b FROM (
-       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |    FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-       |    UNION ALL
-       |    SELECT a.doc_id, b.doc_id
-       |    FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
-       |  )
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
+       |  UNION
+       |  SELECT a.doc_id, b.doc_id
+       |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
        |), ver AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
        |    CAST(sum(CASE WHEN $jacc >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_found
@@ -2830,33 +2753,20 @@ object Dedup {
       .orderBy("relation")
   }
 
-  /** SQL twin: djb2 via the recursive-CTE replication (the manifestSql
-    * pattern) over both the id key and the 32-hex fingerprint key;
+  /** SQL twin: djb2 ([[OracleCtes.djb2Sql]]) over both the id key and
+    * the 32-hex fingerprint key;
     * near pairs via the exact shingle-Jaccard brute force. */
   val crossShardSql: String = {
     val jac = OracleCtes.ngramJaccardExpr
-    s"""WITH RECURSIVE ds AS (
+    s"""WITH ds AS (
       |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key,
       |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, fp, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), hc AS (
-      |  SELECT doc_id, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, fp, i+1,
-      |    (hash*33 + ord(substr(fp,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM hc WHERE i <= length(fp)
       |), docs AS (
-      |  SELECT h.doc_id, h.fp,
-      |    CAST(h.hash % 16 AS INT) AS shard_id,
-      |    CAST(c.hash % 16 AS INT) AS shard_content
-      |  FROM h JOIN (SELECT doc_id, hash FROM hc WHERE i = length(fp)+1) c USING (doc_id)
-      |  WHERE h.i = length(h.key)+1
+      |  SELECT doc_id, fp,
+      |    CAST(${OracleCtes.djb2Sql("key")} % 16 AS INT) AS shard_id,
+      |    CAST(${OracleCtes.djb2Sql("fp")} % 16 AS INT) AS shard_content
+      |  FROM ds
       |), groups AS (
       |  SELECT fp, count(*) AS k FROM docs GROUP BY fp HAVING count(*) > 1
       |), dup AS (SELECT d.* FROM docs d JOIN groups USING (fp)

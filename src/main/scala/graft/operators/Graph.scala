@@ -1820,7 +1820,7 @@ object Graph {
       .orderBy("node_a", "node_b")
   }
 
-  /** SQL twin: djb2 seed CTE (recursive over the walk-key string), then
+  /** SQL twin: djb2 seeds ([[OracleCtes.djb2Sql]] of the walk key), then
     * 8 unrolled LCG steps over the same sorted adjacency lists, then the
     * identical window-2 pair aggregation. */
   val walksSql: String = {
@@ -1834,7 +1834,7 @@ object Graph {
          |  FROM w${t - 1} w JOIN adj a ON a.src = w.path[len(w.path)]
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH RECURSIVE ${OracleCtes.embedPairsCtes(0.4)}, edges AS MATERIALIZED (
+    s"""WITH ${OracleCtes.embedPairsCtes(0.4)}, edges AS MATERIALIZED (
        |  SELECT pa AS src, pb AS dst FROM pairs UNION ALL SELECT pb, pa FROM pairs
        |), adj AS MATERIALIZED (
        |  SELECT src, list(dst ORDER BY dst) AS nbrs, CAST(count(*) AS BIGINT) AS deg
@@ -1842,15 +1842,9 @@ object Graph {
        |), sk AS MATERIALIZED (
        |  SELECT src AS node, r, CAST(src AS VARCHAR) || '#' || CAST(r AS VARCHAR) AS key
        |  FROM adj, (SELECT unnest([0, 1]) AS r)
-       |), h AS (
-       |  SELECT node, r, key, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM sk
-       |  UNION ALL
-       |  SELECT node, r, key, i+1,
-       |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(key)
        |), w0 AS MATERIALIZED (
-       |  SELECT node, r, CAST(hash % 2147483648 AS BIGINT) AS x, [node] AS path
-       |  FROM h WHERE i = length(key)+1
+       |  SELECT node, r, CAST(${OracleCtes.djb2Sql("key")} % 2147483648 AS BIGINT) AS x, [node] AS path
+       |  FROM sk
        |), $steps, pos AS MATERIALIZED (
        |  SELECT node, r, u.pos AS pos, u.v AS v FROM (
        |    SELECT node, r,
@@ -2270,10 +2264,9 @@ object Graph {
       .orderBy("doc_id")
   }
 
-  /** SQL twin: the same 4 unrolled MIS rounds; priorities from the
-    * recursive djb2 CTE over identical "r#node" keys. */
+  /** SQL twin: the same 4 unrolled MIS rounds; priorities from
+    * [[OracleCtes.djb2Sql]] over identical "r#node" keys. */
   val coloringSql: String = {
-    val m64 = "CAST('18446744073709551616' AS HUGEINT)"
     val rounds = (0 until 4).map { r =>
       s"""ce$r AS MATERIALIZED (
          |  SELECT e.u, e.w FROM sym e
@@ -2288,28 +2281,20 @@ object Graph {
          |  LEFT JOIN cm$r m ON m.id = a.id
          |  WHERE p.p > coalesce(m.max_nbr, -1)
          |), ca${r + 1} AS MATERIALIZED (
-         |  -- anti-join, not EXCEPT: under WITH RECURSIVE DuckDB rejects
-         |  -- set-op members that aren't UNION [ALL]
          |  SELECT a.id FROM ca$r a LEFT JOIN cw$r w ON w.id = a.id
          |  WHERE w.id IS NULL
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH RECURSIVE ${OracleCtes.ngramOverlap}, ${OracleCtes.ngramPairs05}, sym AS MATERIALIZED (
+    s"""WITH ${OracleCtes.ngramOverlap}, ${OracleCtes.ngramPairs05}, sym AS MATERIALIZED (
        |  SELECT pa AS u, pb AS w FROM pairs UNION ALL SELECT pb, pa FROM pairs
        |), nodes AS MATERIALIZED (
        |  SELECT DISTINCT u AS id FROM sym
        |), sk AS (
        |  SELECT id, r, CAST(r AS VARCHAR) || '#' || CAST(id AS VARCHAR) AS key
        |  FROM nodes, (SELECT unnest([0, 1, 2, 3]) AS r)
-       |), ph AS (
-       |  SELECT id, r, key, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM sk
-       |  UNION ALL
-       |  SELECT id, r, key, i+1,
-       |    (hash*33 + ord(substr(key,i,1))) % $m64
-       |  FROM ph WHERE i <= length(key)
        |), pri AS MATERIALIZED (
-       |  SELECT id, r, CAST(hash % 2147483648 AS BIGINT) * 100000000 + id AS p
-       |  FROM ph WHERE i = length(key)+1
+       |  SELECT id, r, CAST(${OracleCtes.djb2Sql("key")} % 2147483648 AS BIGINT) * 100000000 + id AS p
+       |  FROM sk
        |), ca0 AS MATERIALIZED (SELECT id FROM nodes
        |), $rounds, col AS (
        |  SELECT id, 0 AS color FROM cw0 UNION ALL SELECT id, 1 FROM cw1

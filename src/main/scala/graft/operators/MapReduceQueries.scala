@@ -70,8 +70,8 @@ object MapReduceQueries {
 
   /** Partition layout parity: how many distinct tokens land in each of 10
     * djb2 partitions — exercises the codegen'd [[Djb2Partition]]
-    * expression; the oracle recomputes djb2 in SQL (recursive CTE,
-    * HUGEINT 2^64 wraparound). */
+    * expression; the oracle recomputes djb2 in SQL
+    * ([[OracleCtes.djb2Sql]], HUGEINT 2^64 wraparound). */
   def partitionHist(s: SparkSession, d: String): DataFrame =
     tokens(s, d)
       .select("token").distinct()
@@ -81,19 +81,13 @@ object MapReduceQueries {
       .orderBy("partition_idx")
 
   val partitionHistSql: String =
-    """WITH RECURSIVE toks AS (
+    s"""WITH toks AS (
       |  SELECT DISTINCT token FROM (
-      |    SELECT unnest(string_split_regex(text, '[ \t\n\r]+')) AS token FROM documents
+      |    SELECT unnest(string_split_regex(text, '[ \\t\\n\\r]+')) AS token FROM documents
       |  ) WHERE token <> ''
-      |), h AS (
-      |  SELECT token, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM toks
-      |  UNION ALL
-      |  SELECT token, i+1,
-      |    (hash*33 + ord(substr(token,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(token)
       |)
-      |SELECT CAST(hash % 10 AS BIGINT) AS partition_idx, count(*) AS n_tokens
-      |FROM h WHERE i = length(token)+1
+      |SELECT CAST(${OracleCtes.djb2Sql("token")} % 10 AS BIGINT) AS partition_idx, count(*) AS n_tokens
+      |FROM toks
       |GROUP BY partition_idx ORDER BY partition_idx""".stripMargin
 
   /** Generic keyed reduce through the [[MapReduce]] facade itself (the

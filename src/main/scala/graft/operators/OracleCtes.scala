@@ -35,8 +35,65 @@ package graft.operators
   * and is deliberately absent — every consumer thresholds above 0.
   * The fragment is legal inside a `WITH RECURSIVE` list (only the
   * genuinely recursive member must stay un-MATERIALIZED).
+  *
+  * The oracles' 64-bit hash arithmetic lives here too, once:
+  *   - [[djb2Sql]]: djb2 of a VARCHAR as one scalar expression (HUGEINT
+  *     in [0, 2⁶⁴)), the twin of [[graft.functions.Djb2.hash]];
+  *   - [[signedSql]]: such a value as the signed BIGINT with the same
+  *     64 bits (Spark's long);
+  *   - [[m64]]: 2⁶⁴, the modulus of every wrap an oracle replays;
+  *   - [[rollCte]]: the K-char polynomial rolling hash of
+  *     [[graft.functions.WinnowImpl]], the one recursive member the
+  *     winnow and CDC oracles share.
   */
 private[graft] object OracleCtes {
+
+  /** 2⁶⁴ as a DuckDB HUGEINT. */
+  val m64: String = "CAST('18446744073709551616' AS HUGEINT)"
+
+  /** djb2 of the VARCHAR expression `key` (`h = 5381; h = h*33 + c`
+    * over its UTF-8 bytes with signed-char promotion, mod 2⁶⁴) as one
+    * scalar HUGEINT expression in [0, 2⁶⁴) — the value
+    * [[graft.functions.Djb2.hash]] computes, read unsigned. Each byte
+    * comes out of the key's hex rendering; `key` is spliced twice, so
+    * pass a column or a cheap expression. Splice into any SELECT, no
+    * `WITH RECURSIVE` needed. */
+  def djb2Sql(key: String): String =
+    s"""list_reduce(list_prepend(CAST(5381 AS HUGEINT),
+       |  list_transform(range(0, octet_length(encode($key))),
+       |    dj_i -> CAST(('0x' || substr(hex(encode($key)), 2 * dj_i + 1, 2))::INTEGER AS HUGEINT))),
+       |  (dj_h, dj_c) -> (dj_h * 33 + CASE WHEN dj_c >= 128 THEN dj_c - 256 ELSE dj_c END + $m64) % $m64)""".stripMargin
+
+  /** The HUGEINT `u` in [0, 2⁶⁴) as the two's-complement BIGINT with
+    * the same 64 bits — how Spark holds (and orders) the value. */
+  def signedSql(u: String): String =
+    s"CAST(CASE WHEN $u >= CAST('9223372036854775808' AS HUGEINT) THEN $u - $m64 ELSE $u END AS BIGINT)"
+
+  /** CTE `roll(doc_id, text, m, i, h)`: the K-char polynomial rolling
+    * hash of [[graft.functions.WinnowImpl]] (base B, HUGEINT mod 2⁶⁴,
+    * one recursion step per character position, h unsigned) over the
+    * `docs(doc_id, text, m)` rows that satisfy `where`, where m =
+    * length(text) − K + 1 is the doc's gram count and i = 1..m the
+    * gram's start. Splice into a `WITH RECURSIVE` list. A per-position
+    * closed form returns the same rows but re-reads K characters per
+    * gram (measured 4–10× slower at sf0.01), so the recursion stays. */
+  def rollCte(where: String): String = {
+    import graft.functions.WinnowImpl.{B, K, bpow}
+    val bpk1 = java.lang.Long.toUnsignedString(bpow(K - 1))
+    // init hash: sum_j ord(text[j]) * B^(K-j), j = 1..K (1-based SQL)
+    val bpLits = bpow.map(b => java.lang.Long.toUnsignedString(b)).mkString("[", ", ", "]")
+    s"""roll AS (
+       |  SELECT doc_id, text, m, 1 AS i,
+       |    CAST(list_sum(list_transform(generate_series(1, $K),
+       |      j -> ord(substr(text, j, 1)) * ($bpLits::HUGEINT[])[$K + 1 - j])) AS HUGEINT) % $m64 AS h
+       |  FROM docs WHERE $where
+       |  UNION ALL
+       |  SELECT doc_id, text, m, i + 1,
+       |    ((((h - ord(substr(text, i, 1)) * CAST('$bpk1' AS HUGEINT)) % $m64 + $m64) % $m64)
+       |      * $B + ord(substr(text, i + $K, 1))) % $m64
+       |  FROM roll WHERE i < m
+       |)""".stripMargin
+  }
 
   /** See object doc. Splice as `WITH $ngramOverlap, ...` or
     * `WITH RECURSIVE $ngramOverlap, ...`. */

@@ -65,20 +65,12 @@ object Pipeline {
   }
 
   val mixSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key,
+    s"""WITH b AS (
+      |  SELECT doc_id,
       |    CASE WHEN n_chars < 200 THEN 'short'
-      |         WHEN n_chars < 350 THEN 'mid' ELSE 'long' END AS tier
+      |         WHEN n_chars < 350 THEN 'mid' ELSE 'long' END AS tier,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, tier, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, tier, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, tier, CAST(hash % 100 AS INT) AS bucket
-      |  FROM h WHERE i = length(key)+1
       |)
       |SELECT doc_id, tier, bucket FROM b
       |WHERE bucket < CASE tier WHEN 'short' THEN 25 WHEN 'mid' THEN 50 ELSE 100 END
@@ -298,17 +290,10 @@ object Pipeline {
   }
 
   val splitSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, source, n_chars FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, source, n_chars, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, source, n_chars, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, source, n_chars, CAST(hash % 100 AS INT) AS bucket
-      |  FROM h WHERE i = length(key)+1
+    s"""WITH b AS (
+      |  SELECT doc_id, source, n_chars,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket
+      |  FROM documents
       |)
       |SELECT source,
       |  CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split,
@@ -340,19 +325,11 @@ object Pipeline {
   }
 
   val quotaSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, source,
-      |    CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT) AS n_tok
+    s"""WITH b AS (
+      |  SELECT doc_id, source,
+      |    CAST(len(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS BIGINT) AS n_tok,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, source, n_tok, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, source, n_tok, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, source, n_tok, CAST(hash % 100 AS INT) AS bucket
-      |  FROM h WHERE i = length(key)+1
       |), cum AS (
       |  SELECT doc_id, source, n_tok,
       |    CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY bucket, doc_id
@@ -644,18 +621,10 @@ object Pipeline {
       s"""SELECT $shard AS shard, 1 AS n_docs,
          |  CAST(length($t) AS BIGINT) AS total_chars,
          |  md5('$id:' || md5($t)) AS manifest_md5 FROM (SELECT 1)""".stripMargin
-    s"""WITH RECURSIVE ds AS (
-       |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, n_chars, md5(text) AS fp
+    s"""WITH b AS (
+       |  SELECT doc_id, n_chars, md5(text) AS fp,
+       |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
        |  FROM documents
-       |), h AS (
-       |  SELECT doc_id, key, n_chars, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-       |  UNION ALL
-       |  SELECT doc_id, key, n_chars, fp, i+1,
-       |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM h WHERE i <= length(key)
-       |), b AS (
-       |  SELECT doc_id, n_chars, fp, CAST(hash % 16 AS INT) AS shard
-       |  FROM h WHERE i = length(key)+1
        |)
        |SELECT * FROM (
        |  SELECT shard, count(*) AS n_docs,
@@ -795,18 +764,10 @@ object Pipeline {
 
   /** SQL twin: the [[manifestSql]] CTE with the delete predicate. */
   val forgetSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, n_chars, md5(text) AS fp
+    s"""WITH b AS (
+      |  SELECT doc_id, n_chars, md5(text) AS fp,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, n_chars, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, n_chars, fp, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, n_chars, fp, CAST(hash % 16 AS INT) AS shard
-      |  FROM h WHERE i = length(key)+1
       |), pre AS (
       |  SELECT shard, count(*) AS n_before FROM b GROUP BY shard
       |), post AS (
@@ -1785,14 +1746,10 @@ object Pipeline {
     * size. */
   def reshardCost(s: SparkSession, d: String): DataFrame = {
     val Ring = 1000000L
-    // scalar twin of the Djb2 expression (C parity: h·33 + signed byte,
-    // 64-bit wrap; keys here are ASCII, no NUL) — node keys are
-    // compile-time constants, so their ring positions are too
-    def djb2(str: String): Long = {
-      var h = 5381L; str.getBytes("UTF-8").foreach(b => h = h * 33 + b); h
-    }
+    // node keys are compile-time constants, so their ring positions are too
     val nodes: Seq[(Long, Long)] = (0 until 20).map { j =>
-      j.toLong -> java.lang.Long.remainderUnsigned(djb2(s"node-$j".reverse), Ring)
+      j.toLong -> java.lang.Long.remainderUnsigned(
+        graft.functions.Djb2.hash(s"node-$j".reverse.getBytes("UTF-8")), Ring)
     }
     // argmin by (clockwise distance, node) via min over encoded keys
     def ownerCol(upTo: Int): org.apache.spark.sql.Column =
@@ -1818,33 +1775,21 @@ object Pipeline {
         ExactRound.r(col("moved_ring").cast("double") / col("n_docs"), 6).as("frac_ring"))
   }
 
-  /** SQL twin: the djb2 CTE over doc keys AND the 20 node keys, same
-    * ring arithmetic. */
+  /** SQL twin: [[OracleCtes.djb2Sql]] over doc keys AND the 20 node
+    * keys, same ring arithmetic. */
   val reshardCostSql: String = {
     val fracMod = ExactRound.rSql("CAST(sum(CASE WHEN m16 <> m20 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 6)
     val fracRing = ExactRound.rSql("CAST(sum(CASE WHEN r16 <> r20 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 6)
-    """WITH RECURSIVE keys AS (
+    s"""WITH keys AS (
       |  SELECT CAST(doc_id AS VARCHAR) AS key, 'doc-' || doc_id AS rkey,
       |    doc_id, TRUE AS is_doc
       |  FROM documents
       |  UNION ALL
       |  SELECT 'node-' || j, 'node-' || j, j, FALSE FROM generate_series(0, 19) t(j)
-      |), h AS (
-      |  SELECT key, rkey, doc_id, is_doc, 1 AS i,
-      |    CAST(5381 AS HUGEINT) AS hash, CAST(5381 AS HUGEINT) AS rhash
-      |  FROM keys
-      |  UNION ALL
-      |  SELECT key, rkey, doc_id, is_doc, i+1,
-      |    CASE WHEN i <= length(key)
-      |      THEN (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |      ELSE hash END,
-      |    CASE WHEN i <= length(rkey)
-      |      THEN (rhash*33 + ord(substr(reverse(rkey),i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |      ELSE rhash END
-      |  FROM h WHERE i <= greatest(length(key), length(rkey))
       |), hashed AS (
-      |  SELECT key, doc_id, is_doc, hash, rhash FROM h
-      |  WHERE i = greatest(length(key), length(rkey)) + 1
+      |  SELECT doc_id, is_doc, ${OracleCtes.djb2Sql("key")} AS hash,
+      |    ${OracleCtes.djb2Sql("reverse(rkey)")} AS rhash
+      |  FROM keys
       |), docs AS (
       |  SELECT doc_id, CAST(hash % 16 AS BIGINT) AS m16, CAST(hash % 20 AS BIGINT) AS m20,
       |    CAST(rhash % 1000000 AS BIGINT) AS dpos
@@ -1866,10 +1811,9 @@ object Pipeline {
       |SELECT count(*) AS n_docs,
       |  CAST(sum(CASE WHEN m16 <> m20 THEN 1 ELSE 0 END) AS BIGINT) AS moved_mod,
       |  CAST(sum(CASE WHEN r16 <> r20 THEN 1 ELSE 0 END) AS BIGINT) AS moved_ring,
-      |  FRAC_MOD AS frac_mod,
-      |  FRAC_RING AS frac_ring
+      |  $fracMod AS frac_mod,
+      |  $fracRing AS frac_ring
       |FROM own""".stripMargin
-      .replace("FRAC_MOD", fracMod).replace("FRAC_RING", fracRing)
   }
 
   /** SCHEMA EVOLUTION across writer generations — the reality of any
@@ -2063,20 +2007,12 @@ object Pipeline {
   }
 
   val datasetDiffSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, n_chars,
-      |    md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS nfp,
-      |    md5(text) AS fp
+    s"""WITH b AS (
+      |  SELECT doc_id, n_chars,
+      |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS nfp,
+      |    md5(text) AS fp,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, n_chars, nfp, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, n_chars, nfp, fp, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, n_chars, nfp, fp, CAST(hash % 16 AS INT) AS shard
-      |  FROM h WHERE i = length(key)+1
       |), keep AS (
       |  SELECT *, doc_id = min(doc_id) OVER (PARTITION BY nfp) AS is_canon FROM b
       |), fullm AS (
@@ -2098,18 +2034,10 @@ object Pipeline {
       |ORDER BY f.shard""".stripMargin
 
   val manifestSql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, n_chars, md5(text) AS fp
+    s"""WITH b AS (
+      |  SELECT doc_id, n_chars, md5(text) AS fp,
+      |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, n_chars, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, n_chars, fp, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |), b AS (
-      |  SELECT doc_id, n_chars, fp, CAST(hash % 16 AS INT) AS shard
-      |  FROM h WHERE i = length(key)+1
       |)
       |SELECT shard, count(*) AS n_docs,
       |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
@@ -2198,27 +2126,18 @@ object Pipeline {
       .orderBy("epoch", "shard")
   }
 
-  /** SQL twin: recursive-CTE djb2 over the same "e:doc_id" keys;
-    * unsigned mod for the shard, signed-BIGINT hash order for the
-    * in-shard position (Spark orders the signed 64-bit hash). */
+  /** SQL twin: djb2 over the same "e:doc_id" keys; unsigned mod for
+    * the shard, signed-BIGINT hash order for the in-shard position
+    * (Spark orders the signed 64-bit hash). */
   val epochShuffleSql: String = {
-    val m64 = "CAST('18446744073709551616' AS HUGEINT)"
-    val half = "CAST('9223372036854775808' AS HUGEINT)"
-    s"""WITH RECURSIVE ds AS (
+    s"""WITH ds AS (
        |  SELECT doc_id, n_chars, e.epoch,
        |    CAST(e.epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR) AS key
        |  FROM documents, (SELECT unnest([0, 1, 2]) AS epoch) e
-       |), h AS (
-       |  SELECT doc_id, n_chars, epoch, key, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-       |  UNION ALL
-       |  SELECT doc_id, n_chars, epoch, key, i + 1,
-       |    (hash * 33 + ord(substr(key, i, 1))) % $m64
-       |  FROM h WHERE i <= length(key)
        |), k AS (
        |  SELECT CAST(epoch AS BIGINT) AS epoch, doc_id, n_chars,
-       |    CAST(hash % 32 AS INT) AS shard,
-       |    CAST(CASE WHEN hash >= $half THEN hash - $m64 ELSE hash END AS BIGINT) AS hs
-       |  FROM h WHERE i = length(key) + 1
+       |    CAST(hash % 32 AS INT) AS shard, ${OracleCtes.signedSql("hash")} AS hs
+       |  FROM (SELECT *, ${OracleCtes.djb2Sql("key")} AS hash FROM ds)
        |), p AS (
        |  SELECT epoch, shard, doc_id, n_chars,
        |    CAST(row_number() OVER (PARTITION BY epoch, shard ORDER BY hs, doc_id) AS BIGINT) AS pos
@@ -2320,26 +2239,20 @@ object Pipeline {
       .orderBy("relation", "split_a", "split_b")
   }
 
-  /** SQL twin: same djb2 split buckets (recursive CTE), same exact
+  /** SQL twin: same djb2 split buckets, same exact
     * shingle-Jaccard near pairs, same per-(group, split) pair math. */
   val splitLeakageSql: String = {
     val jac = OracleCtes.ngramJaccardExpr
-    s"""WITH RECURSIVE ds AS (
+    s"""WITH ds AS (
       |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key,
       |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, fp, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, fp, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
       |), docs AS (
       |  SELECT doc_id, fp,
       |    CASE WHEN CAST(hash % 100 AS INT) < 90 THEN 'train'
       |         WHEN CAST(hash % 100 AS INT) < 95 THEN 'val'
       |         ELSE 'test' END AS split
-      |  FROM h WHERE i = length(key)+1
+      |  FROM (SELECT *, ${OracleCtes.djb2Sql("key")} AS hash FROM ds)
       |), ${OracleCtes.ngramOverlap}, np AS (
       |  SELECT pa AS doc_a, pb AS doc_b FROM ng_pair WHERE $jac >= 0.5
       |), near_rows AS (

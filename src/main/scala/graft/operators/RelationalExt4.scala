@@ -315,7 +315,7 @@ object RelationalExt4 {
     * the reference's own partitioned-output shape — a djb2 shard
     * histogram (distwc.c's result-<p>.txt layout, mapreduce.c:239's
     * hash) — ENTIRELY through SQL text using the registered
-    * `djb2_partition`, against the recursive-CTE djb2 replication the
+    * `djb2_partition`, against the SQL djb2 ([[OracleCtes.djb2Sql]]) the
     * oracle already trusts. A green row certifies registration,
     * argument folding (the literal numParts), codegen and C-parity
     * semantics end to end on the SQL path a notebook user takes. */
@@ -334,18 +334,9 @@ object RelationalExt4 {
   }
 
   val q60Sql: String =
-    """WITH RECURSIVE ds AS (
-      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key, n_chars FROM documents
-      |), h AS (
-      |  SELECT doc_id, key, n_chars, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM ds
-      |  UNION ALL
-      |  SELECT doc_id, key, n_chars, i+1,
-      |    (hash*33 + ord(substr(key,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(key)
-      |)
-      |SELECT CAST(hash % 16 AS INT) AS shard, count(*) AS n_docs,
-      |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-      |FROM h WHERE i = length(key)+1
+    s"""SELECT CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard,
+      |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
+      |FROM documents
       |GROUP BY shard ORDER BY shard""".stripMargin
 
   /** RUNTIME BLOOM-FILTER JOIN certificate — the non-partitioned twin

@@ -213,22 +213,13 @@ object TextAnalysis {
   }
 
   val fingerprintSql: String =
-    """WITH RECURSIVE norm AS (
-      |  SELECT doc_id, trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g')) AS t
+    s"""WITH norm AS (
+      |  SELECT doc_id, trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g')) AS t
       |  FROM documents
-      |), h AS (
-      |  SELECT doc_id, t, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM norm
-      |  UNION ALL
-      |  SELECT doc_id, t, i+1,
-      |    (hash*33 + ord(substr(t,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-      |  FROM h WHERE i <= length(t)
       |)
-      |SELECT n.doc_id, md5(n.t) AS md5_fp,
-      |  CAST(CASE WHEN h.hash >= CAST('9223372036854775808' AS HUGEINT)
-      |       THEN h.hash - CAST('18446744073709551616' AS HUGEINT)
-      |       ELSE h.hash END AS BIGINT) AS djb2_fp
-      |FROM norm n JOIN h ON n.doc_id = h.doc_id AND h.i = length(n.t)+1
-      |ORDER BY n.doc_id""".stripMargin
+      |SELECT doc_id, md5(t) AS md5_fp, ${OracleCtes.signedSql("hash")} AS djb2_fp
+      |FROM (SELECT doc_id, t, ${OracleCtes.djb2Sql("t")} AS hash FROM norm)
+      |ORDER BY doc_id""".stripMargin
 
   /** THRESHOLDED N-GRAM RELEASE — the Google-Books-style publication
     * discipline for corpus statistics: publish a trigram's counts ONLY
@@ -2009,15 +2000,9 @@ object TextAnalysis {
        |  GROUP BY 1, 2
        |), csel_de AS MATERIALIZED (
        |  SELECT DISTINCT chunk_hash AS elem FROM sets
-       |), csel_h AS (
-       |  SELECT elem, 1 AS i, CAST(5381 AS HUGEINT) AS hash FROM csel_de
-       |  UNION ALL
-       |  SELECT elem, i+1,
-       |    (hash*33 + ord(substr(elem,i,1))) % CAST('18446744073709551616' AS HUGEINT)
-       |  FROM csel_h WHERE i <= length(elem)
        |), csel_h31 AS MATERIALIZED (
-       |  SELECT elem, CAST(hash % 2147483648 AS BIGINT) AS h31
-       |  FROM csel_h WHERE i = length(elem)+1
+       |  SELECT elem, CAST(${OracleCtes.djb2Sql("elem")} % 2147483648 AS BIGINT) AS h31
+       |  FROM csel_de
        |), csel_pm AS MATERIALIZED (
        |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
        |  FROM (SELECT unnest(generate_series(1, 128)) AS i),

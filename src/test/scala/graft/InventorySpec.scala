@@ -107,6 +107,19 @@ class InventorySpec extends AnyFunSuite {
     assert(!mm.contains(".grouped("), "Multimodal still batches rows with .grouped(")
   }
 
+  test("one djb2 per engine and one rolling-hash CTE under src/main") {
+    val oracleSeeds = mainFilesCalling(raw"CAST\(5381 AS HUGEINT\)|'18446744073709551616'".r)
+    assert(oracleSeeds == Set("OracleCtes.scala"),
+      s"djb2 seed or 2⁶⁴ spelled out in SQL outside OracleCtes: $oracleSeeds")
+    // MinHashFns' `if (u == null) 5381L else Djb2.hash(...)` is a null default, not a fold
+    val scalaFolds = mainLines.filter { case (_, _, l) =>
+      code(l).contains("5381L") && !code(l).contains("null) 5381L else Djb2.hash")
+    }.map(_._1).toSet
+    assert(scalaFolds == Set("Djb2.scala"), s"a Scala djb2 fold outside Djb2: $scalaFolds")
+    val rolls = mainOccurrences("roll AS (")
+    assert(rolls == 1, s"the rolling-hash CTE is defined $rolls times, not once")
+  }
+
   /** (file name, 1-based line number, line) of every line under src/main. */
   private def mainLines: Seq[(String, Int, String)] = {
     val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
