@@ -21,9 +21,7 @@ object RefBench {
     // measures the job, not JVM warm-up
     spark.read.textFile(in).limit(1).count()
     val t0 = System.nanoTime()
-    spark.read.textFile(in)
-      .select(explode(split(col("value"), "[ \t\n\r]+")).as("token"))
-      .filter(col("token") =!= "")
+    graft.functions.Tokens.distwc(spark.read.textFile(in).toDF(), "value")
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .select(concat(col("token"), lit(": "), col("cnt")).as("value"),
         graft.functions.Djb2.djb2_partition(col("token"), 10).as("p"))

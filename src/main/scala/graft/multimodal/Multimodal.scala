@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Tokens
 import graft.operators.{ExactRound, OracleCtes}
 
 /** Multimodal column plumbing (SURVEY.md §2F).
@@ -885,7 +886,7 @@ object Multimodal {
          |  'end_ms', ${ts(l2, 18)},
          |  'n_words', size(split(element_at(split(b, '\\n'), 3), ' '))))""".stripMargin
     docs(s, d)
-      .select(col("doc_id"), split(trim(col("text")), "[ \t\n\r]+").as("words"))
+      .select(col("doc_id"), Tokens.words(col("text")).as("words"))
       .select(col("doc_id"), expr(gen).as("srt"))
       .withColumn("caps", expr(parsed))
       .select(col("doc_id"),
@@ -901,9 +902,9 @@ object Multimodal {
   }
 
   val srtParseSql: String =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT doc_id,
-      |    len(string_split_regex(trim(text), '[ \t\n\r]+')) AS nw
+      |    len(${OracleCtes.wordsSql("text")}) AS nw
       |  FROM documents
       |)
       |SELECT doc_id,

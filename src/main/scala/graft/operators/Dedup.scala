@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{GraftConf, Tables}
+import graft.functions.Tokens
 
 /** Deduplication family for LLM training-data pipelines (SURVEY.md §2D).
   *
@@ -19,15 +20,13 @@ import graft.{GraftConf, Tables}
   */
 object Dedup {
 
-  private val WS = "[ \t\n\r]+"
-
   // ---------------------------------------------------------------- exact
 
   /** Exact dedup: canonical assignment via hash-groupBy on normalized
     * text. Output is total (one row per doc: its canonical id and group
     * size), so the operator composes as a cleaning step. */
   def exact(s: SparkSession, d: String): DataFrame = {
-    val fp = md5(to_binary(trim(regexp_replace(lower(col("text")), WS, " ")), lit("utf-8")))
+    val fp = Tokens.fingerprint(col("text"))
     val w = Window.partitionBy("fp")
     Tables.documents(s, d)
       .select(col("doc_id"), fp.as("fp"))
@@ -39,11 +38,11 @@ object Dedup {
   }
 
   val exactSql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       | min(doc_id) OVER (PARTITION BY fp) AS canonical_id,
       | count(*) OVER (PARTITION BY fp) AS group_size
       |FROM (
-      |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS fp
+      |  SELECT doc_id, ${OracleCtes.fingerprintSql("text")} AS fp
       |  FROM documents
       |) ORDER BY doc_id""".stripMargin
 
@@ -111,7 +110,7 @@ object Dedup {
     * `min(pfx)` to shrink shuffle keys — same plan shape. */
   def prefixDup(s: SparkSession, d: String): DataFrame = {
     val pfx = array_join(
-      slice(split(trim(lower(col("text"))), WS), 1, GraftConf.prefixDupTokens), " ")
+      slice(Tokens.lowerWords(col("text")), 1, GraftConf.prefixDupTokens), " ")
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"), pfx.as("pfx"))
       .groupBy("pfx")
@@ -131,7 +130,7 @@ object Dedup {
        |FROM (
        |  SELECT doc_id, source,
        |    array_to_string(list_slice(
-       |      string_split_regex(trim(lower(text)), '[ \\t\\n\\r]+'),
+       |      ${OracleCtes.lowerWordsSql("text")},
        |      1, ${GraftConf.prefixDupTokens}), ' ') AS pfx
        |  FROM documents)
        |GROUP BY pfx HAVING count(*) > 1
@@ -151,7 +150,7 @@ object Dedup {
   private def withShinglesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
-        graft.functions.MinHashFns.word_shingles(split(trim(col("text")), WS), 3).as("sh"))
+        graft.functions.MinHashFns.word_shingles(Tokens.words(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
 
   /** [[signatures]] over an arbitrary (doc_id, text) frame. */
@@ -314,6 +313,13 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** [[OracleCtes.minhashSigCtes]] over `ng_grams`, the distinct
+    * 3-shingles of [[signatures]] — `sigs(doc_id, sig)`; splice after
+    * [[OracleCtes.ngramGrams]] or [[OracleCtes.ngramOverlap]]. */
+  private lazy val ngramSigCtes: String =
+    s"""ng_el AS (SELECT doc_id, g AS elem FROM ng_grams
+       |), ${OracleCtes.minhashSigCtes("ng_el")}""".stripMargin
+
   /** SQL twin of [[minhashLsh]]: every stage of the sketch is
     * deterministic and SQL-expressible — djb2 base hash
     * ([[OracleCtes.djb2Sql]], same as mr_partition_hist), the 128
@@ -333,53 +339,12 @@ object Dedup {
     * the cap fires (d_cap_fires pins exactly that regime; at the
     * driver's scales the largest bucket is 326 and nothing changes). */
   val minhashLshSql: String = {
-    val pa = graft.functions.MinHashImpl.permA.mkString("[", ", ", "]")
-    val pb = graft.functions.MinHashImpl.permB.mkString("[", ", ", "]")
-    s"""WITH docs AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    generate_series(1, greatest(len(toks)-2, 0)),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks FROM documents)
-       |  WHERE len(toks) >= 3
-       |), docsh AS (
-       |  SELECT doc_id, unnest(sh) AS shingle FROM docs
-       |), shing AS (SELECT DISTINCT shingle FROM docsh
-       |), sh31 AS (
-       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
-       |  FROM shing
-       |), perms AS (
-       |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
-       |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
-       |       (SELECT $pa::BIGINT[] AS pal, $pb::BIGINT[] AS pbl)
-       |), sigv AS (
-       |  SELECT d.doc_id, pm.p, min((pm.a * s.h31 + pm.b) % 2147483647) AS sv
-       |  FROM docsh d JOIN sh31 s USING (shingle), perms pm
-       |  GROUP BY d.doc_id, pm.p
-       |), sigs AS (
-       |  SELECT doc_id, list(sv ORDER BY p) AS sig FROM sigv GROUP BY doc_id
-       |), bnd AS MATERIALIZED (
-       |  SELECT doc_id, bd, sig[4*bd+1 : 4*bd+4] AS slice FROM (
-       |    SELECT doc_id, sig, unnest(generate_series(0, 31)) AS bd FROM sigs)
-       |), bsz AS MATERIALIZED (
-       |  SELECT bd, slice, count(*) AS b FROM (
-       |    SELECT bd, sig[4*bd+1 : 4*bd+4] AS slice FROM (
-       |      SELECT sig, unnest(generate_series(0, 31)) AS bd FROM (SELECT DISTINCT sig FROM sigs)))
-       |  GROUP BY bd, slice
-       |), cold AS MATERIALIZED (
-       |  SELECT n.doc_id, n.bd, n.slice FROM bnd n
-       |  JOIN bsz z ON z.bd = n.bd AND z.slice = n.slice
-       |  WHERE z.b <= ${graft.GraftConf.maxBandBucket}
-       |), cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-       |  UNION
-       |  SELECT a.doc_id, b.doc_id
-       |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
-       |)
+    val r = graft.GraftConf.lshBandRowsCandidates
+    s"""WITH ${OracleCtes.ngramGrams}, $ngramSigCtes, ${OracleCtes.lshCandCtes(r)}
        |SELECT doc_a, doc_b, est_jaccard FROM (
        |  SELECT c.doc_a, c.doc_b,
        |    round(len(list_filter(generate_series(1, 128), i -> a.sig[i] = b.sig[i])) / 128.0, 6) AS est_jaccard
-       |  FROM cand c JOIN sigs a ON a.doc_id = c.doc_a JOIN sigs b ON b.doc_id = c.doc_b
+       |  FROM cand$r c JOIN sigs a ON a.doc_id = c.doc_a JOIN sigs b ON b.doc_id = c.doc_b
        |)
        |WHERE est_jaccard >= 0.3
        |ORDER BY doc_a, doc_b""".stripMargin
@@ -860,7 +825,7 @@ object Dedup {
     // shuffle 8-byte longs; the accepted collision bound is
     // [[graft.functions.Hash64Collision]] (merge-only failure mode,
     // birthday-bounded, string-exact DuckDB twin audits it).
-    val toks = docs.select(col("doc_id"), split(trim(col("text")), WS).as("toks"))
+    val toks = docs.select(col("doc_id"), Tokens.words(col("text")).as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // r14 (guide §2.4 "remove passes outright"): the four widths used to
     // run four chained per-width pipelines — a head() price action plus
@@ -946,7 +911,7 @@ object Dedup {
     def grams(w: Int): String =
       s"""gw$w AS MATERIALIZED (
          |  SELECT DISTINCT doc_id, array_to_string(toks[i:i+${w - 1}], ' ') AS g
-         |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks
+         |  FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks
          |        FROM documents),
          |    unnest(generate_series(1, len(toks) - ${w - 1})) AS t(i)
          |  WHERE len(toks) >= $w
@@ -1064,7 +1029,7 @@ object Dedup {
   def simhash(s: SparkSession, d: String): DataFrame = {
     val sims = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
-        graft.functions.MinHashFns.simhash64(split(trim(col("text")), WS)).as("simhash"))
+        graft.functions.MinHashFns.simhash64(Tokens.words(col("text"))).as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
     // canonicalize-before-pair (the [[bandCandidates]] hot-key guard,
     // same argument): docs with an IDENTICAL 64-bit signature are
@@ -1153,7 +1118,7 @@ object Dedup {
     import OracleCtes.m64
     val divs = (0 until 64).map(b => (BigInt(1) << b).toString).mkString("[", ", ", "]")
     s"""doctok AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS token FROM documents
+       |  SELECT doc_id, unnest(${OracleCtes.wordsSql("text")}) AS token FROM documents
        |), tokcnt AS (
        |  SELECT doc_id, token, count(*) AS cnt FROM doctok GROUP BY doc_id, token
        |), toks AS (SELECT DISTINCT token FROM doctok
@@ -1211,7 +1176,7 @@ object Dedup {
     val pairs = ngramJaccard(s, d)
     val sims = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
-        graft.functions.MinHashFns.simhash64(split(trim(col("text")), WS)).as("sig"))
+        graft.functions.MinHashFns.simhash64(Tokens.words(col("text"))).as("sig"))
     pairs
       .join(sims.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sims.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
@@ -1633,7 +1598,7 @@ object Dedup {
     * production sizes m to the train-split cardinality the same way. */
   def bloom(s: SparkSession, d: String): DataFrame = {
     val m = 8192
-    val fp = md5(to_binary(trim(regexp_replace(lower(col("text")), WS, " ")), lit("utf-8")))
+    val fp = Tokens.fingerprint(col("text"))
     val docs = Tables.documents(s, d).select(col("doc_id"), fp.as("fp"))
     val positions = docs.select(col("doc_id"), col("fp"),
       explode(array((0 until 3).map(i =>
@@ -1656,7 +1621,7 @@ object Dedup {
 
   val bloomSql: String =
     s"""WITH norm AS (
-      |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
+      |  SELECT doc_id, ${OracleCtes.fingerprintSql("text")} AS fp
       |  FROM documents
       |), keys AS (
       |  SELECT doc_id, fp, CAST(i AS VARCHAR) || ':' || fp AS key
@@ -1766,7 +1731,7 @@ object Dedup {
     val m = 131072L // 2^17 bits
     val docs = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
-        graft.functions.MinHashFns.word_shingles(split(trim(col("text")), WS), 8).as("g8"))
+        graft.functions.MinHashFns.word_shingles(Tokens.words(col("text")), 8).as("g8"))
       .filter(size(col("g8")) > 0)
     val grams = docs.select(col("doc_id"), explode(col("g8")).as("g"))
     val h = grams.withColumn("h31",
@@ -1801,11 +1766,9 @@ object Dedup {
     val abLits = BloomAB.map { case (a, b) => s"[$a, $b]" }.mkString("[", ", ", "]")
     s"""WITH g8 AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, g FROM (
-       |    SELECT doc_id,
-       |      toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' ||
-       |      toks[i+4] || ' ' || toks[i+5] || ' ' || toks[i+6] || ' ' || toks[i+7] AS g
+       |    SELECT doc_id, ${OracleCtes.shinglesSql("toks", 8)} AS g
        |    FROM (SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks)-7, 0))) AS i
-       |          FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks
+       |          FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks
        |                FROM documents)
        |          WHERE len(toks) >= 8)
        |  )
@@ -1993,16 +1956,8 @@ object Dedup {
       s"""(CASE WHEN $x < 128 THEN 1 WHEN $x < 16384 THEN 2
          |  WHEN $x < 2097152 THEN 3 WHEN $x < 268435456 THEN 4
          |  WHEN $x < 34359738368 THEN 5 ELSE 9 END)""".stripMargin
-    s"""WITH sb_grams AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, g FROM (
-       |    SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g FROM (
-       |      SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks)-2, 0))) AS i
-       |      FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks FROM documents)
-       |      WHERE len(toks) >= 3
-       |    )
-       |  )
-       |), sb_dg AS MATERIALIZED (
-       |  SELECT DISTINCT g FROM sb_grams
+    s"""WITH ${OracleCtes.ngramGrams}, sb_dg AS MATERIALIZED (
+       |  SELECT DISTINCT g FROM ng_grams
        |), sb_h AS MATERIALIZED (
        |  SELECT g, ${OracleCtes.signedSql("hu")} AS h
        |  FROM (SELECT g,
@@ -2010,7 +1965,7 @@ object Dedup {
        |            % ${OracleCtes.m64} AS hu
        |        FROM (SELECT g, ${OracleCtes.djb2Sql("g")} AS hash FROM sb_dg))
        |), sb_tok AS MATERIALIZED (
-       |  SELECT t.doc_id, hh.h FROM sb_grams t JOIN sb_h hh ON hh.g = t.g
+       |  SELECT t.doc_id, hh.h FROM ng_grams t JOIN sb_h hh ON hh.g = t.g
        |), sb_f AS MATERIALIZED (
        |  SELECT h, CAST(count(*) AS BIGINT) AS f FROM sb_tok GROUP BY h
        |), sb_rk AS MATERIALIZED (
@@ -2191,74 +2146,15 @@ object Dedup {
       .orderBy("band_rows")
   }
 
-  /** The DuckDB 128-perm MinHash signature replay over the document
-    * shingle table — CTE chain ending in `sigs(doc_id, sig)`; splice
-    * as `WITH $minhashSigCtes, ...`. Shared by the lshTune
-    * and hotBuckets oracles (one definition of the djb2 + affine-perm
-    * arithmetic both must match bit-for-bit). */
-  private lazy val minhashSigCtes: String = {
-    val pa = graft.functions.MinHashImpl.permA.mkString("[", ", ", "]")
-    val pb = graft.functions.MinHashImpl.permB.mkString("[", ", ", "]")
-    s"""${OracleCtes.ngramOverlap}, docsh AS MATERIALIZED (
-       |  SELECT doc_id, g AS shingle FROM ng_grams
-       |), shing AS MATERIALIZED (SELECT DISTINCT shingle FROM docsh
-       |), sh31 AS MATERIALIZED (
-       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
-       |  FROM shing
-       |), perms AS MATERIALIZED (
-       |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
-       |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
-       |       (SELECT $pa::BIGINT[] AS pal, $pb::BIGINT[] AS pbl)
-       |), sigv AS MATERIALIZED (
-       |  SELECT d.doc_id, pm.p, min((pm.a * s.h31 + pm.b) % 2147483647) AS sv
-       |  FROM docsh d JOIN sh31 s USING (shingle), perms pm
-       |  GROUP BY d.doc_id, pm.p
-       |), sigs AS MATERIALIZED (
-       |  SELECT doc_id, list(sv ORDER BY p) AS sig
-       |  FROM sigv GROUP BY doc_id
-       |)""".stripMargin
-  }
-
   /** Oracle: the [[minhashLshSql]] signature replay, then a brute pair
     * scan per band width. */
   val lshTuneSql: String = {
-    // band candidates via slice-explode + equi-join (one bands table
-    // per r, hash join on (band, slice) — DuckDB lists hash/compare
-    // structurally), NOT the old O(n²) nested-loop bandHit filter:
-    // slice-list equality IS elementwise equality of the r slice
-    // positions, so the candidate set is identical; DISTINCT collapses
-    // multi-band hits to one row exactly as the per-pair EXISTS did.
-    // Candidate jaccard comes from a LEFT JOIN against ng_pair —
-    // a candidate absent there shares zero shingles, jaccard 0.0.
-    // r10 (ADVICE r9): the hot-bucket cap is replayed per geometry —
-    // cross-group candidates only through buckets whose
-    // distinct-signature population is <= maxBandBucket, plus the
-    // unconditional identical-signature (intra-group) pairs, exactly
-    // bandCandidateReps' construction
-    val bands = Seq(2, 4, 8).map { r =>
-      s"""bands$r AS MATERIALIZED (
-         |  SELECT doc_id, bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
-         |    SELECT doc_id, sig, unnest(generate_series(0, ${128 / r - 1})) AS bd FROM sigs
-         |  )
-         |), cold$r AS MATERIALIZED (
-         |  SELECT n.doc_id, n.bd, n.slice FROM bands$r n
-         |  JOIN (
-         |    SELECT bd, slice, count(*) AS b FROM (
-         |      SELECT bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
-         |        SELECT sig, unnest(generate_series(0, ${128 / r - 1})) AS bd
-         |        FROM (SELECT DISTINCT sig FROM sigs)))
-         |    GROUP BY bd, slice
-         |  ) z ON z.bd = n.bd AND z.slice = n.slice
-         |  WHERE z.b <= ${graft.GraftConf.maxBandBucket}
-         |), cand$r AS MATERIALIZED (
-         |  SELECT a.doc_id AS pa, b.doc_id AS pb
-         |  FROM cold$r a JOIN cold$r b
-         |    ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-         |  UNION
-         |  SELECT a.doc_id, b.doc_id
-         |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
-         |)""".stripMargin
-    }.mkString(", ")
+    // band candidates per r through OracleCtes.lshCandCtes (slice
+    // buckets, the hot-bucket cap, identical-signature pairs — exactly
+    // bandCandidateReps' construction); candidate jaccard comes from a
+    // LEFT JOIN against ng_pair — a candidate absent there shares zero
+    // shingles, jaccard 0.0
+    val bands = Seq(2, 4, 8).map(OracleCtes.lshCandCtes).mkString(", ")
     val jacOnPair = ExactRound.rSql("CAST(p.isz AS DOUBLE) / (p.na + p.nb - p.isz)", 6)
     val configs = Seq(2, 4, 8).map { r =>
       s"""SELECT $r AS band_rows, ${128 / r} AS n_bands,
@@ -2266,10 +2162,10 @@ object Dedup {
          |  CAST(sum(CASE WHEN jacc >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_found
          |FROM (
          |  SELECT coalesce($jacOnPair, 0.0) AS jacc
-         |  FROM cand$r c LEFT JOIN ng_pair p ON p.pa = c.pa AND p.pb = c.pb
+         |  FROM cand$r c LEFT JOIN ng_pair p ON p.pa = c.doc_a AND p.pb = c.doc_b
          |)""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH $minhashSigCtes, $bands, truth AS (
+    s"""WITH ${OracleCtes.ngramOverlap}, $ngramSigCtes, $bands, truth AS (
        |  SELECT count(*) AS n_true FROM ng_pair WHERE $jaccardSqlExpr >= 0.5
        |), cfg AS (
        |$configs
@@ -2341,16 +2237,10 @@ object Dedup {
          |  CAST(sum(b * (b - 1) // 2) AS BIGINT) AS pairs_all,
          |  CAST(sum(CASE WHEN b <= $cap THEN b * (b - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_kept,
          |  sum(CASE WHEN b > $cap THEN 1 ELSE 0 END) > 0 AS cap_fires
-         |FROM (
-         |  SELECT bd, slice, count(*) AS b FROM (
-         |    SELECT bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
-         |      SELECT sig, unnest(generate_series(0, ${128 / r - 1})) AS bd FROM reps))
-         |  GROUP BY bd, slice
-         |)""".stripMargin
+         |FROM bsz$r""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH $minhashSigCtes, reps AS MATERIALIZED (
-       |  SELECT DISTINCT sig FROM sigs
-       |)
+    val buckets = Seq(2, 4, 8).map(OracleCtes.lshBucketCte).mkString(", ")
+    s"""WITH ${OracleCtes.ngramGrams}, $ngramSigCtes, $buckets
        |SELECT CAST(band_rows AS BIGINT) AS band_rows, CAST(n_bands AS BIGINT) AS n_bands,
        |  n_buckets, max_bucket, n_hot, pairs_all, pairs_kept, cap_fires
        |FROM ($per)
@@ -2434,11 +2324,8 @@ object Dedup {
     * self-join + unconditional intra-group pairs) and the exact
     * shingle verify. */
   val capFiresSql: String = {
-    val pa = graft.functions.MinHashImpl.permA.mkString("[", ", ", "]")
-    val pb = graft.functions.MinHashImpl.permB.mkString("[", ", ", "]")
     val cap = graft.GraftConf.maxBandBucket
     val r = graft.GraftConf.lshBandRowsVerify
-    val nb = 128 / r
     val iszS = "CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)"
     val jacc = ExactRound.rSql(s"$iszS / (len(da.sh) + len(db.sh) - $iszS)", 6)
     s"""WITH pd AS MATERIALIZED (
@@ -2451,51 +2338,19 @@ object Dedup {
        |), docs AS MATERIALIZED (
        |  SELECT pid AS doc_id, list_distinct(list_transform(
        |    generate_series(1, greatest(len(toks)-2, 0)),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-       |  FROM (SELECT pid, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks FROM pd)
+       |    i -> ${OracleCtes.shinglesSql("toks", 3)})) AS sh
+       |  FROM (SELECT pid, ${OracleCtes.wordsSql("text")} AS toks FROM pd)
        |  WHERE len(toks) >= 3
-       |), docsh AS (SELECT doc_id, unnest(sh) AS shingle FROM docs
-       |), shing AS MATERIALIZED (SELECT DISTINCT shingle FROM docsh
-       |), sh31 AS MATERIALIZED (
-       |  SELECT shingle, CAST(${OracleCtes.djb2Sql("shingle")} % 2147483648 AS BIGINT) AS h31
-       |  FROM shing
-       |), perms AS MATERIALIZED (
-       |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
-       |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
-       |       (SELECT $pa::BIGINT[] AS pal, $pb::BIGINT[] AS pbl)
-       |), sigv AS MATERIALIZED (
-       |  SELECT d.doc_id, pm.p, min((pm.a * s.h31 + pm.b) % 2147483647) AS sv
-       |  FROM docsh d JOIN sh31 s USING (shingle), perms pm
-       |  GROUP BY d.doc_id, pm.p
-       |), sigs AS MATERIALIZED (
-       |  SELECT doc_id, list(sv ORDER BY p) AS sig FROM sigv GROUP BY doc_id
-       |), bsz AS MATERIALIZED (
-       |  SELECT bd, slice, count(*) AS b FROM (
-       |    SELECT bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
-       |      SELECT sig, unnest(generate_series(0, ${nb - 1})) AS bd
-       |      FROM (SELECT DISTINCT sig FROM sigs)))
-       |  GROUP BY bd, slice
-       |), censu AS (
+       |), docsh AS (SELECT doc_id, unnest(sh) AS elem FROM docs
+       |), ${OracleCtes.minhashSigCtes("docsh")}, ${OracleCtes.lshCandCtes(r)}, censu AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_buckets,
        |    CAST(max(b) AS BIGINT) AS max_bucket,
        |    CAST(sum(CASE WHEN b > $cap THEN 1 ELSE 0 END) AS BIGINT) AS n_hot
-       |  FROM bsz
-       |), cold AS MATERIALIZED (
-       |  SELECT n.doc_id, n.bd, n.slice FROM (
-       |    SELECT doc_id, bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
-       |      SELECT doc_id, sig, unnest(generate_series(0, ${nb - 1})) AS bd FROM sigs)
-       |  ) n JOIN bsz z ON z.bd = n.bd AND z.slice = n.slice
-       |  WHERE z.b <= $cap
-       |), cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM cold a JOIN cold b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
-       |  UNION
-       |  SELECT a.doc_id, b.doc_id
-       |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
+       |  FROM bsz$r
        |), ver AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
        |    CAST(sum(CASE WHEN $jacc >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_found
-       |  FROM cand c JOIN docs da ON da.doc_id = c.doc_a JOIN docs db ON db.doc_id = c.doc_b
+       |  FROM cand$r c JOIN docs da ON da.doc_id = c.doc_a JOIN docs db ON db.doc_id = c.doc_b
        |), pl AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_planted
        |  FROM documents WHERE doc_id < 500 AND doc_id % 10 = 0
@@ -2716,7 +2571,7 @@ object Dedup {
     * Fractions are NULL when a relation has no pairs at this SF (the
     * generator plants exact dups only at sf ≥ 0.1). */
   def crossShard(s: SparkSession, d: String): DataFrame = {
-    val fp = md5(to_binary(trim(regexp_replace(lower(col("text")), WS, " ")), lit("utf-8")))
+    val fp = Tokens.fingerprint(col("text"))
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), fp.as("fp"))
       .select(col("doc_id"), col("fp"),
@@ -2760,7 +2615,7 @@ object Dedup {
     val jac = OracleCtes.ngramJaccardExpr
     s"""WITH ds AS (
       |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key,
-      |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
+      |    ${OracleCtes.fingerprintSql("text")} AS fp
       |  FROM documents
       |), docs AS (
       |  SELECT doc_id, fp,

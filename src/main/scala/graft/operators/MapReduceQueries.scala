@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Djb2
+import graft.functions.{Djb2, Tokens}
 import graft.mapreduce.MapReduce
 
 /** MapReduce core surface (SURVEY.md §2A): the reference's own workloads —
@@ -18,9 +18,7 @@ object MapReduceQueries {
 
   /** distwc.c tokenization: split on space/tab/newline/CR, drop empties. */
   private def tokens(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), explode(split(col("text"), "[ \t\n\r]+")).as("token"))
-      .filter(col("token") =!= "")
+    Tokens.distwc(Tables.documents(s, d), "text", "doc_id")
 
   /** Word count — the reference's flagship (distwc.c Map/Reduce). */
   def wordcount(s: SparkSession, d: String): DataFrame =
@@ -30,9 +28,9 @@ object MapReduceQueries {
       .orderBy("token")
 
   val wordcountSql: String =
-    """SELECT token, count(*) AS cnt FROM (
-      |  SELECT unnest(string_split_regex(text, '[ \t\n\r]+')) AS token FROM documents
-      |) WHERE token <> '' GROUP BY token ORDER BY token""".stripMargin
+    s"""SELECT token, count(*) AS cnt FROM (
+      |  SELECT unnest(${OracleCtes.distwcSql("text")}) AS token FROM documents
+      |) GROUP BY token ORDER BY token""".stripMargin
 
   /** Distributed grep: per-document occurrence count of a literal pattern
     * (map-only job; no shuffle at all beyond the final order). */
@@ -63,10 +61,10 @@ object MapReduceQueries {
       .orderBy("token")
 
   val invertedIndexSql: String =
-    """SELECT token, array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS docs
+    s"""SELECT token, array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS docs
       |FROM (
-      |  SELECT doc_id, unnest(string_split_regex(text, '[ \t\n\r]+')) AS token FROM documents
-      |) WHERE token <> '' GROUP BY token ORDER BY token""".stripMargin
+      |  SELECT doc_id, unnest(${OracleCtes.distwcSql("text")}) AS token FROM documents
+      |) GROUP BY token ORDER BY token""".stripMargin
 
   /** Partition layout parity: how many distinct tokens land in each of 10
     * djb2 partitions — exercises the codegen'd [[Djb2Partition]]
@@ -82,9 +80,7 @@ object MapReduceQueries {
 
   val partitionHistSql: String =
     s"""WITH toks AS (
-      |  SELECT DISTINCT token FROM (
-      |    SELECT unnest(string_split_regex(text, '[ \\t\\n\\r]+')) AS token FROM documents
-      |  ) WHERE token <> ''
+      |  SELECT DISTINCT unnest(${OracleCtes.distwcSql("text")}) AS token FROM documents
       |)
       |SELECT CAST(${OracleCtes.djb2Sql("token")} % 10 AS BIGINT) AS partition_idx, count(*) AS n_tokens
       |FROM toks
@@ -247,7 +243,7 @@ object MapReduceQueries {
     val docs = Tables.documents(s, d).select(col("text")).as[String]
     val counts = MapReduce.runCombined[String, String, Long](
       docs.rdd,
-      mapper = line => line.split("[ \t\n\r]+").iterator.filter(_.nonEmpty).map(_ -> 1L),
+      mapper = line => Tokens.distwc(line).map(_ -> 1L),
       merge = _ + _, numParts = graft.GraftConf.mrNumParts)
     val fof = MapReduce.runCombined[(String, Long), Long, Long](
       counts,
@@ -257,10 +253,10 @@ object MapReduceQueries {
   }
 
   val freqOfFreqSql: String =
-    """WITH wc AS (
+    s"""WITH wc AS (
       |  SELECT token, count(*) AS cnt FROM (
-      |    SELECT unnest(string_split_regex(text, '[ \t\n\r]+')) AS token FROM documents
-      |  ) WHERE token <> '' GROUP BY token
+      |    SELECT unnest(${OracleCtes.distwcSql("text")}) AS token FROM documents
+      |  ) GROUP BY token
       |)
       |SELECT cnt, count(*) AS n_tokens FROM wc GROUP BY cnt ORDER BY cnt""".stripMargin
 

@@ -36,6 +36,15 @@ package graft.operators
   * The fragment is legal inside a `WITH RECURSIVE` list (only the
   * genuinely recursive member must stay un-MATERIALIZED).
   *
+  * The oracles' tokenizer lives here, once — the SQL twins of
+  * [[graft.functions.Tokens]] over the same delimiter class:
+  *   - [[wordsSql]] / [[lowerWordsSql]]: split of the space-trimmed
+  *     (lower-cased) text on delimiter runs;
+  *   - [[distwcSql]]: the untrimmed split, empty tokens dropped;
+  *   - [[normalizedSql]] / [[fingerprintSql]]: delimiter runs to one
+  *     space, lower-cased and trimmed, and its md5;
+  *   - [[shinglesSql]]: the n-token shingle at list index `i`.
+  *
   * The oracles' 64-bit hash arithmetic lives here too, once:
   *   - [[djb2Sql]]: djb2 of a VARCHAR as one scalar expression (HUGEINT
   *     in [0, 2⁶⁴)), the twin of [[graft.functions.Djb2.hash]];
@@ -44,9 +53,41 @@ package graft.operators
   *   - [[m64]]: 2⁶⁴, the modulus of every wrap an oracle replays;
   *   - [[rollCte]]: the K-char polynomial rolling hash of
   *     [[graft.functions.WinnowImpl]], the one recursive member the
-  *     winnow and CDC oracles share.
+  *     winnow and CDC oracles share;
+  *   - [[minhashSigCtes]] / [[lshBucketCte]] / [[lshCandCtes]]: the
+  *     MinHash signature, its band buckets and the capped band
+  *     candidates of [[Dedup.bandCandidateReps]].
   */
 private[graft] object OracleCtes {
+
+  /** The distwc delimiter run as a DuckDB regex literal (RE2 reads the
+    * escapes) — the twin of [[graft.functions.Tokens.WS]]. */
+  private val ws = "'[ \\t\\n\\r]+'"
+
+  /** [[graft.functions.Tokens.words]] of the VARCHAR expression `text`. */
+  def wordsSql(text: String): String = s"string_split_regex(trim($text), $ws)"
+
+  /** [[graft.functions.Tokens.lowerWords]] of `text`. */
+  def lowerWordsSql(text: String): String = s"string_split_regex(trim(lower($text)), $ws)"
+
+  /** [[graft.functions.Tokens.distwc]] of `text` as a list: the
+    * untrimmed split with empty tokens dropped. */
+  def distwcSql(text: String): String =
+    s"list_filter(string_split_regex($text, $ws), dw_t -> dw_t <> '')"
+
+  /** [[graft.functions.Tokens.normalized]] of `text`. */
+  def normalizedSql(text: String): String = s"trim(regexp_replace(lower($text), $ws, ' ', 'g'))"
+
+  /** [[graft.functions.Tokens.fingerprint]] of `text` (DuckDB's md5
+    * hashes the VARCHAR's UTF-8 bytes). */
+  def fingerprintSql(text: String): String = s"md5(${normalizedSql(text)})"
+
+  /** The `n`-token shingle that starts at index `i` of the token list
+    * `toks`: `toks[i] || ' ' || toks[i+1] || …` — the element
+    * [[graft.functions.MinHashFns.word_shingles]] emits. Splice into a
+    * lambda over `i`. */
+  def shinglesSql(toks: String, n: Int): String =
+    (0 until n).map(k => if (k == 0) s"$toks[i]" else s"$toks[i+$k]").mkString(" || ' ' || ")
 
   /** 2⁶⁴ as a DuckDB HUGEINT. */
   val m64: String = "CAST('18446744073709551616' AS HUGEINT)"
@@ -95,26 +136,30 @@ private[graft] object OracleCtes {
        |)""".stripMargin
   }
 
+  /** The `ng_grams(doc_id, g)` CTE alone (see object doc). */
+  val ngramGrams: String =
+    s"""ng_grams AS MATERIALIZED (
+       |  SELECT DISTINCT doc_id, g FROM (
+       |    SELECT doc_id, ${shinglesSql("toks", 3)} AS g FROM (
+       |      SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks)-2, 0))) AS i
+       |      FROM (SELECT doc_id, ${wordsSql("text")} AS toks FROM documents)
+       |      WHERE len(toks) >= 3
+       |    )
+       |  )
+       |)""".stripMargin
+
   /** See object doc. Splice as `WITH $ngramOverlap, ...` or
     * `WITH RECURSIVE $ngramOverlap, ...`. */
   val ngramOverlap: String =
-    """ng_grams AS MATERIALIZED (
-      |  SELECT DISTINCT doc_id, g FROM (
-      |    SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g FROM (
-      |      SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks)-2, 0))) AS i
-      |      FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
-      |      WHERE len(toks) >= 3
-      |    )
-      |  )
-      |), ng_sz AS MATERIALIZED (
-      |  SELECT doc_id, count(*) AS n FROM ng_grams GROUP BY doc_id
-      |), ng_pair AS MATERIALIZED (
-      |  SELECT g.pa, g.pb, g.isz, sa.n AS na, sb.n AS nb
-      |  FROM (SELECT a.doc_id AS pa, b.doc_id AS pb, count(*) AS isz
-      |        FROM ng_grams a JOIN ng_grams b ON a.g = b.g AND a.doc_id < b.doc_id
-      |        GROUP BY 1, 2) g
-      |  JOIN ng_sz sa ON sa.doc_id = g.pa JOIN ng_sz sb ON sb.doc_id = g.pb
-      |)""".stripMargin
+    s"""$ngramGrams, ng_sz AS MATERIALIZED (
+       |  SELECT doc_id, count(*) AS n FROM ng_grams GROUP BY doc_id
+       |), ng_pair AS MATERIALIZED (
+       |  SELECT g.pa, g.pb, g.isz, sa.n AS na, sb.n AS nb
+       |  FROM (SELECT a.doc_id AS pa, b.doc_id AS pb, count(*) AS isz
+       |        FROM ng_grams a JOIN ng_grams b ON a.g = b.g AND a.doc_id < b.doc_id
+       |        GROUP BY 1, 2) g
+       |  JOIN ng_sz sa ON sa.doc_id = g.pa JOIN ng_sz sb ON sb.doc_id = g.pb
+       |)""".stripMargin
 
   /** Exact rounded Jaccard over `ng_pair` columns — bit-identical to
     * the list_intersect/list_concat form (see object doc). */
@@ -126,6 +171,68 @@ private[graft] object OracleCtes {
   val ngramPairs05: String =
     s"""pairs AS MATERIALIZED (
        |  SELECT pa, pb FROM ng_pair WHERE $ngramJaccardExpr >= 0.5
+       |)""".stripMargin
+
+  /** CTEs replaying [[graft.functions.MinHashImpl.signature]] over the
+    * `(doc_id, elem)` rows of table `input` (elem VARCHAR; repeated rows
+    * change nothing): the 31-bit djb2 of each distinct element, the
+    * affine permutations as literal coefficient arrays, the per-(doc,
+    * permutation) minimum — ending in `sigs(doc_id, sig)`. The one SQL
+    * definition of the arithmetic the engine's signatures must match
+    * bit for bit. Inner members carry the prefix `mh_`. */
+  def minhashSigCtes(input: String): String = {
+    import graft.functions.MinHashImpl.{NumPerms, Prime, permA, permB}
+    s"""mh_el AS MATERIALIZED (SELECT DISTINCT elem FROM $input
+       |), mh_h31 AS MATERIALIZED (
+       |  SELECT elem, CAST(${djb2Sql("elem")} % 2147483648 AS BIGINT) AS h31 FROM mh_el
+       |), mh_perm AS MATERIALIZED (
+       |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
+       |  FROM (SELECT unnest(generate_series(1, $NumPerms)) AS i),
+       |       (SELECT ${permA.mkString("[", ", ", "]")}::BIGINT[] AS pal,
+       |               ${permB.mkString("[", ", ", "]")}::BIGINT[] AS pbl)
+       |), mh_sv AS MATERIALIZED (
+       |  SELECT d.doc_id, pm.p, min((pm.a * s.h31 + pm.b) % $Prime) AS sv
+       |  FROM $input d JOIN mh_h31 s USING (elem), mh_perm pm
+       |  GROUP BY d.doc_id, pm.p
+       |), sigs AS MATERIALIZED (
+       |  SELECT doc_id, list(sv ORDER BY p) AS sig FROM mh_sv GROUP BY doc_id
+       |)""".stripMargin
+  }
+
+  /** CTE `bsz<r>(bd, slice, b)`: the LSH bucket census over the
+    * DISTINCT signatures of `sigs(doc_id, sig)` at `r` rows per band —
+    * b signatures share band bd's r-slice (a bucket is the slice
+    * itself; the engine's 64-bit band hash merges two only at the 2⁻⁶⁴
+    * collision class). */
+  def lshBucketCte(r: Int): String =
+    s"""bsz$r AS MATERIALIZED (
+       |  SELECT bd, slice, count(*) AS b FROM (
+       |    SELECT bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
+       |      SELECT sig, unnest(generate_series(0, ${graft.functions.MinHashImpl.NumPerms / r - 1})) AS bd
+       |      FROM (SELECT DISTINCT sig FROM sigs)))
+       |  GROUP BY bd, slice
+       |)""".stripMargin
+
+  /** [[Dedup.bandCandidateReps]]'s capped band candidates over
+    * `sigs(doc_id, sig)` at `r` rows per band, as CTEs suffixed with
+    * `r`: [[lshBucketCte]]; `cold<r>(doc_id, bd, slice)`, the
+    * memberships of buckets within [[graft.GraftConf.maxBandBucket]];
+    * and `cand<r>(doc_a, doc_b)`, doc_a < doc_b, the cold-bucket
+    * collisions plus every identical-signature pair (kept whatever its
+    * buckets' size). */
+  def lshCandCtes(r: Int): String =
+    s"""${lshBucketCte(r)}, cold$r AS MATERIALIZED (
+       |  SELECT n.doc_id, n.bd, n.slice FROM (
+       |    SELECT doc_id, bd, sig[$r*bd+1 : $r*bd+$r] AS slice FROM (
+       |      SELECT doc_id, sig, unnest(generate_series(0, ${graft.functions.MinHashImpl.NumPerms / r - 1})) AS bd FROM sigs)
+       |  ) n JOIN bsz$r z ON z.bd = n.bd AND z.slice = n.slice
+       |  WHERE z.b <= ${graft.GraftConf.maxBandBucket}
+       |), cand$r AS MATERIALIZED (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM cold$r a JOIN cold$r b ON a.bd = b.bd AND a.slice = b.slice AND a.doc_id < b.doc_id
+       |  UNION
+       |  SELECT a.doc_id, b.doc_id
+       |  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.doc_id < b.doc_id
        |)""".stripMargin
 
   /** CTEs replaying [[Similarity.effectiveThreshold]]'s noise-floor

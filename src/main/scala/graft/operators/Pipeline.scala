@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** End-to-end curation pipeline (SURVEY.md §2 composition demo): the
   * operators composing as a training-data cleaning job — quality filter →
   * exact-dedup canonicalization → token accounting. Each stage is one of
@@ -33,7 +35,7 @@ object Pipeline {
        |  FROM documents
        |), canon AS (
        |  SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS canonical_id FROM (
-       |    SELECT doc_id, md5(trim(regexp_replace(lower(text), '[ \t\n\r]+', ' ', 'g'))) AS fp
+       |    SELECT doc_id, ${OracleCtes.fingerprintSql("text")} AS fp
        |    FROM documents
        |  )
        |)
@@ -155,7 +157,7 @@ object Pipeline {
 
   val curriculumSql: String = {
     val score = graft.operators.TextAnalysis.qualityScoreSql
-    val nTok = "CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT)"
+    val nTok = s"CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT)"
     s"""WITH q AS (
        |  SELECT doc_id, $nTok AS n_tokens,
        |    CAST(round(($score) * 1000000) AS BIGINT) AS sm
@@ -238,7 +240,7 @@ object Pipeline {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("bucket").orderBy("doc_id")
     graft.Tables.documents(s, d)
       .select(col("doc_id"),
-        size(split(trim(col("text")), "[ \t\n\r]+")).cast("long").as("n_tok"))
+        size(Tokens.words(col("text"))).cast("long").as("n_tok"))
       .withColumn("bucket", pmod(col("doc_id"), lit(nBuckets)).cast("long"))
       .withColumn("start_tok", coalesce(
         sum("n_tok").over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
@@ -254,9 +256,9 @@ object Pipeline {
   }
 
   val packSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT) AS n_tok,
+      |    CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT) AS n_tok,
       |    doc_id % 16 AS bucket
       |  FROM documents
       |), cum AS (
@@ -315,7 +317,7 @@ object Pipeline {
       .partitionBy("source").orderBy("bucket", "doc_id")
     graft.Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "[ \t\n\r]+")).cast("long").as("n_tok"),
+        size(Tokens.words(col("text"))).cast("long").as("n_tok"),
         bucket.as("bucket"))
       .withColumn("cum_tok", sum("n_tok").over(
         w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
@@ -327,7 +329,7 @@ object Pipeline {
   val quotaSql: String =
     s"""WITH b AS (
       |  SELECT doc_id, source,
-      |    CAST(len(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS BIGINT) AS n_tok,
+      |    CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT) AS n_tok,
       |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket
       |  FROM documents
       |), cum AS (
@@ -1988,7 +1990,7 @@ object Pipeline {
   def datasetDiff(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 16)
-    val nfp = md5(to_binary(trim(regexp_replace(lower(col("text")), "[ \t\n\r]+", " ")), lit("utf-8")))
+    val nfp = Tokens.fingerprint(col("text"))
     val docs = graft.Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"), col("text"), bucket.as("shard"), nfp.as("nfp"))
       .withColumn("is_canon", col("doc_id") === min("doc_id").over(Window.partitionBy("nfp")))
@@ -2009,7 +2011,7 @@ object Pipeline {
   val datasetDiffSql: String =
     s"""WITH b AS (
       |  SELECT doc_id, n_chars,
-      |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS nfp,
+      |    ${OracleCtes.fingerprintSql("text")} AS nfp,
       |    md5(text) AS fp,
       |    CAST(${OracleCtes.djb2Sql("CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard
       |  FROM documents
@@ -2058,7 +2060,7 @@ object Pipeline {
   def tokenBudget(s: SparkSession, d: String): DataFrame = {
     val perDoc = graft.Tables.parallelize(graft.Tables.documents(s, d))
       .select(col("source"),
-        size(split(trim(col("text")), "[ \t\n\r]+")).cast("long").as("n_toks"))
+        size(Tokens.words(col("text"))).cast("long").as("n_toks"))
     val perSrc = perDoc.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"))
     val tot = perSrc.agg(sum("n_tokens").as("budget"), count(lit(1)).as("n_sources"))
@@ -2073,9 +2075,9 @@ object Pipeline {
   /** SQL twin: identical integer ceil-division; BIGINT casts because
     * DuckDB sums BIGINT into HUGEINT. */
   val tokenBudgetSql: String =
-    """WITH perdoc AS (
+    s"""WITH perdoc AS (
       |  SELECT source,
-      |    CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT) AS n_toks
+      |    CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT) AS n_toks
       |  FROM documents
       |), persrc AS (
       |  SELECT source, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens
@@ -2205,8 +2207,7 @@ object Pipeline {
     val bucket = graft.functions.Djb2.djb2_partition(col("doc_id").cast("string"), 100)
     val splitCol = when(col("bucket") < 90, "train")
       .when(col("bucket") < 95, "val").otherwise("test")
-    val fp = md5(to_binary(trim(regexp_replace(lower(col("text")), "[ \t\n\r]+", " ")),
-      lit("utf-8")))
+    val fp = Tokens.fingerprint(col("text"))
     val docs = graft.Tables.documents(s, d)
       .select(col("doc_id"), fp.as("fp"), bucket.as("bucket"))
       .select(col("doc_id"), col("fp"), splitCol.as("split"))
@@ -2245,7 +2246,7 @@ object Pipeline {
     val jac = OracleCtes.ngramJaccardExpr
     s"""WITH ds AS (
       |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS key,
-      |    md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) AS fp
+      |    ${OracleCtes.fingerprintSql("text")} AS fp
       |  FROM documents
       |), docs AS (
       |  SELECT doc_id, fp,

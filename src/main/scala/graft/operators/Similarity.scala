@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Tokens
 
 /** Similarity search over the embedding column (SURVEY.md §2E).
   *
@@ -2111,7 +2112,7 @@ object Similarity {
     val tw = Window.orderBy(col("tscore").desc, col("id"))
     val textTop = graft.Tables.documents(s, d)
       .select(col("doc_id").as("id"),
-        size(filter(split(lower(trim(col("text"))), "[ \t\n\r]+"), t => t === "spark"))
+        size(filter(Tokens.lowerWords(col("text")), t => t === "spark"))
           .cast("long").as("tscore"))
       .filter(col("tscore") > 0)
       .orderBy(col("tscore").desc, col("id")).limit(k)
@@ -2137,7 +2138,7 @@ object Similarity {
   val hybridRrfSql: String =
     s"""WITH tt AS (
       |  SELECT doc_id AS id,
-      |    CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \\t\\n\\r]+'), t -> t = 'spark')) AS BIGINT) AS tscore
+      |    CAST(len(list_filter(${OracleCtes.lowerWordsSql("text")}, t -> t = 'spark')) AS BIGINT) AS tscore
       |  FROM documents
       |), ttop AS (
       |  SELECT id, row_number() OVER (ORDER BY tscore DESC, id) AS rt

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Djb2
+import graft.functions.{Djb2, Tokens}
 
 /** Text-analysis operators for LLM training-data pipelines (SURVEY.md §2C):
   * token counting, language ID, quality scoring, document fingerprinting.
@@ -22,10 +22,10 @@ object TextAnalysis {
     * Catalyst's subexpression elimination shares the split across the
     * per-word counts in one projection. */
   private def tokenCount(text: Column, word: String): Column =
-    size(filter(split(lower(trim(text)), "[ \t\n\r]+"), t => t === word)).cast("long")
+    size(filter(Tokens.lowerWords(text), t => t === word)).cast("long")
 
   private[operators] def tokenCountSql(word: String): String =
-    s"CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\r]+'), t -> t = '$word')) AS BIGINT)"
+    s"CAST(len(list_filter(${OracleCtes.lowerWordsSql("text")}, t -> t = '$word')) AS BIGINT)"
 
   // ---------------------------------------------------------------- tokens
 
@@ -35,16 +35,16 @@ object TextAnalysis {
     Tables.documents(s, d)
       .select(
         col("doc_id"),
-        size(split(trim(col("text")), "[ \t\n\r]+")).cast("long").as("n_ws_tokens"),
+        size(Tokens.words(col("text"))).cast("long").as("n_ws_tokens"),
         size(regexp_extract_all(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]"), lit(0)))
           .cast("long").as("n_bpe_tokens"),
         length(col("text")).cast("long").as("len_chars"))
       .orderBy("doc_id")
 
   val tokenStatsSql: String =
-    """SELECT doc_id,
-      | CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT) AS n_ws_tokens,
-      | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens,
+    s"""SELECT doc_id,
+      | CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT) AS n_ws_tokens,
+      | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r]')) AS BIGINT) AS n_bpe_tokens,
       | CAST(length(text) AS BIGINT) AS len_chars
       |FROM documents ORDER BY doc_id""".stripMargin
 
@@ -155,7 +155,7 @@ object TextAnalysis {
 
   /** Shared SQL fragments for the quality score (also composed by the
     * p_curate oracle — single source so the formulas cannot drift). */
-  private[operators] val nTokensSql = "CAST(len(string_split_regex(trim(text), '[ \t\n\r]+')) AS BIGINT)"
+  private[operators] val nTokensSql = s"CAST(len(${OracleCtes.wordsSql("text")}) AS BIGINT)"
   private[operators] val nPunctSql = "length(regexp_replace(text, '[^.!?,;:]', '', 'g'))"
   private[operators] def nStopSql: String = stopwords.map(tokenCountSql).mkString(" + ")
   private[operators] def qualityScoreSql: String =
@@ -168,7 +168,7 @@ object TextAnalysis {
     * linear combination — the usual cheap pre-filters before expensive
     * model-based scoring. */
   def quality(s: SparkSession, d: String): DataFrame = {
-    val nTokens = size(split(trim(col("text")), "[ \t\n\r]+")).cast("long")
+    val nTokens = size(Tokens.words(col("text"))).cast("long")
     val nPunct = length(regexp_replace(col("text"), "[^.!?,;:]", ""))
     val nStop = stopwords.map(w => tokenCount(col("text"), w)).reduce(_ + _)
     Tables.documents(s, d)
@@ -203,7 +203,7 @@ object TextAnalysis {
     * property of this corpus), divergent on multi-byte text by design:
     * byte-wise is the reference semantics. */
   def fingerprint(s: SparkSession, d: String): DataFrame = {
-    val normalized = trim(regexp_replace(lower(col("text")), "[ \t\n\r]+", " "))
+    val normalized = Tokens.normalized(col("text"))
     Tables.documents(s, d)
       .select(
         col("doc_id"),
@@ -214,7 +214,7 @@ object TextAnalysis {
 
   val fingerprintSql: String =
     s"""WITH norm AS (
-      |  SELECT doc_id, trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g')) AS t
+      |  SELECT doc_id, ${OracleCtes.normalizedSql("text")} AS t
       |  FROM documents
       |)
       |SELECT doc_id, md5(t) AS md5_fp, ${OracleCtes.signedSql("hash")} AS djb2_fp
@@ -239,7 +239,7 @@ object TextAnalysis {
   def ngramRelease(s: SparkSession, d: String): DataFrame = {
     val stats = graft.Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"), explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 3, distinct = false)).as("gram"))
+        Tokens.words(col("text")), 3, distinct = false)).as("gram"))
       .groupBy("gram", "doc_id").agg(count(lit(1)).as("c"))
       .groupBy("gram")
       .agg(count(lit(1)).as("doc_support"), sum("c").as("total_cnt"))
@@ -252,12 +252,12 @@ object TextAnalysis {
   }
 
   val ngramReleaseSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS t FROM documents
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${OracleCtes.wordsSql("text")} AS t FROM documents
       |), grams AS (
       |  SELECT doc_id, unnest(list_transform(
       |    generate_series(1, greatest(len(t)-2, 0)),
-      |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS gram
+      |    i -> ${OracleCtes.shinglesSql("t", 3)})) AS gram
       |  FROM toks
       |)
       |SELECT gram,
@@ -273,18 +273,18 @@ object TextAnalysis {
   def ngramFreq(s: SparkSession, d: String): DataFrame =
     graft.Tables.parallelize(Tables.documents(s, d))
       .select(explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 2, distinct = false)).as("bigram"))
+        Tokens.words(col("text")), 2, distinct = false)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram"))
       .limit(20)
 
   val ngramFreqSql: String =
-    """SELECT bigram, count(*) AS cnt FROM (
+    s"""SELECT bigram, count(*) AS cnt FROM (
       |  SELECT unnest(list_transform(
       |    generate_series(1, greatest(len(toks)-1, 0)),
-      |    i -> toks[i] || ' ' || toks[i+1])) AS bigram
-      |  FROM (SELECT string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
+      |    i -> ${OracleCtes.shinglesSql("toks", 2)})) AS bigram
+      |  FROM (SELECT ${OracleCtes.wordsSql("text")} AS toks FROM documents)
       |)
       |GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 20""".stripMargin
 
@@ -306,7 +306,7 @@ object TextAnalysis {
     * hidden). */
   def collocations(s: SparkSession, d: String): DataFrame = {
     val toks = graft.Tables.parallelize(Tables.documents(s, d))
-      .select(split(trim(col("text")), "[ \t\n\r]+").as("t"))
+      .select(Tokens.words(col("text")).as("t"))
     val uni = toks.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val bi = toks
@@ -327,15 +327,15 @@ object TextAnalysis {
   }
 
   val collocationsSql: String =
-    """WITH toks AS (
-      |  SELECT string_split_regex(trim(text), '[ \t\n\r]+') AS t FROM documents
+    s"""WITH toks AS (
+      |  SELECT ${OracleCtes.wordsSql("text")} AS t FROM documents
       |), un AS (
       |  SELECT w, count(*) AS c FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w
       |), bc AS (
       |  SELECT bg, count(*) AS n_ab FROM (
       |    SELECT unnest(list_transform(
       |      generate_series(1, greatest(len(t)-1, 0)),
-      |      i -> t[i] || ' ' || t[i+1])) AS bg
+      |      i -> ${OracleCtes.shinglesSql("t", 2)})) AS bg
       |    FROM toks)
       |  GROUP BY bg
       |), sp AS (
@@ -409,7 +409,7 @@ object TextAnalysis {
     // executor storage for the session; recomputing the map-side
     // tokenization per consumer is cheaper than the cache pressure
     val toks = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), explode(split(trim(col("text")), "[ \t\n\r]+")).as("term"))
+      .select(col("doc_id"), explode(Tokens.words(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = toks.groupBy("term").agg(count_distinct(col("doc_id")).as("df"))
@@ -426,8 +426,8 @@ object TextAnalysis {
   }
 
   val tfidfSql: String =
-    """WITH doctok AS (
-      |  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \t\n\r]+')) AS term
+    s"""WITH doctok AS (
+      |  SELECT doc_id, unnest(${OracleCtes.wordsSql("text")}) AS term
       |  FROM documents
       |), tok AS (SELECT doc_id, term FROM doctok WHERE term <> ''
       |), tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2
@@ -455,7 +455,7 @@ object TextAnalysis {
     val bg = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
         explode(graft.functions.MinHashFns.word_shingles(
-          split(trim(col("text")), "[ \t\n\r]+"), 2, distinct = false)).as("bg"))
+          Tokens.words(col("text")), 2, distinct = false)).as("bg"))
     val corpus = bg.groupBy("bg").agg(count(lit(1)).as("c"))
     bg.join(corpus, "bg")
       .groupBy("doc_id")
@@ -467,11 +467,11 @@ object TextAnalysis {
   }
 
   val bigramRatioSql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT doc_id, unnest(list_transform(
       |    generate_series(1, greatest(len(toks)-1, 0)),
-      |    i -> toks[i] || ' ' || toks[i+1])) AS bg
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
+      |    i -> ${OracleCtes.shinglesSql("toks", 2)})) AS bg
+      |  FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks FROM documents)
       |  WHERE len(toks) >= 2
       |), corpus AS (
       |  SELECT bg, count(*) AS c FROM bg GROUP BY bg
@@ -490,7 +490,7 @@ object TextAnalysis {
     * division, so bit-identical across engines. */
   def repetition(s: SparkSession, d: String): DataFrame = {
     val grams = graft.functions.MinHashFns.word_shingles(
-      split(trim(col("text")), "[ \t\n\r]+"), 5, distinct = false)
+      Tokens.words(col("text")), 5, distinct = false)
     Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"), grams.as("g"))
       .filter(size(col("g")) > 0)
@@ -502,14 +502,14 @@ object TextAnalysis {
   }
 
   val repetitionSql: String =
-    """SELECT doc_id, n_grams, rep_ratio, CAST(rep_ratio > 0.3 AS INT) AS flagged FROM (
+    s"""SELECT doc_id, n_grams, rep_ratio, CAST(rep_ratio > 0.3 AS INT) AS flagged FROM (
       |  SELECT doc_id, CAST(len(g) AS BIGINT) AS n_grams,
       |    REP_RATIO AS rep_ratio
       |  FROM (
       |    SELECT doc_id, list_transform(
       |      generate_series(1, greatest(len(toks)-4, 0)),
-      |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4]) AS g
-      |    FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
+      |      i -> ${OracleCtes.shinglesSql("toks", 5)}) AS g
+      |    FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks FROM documents)
       |    WHERE len(toks) >= 5
       |  )
       |)
@@ -533,7 +533,7 @@ object TextAnalysis {
   def dupNgrams(s: SparkSession, d: String): DataFrame = {
     val grams = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"), explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 5, distinct = true)).as("g"))
+        Tokens.words(col("text")), 5, distinct = true)).as("g"))
     val docsPerGram = grams.groupBy("g").agg(count(lit(1)).as("nd"))
     grams.join(docsPerGram, "g")
       .groupBy("doc_id")
@@ -546,11 +546,11 @@ object TextAnalysis {
   }
 
   val dupNgramsSql: String =
-    """WITH grams AS (
+    s"""WITH grams AS (
       |  SELECT doc_id, unnest(list_distinct(list_transform(
       |    generate_series(1, greatest(len(toks)-4, 0)),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4]))) AS g
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
+      |    i -> ${OracleCtes.shinglesSql("toks", 5)}))) AS g
+      |  FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks FROM documents)
       |  WHERE len(toks) >= 5
       |), counts AS (
       |  SELECT g, count(*) AS nd FROM grams GROUP BY g
@@ -577,7 +577,7 @@ object TextAnalysis {
   def novelty(s: SparkSession, d: String): DataFrame = {
     val grams = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"), explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 5, distinct = true)).as("g"))
+        Tokens.words(col("text")), 5, distinct = true)).as("g"))
     val firstSeen = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
     grams.join(firstSeen, "g")
       .groupBy("doc_id")
@@ -589,11 +589,11 @@ object TextAnalysis {
   }
 
   val noveltySql: String =
-    """WITH grams AS (
+    s"""WITH grams AS (
       |  SELECT doc_id, unnest(list_distinct(list_transform(
       |    generate_series(1, greatest(len(toks)-4, 0)),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4]))) AS g
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS toks FROM documents)
+      |    i -> ${OracleCtes.shinglesSql("toks", 5)}))) AS g
+      |  FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks FROM documents)
       |  WHERE len(toks) >= 5
       |), fs AS (
       |  SELECT g, min(doc_id) AS first_doc FROM grams GROUP BY g
@@ -626,7 +626,7 @@ object TextAnalysis {
     * note). */
   def spanDedup(s: SparkSession, d: String): DataFrame = {
     val blocks = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), split(trim(col("text")), "[ \t\n\r]+").as("tk"))
+      .select(col("doc_id"), Tokens.words(col("text")).as("tk"))
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, (size(tk)-1) div 10), i -> array_join(slice(tk, i*10+1, 10), ' '))"))
         .as(Seq("pos", "blk")))
@@ -645,13 +645,13 @@ object TextAnalysis {
   }
 
   val spanDedupSql: String =
-    """WITH blocks AS (
+    s"""WITH blocks AS (
       |  SELECT doc_id, u.pos AS pos, u.blk AS blk, lower(u.blk) AS k
       |  FROM (
       |    SELECT doc_id, unnest(list_transform(
       |      generate_series(0, CAST((len(tk)-1)//10 AS BIGINT)),
       |      i -> struct_pack(pos := i, blk := array_to_string(tk[i*10+1 : i*10+10], ' ')))) AS u
-      |    FROM (SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS tk FROM documents)
+      |    FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS tk FROM documents)
       |  )
       |), freq AS (
       |  SELECT k, count(DISTINCT doc_id) AS nd FROM blocks GROUP BY k
@@ -678,7 +678,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val cnts = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"),
-        explode(split(trim(lower(col("text"))), "[ \t\n\r]+")).as("tok"))
+        explode(Tokens.lowerWords(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("doc_id")
     val ranked = cnts
@@ -696,7 +696,7 @@ object TextAnalysis {
 
   val tokenGiniSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\r]+')) AS tok
+       |  SELECT doc_id, unnest(${OracleCtes.lowerWordsSql("text")}) AS tok
        |  FROM documents
        |), cnts AS (
        |  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok
@@ -857,7 +857,7 @@ object TextAnalysis {
   def ttr(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(trim(col("text")), "[ \t\n\r]+")).as("tok"))
+        explode(Tokens.words(col("text"))).as("tok"))
     toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("n"))
       .groupBy("doc_id")
       .agg(sum("n").as("n_tokens"), count(lit(1)).as("n_types"),
@@ -870,7 +870,7 @@ object TextAnalysis {
 
   val ttrSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS tok
+       |  SELECT doc_id, unnest(${OracleCtes.wordsSql("text")}) AS tok
        |  FROM documents
        |), freq AS (
        |  SELECT doc_id, tok, count(*) AS n FROM toks GROUP BY 1, 2
@@ -975,7 +975,7 @@ object TextAnalysis {
   def readability(s: SparkSession, d: String): DataFrame = {
     val nSent = size(filter(split(col("text"), "[.!?]+"), p => length(trim(p)) > 0))
       .cast("long")
-    val nWords = size(split(trim(col("text")), "[ \t\n\r]+")).cast("long")
+    val nWords = size(Tokens.words(col("text"))).cast("long")
     val nSyll = size(regexp_extract_all(col("text"), lit("[aeiouyAEIOUY]+"), lit(0)))
       .cast("long")
     val score = lit(206.835) -
@@ -1018,7 +1018,7 @@ object TextAnalysis {
     import s.implicits._
     val ks = Seq(1L, 10L, 100L, 1000L)
     val tf = graft.Tables.parallelize(Tables.documents(s, d))
-      .select(explode(split(trim(col("text")), "[ \t\n\r]+")).as("token"))
+      .select(explode(Tokens.words(col("text"))).as("token"))
       .filter(col("token") =!= "")
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     val totals = tf.agg(sum(col("cnt")).as("total_tokens"),
@@ -1048,7 +1048,7 @@ object TextAnalysis {
   val zipfSql: String =
     s"""WITH tf AS (
        |  SELECT token, count(*) AS cnt FROM (
-       |    SELECT unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS token FROM documents
+       |    SELECT unnest(${OracleCtes.wordsSql("text")}) AS token FROM documents
        |  ) WHERE token <> '' GROUP BY token
        |), tot AS (
        |  SELECT CAST(sum(cnt) AS BIGINT) AS total_tokens, count(*) AS vocab_size FROM tf
@@ -1085,7 +1085,7 @@ object TextAnalysis {
     * count beyond the initial scan. */
   def vocabOverlap(s: SparkSession, d: String): DataFrame = {
     val tok = Tables.parallelize(Tables.documents(s, d))
-      .select(col("source"), explode(split(trim(lower(col("text"))), "[ \t\n\r]+")).as("tok"))
+      .select(col("source"), explode(Tokens.lowerWords(col("text"))).as("tok"))
       .distinct()
     val sizes = tok.groupBy("source").agg(count(lit(1)).as("v"))
     val inter = tok.as("a").join(tok.as("b"), "tok")
@@ -1106,7 +1106,7 @@ object TextAnalysis {
     s"""WITH tok AS (
        |  SELECT DISTINCT source, tok FROM (
        |    SELECT source,
-       |      unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r]+')) AS tok
+       |      unnest(${OracleCtes.lowerWordsSql("text")}) AS tok
        |    FROM documents)
        |), sizes AS (
        |  SELECT source, count(*) AS v FROM tok GROUP BY source
@@ -1195,7 +1195,7 @@ object TextAnalysis {
   def bm25(s: SparkSession, d: String): DataFrame = {
     val terms = Seq("spark", "window")
     val toks = Tables.parallelize(Tables.documents(s, d))
-      .select(col("doc_id"), explode(split(trim(col("text")), "[ \t\n\r]+")).as("term"))
+      .select(col("doc_id"), explode(Tokens.words(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("nd"), sum("dl").as("total"))
@@ -1220,7 +1220,7 @@ object TextAnalysis {
   val bm25Sql: String =
     s"""WITH tok AS (
        |  SELECT doc_id, term FROM (
-       |    SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS term
+       |    SELECT doc_id, unnest(${OracleCtes.wordsSql("text")}) AS term
        |    FROM documents
        |  ) WHERE term <> ''
        |), dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1
@@ -1256,7 +1256,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val pair = Tables.parallelize(Tables.documents(s, d))
       .select(explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 2, distinct = false)).as("bg"))
+        Tokens.words(col("text")), 2, distinct = false)).as("bg"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
         split(col("bg"), " ").getItem(1).as("w2"))
     val cnt = pair.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
@@ -1276,8 +1276,8 @@ object TextAnalysis {
     s"""WITH bg AS (
        |  SELECT unnest(list_transform(
        |    generate_series(1, greatest(len(toks)-1, 0)),
-       |    i -> toks[i] || ' ' || toks[i+1])) AS bg
-       |  FROM (SELECT string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks FROM documents)
+       |    i -> ${OracleCtes.shinglesSql("toks", 2)})) AS bg
+       |  FROM (SELECT ${OracleCtes.wordsSql("text")} AS toks FROM documents)
        |  WHERE len(toks) >= 2
        |), pair AS (
        |  SELECT string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2 FROM bg
@@ -1384,7 +1384,7 @@ object TextAnalysis {
   def lmScore(s: SparkSession, d: String): DataFrame = {
     val pair = Tables.parallelize(Tables.documents(s, d))
       .select(col("doc_id"), explode(graft.functions.MinHashFns.word_shingles(
-        split(trim(col("text")), "[ \t\n\r]+"), 2, distinct = false)).as("bg"))
+        Tokens.words(col("text")), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), split(col("bg"), " ").getItem(0).as("w1"),
         split(col("bg"), " ").getItem(1).as("w2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
@@ -1412,7 +1412,7 @@ object TextAnalysis {
        |    SELECT doc_id, unnest(list_transform(
        |      generate_series(1, greatest(len(toks)-1, 0)),
        |      i -> struct_pack(w1 := toks[i], w2 := toks[i+1]))) AS p
-       |    FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r]+') AS toks
+       |    FROM (SELECT doc_id, ${OracleCtes.wordsSql("text")} AS toks
        |          FROM documents)
        |    WHERE len(toks) >= 2
        |  )
@@ -1445,7 +1445,7 @@ object TextAnalysis {
     * vocabulary.) */
   def bpePairs(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.parallelize(Tables.documents(s, d))
-      .select(explode(split(trim(col("text")), "[ \t\n\r]+")).as("term"))
+      .select(explode(Tokens.words(col("text"))).as("term"))
       .filter(col("term") =!= "")
     val vocab = toks.groupBy("term").agg(count(lit(1)).as("n"))
     vocab.filter(length(col("term")) >= 2)
@@ -1458,9 +1458,9 @@ object TextAnalysis {
 
   /** SQL twin: same vocabulary-first weighting, same top-20 tie-break. */
   val bpePairsSql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT term FROM (
-      |    SELECT unnest(string_split_regex(trim(text), '[ \t\n\r]+')) AS term
+      |    SELECT unnest(${OracleCtes.wordsSql("text")}) AS term
       |    FROM documents
       |  ) WHERE term <> ''
       |), vocab AS (SELECT term, count(*) AS n FROM tok GROUP BY 1
@@ -1800,7 +1800,7 @@ object TextAnalysis {
     * two formulations, one answer. */
   def skipgramPairs(s: SparkSession, d: String): DataFrame =
     Tables.parallelize(Tables.documents(s, d))
-      .select(filter(split(lower(trim(col("text"))), "[ \t\n\r]+"),
+      .select(filter(Tokens.lowerWords(col("text")),
         t => length(t) > 0).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(explode(expr(
@@ -1814,9 +1814,9 @@ object TextAnalysis {
       .limit(30)
 
   val skipgramPairsSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(trim(lower(text)), '[ \t\n\r]+'),
+      |    list_filter(${OracleCtes.lowerWordsSql("text")},
       |      t -> len(t) > 0) AS l
       |  FROM documents
       |), p AS (
@@ -1978,56 +1978,25 @@ object TextAnalysis {
   }
 
   /** Brute-force chunk-set Jaccard over the byte-exact SQL chunker,
-    * plus the census-derived geometry replay: the `csel_*` CTEs
-    * recompute the 128-perm signatures over the chunk sets (the
-    * [[Dedup]] minhashSigCtes djb2 + affine-perm arithmetic verbatim,
-    * over chunk hashes instead of shingles), census both rungs over
-    * DISTINCT signatures (bucket identity = the r-slice itself;
-    * Spark's 64-bit band hash merges buckets only at the 2⁻⁶⁴
-    * cross-slice-collision class), and re-run the identical
-    * min-priced selection — pinning `band_rows` bit-exactly while the
-    * pair rows stay the brute-force contract. */
-  val cdcMinhashSql: String = {
-    val pa = graft.functions.MinHashImpl.permA.mkString("[", ", ", "]")
-    val pb = graft.functions.MinHashImpl.permB.mkString("[", ", ", "]")
+    * plus the census-derived geometry replay: recompute the 128-perm
+    * signatures over the chunk sets ([[OracleCtes.minhashSigCtes]] over
+    * chunk hashes instead of shingles), census both rungs
+    * ([[OracleCtes.lshBucketCte]]) and re-run the identical min-priced
+    * selection — pinning `band_rows` bit-exactly while the pair rows
+    * stay the brute-force contract. */
+  val cdcMinhashSql: String =
     s"""WITH RECURSIVE ${graft.multimodal.Multimodal.cdcChunkCte}, sets AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, chunk_hash FROM ch
+       |  SELECT DISTINCT doc_id, chunk_hash AS elem FROM ch
        |), sz AS MATERIALIZED (
        |  SELECT doc_id, count(*) AS n FROM sets GROUP BY doc_id
        |), ov AS MATERIALIZED (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS isz
-       |  FROM sets a JOIN sets b ON a.chunk_hash = b.chunk_hash AND a.doc_id < b.doc_id
+       |  FROM sets a JOIN sets b ON a.elem = b.elem AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2
-       |), csel_de AS MATERIALIZED (
-       |  SELECT DISTINCT chunk_hash AS elem FROM sets
-       |), csel_h31 AS MATERIALIZED (
-       |  SELECT elem, CAST(${OracleCtes.djb2Sql("elem")} % 2147483648 AS BIGINT) AS h31
-       |  FROM csel_de
-       |), csel_pm AS MATERIALIZED (
-       |  SELECT i-1 AS p, pal[i] AS a, pbl[i] AS b
-       |  FROM (SELECT unnest(generate_series(1, 128)) AS i),
-       |       (SELECT $pa::BIGINT[] AS pal, $pb::BIGINT[] AS pbl)
-       |), csel_sv AS MATERIALIZED (
-       |  SELECT d.doc_id, pm.p, min((pm.a * s.h31 + pm.b) % 2147483647) AS sv
-       |  FROM sets d JOIN csel_h31 s ON s.elem = d.chunk_hash, csel_pm pm
-       |  GROUP BY d.doc_id, pm.p
-       |), csel_sd AS MATERIALIZED (
-       |  SELECT DISTINCT sig FROM (
-       |    SELECT doc_id, list(sv ORDER BY p) AS sig FROM csel_sv GROUP BY doc_id)
-       |), csel_c1 AS (
-       |  SELECT CAST(coalesce(sum(c*(c-1)//2), 0) AS BIGINT) AS pr FROM (
-       |    SELECT bd, slice, count(*) AS c FROM (
-       |      SELECT sig[bd+1 : bd+1] AS slice, bd
-       |      FROM (SELECT sig, unnest(generate_series(0, 127)) AS bd FROM csel_sd))
-       |    GROUP BY bd, slice)
-       |), csel_c2 AS (
-       |  SELECT CAST(coalesce(sum(c*(c-1)//2), 0) AS BIGINT) AS pr FROM (
-       |    SELECT bd, slice, count(*) AS c FROM (
-       |      SELECT sig[2*bd+1 : 2*bd+2] AS slice, bd
-       |      FROM (SELECT sig, unnest(generate_series(0, 63)) AS bd FROM csel_sd))
-       |    GROUP BY bd, slice)
-       |), csel_rr AS (
-       |  SELECT CASE WHEN (SELECT pr FROM csel_c1) < (SELECT pr FROM csel_c2)
+       |), ${OracleCtes.minhashSigCtes("sets")}, ${OracleCtes.lshBucketCte(1)}, ${OracleCtes.lshBucketCte(2)},
+       |csel_rr AS (
+       |  SELECT CASE WHEN (SELECT coalesce(sum(b*(b-1)//2), 0) FROM bsz1)
+       |                 < (SELECT coalesce(sum(b*(b-1)//2), 0) FROM bsz2)
        |         THEN CAST(1 AS BIGINT) ELSE CAST(2 AS BIGINT) END AS r
        |)
        |SELECT doc_a, doc_b,
@@ -2037,7 +2006,6 @@ object TextAnalysis {
        |      FROM ov JOIN sz sa ON sa.doc_id = ov.doc_a JOIN sz sb ON sb.doc_id = ov.doc_b)
        |WHERE ${ExactRound.rSql("CAST(isz AS DOUBLE) / (na + nb - isz)", 6)} >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ---------------------------------------------------- WordPiece encode
 
@@ -2383,7 +2351,7 @@ object TextAnalysis {
   def unigramLm(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val words = Tables.parallelize(Tables.documents(s, d))
-      .select(explode(split(trim(col("text")), "[ \t\n\r]+")).as("term"))
+      .select(explode(Tokens.words(col("text"))).as("term"))
       .filter(col("term").rlike("^[!-~]{1,12}$"))
       .groupBy("term").agg(count(lit(1)).as("cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // keep: reuse
@@ -2526,7 +2494,7 @@ object TextAnalysis {
     }
     s"""WITH words AS MATERIALIZED (
        |  SELECT w AS term, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT unnest(string_split_regex(trim(text), '[ \\t\\n\\r]+')) AS w
+       |    SELECT unnest(${OracleCtes.wordsSql("text")}) AS w
        |    FROM documents)
        |  WHERE regexp_matches(w, '^[!-~]{1,12}$$')
        |  GROUP BY w

@@ -120,6 +120,33 @@ class InventorySpec extends AnyFunSuite {
     assert(rolls == 1, s"the rolling-hash CTE is defined $rolls times, not once")
   }
 
+  test("one tokenizer per engine under src/main") {
+    // the distwc delimiter class as a Scala source spells it: `\t` in
+    // a plain literal, `\\t` where the SQL text must keep the escape
+    val ws = raw"\[ \\t\\n\\r\]\+|\[ \\\\t\\\\n\\\\r\]\+".r
+    val wsFiles = mainFilesCalling(ws)
+    assert(wsFiles == Set("Tokens.scala", "OracleCtes.scala"),
+      s"the whitespace class is spelled out outside Tokens and OracleCtes: $wsFiles")
+    assert(mainOccurrences("[ \\t\\n\\r]+") + mainOccurrences("[ \\\\t\\\\n\\\\r]+") == 2,
+      "the whitespace class is spelled out more than once per engine")
+    val normalizers = mainFilesCalling(raw"trim\(regexp_replace\(lower\(".r)
+    assert(normalizers == Set("Tokens.scala", "OracleCtes.scala"),
+      s"the normalized text is built outside Tokens and OracleCtes: $normalizers")
+    val fingerprints = mainFilesCalling(raw"md5\((to_binary\()?trim\(".r)
+    assert(fingerprints.isEmpty, s"a normalized-text md5 spelled out in: $fingerprints")
+    // OracleCtes.shinglesSql's Scaladoc shows the unrolled form once
+    val unrolls = mainFilesCalling(raw"\w+\[i\] \|\| ' ' \|\|".r)
+    assert(unrolls == Set("OracleCtes.scala"), s"an n-gram unrolled by hand in: $unrolls")
+  }
+
+  test("one MinHash signature replay and one band slice in the oracles") {
+    val replays = mainFilesCalling(raw"permA\.mkString|h31 \+ pm\.b".r)
+    assert(replays == Set("OracleCtes.scala"),
+      s"the MinHash perms/sigv arithmetic is written outside OracleCtes: $replays")
+    val slices = mainFilesCalling(raw"bd\+1 :".r)
+    assert(slices == Set("OracleCtes.scala"), s"a signature band sliced outside OracleCtes: $slices")
+  }
+
   /** (file name, 1-based line number, line) of every line under src/main. */
   private def mainLines: Seq[(String, Int, String)] = {
     val files = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(

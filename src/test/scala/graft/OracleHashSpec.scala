@@ -1,7 +1,5 @@
 package graft
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Djb2
@@ -10,9 +8,8 @@ import graft.operators.OracleCtes
 /** The oracle's djb2 against the engine's and the C reference's: every
   * DuckDB twin hashes through [[OracleCtes.djb2Sql]], so this pins that
   * one expression (and [[OracleCtes.signedSql]]) by running it in
-  * DuckDB through `python3`, the engine the oracle gate runs. Keys
-  * reach DuckDB as hex of their UTF-8 bytes, so the command line stays
-  * ASCII. No Spark session needed.
+  * DuckDB ([[DuckDb]]), the engine the oracle gate runs. No Spark
+  * session needed.
   */
 class OracleHashSpec extends AnyFunSuite {
 
@@ -29,31 +26,11 @@ class OracleHashSpec extends AnyFunSuite {
     "héllo wörld" -> "13897401471218978738",
     "日本語" -> "249699037343576965")
 
-  /** Rows of `sql` as evaluated by DuckDB, one comma-joined line each. */
-  private def duckdb(sql: String): Seq[String] = {
-    val py =
-      """import sys
-        |try:
-        |    import duckdb
-        |except ImportError as e:
-        |    sys.exit(f"import duckdb failed: {e}")
-        |for r in duckdb.sql(sys.argv[1]).fetchall():
-        |    print(*r, sep=",")""".stripMargin
-    val out, err = new StringBuilder
-    val code = Process(Seq("python3", "-c", py, sql))
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => err.append(l).append('\n')))
-    assert(code == 0, s"python3 + duckdb failed (exit $code): $err")
-    out.toString.linesIterator.toSeq
-  }
-
   test("OracleCtes.djb2Sql in DuckDB equals Djb2.hash, the C definition and Djb2.partition") {
-    val keys = cValues.zipWithIndex.map { case ((k, _), i) =>
-      val hex = k.getBytes("UTF-8").map(b => f"$b%02x").mkString
-      s"SELECT $i AS i, decode(unhex('$hex')) AS k"
-    }.mkString(" UNION ALL ")
-    val rows = duckdb(
+    val rows = DuckDb.rows(
       s"""SELECT i, CAST(h AS VARCHAR), ${OracleCtes.signedSql("h")}, CAST(h % 16 AS INT)
-         |FROM (SELECT i, ${OracleCtes.djb2Sql("k")} AS h FROM ($keys)) ORDER BY i""".stripMargin)
+         |FROM (SELECT i, ${OracleCtes.djb2Sql("text")} AS h FROM (${DuckDb.texts(cValues.map(_._1))}))
+         |ORDER BY i""".stripMargin)
     assert(rows.size == cValues.size, s"DuckDB returned ${rows.size} rows: $rows")
     cValues.zip(rows).foreach { case ((k, c), row) =>
       val Array(_, unsigned, signed, mod16) = row.split(",")
