@@ -56,7 +56,7 @@ object ScaleReplica {
     new java.io.File(out).mkdirs()
 
     if (!embOnly && !evOnly) {
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.load(spark, src, "documents")
     val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     (0 until n).map { i =>
       val txt = if (i == 0) col("text")
@@ -70,7 +70,7 @@ object ScaleReplica {
     }
 
     if (!evOnly) {
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.load(spark, src, "embeddings")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     // replica i's rotation alone is i mod dim, so replicas i and i+dim
     // would be EXACT duplicates up to id shift — silently re-injecting
@@ -118,14 +118,14 @@ object ScaleReplica {
       // events + customer in LOCKSTEP (the facts-mode argument: user_id
       // shifts by i*maxCust so per-user activity is preserved exactly
       // and cross-replica interaction is zero); everything else 1x
-      val cust = spark.read.parquet(s"$src/customer.parquet")
+      val cust = Tables.load(spark, src, "customer")
       val maxCust = cust.agg(max(col("c_custkey"))).head().getLong(0) + 1
       (0 until n).map { i =>
         cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxCust))
       }.reduce(_ unionByName _)
         .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/customer.parquet")
-      val ev = spark.read.parquet(s"$src/events.parquet")
+      val ev = Tables.load(spark, src, "events")
       val maxEv = ev.agg(max(col("event_id"))).head().getLong(0) + 1
       // same single-FLAT-FILE requirement as facts mode (the streaming
       // source's pathGlobFilter matches files, not directories)
@@ -158,14 +158,14 @@ object ScaleReplica {
       // part/supplier/nation stay 1x: per-part/supplier fact fan-out
       // growing Nx is the honest "hot dimension" shape, and those keys
       // are never self-joined.
-      val cust = spark.read.parquet(s"$src/customer.parquet")
+      val cust = Tables.load(spark, src, "customer")
       val maxCust = cust.agg(max(col("c_custkey"))).head().getLong(0) + 1
       (0 until n).map { i =>
         cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxCust))
       }.reduce(_ unionByName _)
         .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/customer.parquet")
-      val orders = spark.read.parquet(s"$src/orders.parquet")
+      val orders = Tables.load(spark, src, "orders")
       val maxOrd = orders.agg(max(col("o_orderkey"))).head().getLong(0) + 1
       (0 until n).map { i =>
         orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * maxOrd))
@@ -173,13 +173,13 @@ object ScaleReplica {
       }.reduce(_ unionByName _)
         .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/orders.parquet")
-      val li = spark.read.parquet(s"$src/lineitem.parquet")
+      val li = Tables.load(spark, src, "lineitem")
       (0 until n).map { i =>
         li.withColumn("l_orderkey", col("l_orderkey") + lit(i * maxOrd))
       }.reduce(_ unionByName _)
         .repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-      val ev = spark.read.parquet(s"$src/events.parquet")
+      val ev = Tables.load(spark, src, "events")
       val maxEv = ev.agg(max(col("event_id"))).head().getLong(0) + 1
       // events must land as a single FLAT FILE named events.parquet:
       // the streaming source reads `pathGlobFilter=events.parquet`

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -15,7 +17,72 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** What an inferred schema depends on besides the path: the
+    * SparkContext, the data files' (path, length, mtime) and the set
+    * reader confs. */
+  private final case class SchemaKey(app: String, files: Seq[(String, Long, Long)],
+    confs: Seq[(String, String)])
+
+  /** Qualified path → (key, inferred schema). One entry per path,
+    * replaced when the key changes, so the map holds at most one schema
+    * per distinct path the process has read. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]()
+  private val infers = new java.util.concurrent.atomic.AtomicLong()
+
+  /** How many [[read]] calls inferred a schema (a footer job each) since
+    * the JVM started; Bench reports the per-query delta. */
+  def schemaInfers: Long = infers.get
+
+  /** The parquet table at `path`, its schema inferred at most once per
+    * SparkContext. The only place graft infers the schema of a table it
+    * owns: the base tables ([[load]]) and the memo tables read back.
+    *
+    * Inference (`read.parquet` with no schema) runs a one-task footer
+    * job on every call; with the schema given, Spark still lists the
+    * files but runs no job. The cached schema is served only while all
+    * of these are unchanged: the SparkContext, the qualified path, the
+    * (path, length, mtime) of every data file under it, and every set
+    * session conf the parquet schema converter can read (the
+    * `spark.sql.parquet.`, `spark.sql.legacy.parquet.` and
+    * `spark.sql.variant.` families, plus `spark.sql.caseSensitive`).
+    * With schema merging on, every call infers: merging reads every
+    * footer by definition. */
+  def read(s: SparkSession, path: String): DataFrame = {
+    def infer(): DataFrame = { infers.incrementAndGet(); s.read.parquet(path) }
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    // a missing path fails inside Spark's reader, with Spark's error
+    if (s.sessionState.conf.isParquetSchemaMergingEnabled || !fs.exists(qualified)) infer()
+    else {
+      val key = SchemaKey(s.sparkContext.applicationId, dataFiles(fs, qualified),
+        s.conf.getAll.toSeq.filter { case (k, _) =>
+          k == "spark.sql.caseSensitive" ||
+            Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.variant.").exists(k.startsWith)
+        }.sorted)
+      Option(schemas.get(qualified.toString)) match {
+        case Some((k, schema)) if k == key => s.read.schema(schema).parquet(path)
+        case _ =>
+          val df = infer()
+          schemas.put(qualified.toString, key -> df.schema)
+          df
+      }
+    }
+  }
+
+  /** Sorted (path, length, mtime) of the data files under `p`, skipping
+    * `_` and `.` names as Spark's file listing does. */
+  private def dataFiles(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq
+          .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+          .flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    walk(fs.getFileStatus(p)).sorted
+  }
 
   /** Small scans (one parquet file = one split) serialize compute-heavy
     * per-row stages on a single core; spread them when the scan has fewer
@@ -36,7 +103,7 @@ object Tables {
     val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val hconf = spark.sparkContext.hadoopConfiguration
     val splits = df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
+      val p = new Path(f)
       val len = p.getFileSystem(hconf).getFileStatus(p).getLen
       math.max(1L, (len + maxBytes - 1) / maxBytes)
     }.sum

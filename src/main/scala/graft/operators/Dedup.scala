@@ -2326,8 +2326,7 @@ object Dedup {
   val capFiresSql: String = {
     val cap = graft.GraftConf.maxBandBucket
     val r = graft.GraftConf.lshBandRowsVerify
-    val iszS = "CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)"
-    val jacc = ExactRound.rSql(s"$iszS / (len(da.sh) + len(db.sh) - $iszS)", 6)
+    val jacc = ExactRound.rSql("isz / (la + lb - isz)", 6)
     s"""WITH pd AS MATERIALIZED (
        |  SELECT s.doc_id * 12 + g.k AS pid,
        |    CASE WHEN g.k = 11 AND s.doc_id % 10 = 0
@@ -2350,7 +2349,9 @@ object Dedup {
        |), ver AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
        |    CAST(sum(CASE WHEN $jacc >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_found
-       |  FROM cand$r c JOIN docs da ON da.doc_id = c.doc_a JOIN docs db ON db.doc_id = c.doc_b
+       |  FROM (SELECT CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE) AS isz,
+       |      len(da.sh) AS la, len(db.sh) AS lb
+       |    FROM cand$r c JOIN docs da ON da.doc_id = c.doc_a JOIN docs db ON db.doc_id = c.doc_b)
        |), pl AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_planted
        |  FROM documents WHERE doc_id < 500 AND doc_id % 10 = 0

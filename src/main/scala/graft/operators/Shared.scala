@@ -131,14 +131,21 @@ private[graft] object Shared {
     new java.io.File(path)
   }
 
-  /** Writes `df` as the one-file parquet table `table` in memo directory `dir`. */
-  def writeTable(dir: java.io.File, table: String, df: DataFrame): Unit =
-    df.coalesce(1).write.parquet(new java.io.File(dir, table).toString)
+  /** Writes `df` as the one-file parquet table `table` in memo directory
+    * `dir`, then reads it back once through [[graft.Tables.read]]: the
+    * table's one schema inference is part of its build, and every reader,
+    * the first included, finds the schema cached. */
+  def writeTable(dir: java.io.File, table: String, df: DataFrame): Unit = {
+    val path = new java.io.File(dir, table).toString
+    df.coalesce(1).write.parquet(path)
+    graft.Tables.read(df.sparkSession, path)
+    ()
+  }
 
   /** A one-table [[memoDir]]: the first caller writes `build`, every
     * caller reads it back. */
   def memo(s: SparkSession, d: String, name: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(new java.io.File(memoDir(s, d, name)(writeTable(_, "t", build)), "t").toString)
+    graft.Tables.read(s, new java.io.File(memoDir(s, d, name)(writeTable(_, "t", build)), "t").toString)
 
   /** Sets `confs` on the session for the duration of `body`, then
     * restores each key's previous value (or unsets it): never leave a

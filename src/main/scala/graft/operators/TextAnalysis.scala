@@ -1556,7 +1556,7 @@ object TextAnalysis {
       Shared.writeTable(dir, "merges", merges.reduce(_ unionByName _))
       Shared.writeTable(dir, "words", words)
     }
-    s.read.parquet(new java.io.File(dir, table).toString)
+    Tables.read(s, new java.io.File(dir, table).toString)
   }
   private def bpeMergesMemo(s: SparkSession, d: String): DataFrame = bpeMemo(s, d, "merges")
   private def bpeWordsMemo(s: SparkSession, d: String): DataFrame = bpeMemo(s, d, "words")

@@ -431,7 +431,7 @@ object EventStream {
     // file + the no-data watermark batch, append mode accumulates every
     // emitted session) and both consumers re-apply their own ordering;
     // each slice stays oracle-gated per query.
-    s.read.parquet(graft.operators.Shared.memoDir(s, d, "st_sessionize_drained") { dir =>
+    Tables.read(s, graft.operators.Shared.memoDir(s, d, "st_sessionize_drained") { dir =>
       drainToFiles(s, sessionFsmStream(s, d), dir.toString, "append")
     }.toString)
 
@@ -1112,8 +1112,8 @@ object EventStream {
       val dirB = new java.io.File(base, "b")
       // the batch contrast class reads the WRITTEN files back — exactly
       // the rows the stream consumed, no re-derivation
-      val evens = s.read.parquet(s"$dirA/0-a.parquet")
-      val slowOdds = s.read.parquet(s"$dirB/0-b.parquet")
+      val evens = Tables.read(s, s"$dirA/0-a.parquet")
+      val slowOdds = Tables.read(s, s"$dirB/0-b.parquet")
       val mA = evens.agg(max("ts").as("mta"))
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("ts", TimestampType), StructField("event_type", StringType)))
@@ -1244,7 +1244,7 @@ object EventStream {
     locally {
       // the post-drain totals read the WRITTEN batches back (their union
       // IS the rewritten corpus) — no re-derivation
-      val ev = s.read.parquet(dataDir.toString)
+      val ev = Tables.read(s, dataDir.toString)
       val src = s.readStream
         .schema(StructType(Seq(StructField("event_id", LongType),
           StructField("ts", TimestampType), StructField("event_type", StringType))))

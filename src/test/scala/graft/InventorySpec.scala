@@ -208,6 +208,26 @@ class InventorySpec extends AnyFunSuite {
     assert(noOps.isEmpty, s"unpersist on checkpointed frames: ${noOps.mkString(", ")}")
   }
 
+  test("Tables.read is the only schema-inferring read of a base or memo table under src/main") {
+    // a base-table file name or a memo directory handed straight to read.parquet
+    val direct = mainFilesCalling(raw"read\s*\.\s*parquet\([^)\n]*(memoDir|\.parquet\x22)".r)
+    assert(direct.isEmpty, s"a base or memo table read without Tables.read in: $direct")
+    def source(f: String) = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala/graft", f))
+    val tables = source("Tables.scala")
+    val inferring = raw"read\s*\.\s*parquet\(".r.findAllMatchIn(tables).map(_.start).toList
+    val readBody = tables.indexOf("def read(") -> tables.indexOf("\n  }\n", tables.indexOf("def read("))
+    assert(inferring.size == 1 && inferring.forall(i => readBody._1 >= 0 && i > readBody._1 && i < readBody._2),
+      s"Tables.scala must infer in exactly one place, inside Tables.read: at offsets $inferring, read $readBody")
+    def calls(f: String, definition: String, call: String) =
+      raw"(?s)def $definition\(.*?\): DataFrame =\s*$call\(".r.findFirstIn(source(f)).nonEmpty
+    assert(calls("Tables.scala", "load", "read"), "Tables.load does not call Tables.read")
+    assert(calls("operators/Shared.scala", "memo", raw"graft\.Tables\.read"),
+      "Shared.memo does not read its table back through Tables.read")
+    assert(source("streaming/EventStream.scala")
+      .contains("Tables.read(s, graft.operators.Shared.memoDir(s, d, \"st_sessionize_drained\")"),
+      "the sessionize drain is not read back through Tables.read")
+  }
+
   test("one trigger under src/main: no ProcessingTime") {
     assert(mainOccurrences("ProcessingTime") == 0, "a streaming query still runs under ProcessingTime")
   }

@@ -295,15 +295,24 @@ def main(argv):
         elif ratio < 1 / RATIO_MAX and -delta > ABS_FLOOR_SEC:
             improved.append((k, a, b, ratio))
 
-    # per-query job counts (steady pass) from artifacts that carry them:
-    # the structural number a speed claim commits next to its seconds
-    jobs_new = new["full"].get("jobs", {})
-    jobs_old = old["full"].get("jobs", {})
+    # per-query job and schema-inference counts (steady pass) from
+    # artifacts that carry them: the structural numbers a speed claim
+    # commits next to its seconds (older artifacts have no schema_infers)
+    def counts(field):
+        return new["full"].get(field, {}), old["full"].get(field, {})
 
     def jobs(k):
-        if k in jobs_new and k in jobs_old:
-            return f"  jobs {jobs_old[k]}→{jobs_new[k]}"
-        return ""
+        out = ""
+        for field, label in (("jobs", "jobs"), ("schema_infers", "infers")):
+            c_new, c_old = counts(field)
+            if k in c_new and k in c_old:
+                out += f"  {label} {c_old[k]}→{c_new[k]}"
+        return out
+
+    for field in ("jobs", "schema_infers"):
+        c_new, c_old = counts(field)
+        if c_new and c_old:
+            print(f"steady {field}: {sum(c_old.values())} → {sum(c_new.values())}")
 
     for title, rows in (("REGRESSED", regressions),
                         ("grew (absolute)", alerts),
