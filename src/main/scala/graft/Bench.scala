@@ -32,6 +32,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   - `schema_infers` — the [[Tables.read]] calls that inferred a
   *     schema (one footer job each) on the steady pass, with its total in
   *     the summary line: which queries still pay an inference,
+  *   - `codegen_compiles` — the classes Spark's code generator compiled
+  *     (Janino) during the query on the steady pass, with its total in
+  *     the summary line: a steady query that compiles is missing the
+  *     JVM's generated-class cache,
   * so a recorded 100 s on a trivially-correct plan is visibly a GC storm
   * / JIT stall / neither, instead of indistinguishable from a plan bug
   * (BENCH_r03 recorded 80-676x environment outliers that never
@@ -53,6 +57,10 @@ object Bench {
     if (compBean != null && compBean.isCompilationTimeMonitoringSupported)
       compBean.getTotalCompilationTime
     else -1L
+  /** Classes compiled by Spark's code generator in this JVM so far, on
+    * the driver and (local mode) the executors alike. */
+  private[graft] def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   /** Used bytes across the JIT code-cache pools (segmented CodeHeap on
     * modern JVMs, single "Code Cache" pool otherwise), in MB. */
   private def codeCacheMb(): Double = {
@@ -151,6 +159,7 @@ object Bench {
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
       val before = meter.reading(spark.sparkContext)
       val infers0 = Tables.schemaInfers
+      val compiles0 = codegenCompiles()
       val gc0 = gcMs(); val jit0 = jitMs()
       val t0 = System.nanoTime()
       // a failed query must surface as -1, not masquerade as a fast run
@@ -158,7 +167,8 @@ object Bench {
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
       val counts = delta(meter.reading(spark.sparkContext), before) +
-        ("schema_infers" -> (Tables.schemaInfers - infers0))
+        ("schema_infers" -> (Tables.schemaInfers - infers0)) +
+        ("codegen_compiles" -> (codegenCompiles() - compiles0))
       val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L, counts)
       GraftSession.resetBetweenQueries(spark)
       s
@@ -249,7 +259,7 @@ object Bench {
       s""""shuffle_write_mb":${jsonNum(mb(steady, "shuffle_write_bytes"))},""" +
       s""""shuffle_read_mb":${jsonNum(mb(steady, "shuffle_read_bytes"))},""" +
       s""""spilled_mb":${jsonNum(mb(steady, "spill_bytes"))},""" +
-      Seq("jobs", "schema_infers", "stages", "tasks", "task_ms").map(k => s""""$k":${jsonLong(count(steady, k))},""").mkString +
+      Seq("jobs", "schema_infers", "codegen_compiles", "stages", "tasks", "task_ms").map(k => s""""$k":${jsonLong(count(steady, k))},""").mkString +
       s""""stream_batches":${jsonLong(count(streaming, "stream_batches"))},""" +
       s""""stream_ms":${streamMs.mkString("{", ",", "}")},""" +
       s""""codecache_mb_cold":$codeCacheAfterCold,"codecache_mb_steady":$codeCacheAfterSteady,""" +
@@ -268,7 +278,8 @@ object Bench {
       s""""shuffle_read_total_mb":${mb(steady, "shuffle_read_bytes").map(_._2).sum},""" +
       s""""spilled_total_mb":${mb(steady, "spill_bytes").map(_._2).sum},""" +
       s""""jobs_steady":${count(steady, "jobs").map(_._2).sum},""" +
-      s""""schema_infers_steady":${count(steady, "schema_infers").map(_._2).sum},$env,"sf":"$sfDir"}"""
+      s""""schema_infers_steady":${count(steady, "schema_infers").map(_._2).sum},""" +
+      s""""codegen_compiles_steady":${count(steady, "codegen_compiles").map(_._2).sum},$env,"sf":"$sfDir"}"""
     // Artifact hygiene (r8 judge note): a loaded-host run must never
     // OVERWRITE the quiet-host artifact the committed BASELINE numbers
     // are read from — divert it to <name>.loaded.json so the two can

@@ -10,10 +10,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * AQE on (runtime shuffle-partition coalescing + skew-join splitting),
   * UTC session time for oracle parity, and a shuffle-partition count that
   * matches available parallelism instead of the legacy 200 default.
+  *
+  * Every session also runs with the [[sessionConfs]] that [[install]]
+  * sets, artifact isolation off among them. Spark caches a generated
+  * class under (the task thread's context class loader, its code), and
+  * under the default `spark.sql.artifact.isolation.enabled=true` each
+  * session gets its own executor class loader: every `newSession()` and
+  * every streaming query's cloned session would compile all its classes
+  * again with Janino and JIT-warm them from scratch — the same
+  * recompile-every-pass symptom as the `codegen.cache.maxEntries`
+  * overflow below. graft adds no session artifacts, so with isolation
+  * off every session shares the JVM's one cache (SCALING.md, "codegen
+  * cache and sessions").
   */
 object GraftSession {
+  /** The session confs graft's queries run under:
+    *   - artifact isolation off, so generated classes are compiled once
+    *     per JVM instead of once per session;
+    *   - `nanosAsLong`, constant reader semantics for the session's
+    *     lifetime: a NANOS-layout events file infers as long +
+    *     [[Tables.normalizeTs]] instead of a reader error. It only
+    *     changes how a NANOS-typed `ts` is INFERRED; micros/NTZ layouts
+    *     are unaffected. */
+  private val sessionConfs = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Sets the [[sessionConfs]] on `s` that it does not hold yet and
+    * returns `s`; idempotent. `SparkEntry.queries` calls it before every
+    * query body and [[Tables.load]] before every base-table read, for
+    * sessions built outside [[builder]]. Spark reads the isolation conf
+    * once, at the session's first SQL execution (`ArtifactManager.state`
+    * is a lazy val), so it must run at a query's entry: on a session
+    * that has executed SQL the set is accepted and has no effect on that
+    * session. */
+  def install(s: SparkSession): SparkSession = {
+    sessionConfs.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+    }
+    s
+  }
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+    sessionConfs.foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -31,10 +70,6 @@ object GraftSession {
       // generated-class cache and re-compiles plans every pass
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.session.timeZone", "UTC")
-      // constant reader semantics for the whole session (see
-      // Tables.ensureLegacyNanos): a NANOS-layout events file infers
-      // as long + normalizeTs instead of a reader error
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   /** The session every command-line main runs on: `local[N]` with N

@@ -12,9 +12,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q10StarJoin(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each one
+    * first applies [[GraftSession.install]] to the session it is handed,
+    * so a session built outside [[GraftSession.builder]] runs its
+    * queries under graft's session confs too (one codegen cache per
+    * JVM among them). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++ operators.RelationalExt.queries ++
+    (operators.Relational.queries ++ operators.RelationalExt.queries ++
       operators.RelationalExt2.queries ++ operators.RelationalExt3.queries ++
       operators.RelationalExt4.queries ++ operators.RelationalExt5.queries ++
       operators.RelationalExt6.queries ++
@@ -22,7 +26,10 @@ object SparkEntry {
       operators.TextAnalysis.queries ++ operators.Dedup.queries ++
       operators.Pipeline.queries ++ operators.Graph.queries ++
       operators.Similarity.queries ++ multimodal.Multimodal.queries ++
-      streaming.EventStream.queries
+      streaming.EventStream.queries)
+      .map { case (name, body) =>
+        name -> ((s: SparkSession, d: String) => body(GraftSession.install(s), d))
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -16,8 +16,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Base table `name` of the corpus in `dir`, read through [[read]]
+    * once [[GraftSession.install]] has set graft's confs on `spark`:
+    * loading a base table is the first thing a query does with its
+    * session, and a reader that is not a `SparkEntry.queries` entry (the
+    * MapReduce facade's input, whose `Dataset.rdd` is the session's
+    * first SQL execution) must not fix the session's codegen class
+    * loader before the install. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, s"$dir/$name.parquet")
+    read(GraftSession.install(spark), s"$dir/$name.parquet")
 
   /** What an inferred schema depends on besides the path: the
     * SparkContext, the data files' (path, length, mtime) and the set
@@ -138,24 +145,8 @@ object Tables {
     }
   }
 
-  /** Monotonic per-session reader-conf init: enable `nanosAsLong` the
-    * first time a graft events reader touches the session and never
-    * flip it back, so parquet-reader semantics are CONSTANT for the
-    * session's lifetime instead of depending on which query ran last.
-    * The flag only changes how a NANOS-typed `ts` is INFERRED (long
-    * instead of a reader error); micros/NTZ layouts are unaffected,
-    * and [[normalizeTs]] canonicalizes all three. GraftSession/Bench
-    * set it at build time, making this a no-op there; it exists for
-    * externally-built sessions handed to the query maps. */
-  def ensureLegacyNanos(s: SparkSession): Unit =
-    if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   /** events.parquet: read and normalize `ts` (see [[normalizeTs]]). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    ensureLegacyNanos(s)
-    normalizeTs(load(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(load(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

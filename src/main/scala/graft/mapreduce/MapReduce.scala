@@ -1,5 +1,7 @@
 package graft.mapreduce
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.reflect.ClassTag
 
 import org.apache.spark.Partitioner
@@ -37,7 +39,7 @@ object MapReduce {
     override def numPartitions: Int = numParts
     override def getPartition(key: Any): Int =
       if (key == null) 0
-      else Djb2.partition(key.toString.getBytes("UTF-8"), numParts)
+      else Djb2.partition(key.toString.getBytes(UTF_8), numParts)
   }
 
   /** MR_Run: map `input` with `mapper` (emitting KV pairs), hash-partition

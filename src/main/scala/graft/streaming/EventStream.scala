@@ -71,17 +71,15 @@ object EventStream {
   /** THE streaming events source: explicit file-matching schema
     * (probed, see [[rawSchema]]), then [[Tables.normalizeTs]] so every
     * downstream operator sees one canonical session-UTC TIMESTAMP `ts`
-    * regardless of the generator's layout. Reader conf is initialized
-    * once per session in [[Tables.events]]'s `ensureLegacyNanos`, not
-    * mutated per query. */
-  private[graft] def eventStream(s: SparkSession, d: String): DataFrame = {
-    Tables.ensureLegacyNanos(s)
+    * regardless of the generator's layout. Reader confs are set once
+    * per session by [[graft.GraftSession.install]] (through the probe's
+    * [[Tables.load]]), not mutated per query. */
+  private[graft] def eventStream(s: SparkSession, d: String): DataFrame =
     s.readStream
       .schema(rawSchema(probeTsType(s, d)))
       .option("pathGlobFilter", "events.parquet")
       .parquet(d)
       .transform(Tables.normalizeTs)
-  }
 
   private val fmt = "yyyy-MM-dd HH:mm:ss"
 

@@ -54,6 +54,20 @@ class InventorySpec extends AnyFunSuite {
     assert(builders == Set("GraftSession.scala"), s"session built outside GraftSession: $builders")
   }
 
+  test("GraftSession owns the session confs and every query installs them") {
+    val isolation = mainFilesCalling(raw"spark\.sql\.artifact\.isolation\.enabled".r)
+    assert(isolation == Set("GraftSession.scala"), s"artifact isolation set outside GraftSession: $isolation")
+    val legacy = mainFilesCalling(raw"ensureLegacyNanos".r)
+    assert(legacy.isEmpty, s"ensureLegacyNanos is back in: $legacy")
+    val entry = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala"))
+    val queries = entry.slice(entry.indexOf("def queries"), entry.indexOf("def oracleSql"))
+    assert(queries.contains("body(GraftSession.install(s), d)"),
+      "SparkEntry.queries does not hand each query an installed session")
+    val tables = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala/graft/Tables.scala"))
+    assert(tables.contains("read(GraftSession.install(spark), s\"$dir/$name.parquet\")"),
+      "Tables.load does not read through an installed session")
+  }
+
   test("Bench's meter is the only Spark or streaming listener registered under src/main") {
     val registrars = mainFilesCalling(raw"addSparkListener|streams\s*\.\s*addListener".r)
     assert(registrars == Set("Bench.scala"), s"listener registered outside Bench: $registrars")
