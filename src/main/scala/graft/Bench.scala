@@ -1,11 +1,15 @@
 package graft
 
 import java.lang.management.ManagementFactory
+import java.nio.file.Paths
+import java.time.Instant
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
@@ -36,6 +40,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     (Janino) during the query on the steady pass, with its total in
   *     the summary line: a steady query that compiles is missing the
   *     JVM's generated-class cache,
+  *   - `process_starts` — the processes the JVM started (JFR
+  *     `jdk.ProcessStart` events) inside the query's window on the
+  *     steady pass, with `process_starts_steady` in the summary line: a
+  *     fork costs ~2.6 ms, and Hadoop's local file system without
+  *     libhadoop forks `chmod` and `readlink` unless graft's is in place,
   * so a recorded 100 s on a trivially-correct plan is visibly a GC storm
   * / JIT stall / neither, instead of indistinguishable from a plan bug
   * (BENCH_r03 recorded 80-676x environment outliers that never
@@ -69,7 +78,29 @@ object Bench {
     pools.map(_.getUsage.getUsed).sum / 1e6
   }
 
-  final case class Sample(secs: Double, gcMs: Long, jitMs: Long, counts: Map[String, Long])
+  final case class Sample(secs: Double, gcMs: Long, jitMs: Long, counts: Map[String, Long],
+    from: Instant, to: Instant)
+
+  /** Records the start time of every process the JVM starts, from
+    * construction until [[stop]]: one JFR `jdk.ProcessStart` event each,
+    * the only event the recording enables. */
+  private final class ProcessStarts {
+    private val recording = new Recording()
+    recording.enable("jdk.ProcessStart").withoutStackTrace()
+    recording.start()
+
+    /** Ends the recording; the start times it holds. */
+    def stop(): Seq[Instant] = {
+      recording.stop()
+      try Scratch.withDir("graft-bench-jfr-") { dir =>
+        val file = Paths.get(dir, "process-starts.jfr")
+        recording.dump(file)
+        // a dump holds the events of every recording running beside this one
+        RecordingFile.readAllEvents(file).asScala
+          .collect { case e if e.getEventType.getName == "jdk.ProcessStart" => e.getStartTime }.toSeq
+      } finally recording.close()
+    }
+  }
 
   /** The one metering listener. Its counters, by artifact key:
     *   - `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes` (disk
@@ -161,6 +192,7 @@ object Bench {
       val infers0 = Tables.schemaInfers
       val compiles0 = codegenCompiles()
       val gc0 = gcMs(); val jit0 = jitMs()
+      val from = Instant.now()
       val t0 = System.nanoTime()
       // a failed query must surface as -1, not masquerade as a fast run
       val secs =
@@ -169,7 +201,7 @@ object Bench {
       val counts = delta(meter.reading(spark.sparkContext), before) +
         ("schema_infers" -> (Tables.schemaInfers - infers0)) +
         ("codegen_compiles" -> (codegenCompiles() - compiles0))
-      val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L, counts)
+      val s = Sample(secs, gcMs() - gc0, if (jit0 >= 0) jitMs() - jit0 else -1L, counts, from, Instant.now())
       GraftSession.resetBetweenQueries(spark)
       s
     }
@@ -201,12 +233,13 @@ object Bench {
     val cold = timeAll()
     val codeCacheAfterCold = codeCacheMb()
     val coldMap = cold.toMap
+    val processStarts = new ProcessStarts
     val steadyFirst = timeAll()
     // environment-stall re-run: a steady query >10x its cold time (and
     // >2 s absolute — sub-second jitter is not a stall) gets ONE retry;
     // the first sample is preserved with its GC/JIT attribution
     val retried = scala.collection.mutable.LinkedHashMap.empty[String, Sample]
-    val steady = steadyFirst.map { case (name, s) =>
+    val steadyTimed = steadyFirst.map { case (name, s) =>
       val coldSecs = coldMap.get(name).map(_.secs).getOrElse(Double.MaxValue)
       val stalled = s.secs > 2.0 && coldSecs > 0 && s.secs > 10.0 * coldSecs
       if (stalled) {
@@ -217,6 +250,11 @@ object Bench {
       } else name -> s
     }
     val codeCacheAfterSteady = codeCacheMb()
+    val starts = processStarts.stop()
+    val steady = steadyTimed.map { case (name, s) =>
+      name -> s.copy(counts = s.counts +
+        ("process_starts" -> starts.count(t => !t.isBefore(s.from) && !t.isAfter(s.to)).toLong))
+    }
 
     // failures carry -1 per query; the headline totals sum successes only
     def total(rs: Seq[(String, Sample)]): Double = rs.map(_._2.secs).filter(_ >= 0).sum
@@ -259,7 +297,7 @@ object Bench {
       s""""shuffle_write_mb":${jsonNum(mb(steady, "shuffle_write_bytes"))},""" +
       s""""shuffle_read_mb":${jsonNum(mb(steady, "shuffle_read_bytes"))},""" +
       s""""spilled_mb":${jsonNum(mb(steady, "spill_bytes"))},""" +
-      Seq("jobs", "schema_infers", "codegen_compiles", "stages", "tasks", "task_ms").map(k => s""""$k":${jsonLong(count(steady, k))},""").mkString +
+      Seq("jobs", "schema_infers", "codegen_compiles", "process_starts", "stages", "tasks", "task_ms").map(k => s""""$k":${jsonLong(count(steady, k))},""").mkString +
       s""""stream_batches":${jsonLong(count(streaming, "stream_batches"))},""" +
       s""""stream_ms":${streamMs.mkString("{", ",", "}")},""" +
       s""""codecache_mb_cold":$codeCacheAfterCold,"codecache_mb_steady":$codeCacheAfterSteady,""" +
@@ -279,7 +317,8 @@ object Bench {
       s""""spilled_total_mb":${mb(steady, "spill_bytes").map(_._2).sum},""" +
       s""""jobs_steady":${count(steady, "jobs").map(_._2).sum},""" +
       s""""schema_infers_steady":${count(steady, "schema_infers").map(_._2).sum},""" +
-      s""""codegen_compiles_steady":${count(steady, "codegen_compiles").map(_._2).sum},$env,"sf":"$sfDir"}"""
+      s""""codegen_compiles_steady":${count(steady, "codegen_compiles").map(_._2).sum},""" +
+      s""""process_starts_steady":${count(steady, "process_starts").map(_._2).sum},$env,"sf":"$sfDir"}"""
     // Artifact hygiene (r8 judge note): a loaded-host run must never
     // OVERWRITE the quiet-host artifact the committed BASELINE numbers
     // are read from — divert it to <name>.loaded.json so the two can

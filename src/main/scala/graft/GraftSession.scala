@@ -22,6 +22,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * overflow below. graft adds no session artifacts, so with isolation
   * off every session shares the JVM's one cache (SCALING.md, "codegen
   * cache and sessions").
+  *
+  * Every session's SparkContext also gets the [[hadoopConfs]]: Hadoop's
+  * `file:` scheme, for `FileSystem` and for `FileContext` (streaming's
+  * offset and commit logs and its state store), goes to `graft.io`'s
+  * local file system, which sets permissions and reads links through
+  * NIO where Hadoop without libhadoop forks `chmod` and `readlink`
+  * (SCALING.md, "Hadoop's local file system forks"). `FileSystem`'s
+  * cache for `file:` is turned off with it: a SparkContext built
+  * elsewhere, with Hadoop's instance already in the JVM-wide cache
+  * under the same key, would otherwise keep serving that instance and
+  * the class key would never take effect. An uncached `getFileSystem`
+  * builds a new instance, ~8 µs against ~4 µs from the cache, where a
+  * fork costs ~2.6 ms. Hadoop deletes the paths marked for deletion on
+  * exit only when it closes a cached instance, so graft marks none.
   */
 object GraftSession {
   /** The session confs graft's queries run under:
@@ -36,23 +50,35 @@ object GraftSession {
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  /** Sets the [[sessionConfs]] on `s` that it does not hold yet and
+  /** The Hadoop confs of every SparkContext graft runs on: `file:` goes
+    * to `graft.io`'s fork-free local file system, uncached. */
+  private val hadoopConfs = Seq(
+    "fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Sets the [[sessionConfs]] on `s` and the [[hadoopConfs]] on its
+    * SparkContext's Hadoop configuration that they do not hold yet and
     * returns `s`; idempotent. `SparkEntry.queries` calls it before every
     * query body and [[Tables.load]] before every base-table read, for
     * sessions built outside [[builder]]. Spark reads the isolation conf
     * once, at the session's first SQL execution (`ArtifactManager.state`
     * is a lazy val), so it must run at a query's entry: on a session
     * that has executed SQL the set is accepted and has no effect on that
-    * session. */
+    * session. The Hadoop confs reach every Hadoop configuration Spark
+    * copies from the context's after the call. */
   def install(s: SparkSession): SparkSession = {
     sessionConfs.foreach { case (k, v) =>
       if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
     }
+    val hadoop = s.sparkContext.hadoopConfiguration
+    hadoopConfs.foreach { case (k, v) => if (hadoop.get(k) != v) hadoop.set(k, v) }
     s
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    sessionConfs.foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
+    (sessionConfs ++ hadoopConfs.map { case (k, v) => ("spark.hadoop." + k) -> v })
+      .foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

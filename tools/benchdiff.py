@@ -295,22 +295,24 @@ def main(argv):
         elif ratio < 1 / RATIO_MAX and -delta > ABS_FLOOR_SEC:
             improved.append((k, a, b, ratio))
 
-    # per-query job, schema-inference and codegen-compile counts (steady
-    # pass) from artifacts that carry them: the structural numbers a speed
-    # claim commits next to its seconds (older artifacts lack the last two)
+    # per-query job, schema-inference, codegen-compile and process-start
+    # counts (steady pass) from artifacts that carry them: the structural
+    # numbers a speed claim commits next to its seconds (older artifacts
+    # lack the last three)
     def counts(field):
         return new["full"].get(field, {}), old["full"].get(field, {})
 
     def jobs(k):
         out = ""
         for field, label in (("jobs", "jobs"), ("schema_infers", "infers"),
-                             ("codegen_compiles", "compiles")):
+                             ("codegen_compiles", "compiles"),
+                             ("process_starts", "forks")):
             c_new, c_old = counts(field)
             if k in c_new and k in c_old:
                 out += f"  {label} {c_old[k]}→{c_new[k]}"
         return out
 
-    for field in ("jobs", "schema_infers", "codegen_compiles"):
+    for field in ("jobs", "schema_infers", "codegen_compiles", "process_starts"):
         c_new, c_old = counts(field)
         if c_new and c_old:
             print(f"steady {field}: {sum(c_old.values())} → {sum(c_new.values())}")
